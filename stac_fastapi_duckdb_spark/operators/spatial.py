@@ -86,22 +86,6 @@ def _intersects_udf(query_geojson: str):
     return _exact
 
 
-def _exact_refine(geometry: dict, geometry_col: str) -> Column:
-    """Exact intersects refine: Sedona JVM expression when the optional
-    integration is installed+opted-in (functions/geo_sedona.py), else
-    the dependency-free Arrow-batched UDF. Same semantics either way —
-    only the physical evaluation site changes."""
-    from pyspark.sql import SparkSession
-
-    from stac_fastapi_duckdb_spark.functions import geo_sedona
-
-    if geo_sedona.sedona_enabled():
-        spark = SparkSession.getActiveSession()
-        if spark is not None and geo_sedona.try_register(spark):
-            return geo_sedona.intersects_geojson_expr(geometry, geometry_col)
-    return _intersects_udf(json.dumps(geometry))(F.col(geometry_col))
-
-
 def envelope_predicate(
     w: float, s: float, e: float, n: float, columns: list[str], bbox_col: str = BBOX_COL
 ) -> Column | None:
@@ -131,7 +115,7 @@ def bbox_predicate(
             "type": "Polygon",
             "coordinates": [[[w, s], [e, s], [e, n], [w, n], [w, s]]],
         }
-        parts.append(_exact_refine(qgeom, geometry_col))
+        parts.append(_intersects_udf(json.dumps(qgeom))(F.col(geometry_col)))
     if not parts:
         raise InvalidQueryError(
             f"No spatial columns ({geometry_col!r}/{bbox_col!r}) in schema"
@@ -163,7 +147,7 @@ def intersects_predicate(
     if env is not None:
         parts.append(env)
     if geometry_col in columns:
-        parts.append(_exact_refine(geometry, geometry_col))
+        parts.append(_intersects_udf(json.dumps(geometry))(F.col(geometry_col)))
     if not parts:
         raise InvalidQueryError(
             f"No spatial columns ({geometry_col!r}/{bbox_col!r}) in schema"

@@ -55,10 +55,19 @@ def shj_hint(df: DataFrame) -> DataFrame:
     1.3 s at sf0.1 when the hint restores the shared exchange). With
     SHUFFLE_HASH both sides consume the SAME repartition exchange
     (AQE stage reuse), the chain runs once, and no sort is added
-    (guide §2.4/§3.1). Same per-partition build-memory caveat and
-    escape hatch as entry_queries._fact_hint: the in-bucket skew cap
-    bounds bucket sizes, AQE sizes partitions at scale, and
-    ``SPARK_GRAFT_NO_SHUFFLE_HASH=1`` restores planner choice."""
+    (guide §2.4/§3.1).
+
+    The fact-fact joins in plans/entry_queries.py (lineitem⋈orders)
+    use the same hint on the narrower side: it skips both sort passes
+    (~2× measured at sf0.1/sf1).
+
+    Caveat: a shuffled-hash build must fit per-task memory and cannot
+    spill its hash table the way sort-merge spills — under heavy key
+    skew the pinned hint risks an executor OOM where Catalyst's default
+    would degrade gracefully. The in-bucket skew cap bounds bucket
+    sizes, AQE skew-join splits oversized shuffle partitions before the
+    build, and ``SPARK_GRAFT_NO_SHUFFLE_HASH=1`` drops the hint for
+    skewed production reuse."""
     import os as _os
 
     if _os.environ.get("SPARK_GRAFT_NO_SHUFFLE_HASH"):
@@ -310,6 +319,11 @@ def _bucket_pairs(
         keep/drop map rather than a clustering pass (stars don't carry
         transitive links between non-canonical members).
     """
+    if pair_mode not in ("all", "star"):
+        raise ValueError(
+            f"_bucket_pairs: unknown pair_mode {pair_mode!r} "
+            "(expected 'all' or 'star')"
+        )
     ids = F.array_sort(F.collect_list(id_col))
     grouped = (
         df.groupBy(*bucket_cols)
@@ -534,13 +548,14 @@ def connected_components(
     dst: str = "id_b",
     id_col: str = "doc_id",
     max_iter: int = 20,
-    algorithm: str = "star",
     driver_cap: int | None = None,
 ) -> DataFrame:
     """Transitive closure of near-dup pairs → (id, component) with
     component = min id in the cluster.
 
-    ``algorithm="star"`` (default) is large-star/small-star alternation
+    Edge sets of at most ``driver_cap`` edges (default
+    ``_DRIVER_CC_MAX``) are fetched once and closed on the driver with
+    union-find. Larger ones run large-star/small-star alternation
     (Kiveris et al. 2014): converges in O(log² n) rounds regardless of
     component DIAMETER — the property that matters at 100 TB, where a
     long chain of pairwise near-dups would cost min-label propagation
@@ -550,25 +565,13 @@ def connected_components(
     confirm round); the working set is only the nodes that appear in
     an edge (singletons never enter the loop — they are label-joined
     once at the end), so the iteration's shuffles are sized by the
-    pair graph, not the corpus.
-
-    ``algorithm="minlabel"`` is the previous per-round min-label
-    propagation (O(diameter) rounds), kept for A/B equivalence tests.
+    pair graph, not the corpus. ``driver_cap=0`` forces the star loop.
 
     Both produce the identical fixpoint (component = min id), so every
     oracle that unrolls min-label propagation to convergence still
     matches. Lineage is cut per round with localCheckpoint (the classic
     iterative-algorithm failure mode).
     """
-    if algorithm == "minlabel":
-        return _connected_components_minlabel(
-            edges, all_ids, src, dst, id_col, max_iter
-        )
-    if algorithm != "star":
-        raise ValueError(
-            f"connected_components: unknown algorithm {algorithm!r} "
-            "(expected 'star' or 'minlabel')"
-        )
     e_plan = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -673,7 +676,7 @@ def connected_components(
         # truncated run: the edge set is not yet a star forest, so the
         # mapping below is a VALID merge step but not the final
         # components — surface it instead of silently returning
-        # non-minimal labels (a typo'd algorithm is rejected above).
+        # non-minimal labels.
         import warnings
 
         warnings.warn(
@@ -697,56 +700,6 @@ def connected_components(
         F.col("n").alias(id_col),
         F.coalesce("comp", F.col("n")).alias("component"),
     )
-
-
-def _connected_components_minlabel(
-    edges: DataFrame,
-    all_ids: DataFrame | None,
-    src: str,
-    dst: str,
-    id_col: str,
-    max_iter: int,
-) -> DataFrame:
-    """Iterative min-label propagation: each round every node adopts
-    the smallest label among itself and its neighbors; converges in
-    O(diameter) rounds. Per round one join edges⋈labels + one
-    groupBy-min — both shuffles on the node id. Superseded as the
-    default by the large-star/small-star alternation above (same
-    fixpoint, O(log² n) rounds); kept for A/B equivalence tests."""
-    sym = edges.selectExpr(f"{src} as n", f"{dst} as m").unionByName(
-        edges.selectExpr(f"{dst} as n", f"{src} as m")
-    )
-    if all_ids is not None:
-        nodes = all_ids.select(F.col(id_col).alias("n")).distinct()
-    else:
-        nodes = sym.select("n").distinct()
-    labels = nodes.withColumn("comp", F.col("n"))
-    sym = sym.localCheckpoint(eager=False)
-
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["m"] == labels["n"], "inner")
-            .select(sym["n"].alias("n"), F.col("comp"))
-            .groupBy("n")
-            .agg(F.min("comp").alias("nb_comp"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "n", "left")
-            .select(
-                "n",
-                F.least(
-                    F.col("comp"), F.coalesce("nb_comp", F.col("comp"))
-                ).alias("comp"),
-                (F.coalesce("nb_comp", F.col("comp")) < F.col("comp")).alias(
-                    "_changed"
-                ),
-            )
-        ).localCheckpoint()  # materialize: truncates lineage AND gives a stable count
-        changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    return labels.select(F.col("n").alias(id_col), F.col("comp").alias("component"))
 
 
 def with_simhash(

@@ -10,16 +10,16 @@ Scale shape (the part that must survive 100 TB):
 
 - Candidate generation is BLOCKED (Fellegi–Sunter / Papadakis
   blocking): records can only meet inside a blocking key, so the
-  candidate step is ONE shuffle of (block, id, name) rows — never an
-  all-pairs join. The pair blow-up happens in-array after a
-  ``max_block_size`` cap, the same skew contract as the LSH dedup
-  buckets (a single degenerate block is exactly the quadratic failure
-  mode this bounds).
+  candidate step is ONE shuffle of (block, id, name) rows — never a
+  corpus-wide all-pairs join. Blocks above ``max_block_size`` are
+  dropped before any pair is formed, the same skew contract as the LSH
+  dedup buckets (a single degenerate block is exactly the quadratic
+  failure mode this bounds).
 - Verification is exact character Levenshtein via the JVM built-in
   (codegen, no Python), applied only to in-block pairs.
-- Clusters reuse the iterative min-label connected-components
-  operator (pipeline/dedup.py) — per-round shuffles keyed on the
-  record id, lineage cut by localCheckpoint, early fixpoint stop.
+- Clusters reuse the connected-components operator (pipeline/dedup.py):
+  driver union-find for bounded pair graphs, large-star/small-star
+  rounds with localCheckpoint lineage cuts above the cap.
 
 Oracle story: every step is deterministic Column algebra, so DuckDB
 replays it exactly — blocked self-join + ``levenshtein()`` + the
@@ -42,7 +42,6 @@ def blocked_match_pairs(
     max_dist: int = 1,
     max_block_size: int = 10_000,
     pair_mode: str = "all",
-    expansion: str | None = None,
 ) -> DataFrame:
     """Candidate+verified match pairs (id_a < id_b, dist ≤ max_dist).
 
@@ -55,29 +54,29 @@ def blocked_match_pairs(
     cluster shape, and the surviving rows ARE the member→canonical
     merge map.
 
-    ``expansion`` (round 12) picks how the in-block pair stream is
-    generated; ``None`` → "join" for all-pairs, "array" for star:
+    ``pair_mode="all"`` runs as an explicit repartition on the blocking
+    key + hinted SHUFFLE_HASH self-join consuming that ONE exchange on
+    both sides (the phash/simhash single-exchange shape). Entity blocks
+    are DENSE (hundreds of members per (nation, segment) block), so the
+    codegen'd join beats an interpreted higher-order-function pair
+    expansion ~5× at sf0.1 — the same dense-bucket trade
+    ``phash_near_dup_pairs`` documents. The blocking key travels as ONE
+    struct column so null block values group/join exactly like groupBy
+    treats them (struct equality is null-safe field-wise). The in-join
+    verify is a free length-difference prune plus the thresholded
+    Levenshtein itself.
 
-    - ``"join"`` — explicit repartition on the blocking key + hinted
-      SHUFFLE_HASH self-join consuming that ONE exchange on both sides
-      (the phash/simhash single-exchange shape). Entity blocks are
-      DENSE (hundreds of members per (nation, segment) block), so the
-      codegen'd join beats the interpreted higher-order-function
-      expansion ~5× at sf0.1 — the same dense-bucket trade
-      ``phash_near_dup_pairs`` documents. The blocking key travels as
-      ONE struct column so null block values group/join exactly like
-      groupBy treats them (struct equality is null-safe field-wise).
-      The in-join verify is a free length-difference prune plus the
-      thresholded Levenshtein itself (tests/test_entities.py pins both
-      expansions equal, including under random single edits).
-    - ``"array"`` — the groupBy + sorted collect_list(struct(id,
-      name)) + in-array expansion reference: carrying the name inside
-      the struct needs no join-back, and for the LINEAR star output it
-      stays the cheaper plan (no second pass over the exchange).
+    ``pair_mode="star"`` runs as groupBy + sorted collect_list(struct(id,
+    name)) + in-array expansion: carrying the name inside the struct
+    needs no join-back, and for the LINEAR star output it stays the
+    cheaper plan (no second pass over the exchange).
     """
-    if expansion is None:
-        expansion = "star-array" if pair_mode == "star" else "join"
-    if expansion == "join" and pair_mode == "all":
+    if pair_mode not in ("all", "star"):
+        raise ValueError(
+            f"blocked_match_pairs: unknown pair_mode {pair_mode!r} "
+            "(expected 'all' or 'star')"
+        )
+    if pair_mode == "all":
         return _blocked_match_pairs_join(
             df, id_col, name_col, block_cols, max_dist, max_block_size
         )
@@ -89,32 +88,16 @@ def blocked_match_pairs(
         .agg(items.alias("_items"))
         .filter((F.size("_items") >= 2) & (F.size("_items") <= max_block_size))
     )
-    if pair_mode == "star":
-        canon = F.element_at("_items", 1)
-        pairs = F.transform(
-            F.slice("_items", 2, F.size("_items") - 1),
-            lambda b: F.struct(
-                canon["i"].alias("id_a"),
-                b["i"].alias("id_b"),
-                canon["s"].alias("name_a"),
-                b["s"].alias("name_b"),
-            ),
-        )
-    else:
-        pairs = F.flatten(
-            F.transform(
-                "_items",
-                lambda a, i: F.transform(
-                    F.slice("_items", i + 2, F.size("_items")),
-                    lambda b: F.struct(
-                        a["i"].alias("id_a"),
-                        b["i"].alias("id_b"),
-                        a["s"].alias("name_a"),
-                        b["s"].alias("name_b"),
-                    ),
-                ),
-            )
-        )
+    canon = F.element_at("_items", 1)
+    pairs = F.transform(
+        F.slice("_items", 2, F.size("_items") - 1),
+        lambda b: F.struct(
+            canon["i"].alias("id_a"),
+            b["i"].alias("id_b"),
+            canon["s"].alias("name_a"),
+            b["s"].alias("name_b"),
+        ),
+    )
     exploded = grouped.select(F.explode(pairs).alias("p")).select("p.*")
     # thresholded Levenshtein: banded DP early-exits above max_dist
     # (-1), exact distance for every kept pair — same values, O(len·d)
@@ -136,7 +119,7 @@ def _blocked_match_pairs_join(
     max_block_size: int,
 ) -> DataFrame:
     """All-pairs expansion as a single-exchange hinted self-join; see
-    ``blocked_match_pairs`` (expansion="join") for the contract."""
+    ``blocked_match_pairs`` (pair_mode="all") for the contract."""
     from pyspark.sql.window import Window
 
     from stac_fastapi_duckdb_spark.pipeline.dedup import shj_hint

@@ -28,6 +28,7 @@ from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     FloatType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -302,7 +303,6 @@ def perceptual_hash(
     id_col: str = "media_id",
     blocks: int = 64,
     num_bands: int = 8,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Block-average perceptual hash (aHash) over the decoded sample
     stream: split the stream into ``blocks`` equal spans, bit b = 1 iff
@@ -312,110 +312,26 @@ def perceptual_hash(
     deployment swaps in pixel luma / PCM frames and keeps every plan
     below unchanged.
 
-    ``impl="arrow"`` (default, round 11): ONE map-only vectorized
-    kernel — each Arrow batch of payloads is decoded and segment-
-    summed with numpy (int64-exact), so the signature costs zero
-    shuffles and the payload bytes are read exactly once per task.
-    This replaced the pure-Column formulation (kept as
-    ``impl="column"``, the A/B-pinned reference): that shape exploded
-    one row PER SAMPLE (``Generate`` over ``sequence(1, n)`` + a
-    per-char ``substr``) into two aggregate exchanges — at sf0.1 the
-    explode stage alone was ~4 s of the 5.7 s query, the textbook
-    guide-§4 case for handing whole batches to a native kernel
-    instead of per-row JVM expression eval. Both impls compute the
-    identical exact integer votes (block_sum·n > total·block_len — no
-    float means), pinned equal by tests/test_multimodal.py, so the
-    DuckDB oracle replays bit-for-bit against either. Empty payloads
-    carry no signal and are excluded; blocks with no samples
-    (n < blocks) vote 0.
+    ONE map-only vectorized kernel: per Arrow batch, decode every
+    payload once, segment-sum code points into ``blocks`` spans with
+    ``np.add.reduceat`` (int64 — exact), majority-vote with exact
+    integer cross-products (block_sum·n > total·block_len — no float
+    means), pack bands. No Generate, no aggregation exchange — the
+    payload's bytes never leave the scan task. A pure-Column
+    formulation that exploded one row PER SAMPLE into two aggregate
+    exchanges spent ~4 s of a 5.7 s query at sf0.1 in the explode
+    stage alone.
+
+    Decode uses ``errors="replace"`` for parity with the JVM's UTF-8
+    decode (malformed bytes → U+FFFD); block b of an n-sample stream is
+    samples ``ceil(b·n/blocks) .. ceil((b+1)·n/blocks)-1``, i.e. sample
+    i (1-based) lands in block ``((i-1)·blocks) div n`` — the
+    assignment the DuckDB oracle replays. Empty payloads carry no
+    signal and are excluded; blocks with no samples (n < blocks) vote
+    0.
 
     → (id_col, bands): ``bands[j]`` packs bits 8j..8j+7 as 0-255.
     """
-    if impl == "arrow":
-        return _perceptual_hash_arrow(df, payload_col, id_col, blocks, num_bands)
-    if impl != "column":
-        raise ValueError(
-            f"perceptual_hash: unknown impl {impl!r} (expected 'arrow' or 'column')"
-        )
-    from stac_fastapi_duckdb_spark.pipeline.dedup import ensure_parallelism
-
-    txt = F.decode(F.col(payload_col), "UTF-8")
-    # per-char hashing work is CPU-bound and the media table often
-    # arrives in a handful of row groups — fan out to the cluster's
-    # parallelism BEFORE the explode so the scan width doesn't cap it
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("_id"), txt.alias("_s"), F.length(txt).alias("_n")
-    ).filter(F.col("_n") > 0)
-    ch = (
-        base.select("_id", "_s", "_n", F.explode(F.sequence(F.lit(1), F.col("_n"))).alias("_i"))
-        .select(
-            "_id",
-            F.expr(f"((_i - 1) * {blocks}) div _n").alias("_b"),
-            F.ascii(F.col("_s").substr(F.col("_i"), F.lit(1))).cast("long").alias("_c"),
-        )
-    )
-    bs = ch.groupBy("_id", "_b").agg(
-        F.sum("_c").alias("_bs"), F.count(F.lit(1)).alias("_cnt")
-    )
-    zero = F.lit(0).cast("long")
-    per = bs.groupBy("_id").agg(
-        *(
-            F.coalesce(
-                F.sum(F.when(F.col("_b") == b, F.col("_bs"))), zero
-            ).alias(f"_s{b}")
-            for b in range(blocks)
-        ),
-        *(
-            F.coalesce(
-                F.sum(F.when(F.col("_b") == b, F.col("_cnt"))), zero
-            ).alias(f"_k{b}")
-            for b in range(blocks)
-        ),
-        F.sum("_bs").alias("_total"),
-        F.sum("_cnt").alias("_len"),
-    )
-    bit = [
-        (
-            F.col(f"_s{b}") * F.col("_len") > F.col("_total") * F.col(f"_k{b}")
-        ).cast("int")
-        for b in range(blocks)
-    ]
-    bpb = blocks // num_bands
-    bands = F.array(
-        *(
-            sum(
-                (bit[j * bpb + k] * F.lit(1 << k) for k in range(1, bpb)),
-                bit[j * bpb],
-            )
-            for j in range(num_bands)
-        )
-    )
-    return per.select(F.col("_id").alias(id_col), bands.alias("bands"))
-
-
-def _perceptual_hash_arrow(
-    df: DataFrame,
-    payload_col: str,
-    id_col: str,
-    blocks: int,
-    num_bands: int,
-) -> DataFrame:
-    """Vectorized aHash kernel: per Arrow batch, decode every payload
-    once, segment-sum code points into ``blocks`` spans with
-    ``np.add.reduceat`` (int64 — exact), majority-vote with the same
-    integer cross-products as the Column reference, pack bands.
-
-    The whole signature is map-only: no Generate, no aggregation
-    exchange — the payload's bytes never leave the scan task. Decode
-    uses ``errors="replace"`` for parity with the JVM's UTF-8 decode
-    (malformed bytes → U+FFFD); block b of an n-sample stream is
-    samples ``ceil(b·n/blocks) .. ceil((b+1)·n/blocks)-1``, the same
-    assignment as the reference's ``((i-1)·blocks) div n``.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType
-
     from stac_fastapi_duckdb_spark.pipeline.dedup import ensure_parallelism
 
     bpb = blocks // num_bands
@@ -440,9 +356,7 @@ def _perceptual_hash_arrow(
         # code-point stream: block b of doc i starts at
         # doc_start[i] + ceil(b·n_i/blocks), and consecutive docs'
         # start lists chain exactly at the doc boundary, so one global
-        # start vector segments the whole batch. Same exact integer
-        # votes (block_sum·n > total·block_len), pinned against
-        # impl='column' by tests/test_multimodal.py.
+        # start vector segments the whole batch.
         cps = [
             np.frombuffer(
                 bytes(raw).decode("utf-8", "replace").encode("utf-32-le"),
@@ -482,9 +396,9 @@ def _perceptual_hash_arrow(
         ).sum(axis=2)
         return pd.Series([row.tolist() for row in packed.astype(np.int64)])
 
-    # byte-length filter ≡ the reference's decoded-length filter: a
-    # payload decodes to zero characters iff it has zero bytes
-    # (malformed bytes decode to U+FFFD, never to nothing)
+    # byte-length filter ≡ a decoded-length filter: a payload decodes
+    # to zero characters iff it has zero bytes (malformed bytes decode
+    # to U+FFFD, never to nothing)
     return (
         ensure_parallelism(df)
         .filter(F.length(F.col(payload_col)) > 0)

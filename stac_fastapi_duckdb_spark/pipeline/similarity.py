@@ -762,7 +762,6 @@ def jl_project(
     dim: int = 64,
     out_dim: int = 16,
     seed: int = 7,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Johnson-Lindenstrauss projection to ``out_dim`` dimensions, in
     long form ``(id, pos, val)``.
@@ -774,95 +773,56 @@ def jl_project(
     projecting 768→64 dims cuts every downstream vector shuffle and
     GEMM by 12× for a bounded, provable distortion.
 
-    Spark shape: the Column impl is map-only (zero shuffle); the arrow
-    impl is map-only on already-wide inputs but may insert ONE
+    Spark shape: map-only on already-wide inputs, but may insert ONE
     repartition exchange on narrow inputs (ensure_parallelism fans a
     single-row-group scan across cores before the kernel). Rounding and
-    the ``+ 0.0`` IEEE −0.0 normalization always run JVM-side so the
-    engine-stable comparison contract is one code path.
+    the ``+ 0.0`` IEEE −0.0 normalization run JVM-side.
 
-    ``impl="arrow"`` (default, round 11): the fold runs as ONE
-    vectorized numpy kernel per Arrow batch — sequential over the
-    input dimension j (``acc += v[:, j] * m[:, j]``), which is
-    bit-for-bit the ``aggregate(zip_with(...))`` left-fold order, just
-    computed for the whole batch × all output dims at once. The
-    Column form (``impl="column"``, kept as the A/B-pinned reference)
-    evaluates out_dim interpreted higher-order folds PER ROW —
-    LambdaFunction expressions never enter whole-stage codegen, and
-    the measured cost at sf0.1 was ~1.8 s of pure interpreted eval for
-    a 2 M-flop projection (the same interpreted-HOF wall the PQ
-    assignment hit; guide §4.2's exact case for handing batches to a
-    native kernel). tests/test_similarity.py pins both impls equal.
+    The fold runs as ONE vectorized numpy kernel per Arrow batch —
+    sequential over the input dimension j (``acc += v[:, j] * m[:, j]``),
+    the left-fold order of a per-row dot product, computed for the
+    whole batch × all output dims at once. Per-row interpreted
+    higher-order folds (``aggregate(zip_with(...))``) never enter
+    whole-stage codegen and cost ~1.8 s at sf0.1 for a 2 M-flop
+    projection.
     """
-    m = jl_matrix(out_dim, dim, seed)
-    if impl == "arrow":
-        from pyspark.sql.types import ArrayType, DoubleType
+    from pyspark.sql.types import ArrayType, DoubleType
 
-        mat = np.asarray(m, dtype=np.float64)  # (out_dim, dim)
+    from stac_fastapi_duckdb_spark.pipeline.dedup import ensure_parallelism
 
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def _proj(vecs: pd.Series) -> pd.Series:
-            # null / wrong-width rows project to an all-null vector —
-            # exactly what the Column fold yields there (zip_with pads
-            # with null, the fold absorbs it), so both impls stay
-            # behavior-identical on malformed input instead of the
-            # kernel crashing in np.stack (r11 advisory)
-            vals = vecs.to_numpy()
-            ok = np.fromiter(
-                (v is not None and len(v) == mat.shape[1] for v in vals),
-                dtype=bool,
-                count=len(vals),
-            )
-            out = np.empty(len(vals), dtype=object)
-            if ok.any():
-                x = np.stack(vals[ok]).astype(np.float64)  # (b_ok, dim)
-                acc = np.zeros((x.shape[0], mat.shape[0]), dtype=np.float64)
-                # sequential in j == the aggregate() left-fold order, so
-                # every double is IEEE-identical to the Column fold
-                for j in range(mat.shape[1]):
-                    acc += x[:, j : j + 1] * mat[None, :, j]
-                out[np.flatnonzero(ok)] = list(acc)
-            bad = [None] * mat.shape[0]
-            for i in np.flatnonzero(~ok):
-                out[i] = bad
-            return pd.Series(out)
+    mat = np.asarray(jl_matrix(out_dim, dim, seed), dtype=np.float64)
 
-        from stac_fastapi_duckdb_spark.pipeline.dedup import (
-            ensure_parallelism,
+    @F.pandas_udf(ArrayType(DoubleType()))
+    def _proj(vecs: pd.Series) -> pd.Series:
+        # null / wrong-width rows project to an all-null vector instead
+        # of the kernel crashing in np.stack
+        vals = vecs.to_numpy()
+        ok = np.fromiter(
+            (v is not None and len(v) == mat.shape[1] for v in vals),
+            dtype=bool,
+            count=len(vals),
         )
+        out = np.empty(len(vals), dtype=object)
+        if ok.any():
+            x = np.stack(vals[ok]).astype(np.float64)  # (b_ok, dim)
+            acc = np.zeros((x.shape[0], mat.shape[0]), dtype=np.float64)
+            # sequential in j: the left-fold order of the dot product
+            for j in range(mat.shape[1]):
+                acc += x[:, j : j + 1] * mat[None, :, j]
+            out[np.flatnonzero(ok)] = list(acc)
+        bad = [None] * mat.shape[0]
+        for i in np.flatnonzero(~ok):
+            out[i] = bad
+        return pd.Series(out)
 
-        projected = ensure_parallelism(df).select(
-            F.col(id_col),
-            _proj(F.col(vec_col).cast("array<double>")).alias("_p"),
-        )
-        return projected.select(
-            F.col(id_col), F.posexplode("_p").alias("pos", "_raw")
-        ).select(
-            id_col, "pos", (F.round(F.col("_raw"), 6) + F.lit(0.0)).alias("val")
-        )
-    if impl != "column":
-        raise ValueError(
-            f"jl_project: unknown impl {impl!r} (expected 'arrow' or 'column')"
-        )
-    v = F.col(vec_col).cast("array<double>")
-    outs = [
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    v,
-                    F.array(*[F.lit(x) for x in row]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        + F.lit(0.0)
-        for row in m
-    ]
-    return df.select(
-        F.col(id_col), F.posexplode(F.array(*outs)).alias("pos", "val")
+    projected = ensure_parallelism(df).select(
+        F.col(id_col),
+        _proj(F.col(vec_col).cast("array<double>")).alias("_p"),
+    )
+    return projected.select(
+        F.col(id_col), F.posexplode("_p").alias("pos", "_raw")
+    ).select(
+        id_col, "pos", (F.round(F.col("_raw"), 6) + F.lit(0.0)).alias("val")
     )
 
 

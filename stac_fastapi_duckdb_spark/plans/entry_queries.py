@@ -444,23 +444,6 @@ def q_top_revenue_orders(spark, sf):
     )
 
 
-def _fact_hint(df: DataFrame) -> DataFrame:
-    """SHUFFLE_HASH on the narrower side of a fact-fact join skips both
-    sort passes (~2× measured at sf0.1/sf1), but a shuffled-hash build
-    must fit per-task memory and cannot spill its hash table the way
-    sort-merge spills — under heavy key skew the pinned hint risks an
-    executor OOM where Catalyst's default would degrade gracefully.
-    Set ``SPARK_GRAFT_NO_SHUFFLE_HASH=1`` to drop the hint for skewed
-    production reuse; the bench default keeps it (AQE skew-join splits
-    oversized shuffle partitions before the build, bounding each
-    per-task hash table)."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_SHUFFLE_HASH"):
-        return df
-    return df.hint("SHUFFLE_HASH")
-
-
 def q_region_revenue(spark, sf):
     """TPC-H Q5 shape: 5-way star join with broadcast dims. The one
     fact-fact join (lineitem⋈orders) uses SHUFFLE_HASH on the narrower
@@ -468,14 +451,14 @@ def q_region_revenue(spark, sf):
     of either side (A/B'd 0.92→0.65 s at sf0.1, 1.49→1.13 s at sf1);
     per-partition hash build stays bounded by the shuffle partition
     count, which AQE sizes at scale. Skew caveat + env off-switch:
-    see ``_fact_hint``."""
+    see ``pipeline.dedup.shj_hint``."""
     r = _t(spark, sf, "region")
     n = _t(spark, sf, "nation")
     c = _t(spark, sf, "customer")
     o = _t(spark, sf, "orders")
     l = _t(spark, sf, "lineitem")
     return (
-        l.join(_fact_hint(o), l.l_orderkey == o.o_orderkey)
+        l.join(P_dedup.shj_hint(o), l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -1218,9 +1201,9 @@ def q_range_join(spark, sf):
 
 def q_dedup_clusters(spark, sf):
     """Transitive near-dup clusters: LSH candidates → exact-Jaccard
-    verify → iterative min-label connected components over ALL docs.
-    Oracle: the same propagation unrolled as SQL (6 rounds ≫ cluster
-    diameter at this scale; Spark side stops at fixpoint)."""
+    verify → connected components over ALL docs (component = min id).
+    Oracle: min-label propagation unrolled as SQL (6 rounds ≫ cluster
+    diameter at this scale)."""
     docs = _t(spark, sf, "documents")
     cand = P_dedup.minhash_lsh_candidates(docs, bands=32)
     pairs = P_dedup.ngram_jaccard_pairs(docs, cand, threshold=0.8)
@@ -1393,7 +1376,7 @@ def q_semi_join(spark, sf):
     )
     l = _t(spark, sf, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
-        o.join(_fact_hint(l), o.o_orderkey == l.l_orderkey, "left_semi")
+        o.join(P_dedup.shj_hint(l), o.o_orderkey == l.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
     )
@@ -3230,10 +3213,10 @@ def q_cms_counts(spark, sf):
 
 def q_jl_projection(spark, sf):
     """Johnson-Lindenstrauss 64→16 projection (pipeline/similarity.py
-    jl_project): frozen seeded Gaussian matrix, each output dim a
-    pure-Column JVM fold — map-only, zero shuffle, no UDF. Long-form
-    (vec_id, pos, val) output; oracle inlines the identical matrix
-    literals."""
+    jl_project): frozen seeded Gaussian matrix, one vectorized Arrow
+    kernel per batch (map-only apart from ensure_parallelism's fan-out
+    on narrow inputs). Long-form (vec_id, pos, val) output; oracle
+    inlines the identical matrix literals."""
     from stac_fastapi_duckdb_spark.pipeline.similarity import jl_project
 
     return jl_project(_t(spark, sf, "embeddings"), dim=64, out_dim=16)
@@ -6372,11 +6355,11 @@ def q_entity_match_pairs(spark, sf):
 
 
 def q_entity_resolution(spark, sf):
-    """Entity clusters: verified match pairs → iterative min-label
-    connected components seeded with EVERY customer (singletons map to
-    themselves); entity_id = min custkey in the cluster. Oracle: the
-    same propagation unrolled as chained CTEs (8 rounds ≫ observed
-    cluster diameter; Spark side stops at fixpoint)."""
+    """Entity clusters: verified match pairs → connected components
+    seeded with EVERY customer (singletons map to themselves);
+    entity_id = min custkey in the cluster. Oracle: min-label
+    propagation unrolled as chained CTEs (8 rounds ≫ observed cluster
+    diameter)."""
     from stac_fastapi_duckdb_spark.pipeline.entities import resolve_entities
 
     return resolve_entities(
@@ -6902,8 +6885,8 @@ ORACLE_SQL["attribution"] = f"""
 
 def q_phash_dedup_map(spark, sf):
     """Media dedup map: phash near-dup pairs resolved to a
-    media_id → canonical_id assignment via the shared iterative
-    min-label connected-components operator (pipeline/dedup.py
+    media_id → canonical_id assignment via the shared
+    connected-components operator (pipeline/dedup.py
     connected_components) — every planted re-encode twin collapses
     onto its original; singletons map to themselves. Oracle: the full
     phash pair replay closed with unrolled min-label CTE rounds."""

@@ -90,32 +90,6 @@ def _detect_format(urls: list[str]) -> str:
         raise ValueError(f"collection URL list mixes formats {fmts}: {urls}")
     return fmts.pop()
 
-_HTTP_CACHE_DIR = os.environ.get(
-    "SPARK_GRAFT_HTTP_CACHE", "/tmp/spark_graft_http_cache"
-)
-
-
-def _localize(url: str) -> str:
-    """LEGACY driver-download shim, kept only as the fallback when the
-    Python DataSource API is unavailable. The live http(s) path is
-    ``sources/http_parquet.py``: executor-side ranged reads,
-    partition-per-row-group, footer-stat skipping — the Spark-native
-    analog of the reference's DuckDB httpfs (``config.py:112-121``)."""
-    if not url.startswith(("http://", "https://")):
-        return url
-    import hashlib
-    import urllib.request
-
-    os.makedirs(_HTTP_CACHE_DIR, exist_ok=True)
-    dest = os.path.join(
-        _HTTP_CACHE_DIR, hashlib.sha256(url.encode()).hexdigest() + ".parquet"
-    )
-    if not os.path.exists(dest):
-        tmp = dest + ".part"
-        urllib.request.urlretrieve(url, tmp)  # noqa: S310 — user-configured source URL
-        os.replace(tmp, dest)
-    return dest
-
 
 class CollectionCatalog:
     """Registry of STAC collections backed by parquet files or a
@@ -283,10 +257,9 @@ class CollectionCatalog:
             # remote/multi-URL collections: the http data source does its
             # own footer-stat row-group skipping; no driver-side manifest
             return {}
-        path = _localize(url)
-        if not os.path.exists(path):
+        if not os.path.exists(url):
             return {}
-        idx = build_file_index(path, list(columns))
+        idx = build_file_index(url, list(columns))
         self._file_index[collection_id] = idx
         return idx
 

@@ -151,18 +151,14 @@ def test_connected_components_transitive_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7, 9: 9}
 
 
-def test_connected_components_rejects_unknown_algorithm(spark):
-    """A typo'd algorithm must raise, not silently run 'star'; a run
-    that exhausts max_iter before the star-forest fixpoint must WARN —
-    the caller can't otherwise tell a truncated run from a converged
-    one."""
+def test_connected_components_warns_when_truncated(spark):
+    """A run that exhausts max_iter before the star-forest fixpoint
+    must WARN — the caller can't otherwise tell a truncated run from a
+    converged one."""
     import pytest
 
     from stac_fastapi_duckdb_spark.pipeline.dedup import connected_components
 
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(edges, algorithm="strar")
     # a 40-node chain cannot reach the star fixpoint in one round
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
@@ -187,11 +183,13 @@ def test_connected_components_rejects_unknown_algorithm(spark):
     assert set(got.values()) == {0}
 
 
-def test_connected_components_star_matches_minlabel(spark):
-    """The large-star/small-star default must reach the identical
-    fixpoint (component = min id) as min-label propagation on
-    adversarial shapes: a long chain (deep diameter), a star with a
-    non-min center, a multi-parent merge, dup/reversed/self edges."""
+def test_connected_components_star_matches_union_find(spark):
+    """The distributed large-star/small-star loop (``driver_cap=0``)
+    and the driver union-find fast path (default cap) are independent
+    algorithms; both must reach the identical fixpoint (component = min
+    id) on adversarial shapes: a long chain (deep diameter), a star
+    with a non-min center, a multi-parent merge, dup/reversed/self
+    edges."""
     import random
 
     from stac_fastapi_duckdb_spark.pipeline.dedup import connected_components
@@ -218,23 +216,12 @@ def test_connected_components_star_matches_minlabel(spark):
         star = {
             r.doc_id: r.component
             for r in connected_components(
-                edges, all_ids=ids, algorithm="star", driver_cap=0
+                edges, all_ids=ids, driver_cap=0
             ).collect()
         }
-        minl = {
-            r.doc_id: r.component
-            for r in connected_components(
-                edges, all_ids=ids, algorithm="minlabel", max_iter=50
-            ).collect()
-        }
-        assert star == minl
-        # the round-11 driver union-find fast path (default cap) must
-        # reach the identical min-id fixpoint as the distributed loop
         fast = {
             r.doc_id: r.component
-            for r in connected_components(
-                edges, all_ids=ids, algorithm="star"
-            ).collect()
+            for r in connected_components(edges, all_ids=ids).collect()
         }
         assert fast == star
         # without all_ids the fast path serves the whole answer from a
@@ -250,10 +237,11 @@ def test_connected_components_star_matches_minlabel(spark):
         assert fast_local == dist_local
 
 
-def test_connected_components_star_fuzz_vs_minlabel(spark):
-    """Hypothesis differential gate for the CC default: on random edge
+def test_connected_components_star_fuzz_vs_union_find(spark):
+    """Hypothesis differential gate for the CC operator: on random edge
     multisets (self loops, dups, reversed pairs, disconnected nodes)
-    the star fixpoint must equal min-label propagation's."""
+    the distributed star fixpoint (``driver_cap=0``) must equal the
+    driver union-find's."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -277,16 +265,14 @@ def test_connected_components_star_fuzz_vs_minlabel(spark):
         star = {
             r.doc_id: r.component
             for r in connected_components(
-                edges, all_ids=ids, algorithm="star"
+                edges, all_ids=ids, driver_cap=0
             ).collect()
         }
-        minl = {
+        fast = {
             r.doc_id: r.component
-            for r in connected_components(
-                edges, all_ids=ids, algorithm="minlabel", max_iter=50
-            ).collect()
+            for r in connected_components(edges, all_ids=ids).collect()
         }
-        assert star == minl
+        assert star == fast
 
     check()
 
@@ -607,3 +593,21 @@ def test_edit_distance_pairs_star_is_linear_star_cover(spark):
     assert set(star) == {(1, 2), (1, 3), (1, 4)}  # member -> canonical only
     for k, d in star.items():
         assert allp[k] == d
+
+
+def test_pair_mode_typo_raises(spark):
+    """A mistyped ``pair_mode`` must raise, not silently run all-pairs
+    — in the in-bucket expansion (edit_distance_pairs → _bucket_pairs)
+    and in blocked record linkage alike."""
+    import pytest
+
+    from stac_fastapi_duckdb_spark.pipeline.dedup import edit_distance_pairs
+    from stac_fastapi_duckdb_spark.pipeline.entities import blocked_match_pairs
+
+    df = spark.createDataFrame(
+        [(1, "abc", "k"), (2, "abd", "k")], "doc_id long, text string, blk string"
+    )
+    with pytest.raises(ValueError, match="unknown pair_mode 'stars'"):
+        edit_distance_pairs(df, pair_mode="stars")
+    with pytest.raises(ValueError, match="unknown pair_mode 'All'"):
+        blocked_match_pairs(df, "doc_id", "text", ["blk"], pair_mode="All")

@@ -69,8 +69,9 @@ def test_resolve_entities_closure_and_singletons(records):
 
 
 def test_array_plan_is_single_shuffle_pair_expansion(records):
+    # the star mode's in-array expansion
     pairs = blocked_match_pairs(
-        records, "rid", "name", ["blk"], max_dist=1, expansion="array"
+        records, "rid", "name", ["blk"], max_dist=1, pair_mode="star"
     )
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     # one exchange (the blocking-key shuffle), no join operator at all
@@ -98,11 +99,23 @@ def _pair_set(df):
     return {(r.id_a, r.id_b, r.dist) for r in df.collect()}
 
 
-def test_join_and_array_expansions_equal(spark):
-    # randomized reference equivalence: names built by applying 0-2
-    # random single-char edits to shared stems, several blocks
-    # (including a NULL block key, which must group like groupBy does)
+def _levenshtein(a, b):
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_join_pairs_match_brute_force(spark):
+    # randomized reference: names built by applying 0-2 random
+    # single-char edits to shared stems, several blocks (including a
+    # NULL block key, which must group like groupBy does), checked
+    # against every in-block pair with a plain Levenshtein DP
     import random
+    from itertools import combinations
 
     rng = random.Random(7)
     alpha = "abcdefg"
@@ -126,14 +139,20 @@ def test_join_and_array_expansions_equal(spark):
                 rows.append((rid, s, blk))
                 rid += 1
     records = spark.createDataFrame(rows, "rid long, name string, blk string")
+    blocks = {}
+    for r, name, blk in rows:
+        blocks.setdefault(blk, []).append((r, name))
     for d in (1, 2):
-        got_join = _pair_set(blocked_match_pairs(
-            records, "rid", "name", ["blk"], max_dist=d, expansion="join"
+        want = set()
+        for members in blocks.values():
+            for (ia, na), (ib, nb) in combinations(sorted(members), 2):
+                dist = _levenshtein(na, nb)
+                if dist <= d:
+                    want.add((ia, ib, dist))
+        got = _pair_set(blocked_match_pairs(
+            records, "rid", "name", ["blk"], max_dist=d
         ))
-        got_array = _pair_set(blocked_match_pairs(
-            records, "rid", "name", ["blk"], max_dist=d, expansion="array"
-        ))
-        assert got_join == got_array, f"max_dist={d}"
+        assert got == want, f"max_dist={d}"
 
 
 def test_join_expansion_complete_under_single_edits(spark):

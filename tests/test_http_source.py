@@ -182,19 +182,14 @@ def test_manifest_expansion(spark, http_server):
     assert cat.items_df("web").count() == 300
 
 
-def test_no_driver_download_cache(spark, http_server):
-    """The legacy download-to-driver shim must stay cold on the http
-    path — no bytes materialize under the driver cache dir."""
-    import glob
-
-    from stac_fastapi_duckdb_spark.sources import catalog as C
-
+def test_single_http_url_collection(spark, http_server):
+    """One http(s) URL reads through the executor-side data source; the
+    driver keeps no file manifest for it (the source skips row groups
+    from footer stats on its own)."""
     base, _ = http_server
-    before = set(glob.glob(os.path.join(C._HTTP_CACHE_DIR, "*")))
     cat = CollectionCatalog(spark, {"web": f"{base}/part-1.parquet"})
     assert cat.items_df("web").count() == 150
-    after = set(glob.glob(os.path.join(C._HTTP_CACHE_DIR, "*")))
-    assert after == before
+    assert cat.build_item_index("web") == {}
 
 
 def test_object_store_urls_route_to_native_reader(spark):

@@ -161,14 +161,35 @@ class TestPerceptualHash:
         assert len(bands) == 8
         assert all(0 <= v <= 255 for v in bands)
 
-    def test_arrow_kernel_matches_column_reference(self, spark):
-        """Round-11 A/B pin: the vectorized Arrow kernel (default) and
-        the pure-Column reference formulation compute the identical
-        signature — including multibyte code points (the samples are
-        code points, not bytes), short payloads (n < blocks → empty
-        blocks vote 0), single chars, and payloads straddling block
-        boundaries. The DuckDB oracle replays the Column form, so this
-        pin is what keeps the kernel oracle-exact."""
+    @staticmethod
+    def _ahash_reference(text, blocks=64, num_bands=8):
+        """Per-row pure-Python aHash: sample i (1-based) of an n-char
+        stream lands in block ((i-1)·blocks) div n; bit b is the exact
+        integer vote block_sum·n > total·block_len; bands pack 8 bits
+        little-end first."""
+        samples = [ord(c) for c in text]
+        n = len(samples)
+        bsum, cnt = [0] * blocks, [0] * blocks
+        for i, c in enumerate(samples, 1):
+            b = ((i - 1) * blocks) // n
+            bsum[b] += c
+            cnt[b] += 1
+        total = sum(samples)
+        bits = [int(bsum[b] * n > total * cnt[b]) for b in range(blocks)]
+        bpb = blocks // num_bands
+        return [
+            sum(bits[j * bpb + k] << k for k in range(bpb))
+            for j in range(num_bands)
+        ]
+
+    def test_arrow_kernel_matches_python_reference(self, spark):
+        """The vectorized Arrow kernel must compute the identical
+        signature as a per-row pure-Python aHash — including multibyte
+        code points (the samples are code points, not bytes), short
+        payloads (n < blocks → empty blocks vote 0), single chars, and
+        payloads straddling block boundaries. The DuckDB oracle replays
+        the same block assignment and vote, so this pin is what keeps
+        the kernel oracle-exact."""
         from stac_fastapi_duckdb_spark.pipeline.multimodal import perceptual_hash
 
         rows = [
@@ -182,15 +203,8 @@ class TestPerceptualHash:
             (8, "z" * 65),                    # one block gets 2 chars
         ]
         media = self._media(spark, rows)
-        arrow = {
-            r.media_id: r.bands
-            for r in perceptual_hash(media, impl="arrow").collect()
-        }
-        column = {
-            r.media_id: r.bands
-            for r in perceptual_hash(media, impl="column").collect()
-        }
-        assert arrow == column
+        got = {r.media_id: r.bands for r in perceptual_hash(media).collect()}
+        assert got == {i: self._ahash_reference(t) for i, t in rows}
 
     def test_first_agreeing_band_emission_matches_distinct(self, spark):
         """Round-11 pin: first-agreeing-band emission produces EXACTLY

@@ -404,46 +404,47 @@ def test_jl_projection_preserves_distances_loosely(spark):
     assert (ratio > 0.2).all() and (ratio < 3.0).all()
 
 
-def test_jl_projection_column_impl_is_map_only_jvm(spark):
-    # the Column reference impl stays zero-shuffle/zero-Python — the
-    # UDF-free fallback contract for deployments without Python workers
-    from stac_fastapi_duckdb_spark.pipeline.similarity import jl_project
+def test_jl_projection_matches_duckdb_oracle(spark):
+    # the batched numpy kernel against the DuckDB replay of the same
+    # frozen matrix (ORACLE_SQL["jl_projection"]), with the value
+    # normalization tools/oracle_check.py applies: columns sorted by
+    # name, floats to 6 decimals, NaN/None as NULL, rows sorted
+    import math
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = (
-        jl_project(emb, impl="column")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    import duckdb
+
+    from stac_fastapi_duckdb_spark.plans import entry_queries as eq
+
+    sf = "/root/testdata/sf0.001"
+
+    def norm(df):
+        df = df.reindex(sorted(df.columns), axis=1)
+        out = []
+        for tup in df.itertuples(index=False):
+            out.append("|".join(
+                "NULL" if v is None or (isinstance(v, float) and math.isnan(v))
+                else f"{v:.6f}" if isinstance(v, float) else str(v)
+                for v in tup
+            ))
+        return sorted(out)
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf}/embeddings.parquet')"
     )
-    for bad in ("Exchange", "BatchEvalPython", "ArrowEvalPython",
-                "MapInPandas"):
-        assert bad not in plan
-
-
-def test_jl_projection_arrow_equals_column_bitwise(spark):
-    # the round-11 batched numpy kernel replays the aggregate()
-    # left-fold sequentially in j, so the doubles must be IDENTICAL
-    # (not approximately equal) to the interpreted Column fold
-    from stac_fastapi_duckdb_spark.pipeline.similarity import jl_project
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    col = {
-        (r.vec_id, r.pos): r.val
-        for r in jl_project(emb, impl="column").collect()
-    }
-    arrow = {
-        (r.vec_id, r.pos): r.val
-        for r in jl_project(emb, impl="arrow").collect()
-    }
-    assert col == arrow
+    sdf = eq.QUERIES["jl_projection"](spark, sf).toPandas()
+    odf = con.execute(eq.ORACLE_SQL["jl_projection"]).fetchdf()
+    con.close()
+    assert sorted(sdf.columns) == sorted(odf.columns)
+    assert len(sdf) > 0
+    assert norm(sdf) == norm(odf)
 
 
 def test_jl_projection_arrow_handles_null_and_ragged_rows(spark):
     # malformed input contract (r11 advisory): a null or wrong-width
-    # embedding must project to null vals in BOTH impls — the arrow
-    # kernel masks those rows instead of crashing in np.stack
-    from stac_fastapi_duckdb_spark.pipeline.similarity import jl_project
+    # embedding must project to null vals — the arrow kernel masks
+    # those rows instead of crashing in np.stack
+    from stac_fastapi_duckdb_spark.pipeline.similarity import jl_matrix, jl_project
 
     rows = [
         (0, [float(i) for i in range(8)]),
@@ -452,28 +453,17 @@ def test_jl_projection_arrow_handles_null_and_ragged_rows(spark):
         (3, [float(i + 1) for i in range(8)]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    col = {
+    got = {
         (r.vec_id, r.pos): r.val
-        for r in jl_project(df, dim=8, out_dim=4, impl="column").collect()
+        for r in jl_project(df, dim=8, out_dim=4).collect()
     }
-    arrow = {
-        (r.vec_id, r.pos): r.val
-        for r in jl_project(df, dim=8, out_dim=4, impl="arrow").collect()
-    }
-    assert col == arrow
-    assert all(col[(1, j)] is None for j in range(4))
-    assert all(col[(2, j)] is None for j in range(4))
-    assert col[(0, 0)] is not None
-
-
-def test_jl_projection_rejects_unknown_impl(spark):
-    import pytest
-
-    from stac_fastapi_duckdb_spark.pipeline.similarity import jl_project
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with pytest.raises(ValueError, match="unknown impl"):
-        jl_project(emb, impl="numpyish")
+    assert all(got[(1, j)] is None for j in range(4))
+    assert all(got[(2, j)] is None for j in range(4))
+    # the well-formed rows around them still project exactly
+    m = np.array(jl_matrix(4, 8), dtype=np.float64)
+    for vid, vec in (rows[0], rows[3]):
+        want = np.round(m @ np.asarray(vec), 6)
+        assert np.allclose([got[(vid, j)] for j in range(4)], want, atol=1e-6)
 
 
 def test_ivfpq_composes_cell_pruning_with_adc(spark):

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -81,7 +82,7 @@ def main() -> None:
         a, b = res[name]["A"], res[name]["B"]
         out["queries"][name] = {
             "A_min": min(a), "B_min": min(b),
-            "A_med": sorted(a)[len(a) // 2], "B_med": sorted(b)[len(b) // 2],
+            "A_med": statistics.median(a), "B_med": statistics.median(b),
             "B_over_A_min": round(min(b) / min(a), 3),
             "A": a, "B": b,
         }

@@ -70,7 +70,7 @@ PROBES = [
     "incremental_line_dedup",
     "ann_ivfpq_topk",
     # round-7 additions: blocked record linkage (one shuffle on the
-    # blocking key, in-array pair expansion) and its CC closure
+    # blocking key, in-block pair expansion) and its CC closure
     "entity_match_pairs",
     "entity_resolution",
     # map-only interval filter over the SCD2 window build
