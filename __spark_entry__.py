@@ -7,7 +7,9 @@ queries()     — one entry per implemented operator from SURVEY.md §2
                 callable takes (spark, sf_dir) -> DataFrame.
 oracle_sql()  — matching DuckDB SQL per query (same column aliases).
 
-Implementations live in stac_fastapi_duckdb_spark/plans/entry_queries.py.
+Implementations live in stac_fastapi_duckdb_spark/plans/entry_queries.py,
+where ``@query(tags=..., oracle=...)`` registers each ``q_<name>`` plan
+with its DuckDB SQL into ``QUERIES`` / ``ORACLE_SQL``.
 """
 
 from __future__ import annotations

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs the headline queries (``tagged("headline")``
+in plans/entry_queries.py) at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line:
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -23,65 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from stac_fastapi_duckdb_spark.plans import entry_queries as eq
+from stac_fastapi_duckdb_spark.plans.entry_queries import force
 from stac_fastapi_duckdb_spark.session import get_spark
-
-# Headline set: mix of scan-heavy agg, joins, sort/topk, STAC predicate,
-# and pipeline operators — the queries whose plans we tune hardest.
-BENCH_QUERIES = [
-    "pricing_summary",
-    "top_revenue_orders",
-    "region_revenue",
-    "events_hourly_rollup",
-    "datetime_range",
-    "cql2_comparisons",
-    "sort_multikey",
-    "topk",
-    "collection_union",
-    "dedup_exact",
-    "token_count",
-    "embedding_topk",
-    # training-data pipeline + streaming operators
-    "minhash_near_dup",
-    "simhash_pairs",
-    "text_analysis",
-    "sessionize",
-    "streaming_hourly_rollup",
-    "embedding_near_dup",
-    "multimodal_features",
-    # relational breadth: join strategies, grouping-set expand, windows
-    "semi_join",
-    "bloom_pruned_join",
-    "rollup_agg",
-    "rolling_window",
-    "scd2_intervals",
-    "json_extract",
-    "audio_frames",
-]
-
-
-# Queries served from the WRITTEN artifact tier (corpus-constant state
-# built once per ingest — plans/entry_queries.py _artifact_df and
-# friends): their steady-state timing measures the serving slice over
-# materialized state, amortizing the build. Labeled here so every
-# recorded bench artifact carries the distinction; tools/bench_compare
-# prints them with an `art` marker, gives them their own subtotal, and
-# times them cold (build+write+serve) under --cold-artifacts.
-ARTIFACT_SERVED = {
-    "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk",
-    "multimodal_features", "decontaminate", "bm25_search",
-    "hybrid_search", "semdedup", "duplicate_spans",
-    "remove_duplicate_spans", "lm_perplexity", "top_bigrams",
-    "edit_distance_pairs", "quality_tiers", "incremental_line_dedup",
-    "ngram_novelty", "hash_embed", "hashed_text_topk", "line_dedup",
-    "span_dedup",
-}
-
-
-def force(df) -> None:
-    """Execute the FULL plan: noop v2 sink consumes all rows/columns
-    (a count() would let the optimizer collapse projections/sorts)."""
-    df.write.format("noop").mode("overwrite").save()
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -113,7 +57,8 @@ def main() -> None:
     # compilation, parquet footer cache — steady-state is what a
     # long-lived session serves. DuckDB baselines equally benefit from
     # the OS page cache on repeat runs.
-    for name in BENCH_QUERIES:
+    headline = eq.tagged("headline")
+    for name in headline:
         force(eq.QUERIES[name](spark, sf_dir))
 
     # Three timed passes, min per query — the local[32] VM sees 1.5-3x
@@ -121,7 +66,7 @@ def main() -> None:
     # point estimate.
     timings: dict[str, float] = {}
     for _pass in range(3):
-        for name in BENCH_QUERIES:
+        for name in headline:
             fn = eq.QUERIES[name]
             t0 = time.perf_counter()
             force(fn(spark, sf_dir))
@@ -149,7 +94,7 @@ def main() -> None:
         "layout": _layout_components(spark, sf_dir),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf_dir,
         "mode": "cold" if cold else "warm-cache",
-        "artifact_served": sorted(ARTIFACT_SERVED),
+        "artifact_served": sorted(eq.tagged("artifact")),
         "queries": timings,
         "metric": "headline_queries_total",
         "unit": "sec",
@@ -194,7 +139,7 @@ def main() -> None:
                 "master": master,
                 "default_parallelism": default_parallelism,
                 "artifact_served": sorted(
-                    ARTIFACT_SERVED & set(timings)
+                    set(eq.tagged("artifact")) & set(timings)
                 ),
                 "queries": timings,
                 "metric": "headline_queries_total",
@@ -205,78 +150,9 @@ def main() -> None:
     )
 
 
-# operators added after the headline set froze, timed OUTSIDE the
-# headline total so the headline stays round-over-round comparable;
-# reported for visibility
-_EXTRA_OPS = [
-    "repetition_stats",
-    "pii_scrub",
-    "url_normalize",
-    "hybrid_search",
-    "embedding_outliers",
-    "curation_pipeline",
-    "gap_fill",
-    "semdedup",
-    "duplicate_spans",
-    "containment_dedup",
-    "quality_classifier",
-    "dataset_fingerprint",
-    "cluster_representatives",
-    "split_leakage",
-    "shuffle_shards",
-    "distribution_drift",
-    "profile_table",
-    "remove_duplicate_spans",
-    "lm_perplexity",
-    "top_bigrams",
-    "kmeans_round",
-    "global_row_ids",
-    "kmv_distinct",
-    "weighted_sample",
-    "sampled_quantiles",
-    "edit_distance_pairs",
-    "trend_fit",
-    "snapshot_diff",
-    "quality_tiers",
-    "kcenter_select",
-    "pagerank_transitions",
-    "cms_counts",
-    "jl_projection",
-    "top_paths",
-    "event_pairs",
-    "anomaly_hours",
-    "ngram_novelty",
-    "hll_distinct",
-    "kmv_overlap",
-    "line_dedup",
-    "decontaminate",
-    "hash_embed",
-    "hashed_text_topk",
-    "incremental_line_dedup",
-    "ann_ivfpq_topk",
-    "entity_match_pairs",
-    "entity_resolution",
-    "scd2_as_of",
-    "phash_near_dup",
-    "span_dedup",
-    "mmr_rerank",
-    "seasonal_decompose",
-    "streaming_upsert",
-    "stratified_exact_sample",
-    "attribution",
-    "phash_dedup_map",
-    "interval_overlap",
-    "linear_attribution",
-    "quarantine",
-    "pack_chunks",
-    "pack_greedy",
-    "mixture_sample",
-]
-
-
 def _pipeline_ops(spark, sf_dir: str) -> dict[str, float]:
     out: dict[str, float] = {}
-    for name in _EXTRA_OPS:
+    for name in eq.tagged("pipeline_op"):
         fn = eq.QUERIES[name]
         force(fn(spark, sf_dir))  # warm
         best = None

@@ -320,13 +320,3 @@ def get_one_item(catalog: CollectionCatalog, collection_id: str, item_id: str) -
             f"Item {item_id} in collection {collection_id} not found"
         )
     return rows[0].asDict(recursive=True)
-
-
-def get_total_count(
-    catalog: CollectionCatalog, builder: SearchBuilder
-) -> int:
-    """A1+A2: numMatched. One count over the unioned filtered plan —
-    Catalyst pushes the filters into each source scan, so this is the
-    per-source-count-then-sum of database_logic.py:698-770 without the
-    rebuilt SQL."""
-    return builder.dataframe().count()

@@ -65,13 +65,8 @@ def shj_hint(df: DataFrame) -> DataFrame:
     spill its hash table the way sort-merge spills — under heavy key
     skew the pinned hint risks an executor OOM where Catalyst's default
     would degrade gracefully. The in-bucket skew cap bounds bucket
-    sizes, AQE skew-join splits oversized shuffle partitions before the
-    build, and ``SPARK_GRAFT_NO_SHUFFLE_HASH=1`` drops the hint for
-    skewed production reuse."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_SHUFFLE_HASH"):
-        return df
+    sizes, and AQE skew-join splits oversized shuffle partitions before
+    the build."""
     return df.hint("SHUFFLE_HASH")
 
 

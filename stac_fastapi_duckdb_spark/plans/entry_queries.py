@@ -10,6 +10,10 @@ start_datetime / end_datetime, bbox arrays) from the synthetic columns
 with IDENTICAL expressions on both sides; the predicate under test is
 then byte-for-byte the engine's own operator implementation.
 
+Each plan is registered once with ``@query(tags=..., oracle=...)``,
+which fills ``QUERIES`` and ``ORACLE_SQL``; ``tagged(tag)`` lists the
+query sets the bench and tools run.
+
 Column-name parity rule (driver compare): every computed column is
 aliased identically in the Spark plan and the SQL string.
 
@@ -179,9 +183,104 @@ _STAC_EVENTS_SQL = """
 
 
 # ---------------------------------------------------------------------------
+# query registry: ``@query`` registers each ``q_<name>`` plan, its DuckDB
+# oracle and its tags once, at the definition
+# ---------------------------------------------------------------------------
+
+# The closed tag vocabulary. Each tag names a query set that a tool
+# derives with ``tagged(tag)``; the value says why the set exists.
+TAGS: dict[str, str] = {
+    "headline": (
+        "bench.py headline total: scan-heavy aggregates, joins, sort/top-k, "
+        "STAC predicates and pipeline operators, the plans tuned hardest; "
+        "frozen so the total stays comparable round over round"
+    ),
+    "pipeline_op": (
+        "operators added after the headline set froze: bench.py times them "
+        "outside the headline total (its pipeline_ops block), for visibility"
+    ),
+    "artifact": (
+        "served from the written artifact tier (corpus-constant state built "
+        "once per ingest, _artifact_df): steady-state timing measures the "
+        "serving slice. bench.py labels them, tools/bench_compare.py gives "
+        "them an `art` marker, their own subtotal and a --cold-artifacts "
+        "mode, and tools/oracle_artifact_sql.py must hold a serve form"
+    ),
+    "quadratic_oracle": (
+        "the oracle is deliberately brute force (O(n²) all-pairs checks of "
+        "an LSH operator, or banded-pair joins plus unrolled connected-"
+        "components replays): minutes to hours in DuckDB at sf0.1 and "
+        "super-linear in SF. The oracle checks values, not strategy, so "
+        "tools/bench_compare.py times these Spark-only"
+    ),
+    "iterative_oracle": (
+        "an iterative fixed point with no native SQL form: the oracle "
+        "unrolls the loop as chained (or recursive) CTEs and DuckDB re-runs "
+        "the upstream once per round, while Spark materializes it once. "
+        "tools/bench_compare.py keeps them out of the ratio total"
+    ),
+    "streaming_oracle": (
+        "a full Structured Streaming run whose oracle is a batch SQL "
+        "restatement: per-run stream startup (offset log, state stores) "
+        "dominates, a fixed cost a batch engine never pays. "
+        "tools/bench_compare.py reports it Spark-only; its batch twin is "
+        "ratio-compared"
+    ),
+    "scale_probe": (
+        "one query per cost regime (scan-bound aggregate, shuffle-bound "
+        "dedup, LSH banding, map-only text, fused pipeline, window-heavy, "
+        "driver-bounded rounds, sketches): tools/scale_probe.py fits each "
+        "one's scaling exponent across the scale factors"
+    ),
+}
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLE_SQL: dict[str, str] = {}
+_TAGGED: dict[str, list[str]] = {tag: [] for tag in TAGS}
+
+
+def query(oracle: str, tags: tuple[str, ...] = ()):
+    """Register the decorated ``q_<name>`` plan as query ``<name>``,
+    with the DuckDB SQL that restates it (same tables, same column
+    aliases) and its tags. Raises ``ValueError`` on a duplicate name or
+    a tag outside ``TAGS``; returns the function unchanged."""
+
+    def register(fn):
+        name = fn.__name__.removeprefix("q_")
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
+        unknown = sorted(set(tags) - TAGS.keys())
+        if unknown:
+            raise ValueError(f"query {name!r}: unknown tags {unknown}")
+        QUERIES[name] = fn
+        ORACLE_SQL[name] = oracle
+        for tag in tags:
+            _TAGGED[tag].append(name)
+        return fn
+
+    return register
+
+
+def tagged(tag: str) -> list[str]:
+    """The names of the queries carrying ``tag``, in registry order."""
+    return list(_TAGGED[tag])
+
+
+def force(df: DataFrame) -> None:
+    """Execute the FULL plan: the noop v2 sink consumes every row and
+    column without driver-side transfer (under ``count()`` Catalyst may
+    prune projections and sorts down to an empty-schema scan)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+# ---------------------------------------------------------------------------
 # Reference-parity operators (SURVEY §2)
 # ---------------------------------------------------------------------------
 
+@query(oracle="""
+        SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
+        WHERE o_orderkey = 100 LIMIT 1
+    """)
 def q_point_lookup(spark, sf):  # P2: WHERE id = ? LIMIT 1 (database_logic.py:168-189)
     return (
         _t(spark, sf, "orders")
@@ -191,6 +290,10 @@ def q_point_lookup(spark, sf):  # P2: WHERE id = ? LIMIT 1 (database_logic.py:16
     )
 
 
+@query(oracle="""
+        SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
+        WHERE o_orderkey IN (1,2,3,5,8,13,21,34,55,89,144)
+    """)
 def q_ids_in_list(spark, sf):  # P3: id IN (...) (database_logic.py:211-215,840-843)
     keys = [1, 2, 3, 5, 8, 13, 21, 34, 55, 89, 144]
     return (
@@ -200,6 +303,11 @@ def q_ids_in_list(spark, sf):  # P3: id IN (...) (database_logic.py:211-215,840-
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT event_id, 'col-click' AS collection FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) WHERE event_type = 'click'
+        UNION ALL
+        SELECT event_id, 'col-purchase' AS collection FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) WHERE event_type = 'purchase'
+    """)
 def q_collection_union(spark, sf):
     """S2+U1+P4: per-source constant-column injection + UNION ALL
     (database_logic.py:831-854). Two 'collections' carved from events."""
@@ -213,30 +321,62 @@ def q_collection_union(spark, sf):
     return a.unionByName(b).select("event_id", "collection")
 
 
+@query(oracle=f"""
+        SELECT event_id FROM ({_STAC_EVENTS_SQL})
+        WHERE (datetime IS NOT NULL AND datetime = TIMESTAMP '2024-01-15 00:00:00')
+           OR (datetime IS NULL AND start_datetime IS NOT NULL AND end_datetime IS NOT NULL
+               AND start_datetime <= TIMESTAMP '2024-01-15 00:00:00'
+               AND end_datetime >= TIMESTAMP '2024-01-15 00:00:00')
+    """)
 def q_datetime_exact(spark, sf):  # P5 (database_logic.py:261-273)
     return _stac_events(spark, sf).filter(
         datetime_predicate("2024-01-15T00:00:00Z")
     ).select("event_id")
 
 
+@query(tags=("headline",), oracle=f"""
+        SELECT event_id FROM ({_STAC_EVENTS_SQL})
+        WHERE (datetime IS NOT NULL
+               AND datetime >= TIMESTAMP '2024-01-10 00:00:00'
+               AND datetime <= TIMESTAMP '2024-01-20 00:00:00')
+           OR (datetime IS NULL AND start_datetime IS NOT NULL AND end_datetime IS NOT NULL
+               AND start_datetime <= TIMESTAMP '2024-01-20 00:00:00'
+               AND end_datetime >= TIMESTAMP '2024-01-10 00:00:00')
+    """)
 def q_datetime_range(spark, sf):  # P6 (database_logic.py:279-292)
     return _stac_events(spark, sf).filter(
         datetime_predicate("2024-01-10T00:00:00Z/2024-01-20T00:00:00Z")
     ).select("event_id")
 
 
+@query(oracle=f"""
+        SELECT event_id FROM ({_STAC_EVENTS_SQL})
+        WHERE (datetime IS NOT NULL AND datetime >= TIMESTAMP '2024-01-25 00:00:00')
+           OR (datetime IS NULL AND end_datetime IS NOT NULL
+               AND end_datetime >= TIMESTAMP '2024-01-25 00:00:00')
+    """)
 def q_datetime_gte(spark, sf):  # P7 (database_logic.py:293-302)
     return _stac_events(spark, sf).filter(
         datetime_predicate("2024-01-25T00:00:00Z/..")
     ).select("event_id")
 
 
+@query(oracle=f"""
+        SELECT event_id FROM ({_STAC_EVENTS_SQL})
+        WHERE (datetime IS NOT NULL AND datetime <= TIMESTAMP '2024-01-05 00:00:00')
+           OR (datetime IS NULL AND start_datetime IS NOT NULL
+               AND start_datetime <= TIMESTAMP '2024-01-05 00:00:00')
+    """)
 def q_datetime_lte(spark, sf):  # P8 (database_logic.py:303-312)
     return _stac_events(spark, sf).filter(
         datetime_predicate("../2024-01-05T00:00:00Z")
     ).select("event_id")
 
 
+@query(tags=("headline",), oracle="""
+        SELECT c_custkey, c_acctbal, c_mktsegment FROM customer
+        WHERE c_acctbal >= 1000 AND c_acctbal < 5000 AND c_mktsegment <> 'BUILDING'
+    """)
 def q_cql2_comparisons(spark, sf):  # C4-C6 (database_logic.py:566-594)
     df = _t(spark, sf, "customer")
     expr = {
@@ -252,6 +392,10 @@ def q_cql2_comparisons(spark, sf):  # C4-C6 (database_logic.py:566-594)
     )
 
 
+@query(oracle="""
+        SELECT p_partkey, p_type, p_brand FROM part
+        WHERE p_type LIKE 'PROMO%' AND p_brand IN ('Brand#1','Brand#2','Brand#3')
+    """)
 def q_cql2_like_in(spark, sf):  # C7, C8 (database_logic.py:597-607)
     df = _t(spark, sf, "part")
     expr = {
@@ -269,6 +413,10 @@ def q_cql2_like_in(spark, sf):  # C7, C8 (database_logic.py:597-607)
     )
 
 
+@query(oracle="""
+        SELECT p_partkey, p_size, p_name FROM part
+        WHERE p_size BETWEEN 1 AND 5 OR NOT (p_name LIKE '%a%')
+    """)
 def q_cql2_between_or_not(spark, sf):  # C2, C3, C9 (database_logic.py:557-615)
     df = _t(spark, sf, "part")
     expr = {
@@ -286,6 +434,12 @@ def q_cql2_between_or_not(spark, sf):  # C2, C3, C9 (database_logic.py:557-615)
     )
 
 
+@query(oracle="""
+        SELECT c_custkey FROM (
+            SELECT c_custkey, NULLIF(c_mktsegment, 'MACHINERY') AS segment_opt
+            FROM customer
+        ) WHERE segment_opt IS NULL
+    """)
 def q_cql2_isnull(spark, sf):  # C10 (database_logic.py:617-620); NULLs derived
     df = _t(spark, sf, "customer").withColumn(
         "segment_opt", F.nullif(F.col("c_mktsegment"), F.lit("MACHINERY"))
@@ -294,39 +448,31 @@ def q_cql2_isnull(spark, sf):  # C10 (database_logic.py:617-620); NULLs derived
     return df.filter(cql2_to_column(expr, df.columns)).select("c_custkey")
 
 
+@query(oracle="""
+        SELECT p_partkey, p_type FROM part WHERE lower(p_type) LIKE 'promo%'
+    """)
 def q_cql2_ilike(spark, sf):  # C12: advertised-but-missing in reference
     df = _t(spark, sf, "part")
     expr = {"op": "ilike", "args": [{"property": "p_type"}, "promo%"]}
     return df.filter(cql2_to_column(expr, df.columns)).select("p_partkey", "p_type")
 
 
-def q_cql2_text(spark, sf):
-    """CQL2-TEXT encoding (upstream Filter-extension GET default): the
-    text grammar parses to the SAME dict AST the JSON path compiles
-    (operators/cql2_text.py), so one Column compiler serves both. The
-    reference only ever sees pre-parsed JSON (database_logic.py:488-521);
-    text support is what its conformance advertisement implies."""
-    from stac_fastapi_duckdb_spark.operators.cql2_text import parse_cql2_text
-
-    df = _t(spark, sf, "orders")
-    text = (
-        "(o_totalprice BETWEEN 1000.0 AND 50000.0"
-        " OR o_orderpriority IN ('1-URGENT', '2-HIGH'))"
-        " AND o_orderpriority NOT LIKE '%LOW%'"
-        " AND o_orderstatus <> 'P'"
-        " AND o_orderdate >= DATE('1995-01-01')"
-    )
-    return df.filter(cql2_to_column(parse_cql2_text(text), df.columns)).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-
-
+@query(oracle="""
+        SELECT s_suppkey, s_name, s_acctbal FROM supplier
+        WHERE s_acctbal >= 1000 AND s_acctbal < 6000
+          AND s_name LIKE 'Supplier#00000000%'
+    """)
 def q_stacql_query(spark, sf):  # P12: query extension (stubbed in reference)
     df = _t(spark, sf, "supplier")
     q = {"s_acctbal": {"gte": 1000, "lt": 6000}, "s_name": {"startsWith": "Supplier#00000000"}}
     return df.filter(stacql_to_column(q, df.columns)).select("s_suppkey", "s_name", "s_acctbal")
 
 
+@query(tags=("headline",), oracle="""
+        SELECT l_orderkey, l_linenumber, l_returnflag, l_shipdate FROM lineitem
+        ORDER BY l_returnflag DESC, l_shipdate ASC, l_orderkey ASC, l_linenumber ASC
+        LIMIT 100
+    """)
 def q_sort_multikey(spark, sf):  # O1-O3 multi-key ORDER BY + limit
     return (
         _t(spark, sf, "lineitem")
@@ -341,6 +487,10 @@ def q_sort_multikey(spark, sf):  # O1-O3 multi-key ORDER BY + limit
     )
 
 
+@query(oracle="""
+        SELECT o_orderkey, o_orderdate FROM orders
+        ORDER BY o_orderkey ASC LIMIT 50 OFFSET 5000
+    """)
 def q_pagination_offset(spark, sf):  # O4: LIMIT/OFFSET look-ahead page
     return (
         _t(spark, sf, "orders")
@@ -351,6 +501,10 @@ def q_pagination_offset(spark, sf):  # O4: LIMIT/OFFSET look-ahead page
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT o_orderkey, o_totalprice FROM orders
+        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 25
+    """)
 def q_topk(spark, sf):  # O4 topk → TakeOrderedAndProject physical op
     return (
         _t(spark, sf, "orders")
@@ -360,6 +514,10 @@ def q_topk(spark, sf):  # O4 topk → TakeOrderedAndProject physical op
     )
 
 
+@query(oracle="""
+        SELECT count(*) AS matched FROM lineitem
+        WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00' AND l_discount > 0.05
+    """)
 def q_count_matched(spark, sf):  # A1+A2: numMatched COUNT(*) with WHERE
     return (
         _t(spark, sf, "lineitem")
@@ -371,6 +529,13 @@ def q_count_matched(spark, sf):  # A1+A2: numMatched COUNT(*) with WHERE
     )
 
 
+@query(oracle="""
+        SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM (
+            SELECT count(*) AS cnt FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) WHERE event_type = 'click'
+            UNION ALL
+            SELECT count(*) AS cnt FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) WHERE event_type = 'error'
+        )
+    """)
 def q_union_counts(spark, sf):  # U2: per-source counts summed
     ev = _events(spark, sf)
     a = ev.filter(F.col("event_type") == "click").agg(F.count(F.lit(1)).alias("cnt"))
@@ -378,6 +543,16 @@ def q_union_counts(spark, sf):  # U2: per-source counts summed
     return a.unionByName(b).agg(F.sum("cnt").cast("bigint").alias("total"))
 
 
+@query(oracle="""
+        SELECT c_custkey FROM (
+            SELECT c_custkey,
+                   CAST(c_custkey % 60 AS DOUBLE) AS x0,
+                   CAST(c_custkey % 30 AS DOUBLE) AS y0,
+                   CAST(c_custkey % 60 + 1 AS DOUBLE) AS x1,
+                   CAST(c_custkey % 30 + 1 AS DOUBLE) AS y1
+            FROM customer
+        ) WHERE x0 <= 20.0 AND x1 >= 10.0 AND y0 <= 12.0 AND y1 >= 5.0
+    """)
 def q_spatial_envelope(spark, sf):
     """P10 fast path: rectangle-overlap on derived bbox arrays — the
     pushdownable half of the bbox operator (operators/spatial.py).
@@ -402,6 +577,21 @@ def q_spatial_envelope(spark, sf):
 # Beyond-reference analytics (TPC-H-style headline queries for bench)
 # ---------------------------------------------------------------------------
 
+# money sums mirror functions/money.py: exact BIGINT unit counts
+# (cents; 1e-4 units for price*(1-disc)), one closing /10^k division
+@query(tags=("headline", "scale_probe"), oracle="""
+        SELECT l_returnflag, l_linestatus,
+               SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty,
+               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_base_price,
+               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
+                   * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) / 10000.0
+                   AS sum_disc_price,
+               count(*) AS count_order
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
+        GROUP BY l_returnflag, l_linestatus
+        ORDER BY l_returnflag, l_linestatus
+    """)
 def q_pricing_summary(spark, sf):
     """TPC-H Q1 shape: the flagship aggregation. Integer-unit money sums
     (functions/money.py): exact and order-independent like the previous
@@ -423,6 +613,21 @@ def q_pricing_summary(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT l_orderkey, o_orderdate,
+               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
+                   * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) / 10000.0
+                   AS revenue
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        WHERE c_mktsegment = 'BUILDING'
+          AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+          AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
+        GROUP BY l_orderkey, o_orderdate
+        ORDER BY revenue DESC, l_orderkey ASC
+        LIMIT 10
+    """)
 def q_top_revenue_orders(spark, sf):
     """TPC-H Q3 shape: 3-way join (broadcast dims) + group + top-k."""
     c = _t(spark, sf, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -444,6 +649,19 @@ def q_top_revenue_orders(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT n_name,
+               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
+                   * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) / 10000.0
+                   AS revenue
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        GROUP BY n_name
+        ORDER BY revenue DESC, n_name ASC
+    """)
 def q_region_revenue(spark, sf):
     """TPC-H Q5 shape: 5-way star join with broadcast dims. The one
     fact-fact join (lineitem⋈orders) uses SHUFFLE_HASH on the narrower
@@ -470,6 +688,14 @@ def q_region_revenue(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT date_trunc('hour', ts) AS bucket, event_type,
+               count(*) AS n,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events)
+        GROUP BY 1, 2
+        ORDER BY bucket, event_type
+    """)
 def q_events_hourly_rollup(spark, sf):
     """Time-bucketed aggregation over the events table (batch twin of
     the streaming windowed agg in streaming/)."""
@@ -491,6 +717,10 @@ def q_events_hourly_rollup(spark, sf):
 # Training-data pipeline operators (documents / embeddings)
 # ---------------------------------------------------------------------------
 
+@query(tags=("headline", "scale_probe"), oracle="""
+        SELECT MIN(doc_id) AS keep_id, count(*) AS dups
+        FROM documents GROUP BY text
+    """)
 def q_dedup_exact(spark, sf):
     """Exact dedup: keep min doc_id per identical text (hash-groupBy)."""
     return (
@@ -501,6 +731,11 @@ def q_dedup_exact(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT doc_id,
+               CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens
+        FROM documents
+    """)
 def q_token_count(spark, sf):
     """Whitespace token counting per document."""
     return _t(spark, sf, "documents").select(
@@ -509,6 +744,9 @@ def q_token_count(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT doc_id, md5(lower(trim(text))) AS fp FROM documents
+    """)
 def q_text_fingerprint(spark, sf):
     """Document fingerprint: md5 over normalized text."""
     return _t(spark, sf, "documents").select(
@@ -516,6 +754,14 @@ def q_text_fingerprint(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT doc_id,
+               CAST(length(text) AS BIGINT) AS n_chars_actual,
+               CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
+               CAST(len(list_distinct(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT)
+                    AS n_unique_tokens
+        FROM documents
+    """)
 def q_text_quality(spark, sf):
     """Quality scoring: char/token stats per doc (integer-exact)."""
     d = _t(spark, sf, "documents")
@@ -528,6 +774,17 @@ def q_text_quality(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT vec_id,
+               ROUND(list_cosine_similarity(
+                   CAST(embedding AS DOUBLE[]),
+                   (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)
+               ), 6) AS cos_sim
+        FROM embeddings
+        WHERE vec_id <> 0
+        ORDER BY cos_sim DESC, vec_id ASC
+        LIMIT 10
+    """)
 def q_embedding_topk(spark, sf):
     """Brute-force cosine top-k ANN baseline: 10 nearest to vec_id=0.
     JVM-side higher-order-function dot/norm (functions/vectors.py)."""
@@ -547,6 +804,30 @@ def q_embedding_topk(spark, sf):
     )
 
 
+# word-3-gram shingle sets per doc, replicating pipeline.dedup.shingles_col:
+# lower+trim, split \s+, 3-grams joined by ' ', distinct; <3 tokens → whole text
+_SHINGLES_SQL = r"""
+    SELECT doc_id,
+           CASE WHEN len(t) >= 3
+                THEN list_distinct(list_transform(
+                         generate_series(1, len(t) - 2),
+                         i -> concat_ws(' ', t[i], t[i+1], t[i+2])))
+                ELSE [array_to_string(t, ' ')] END AS s
+    FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
+          FROM documents)
+"""
+
+_JACCARD_PAIRS_SQL = f"""
+    SELECT id_a, id_b, jaccard FROM (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+                     / len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
+        FROM ({_SHINGLES_SQL}) a JOIN ({_SHINGLES_SQL}) b ON a.doc_id < b.doc_id
+    ) WHERE jaccard >= 0.8
+"""
+
+
+@query(tags=("headline", "quadratic_oracle", "scale_probe"), oracle=_JACCARD_PAIRS_SQL)
 def q_minhash_near_dup(spark, sf):
     """MinHash+LSH near-dup detection: shingle→seeded-xxhash64 minhash →
     banded bucket join → exact Jaccard verify. Oracle is the exact
@@ -556,6 +837,7 @@ def q_minhash_near_dup(spark, sf):
     return P_dedup.ngram_jaccard_pairs(docs, cand, threshold=0.8)
 
 
+@query(tags=("quadratic_oracle",), oracle=_JACCARD_PAIRS_SQL)
 def q_ngram_jaccard(spark, sf):
     """Word-3-gram Jaccard ≥ 0.8 pairs via the CANDIDATE-JOIN form:
     128-hash / 64-band LSH candidates (per-pair miss ≈ (1-0.8²)⁶⁴ ≈
@@ -570,11 +852,84 @@ def q_ngram_jaccard(spark, sf):
     return P_dedup.ngram_jaccard_pairs(docs, cand, threshold=0.8)
 
 
+def _cc_unrolled_sql(rounds: int = 6) -> str:
+    """Min-label propagation unrolled as chained CTEs — the SQL oracle
+    for the iterative connected-components operator (converged result is
+    identical once rounds ≥ cluster diameter)."""
+    ctes = [
+        f"e AS (SELECT id_a AS n, id_b AS m FROM ({_JACCARD_PAIRS_SQL})"
+        f"      UNION ALL SELECT id_b, id_a FROM ({_JACCARD_PAIRS_SQL}))",
+        "l0 AS (SELECT doc_id AS n, doc_id AS comp FROM documents)",
+    ]
+    for i in range(rounds):
+        ctes.append(
+            f"l{i + 1} AS (SELECT l.n, LEAST(l.comp, COALESCE(MIN(r.comp), l.comp)) AS comp"
+            f"  FROM l{i} l LEFT JOIN e ON l.n = e.n LEFT JOIN l{i} r ON e.m = r.n"
+            f"  GROUP BY l.n, l.comp)"
+        )
+    return (
+        "WITH "
+        + ",\n".join(ctes)
+        + f"\nSELECT n AS doc_id, comp AS component FROM l{rounds}"
+    )
+
+
+# transitive default: canonical_id IS the connected component's min
+# id — same unrolled-propagation oracle as dedup_clusters, re-aliased
+@query(oracle=f"""
+        SELECT doc_id, component AS canonical_id FROM ({_cc_unrolled_sql()})
+    """)
 def q_minhash_dedup_map(spark, sf):
     """Full near-dup dedup: LSH candidates → verify → id→canonical map."""
     return P_dedup.minhash_dedup(_t(spark, sf, "documents"), bands=32)
 
 
+# simhash signature per doc, replicating pipeline.dedup.with_simhash:
+# tokens = lower().split(); token hash = low 64 bits of md5; bit i of the
+# signature = majority vote (ones*2 >= n_tok); signed-int64 reassembly.
+_SIMHASH_SIGS_SQL = r"""
+    SELECT doc_id,
+           CAST(SUM(CASE WHEN i < 63 AND ones * 2 >= n_tok
+                         THEN CAST(1 AS BIGINT) << i ELSE 0 END) AS BIGINT)
+           + CASE WHEN MAX(CASE WHEN i = 63 AND ones * 2 >= n_tok
+                                THEN 1 ELSE 0 END) = 1
+                  THEN -9223372036854775807 - 1 ELSE 0 END AS sig
+    FROM (
+        SELECT doc_id, n_tok, i,
+               SUM(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE 0 END) AS ones
+        FROM (
+            SELECT doc_id, n_tok, h, unnest(range(0, 64)) AS i
+            FROM (
+                SELECT doc_id, len(ts) AS n_tok,
+                       CAST('0x' || substr(md5(unnest(ts)), 17, 16) AS UBIGINT) AS h
+                FROM (
+                    SELECT doc_id,
+                           list_filter(regexp_split_to_array(lower(text), '\s+'),
+                                       x -> x <> '') AS ts
+                    FROM documents
+                ) WHERE len(ts) > 0
+            )
+        )
+        GROUP BY doc_id, n_tok, i
+    )
+    GROUP BY doc_id
+    UNION ALL
+    SELECT doc_id, 0 AS sig
+    FROM (SELECT doc_id,
+                 list_filter(regexp_split_to_array(lower(text), '\s+'),
+                             x -> x <> '') AS ts
+          FROM documents)
+    WHERE len(ts) = 0
+"""
+
+
+@query(tags=("headline",), oracle=f"""
+        WITH sigs AS ({_SIMHASH_SIGS_SQL})
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
+        FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
+        WHERE bit_count(xor(a.sig, b.sig)) <= 8
+    """)
 def q_simhash_pairs(spark, sf):
     """SimHash Hamming≤8 pairs via pigeonhole banding. Token hash is the
     low-64-bits-of-md5, so the DuckDB oracle rebuilds the identical
@@ -586,6 +941,33 @@ def q_simhash_pairs(spark, sf):
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
+_LANG_PRED_SQL = """
+    CASE WHEN cjk * 2 > txt_len THEN 'zh'
+         WHEN greatest(s_en, s_de, s_fr, s_es) <= 0 THEN 'und'
+         WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
+         WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
+         WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
+         ELSE 'es' END
+"""
+
+# replicates pipeline.text.lang_id_col: CJK ratio → zh; else argmax
+# stopword-profile overlap (ties → first profile in en,de,fr,es order)
+_LANG_SCORES_SQL = r"""
+    SELECT doc_id, length(text) AS txt_len,
+           length(regexp_replace(text, '[^一-鿿]', '', 'g')) AS cjk,
+           len(list_intersect(toks, ['the','a','and','of','to','in','is','it','that','for'])) AS s_en,
+           len(list_intersect(toks, ['der','die','das','und','ist','nicht','ein','zu','mit','den'])) AS s_de,
+           len(list_intersect(toks, ['le','la','les','et','est','un','une','des','que','pour'])) AS s_fr,
+           len(list_intersect(toks, ['el','la','los','las','es','un','una','que','de','por'])) AS s_es
+    FROM (SELECT doc_id, text,
+                 list_distinct(regexp_split_to_array(lower(trim(text)), '\s+')) AS toks
+          FROM documents)
+"""
+
+
+@query(oracle=f"""
+        SELECT doc_id, {_LANG_PRED_SQL} AS lang_pred FROM ({_LANG_SCORES_SQL})
+    """)
 def q_language_id(spark, sf):
     """Heuristic language ID: CJK script ratio → zh, else best stopword-
     profile overlap (en/de/fr/es), ties → first profile, no hits → und."""
@@ -594,18 +976,77 @@ def q_language_id(spark, sf):
     )
 
 
+# replicates pipeline.text.quality_score_col
+_QUALITY_SQL = r"""
+    ROUND(LEAST(1.0,
+        (CASE WHEN n_tok > 0 THEN CAST(n_uniq AS DOUBLE) / n_tok ELSE 0.0 END) * 0.5
+        + (CASE WHEN n_tok BETWEEN 10 AND 100000 THEN 1.0 ELSE 0.3 END) * 0.3
+        + (CASE WHEN (CASE WHEN n_chars > 0
+                           THEN CAST(n_punct AS DOUBLE) / n_chars
+                           ELSE 1.0 END) < 0.2 THEN 1.0 ELSE 0.5 END) * 0.2), 6)
+"""
+
+_TEXT_STATS_SQL = r"""
+    SELECT doc_id, text, len(t) AS n_tok, len(list_distinct(t)) AS n_uniq,
+           length(text) AS n_chars,
+           length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS n_punct,
+           list_distinct(t) AS toks_d
+    FROM (SELECT doc_id, text, regexp_split_to_array(lower(trim(text)), '\s+') AS t
+          FROM documents)
+"""
+
+
+@query(tags=("headline",), oracle=f"""
+        SELECT st.doc_id AS doc_id,
+               {_LANG_PRED_SQL} AS lang_pred,
+               CAST(n_tok AS BIGINT) AS n_tokens,
+               CAST(len(regexp_extract_all(st.text,
+                    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]', 0)) AS BIGINT) AS n_tokens_bpe,
+               {_QUALITY_SQL} AS quality,
+               md5(regexp_replace(lower(trim(st.text)), '\\s+', ' ', 'g')) AS fp
+        FROM ({_TEXT_STATS_SQL}) st JOIN ({_LANG_SCORES_SQL}) ls
+          ON st.doc_id = ls.doc_id
+    """)
 def q_text_analysis(spark, sf):
     """One-pass combined text analysis: language, token counts
     (whitespace + BPE-ish pretokenizer), quality score, fingerprint."""
     return P_text.analyze_documents(_t(spark, sf, "documents"))
 
 
+@query(oracle=f"""
+        SELECT doc_id,
+               CAST(n_chars AS BIGINT) AS n_chars,
+               CAST(n_tok AS BIGINT) AS n_tokens,
+               ROUND(CASE WHEN n_tok > 0 THEN CAST(n_uniq AS DOUBLE) / n_tok ELSE 0.0 END, 6) AS unique_ratio,
+               ROUND(CASE WHEN n_tok > 0 THEN CAST(n_chars AS DOUBLE) / n_tok ELSE 0.0 END, 6) AS mean_token_len,
+               ROUND(CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE) / n_chars ELSE 0.0 END, 6) AS punct_ratio,
+               ROUND(CASE WHEN n_chars > 0 THEN CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / n_chars ELSE 0.0 END, 6) AS digit_ratio,
+               ROUND(CASE WHEN n_chars > 0 THEN CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE) / n_chars ELSE 0.0 END, 6) AS upper_ratio,
+               ROUND(CASE WHEN LEAST(n_uniq, 10) > 0
+                          THEN CAST(len(list_intersect(toks_d,
+                               ['the','a','and','of','to','in','is','it','that','for'])) AS DOUBLE)
+                               / LEAST(n_uniq, 10)
+                          ELSE 0.0 END, 6) AS stopword_hit_ratio
+        FROM ({_TEXT_STATS_SQL})
+    """)
 def q_quality_features(spark, sf):
     """Per-doc quality signals: lengths, diversity, punct/digit/upper
     ratios, stopword hit ratio."""
     return P_text.quality_features(_t(spark, sf, "documents"))
 
 
+@query(tags=("headline", "quadratic_oracle"), oracle="""
+        SELECT id_a, id_b, cos_sim FROM (
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                   ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                                CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim
+            FROM (SELECT vec_id, embedding FROM embeddings
+                  UNION ALL SELECT vec_id + 1000, embedding FROM embeddings) a
+            JOIN (SELECT vec_id, embedding FROM embeddings
+                  UNION ALL SELECT vec_id + 1000, embedding FROM embeddings) b
+              ON a.vec_id < b.vec_id
+        ) WHERE cos_sim >= 0.95
+    """)
 def q_embedding_near_dup(spark, sf):
     """Embedding near-dup pairs (cos ≥ 0.95) via SRP-LSH bucket self-join
     + exact verify. Planted dups: table unioned with an id-shifted copy
@@ -634,14 +1075,11 @@ def _probe_embedding(sf_dir: str, vec_id: int = 0) -> list[float]:
     return [float(x) for x in t.column("embedding")[0].as_py()]
 
 
-_ANN_INDEX_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-# frozen trained artifacts (unigram LMs, hashed-corpus vectors, …):
-# built once per session/SF and served many times — the deployment
-# shape every scorer docstring promises ("persist once, broadcast into
-# every scoring pass"). Weak session keys, same rationale as above.
+# frozen trained artifacts (unigram LMs, hashed-corpus vectors, the ANN
+# index, …): built once per session/SF and served many times — the
+# deployment shape every scorer docstring promises ("persist once,
+# broadcast into every scoring pass"). Weak session keys, same rationale
+# as _CONF_GUARDED.
 _ARTIFACT_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -661,6 +1099,7 @@ def _artifact_df(
     build,
     sources: tuple[str, ...] = ("documents",),
     partitions: int | None = None,
+    sort_cols: tuple[str, ...] | None = None,
 ):
     """Three-tier corpus-constant DataFrame artifact: session memory →
     written fingerprint-validated sidecar (sources/sidecar.py) →
@@ -673,7 +1112,7 @@ def _artifact_df(
     (and therefore cached) layout: row-heavy artifacts whose consumers
     start with a partial aggregate need >1 files, or AQE's small-output
     coalescing leaves the serving-side partial agg SERIAL on one
-    cached partition."""
+    cached partition; ``sort_cols`` clusters each written file."""
     from stac_fastapi_duckdb_spark.sources import sidecar as _sc
 
     def full():
@@ -681,7 +1120,9 @@ def _artifact_df(
         tag = _sc.dataset_tag(sf)
         df = _sc.load_sidecar(spark, family, tag, fp)
         if df is None:
-            _sc.write_sidecar(build(), family, tag, fp, partitions=partitions)
+            _sc.write_sidecar(
+                build(), family, tag, fp, partitions=partitions, sort_cols=sort_cols
+            )
             df = spark.read.parquet(_sc.data_path(family, tag))
         if partitions is not None and df.rdd.getNumPartitions() < partitions:
             # a pre-round-10 single-file sidecar (or a small-file read
@@ -712,32 +1153,58 @@ def _ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_fastapi_duckdb_spark.plans.ivf_index import IVF_CENTROIDS
     from stac_fastapi_duckdb_spark.plans.pq_index import PQ_CODEBOOKS
 
-    per_session = _ANN_INDEX_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
-        from stac_fastapi_duckdb_spark.sources import sidecar as _sc
+    def build():
+        return P_sim.with_pq_codes(
+            P_sim.with_ivf_cell(
+                _t(spark, sf_dir, "embeddings"),
+                np.asarray(IVF_CENTROIDS, dtype=np.float64),
+            ),
+            np.asarray(PQ_CODEBOOKS, dtype=np.float64),
+        )
 
-        fp = _sc.source_fingerprint(f"{sf_dir}/embeddings.parquet")
-        tag = _sc.dataset_tag(sf_dir)
-        df = _sc.load_sidecar(spark, "ivfpq_index", tag, fp)
-        if df is None:
-            emb = _t(spark, sf_dir, "embeddings")
-            built = P_sim.with_pq_codes(
-                P_sim.with_ivf_cell(
-                    emb, np.asarray(IVF_CENTROIDS, dtype=np.float64)
-                ),
-                np.asarray(PQ_CODEBOOKS, dtype=np.float64),
-            )
-            # written clustered by cell — the local-mode form of
-            # write_ivf_layout's cell-partitioned directories
-            _sc.write_sidecar(built, "ivfpq_index", tag, fp, sort_cols=("ivf_cell",))
-            df = spark.read.parquet(_sc.data_path("ivfpq_index", tag))
-        df = df.persist()
-        df.count()  # materialize the build eagerly, off the query path
-        per_session[sf_dir] = df
-    return df
+    # written clustered by cell — the local-mode form of
+    # write_ivf_layout's cell-partitioned directories
+    return _artifact_df(
+        spark, "ivfpq_index", sf_dir, build,
+        sources=("embeddings",), sort_cols=("ivf_cell",),
+    )
 
 
+def _srp_planes_values_sql(dim: int = 64, num_planes: int = 8, seed: int = 42) -> str:
+    """VALUES rows ``(p, pv DOUBLE[])`` regenerated from the same seeded
+    hyperplanes as pipeline.similarity._srp_planes — the planes are
+    query parameters (like a literal probe vector), so the oracle
+    replays the identical projections."""
+    planes = P_sim._srp_planes(dim, num_planes, seed)
+    rows = ", ".join(
+        "(" + str(p) + ", ["
+        + ", ".join(repr(float(x)) for x in row)
+        + "]::DOUBLE[])"
+        for p, row in enumerate(planes)
+    )
+    return f"(VALUES {rows})"
+
+
+@query(oracle=f"""
+        WITH base AS (
+            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+        ), sigs AS (
+            SELECT b.vec_id,
+                   CAST(SUM(CASE WHEN list_inner_product(b.v, pl.pv) > 0
+                                 THEN CAST(1 AS BIGINT) << pl.p ELSE 0 END)
+                        AS BIGINT) AS sig
+            FROM base b CROSS JOIN {_srp_planes_values_sql()} AS pl(p, pv)
+            GROUP BY b.vec_id
+        ), probe AS (
+            SELECT s.sig AS psig, b.v AS pv
+            FROM sigs s JOIN base b USING (vec_id) WHERE b.vec_id = 0
+        )
+        SELECT s.vec_id, ROUND(list_cosine_similarity(b.v, p.pv), 6) AS cos_sim
+        FROM sigs s JOIN base b USING (vec_id), probe p
+        WHERE s.vec_id <> 0 AND bit_count(xor(s.sig, p.psig)) <= 2
+        ORDER BY cos_sim DESC, s.vec_id ASC
+        LIMIT 10
+    """)
 def q_ann_srp_topk(spark, sf):
     """ANN top-k via random-hyperplane LSH buckets + multiprobe (approx —
     candidate set is the probe's bucket neighborhood, so no SQL oracle)."""
@@ -749,6 +1216,46 @@ def q_ann_srp_topk(spark, sf):
     )
 
 
+def _ivf_centroids_values_sql() -> str:
+    """VALUES rows ``(c, cv DOUBLE[])`` from the frozen IVF index
+    artifact (plans/ivf_index.py) — both engines score against the
+    same centroid literals."""
+    from stac_fastapi_duckdb_spark.plans.ivf_index import IVF_CENTROIDS
+
+    rows = ", ".join(
+        "(" + str(c) + ", ["
+        + ", ".join(repr(float(x)) for x in row)
+        + "]::DOUBLE[])"
+        for c, row in enumerate(IVF_CENTROIDS)
+    )
+    return f"(VALUES {rows})"
+
+
+@query(tags=("artifact",), oracle=f"""
+        WITH base AS (
+            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+        ), dists AS (
+            SELECT b.vec_id, b.v, c.c AS cell,
+                   list_sum(list_transform(range(1, 65),
+                                           i -> (b.v[i] - c.cv[i]) ** 2)) AS dsq
+            FROM base b CROSS JOIN {_ivf_centroids_values_sql()} AS c(c, cv)
+        ), assigned AS (
+            SELECT vec_id, v, cell FROM (
+                SELECT vec_id, v, cell,
+                       row_number() OVER (PARTITION BY vec_id
+                                          ORDER BY dsq ASC, cell ASC) AS rn
+                FROM dists WHERE vec_id <> 0) WHERE rn = 1
+        ), probe_cells AS (
+            SELECT cell FROM (
+                SELECT cell, row_number() OVER (ORDER BY dsq ASC, cell ASC) AS rn
+                FROM dists WHERE vec_id = 0) WHERE rn <= 4
+        ), probe AS (SELECT v AS pv FROM base WHERE vec_id = 0)
+        SELECT a.vec_id, ROUND(list_cosine_similarity(a.v, p.pv), 6) AS cos_sim
+        FROM assigned a, probe p
+        WHERE a.cell IN (SELECT cell FROM probe_cells)
+        ORDER BY cos_sim DESC, a.vec_id ASC
+        LIMIT 10
+    """)
 def q_ann_ivf_topk(spark, sf):
     """ANN top-k via IVF coarse quantizer: FROZEN centroids (the index
     artifact — training is an offline build step, see plans/ivf_index),
@@ -765,24 +1272,6 @@ def q_ann_ivf_topk(spark, sf):
     rest = _ivfpq_indexed(spark, sf).filter(F.col("vec_id") != 0)
     return P_sim.ivf_topk(
         rest, probe, np.asarray(IVF_CENTROIDS, dtype=np.float64), k=10, nprobe=4
-    )
-
-
-def q_ann_pq_topk(spark, sf):
-    """ANN top-k via product quantization + asymmetric distance:
-    FROZEN per-subspace codebooks (plans/pq_index — the offline index
-    artifact), codes assigned in pure Column algebra, per-row distance
-    = m LUT lookups. The DuckDB oracle replays assignment and ADC from
-    the same literals — identical IEEE op order makes distances
-    bit-identical, so codes, ties, and ranking match exactly."""
-    import numpy as np
-
-    from stac_fastapi_duckdb_spark.plans.pq_index import PQ_CODEBOOKS
-
-    probe = _probe_embedding(sf)
-    rest = _ivfpq_indexed(spark, sf).filter(F.col("vec_id") != 0)
-    return P_sim.pq_adc_topk(
-        rest, probe, np.asarray(PQ_CODEBOOKS, dtype=np.float64), k=10
     )
 
 
@@ -847,35 +1336,359 @@ def _pq_oracle_sql() -> str:
     """
 
 
-def q_ann_ivfpq_topk(spark, sf):
-    """IVF-PQ search — the FAISS IVFADC architecture
-    (pipeline/similarity.py ivfpq_topk): frozen coarse centroids prune
-    the SCAN to nprobe=4 cells, frozen PQ codebooks prune the BYTES
-    per scanned row (LUT distance over m codes). The billion-vector
-    memory/IO shape: cells are the partition key, codes the columns,
-    full-precision vectors never leave storage. Oracle composes the
-    two proven replays — cell assignment + pruning, then bitwise ADC —
-    so ranking matches exactly.
-
-    SERVING SHAPE (round 7): probe fetched by a driver-side pyarrow
-    point read (no job), cells and codes precomputed on the persisted
-    index table (``_ivfpq_indexed``) — the timed query is ONE job:
-    in-memory cell-pruned scan → m LUT lookups per row →
-    TakeOrderedAndProject."""
+@query(tags=("artifact",), oracle=_pq_oracle_sql())
+def q_ann_pq_topk(spark, sf):
+    """ANN top-k via product quantization + asymmetric distance:
+    FROZEN per-subspace codebooks (plans/pq_index — the offline index
+    artifact), codes assigned in pure Column algebra, per-row distance
+    = m LUT lookups. The DuckDB oracle replays assignment and ADC from
+    the same literals — identical IEEE op order makes distances
+    bit-identical, so codes, ties, and ranking match exactly."""
     import numpy as np
 
-    from stac_fastapi_duckdb_spark.plans.ivf_index import IVF_CENTROIDS
     from stac_fastapi_duckdb_spark.plans.pq_index import PQ_CODEBOOKS
 
     probe = _probe_embedding(sf)
     rest = _ivfpq_indexed(spark, sf).filter(F.col("vec_id") != 0)
-    return P_sim.ivfpq_topk(
-        rest,
-        probe,
-        np.asarray(IVF_CENTROIDS, dtype=np.float64),
-        np.asarray(PQ_CODEBOOKS, dtype=np.float64),
-        k=10,
-        nprobe=4,
+    return P_sim.pq_adc_topk(
+        rest, probe, np.asarray(PQ_CODEBOOKS, dtype=np.float64), k=10
+    )
+
+
+def _media(spark, sf):
+    """Synthesize a media table from documents: payload = UTF-8 bytes of
+    the text as an opaque binary column (the real corpus would carry
+    image/audio bytes; the Spark-side schema/plumbing is identical)."""
+    return _t(spark, sf, "documents").select(
+        F.col("doc_id").alias("media_id"),
+        F.when(F.col("doc_id") % 2 == 0, F.lit("image"))
+        .otherwise(F.lit("audio"))
+        .alias("kind"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
+    )
+
+
+@query(oracle="""
+        SELECT doc_id AS media_id,
+               CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
+               CAST(strlen(text) AS BIGINT) AS n_bytes,
+               md5(text) AS content_hash
+        FROM documents
+    """)
+def q_multimodal_metadata(spark, sf):
+    """Metadata-only media projection (payload never decoded): byte
+    length + content hash; binary column pruned out of the result."""
+    return P_mm.media_metadata(_media(spark, sf), algo="md5")
+
+
+def _media_features_artifact(spark, sf) -> DataFrame:
+    """Decoded media features as a FROZEN artifact: feature extraction
+    (the mapInPandas decode) runs ONCE per session/SF and the typed
+    feature table persists — the decode-once feature store every
+    production multimodal pipeline writes at ingest (payload bytes are
+    decoded exactly once; downstream queries read the small typed
+    features, never the blobs). The live decode path stays exercised
+    by the phash/audio-frame queries and the package tests. Persisted
+    to a written sidecar (sources/sidecar.py): the decode runs once
+    per INGEST, not once per session."""
+
+    def build():
+        return P_mm.extract_features(_media(spark, sf), codec="fake")
+
+    return _artifact_df(spark, "media_features", sf, build)
+
+
+# replicates pipeline.multimodal._fake_decode: feature i = byte i of
+# the md5 counter stream md5(payload|0)++md5(payload|1), divided by
+# 256 (exact in fp), formatted at fixed 8-decimal scale
+@query(tags=("headline", "artifact"), oracle="""
+        SELECT doc_id AS media_id,
+               CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
+               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+               array_to_string(list_transform(range(0, 32), i ->
+                   printf('%.8f',
+                          CAST('0x' || substr(md5(text || '|' || CAST(i // 16 AS VARCHAR)),
+                                              (i % 16) * 2 + 1, 2) AS INT)
+                          / 256.0)), ',') AS features_csv
+        FROM documents
+    """)
+def q_multimodal_features(spark, sf):
+    """mapInPandas feature extraction over binary media payloads with the
+    deterministic fake decoder (real decoders stubbed per build brief),
+    served from the decode-once feature-store artifact
+    (_media_features_artifact). The decoder derives features from an
+    md5 counter stream (byte/256 — exact in float32 and double), so
+    the DuckDB oracle re-derives them with md5 hex arithmetic; emitted
+    as a fixed-scale CSV string so the driver canonicalizer can
+    sort/hash the column (raw array<float> is unhashable
+    driver-side)."""
+    feats = _media_features_artifact(spark, sf)
+    return feats.select(
+        "media_id",
+        "kind",
+        "n_bytes",
+        F.concat_ws(
+            ",",
+            F.transform(
+                F.col("features"),
+                lambda x: F.format_number(x.cast("double"), 8),
+            ),
+        ).alias("features_csv"),
+    )
+
+
+@query(oracle="""
+        SELECT media_id,
+               unnest(generate_series(0, greatest(n_frames - 1, 0), 30)) AS frame_idx
+        FROM (SELECT doc_id AS media_id, n_chars % 300 + 1 AS n_frames FROM documents)
+    """)
+def q_frame_sample(spark, sf):
+    """Video frame-sampling plan: (media, n_frames) → one row per
+    sampled frame idx via sequence+explode (JVM-side row expansion)."""
+    vids = _t(spark, sf, "documents").select(
+        F.col("doc_id").alias("media_id"),
+        (F.col("n_chars") % 300 + 1).alias("n_frames"),
+    )
+    return P_mm.frame_sample_plan(vids, every_n=30)
+
+
+@query(tags=("headline", "streaming_oracle"), oracle=f"""
+        SELECT date_trunc('hour', ts) AS bucket, event_type,
+               count(*) AS n,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        FROM {_EVENTS_SQL}
+        GROUP BY 1, 2
+    """)
+def q_streaming_hourly_rollup(spark, sf):
+    """Structured Streaming ingest of the events table (file source,
+    AvailableNow trigger) → watermarked tumbling-window rollup → memory
+    sink. Produces EXACTLY the batch rollup, so the batch SQL is the
+    oracle — the streaming path is held to the same correctness gate."""
+    stream = P_stream.read_events_stream(spark, f"{sf}/events.parquet")
+    return P_stream.run_to_memory(P_stream.hourly_rollup(stream), spark)
+
+
+@query(tags=("headline",), oracle=f"""
+        WITH m AS (
+            SELECT user_id, ts, value,
+                   CASE WHEN lag(ts) OVER w IS NULL
+                             OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+                        THEN 1 ELSE 0 END AS new_s
+            FROM {_EVENTS_SQL}
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        ), s AS (
+            SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                                       ROWS UNBOUNDED PRECEDING) AS sid
+            FROM m
+        )
+        SELECT user_id, MIN(ts) AS session_start,
+               MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+               count(*) AS n_events,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        FROM s GROUP BY user_id, sid
+    """)
+def q_sessionize(spark, sf):
+    """Gap-based session windows (30 min) per user via F.session_window —
+    the same operator serves batch and streaming; oracle is the classic
+    gaps-and-islands SQL (lag + cumulative sum)."""
+    return P_stream.session_windows(_events(spark, sf), "30 minutes")
+
+
+@query(oracle="""
+        SELECT o_orderkey, o_orderdate, o_totalprice FROM orders
+        WHERE o_orderdate > TIMESTAMP '1996-06-01 00:00:00'
+           OR (o_orderdate = TIMESTAMP '1996-06-01 00:00:00' AND o_orderkey > 3000)
+        ORDER BY o_orderdate ASC, o_orderkey ASC
+        LIMIT 50
+    """)
+def q_keyset_pagination(spark, sf):
+    """Keyset (search-after) pagination — the scale-correct replacement
+    for the reference's integer OFFSET token (database_logic.py:924-928):
+    a (last sort key, last id) token compiles to a pushdownable range
+    predicate, so deep pages cost the same as page one instead of a
+    global sort-and-skip. Token here: after (1996-06-01, key 3000)."""
+    from datetime import datetime
+
+    after_date = datetime(1996, 6, 1)
+    after_key = 3000
+    o = _t(spark, sf, "orders")
+    keyset = (F.col("o_orderdate") > F.lit(after_date)) | (
+        (F.col("o_orderdate") == F.lit(after_date))
+        & (F.col("o_orderkey") > after_key)
+    )
+    return (
+        o.filter(keyset)
+        .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
+        .select("o_orderkey", "o_orderdate", "o_totalprice")
+        .limit(50)
+    )
+
+
+@query(oracle=f"""
+        SELECT lang, rk, doc_id, quality FROM (
+            SELECT lang, doc_id, quality,
+                   ROW_NUMBER() OVER (PARTITION BY lang
+                                      ORDER BY quality DESC, doc_id ASC) AS rk
+            FROM (SELECT doc_id, lang, {_QUALITY_SQL} AS quality
+                  FROM ({_TEXT_STATS_SQL}) st
+                  JOIN (SELECT doc_id AS did, lang FROM documents) d
+                    ON st.doc_id = d.did)
+        ) WHERE rk <= 3
+    """)
+def q_rank_dedup(spark, sf):
+    """Quality-ranked canonical selection: keep the best-quality doc per
+    language (window row_number) — the 'keep best of near-dup cluster'
+    pattern at the cluster-representative stage of a data pipeline."""
+    from pyspark.sql.window import Window
+
+    d = _t(spark, sf, "documents").select(
+        "doc_id",
+        "lang",
+        P_text.quality_score_col(F.col("text")).alias("quality"),
+    )
+    w = Window.partitionBy("lang").orderBy(
+        F.col("quality").desc(), F.col("doc_id").asc()
+    )
+    return (
+        d.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .select("lang", "rk", "doc_id", "quality")
+    )
+
+
+@query(oracle=f"""
+        SELECT user_id, count(*) AS n_events,
+               CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
+               MIN(ts) AS first_ts, MAX(ts) AS last_ts
+        FROM {_EVENTS_SQL}
+        GROUP BY user_id
+    """)
+def q_user_stats(spark, sf):
+    """Per-user behavioral aggregates: event count, exact distinct event
+    types, exact value sum, activity span."""
+    return (
+        _events(spark, sf)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.countDistinct("event_type").alias("n_types"),
+            F.sum(F.col("value").cast("decimal(18,6)"))
+            .cast("double")
+            .alias("sum_value"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+        )
+    )
+
+
+@query(oracle=f"""
+        WITH m AS (
+            SELECT user_id, ts, value,
+                   CASE WHEN lag(ts) OVER w IS NULL
+                             OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+                        THEN 1 ELSE 0 END AS new_s
+            FROM {_EVENTS_SQL}
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        ), s AS (
+            SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                                       ROWS UNBOUNDED PRECEDING) AS sid
+            FROM m
+        ), g AS (
+            SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS last_ts,
+                   MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+                   count(*) AS n_events, SUM(value) AS sum_value
+            FROM s GROUP BY user_id, sid
+        )
+        SELECT user_id, session_start, session_end, n_events,
+               ROUND(sum_value, 6) AS sum_value
+        FROM g
+        WHERE last_ts + INTERVAL 30 MINUTE <=
+              (SELECT max(ts) FROM {_EVENTS_SQL})
+    """)
+def q_stateful_sessions(spark, sf):
+    """Custom stateful streaming operator: per-user gap sessionization as
+    an applyInPandasWithState state machine (constant-size state per key,
+    event-time timeouts). Deterministic finite-replay output: every
+    session proven closed by a later event, plus final sessions whose
+    last_ts + gap ≤ the end-of-stream watermark (= max ts, delay 0)."""
+    from stac_fastapi_duckdb_spark.streaming.stateful import (
+        stateful_sessionize,
+    )
+
+    stream = P_stream.read_events_stream(spark, f"{sf}/events.parquet")
+    out = P_stream.run_to_memory(
+        stateful_sessionize(stream), spark, output_mode="append"
+    )
+    return out.select(
+        "user_id",
+        "session_start",
+        "session_end",
+        "n_events",
+        F.round("sum_value", 6).alias("sum_value"),
+    )
+
+
+@query(oracle=f"""
+        SELECT event_type, count(*) AS n,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
+               MAX(value) AS max_value
+        FROM {_EVENTS_SQL}
+        GROUP BY event_type
+    """)
+def q_skew_agg(spark, sf):
+    """Salted two-phase aggregation over a skewed key (5 event types for
+    100k+ rows): groupBy(key, salt) partials → groupBy(key) finals.
+    Algebraic aggregates recombine exactly, so the plain GROUP BY is the
+    oracle for ANY salt assignment."""
+    from stac_fastapi_duckdb_spark.functions.skew import two_phase_agg
+
+    out = two_phase_agg(
+        _events(spark, sf),
+        ["event_type"],
+        {
+            "n": ("count", F.lit(1)),
+            "sum_value": ("sum", F.col("value").cast("decimal(18,6)")),
+            "max_value": ("max", "value"),
+        },
+        buckets=16,
+    )
+    return out.select(
+        "event_type",
+        "n",
+        F.col("sum_value").cast("double").alias("sum_value"),
+        "max_value",
+    )
+
+
+@query(oracle=f"""
+        SELECT l.event_id, l.user_id, l.ts,
+               r.event_id AS p_event_id, r.value AS p_value
+        FROM (SELECT event_id, user_id, ts FROM {_EVENTS_SQL}
+              WHERE event_type = 'click') l
+        ASOF LEFT JOIN
+             (SELECT event_id, user_id, ts, value FROM {_EVENTS_SQL}
+              WHERE event_type = 'purchase') r
+          ON l.user_id = r.user_id AND l.ts >= r.ts
+    """)
+def q_asof_join(spark, sf):
+    """As-of join (operators/asof.py): for each click, the most recent
+    purchase by the same user at-or-before the click. One equi-shuffle
+    union+window plan; oracle is DuckDB's native ASOF LEFT JOIN."""
+    from stac_fastapi_duckdb_spark.operators.asof import asof_join
+
+    ev = _events(spark, sf)
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts"
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("p_event_id"),
+        "user_id",
+        F.col("ts").alias("p_ts"),
+        F.col("value").alias("p_value"),
+    )
+    return asof_join(
+        clicks, purchases, "user_id", "ts", "p_ts", ["p_event_id", "p_value"]
     )
 
 
@@ -915,75 +1728,40 @@ def _ivfpq_oracle_sql() -> str:
     """
 
 
-def _media(spark, sf):
-    """Synthesize a media table from documents: payload = UTF-8 bytes of
-    the text as an opaque binary column (the real corpus would carry
-    image/audio bytes; the Spark-side schema/plumbing is identical)."""
-    return _t(spark, sf, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit("image"))
-        .otherwise(F.lit("audio"))
-        .alias("kind"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
+@query(
+    tags=("pipeline_op", "artifact", "scale_probe"),
+    oracle=_ivfpq_oracle_sql().format(cents=_ivf_centroids_values_sql()),
+)
+def q_ann_ivfpq_topk(spark, sf):
+    """IVF-PQ search — the FAISS IVFADC architecture
+    (pipeline/similarity.py ivfpq_topk): frozen coarse centroids prune
+    the SCAN to nprobe=4 cells, frozen PQ codebooks prune the BYTES
+    per scanned row (LUT distance over m codes). The billion-vector
+    memory/IO shape: cells are the partition key, codes the columns,
+    full-precision vectors never leave storage. Oracle composes the
+    two proven replays — cell assignment + pruning, then bitwise ADC —
+    so ranking matches exactly.
+
+    SERVING SHAPE (round 7): probe fetched by a driver-side pyarrow
+    point read (no job), cells and codes precomputed on the persisted
+    index table (``_ivfpq_indexed``) — the timed query is ONE job:
+    in-memory cell-pruned scan → m LUT lookups per row →
+    TakeOrderedAndProject."""
+    import numpy as np
+
+    from stac_fastapi_duckdb_spark.plans.ivf_index import IVF_CENTROIDS
+    from stac_fastapi_duckdb_spark.plans.pq_index import PQ_CODEBOOKS
+
+    probe = _probe_embedding(sf)
+    rest = _ivfpq_indexed(spark, sf).filter(F.col("vec_id") != 0)
+    return P_sim.ivfpq_topk(
+        rest,
+        probe,
+        np.asarray(IVF_CENTROIDS, dtype=np.float64),
+        np.asarray(PQ_CODEBOOKS, dtype=np.float64),
+        k=10,
+        nprobe=4,
     )
-
-
-def q_multimodal_metadata(spark, sf):
-    """Metadata-only media projection (payload never decoded): byte
-    length + content hash; binary column pruned out of the result."""
-    return P_mm.media_metadata(_media(spark, sf), algo="md5")
-
-
-def _media_features_artifact(spark, sf) -> DataFrame:
-    """Decoded media features as a FROZEN artifact: feature extraction
-    (the mapInPandas decode) runs ONCE per session/SF and the typed
-    feature table persists — the decode-once feature store every
-    production multimodal pipeline writes at ingest (payload bytes are
-    decoded exactly once; downstream queries read the small typed
-    features, never the blobs). The live decode path stays exercised
-    by the phash/audio-frame queries and the package tests. Persisted
-    to a written sidecar (sources/sidecar.py): the decode runs once
-    per INGEST, not once per session."""
-
-    def build():
-        return P_mm.extract_features(_media(spark, sf), codec="fake")
-
-    return _artifact_df(spark, "media_features", sf, build)
-
-
-def q_multimodal_features(spark, sf):
-    """mapInPandas feature extraction over binary media payloads with the
-    deterministic fake decoder (real decoders stubbed per build brief),
-    served from the decode-once feature-store artifact
-    (_media_features_artifact). The decoder derives features from an
-    md5 counter stream (byte/256 — exact in float32 and double), so
-    the DuckDB oracle re-derives them with md5 hex arithmetic; emitted
-    as a fixed-scale CSV string so the driver canonicalizer can
-    sort/hash the column (raw array<float> is unhashable
-    driver-side)."""
-    feats = _media_features_artifact(spark, sf)
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.col("features"),
-                lambda x: F.format_number(x.cast("double"), 8),
-            ),
-        ).alias("features_csv"),
-    )
-
-
-def q_frame_sample(spark, sf):
-    """Video frame-sampling plan: (media, n_frames) → one row per
-    sampled frame idx via sequence+explode (JVM-side row expansion)."""
-    vids = _t(spark, sf, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("n_chars") % 300 + 1).alias("n_frames"),
-    )
-    return P_mm.frame_sample_plan(vids, every_n=30)
 
 
 def _audio(spark, sf):
@@ -996,6 +1774,27 @@ def _audio(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle="""
+        WITH a AS (
+            SELECT doc_id AS media_id,
+                   8000 * (1 + doc_id % 2) AS sample_rate,
+                   (n_chars * 37) % 20000 AS n_samples
+            FROM documents
+        ), f AS (
+            SELECT media_id, sample_rate,
+                   CASE WHEN n_samples >= 1024
+                        THEN (n_samples - 1024) // 512 + 1
+                        ELSE 0 END AS n_frames
+            FROM a
+        )
+        SELECT media_id,
+               unnest(generate_series(0, n_frames - 1)) AS frame_idx,
+               unnest(generate_series(0, n_frames - 1)) * 512 AS start_sample,
+               unnest(generate_series(0, n_frames - 1)) * 512 + 1024 AS end_sample,
+               ROUND(unnest(generate_series(0, n_frames - 1)) * 512 * 1000.0
+                     / sample_rate, 6) AS start_ms
+        FROM f WHERE n_frames > 0
+    """)
 def q_audio_frames(spark, sf):
     """Audio analysis-frame windowing plan (pipeline/multimodal.py):
     overlapping frame rows expanded JVM-side via sequence+explode."""
@@ -1004,6 +1803,43 @@ def q_audio_frames(spark, sf):
     )
 
 
+# replicates pipeline.multimodal.audio_frame_features with the fake
+# md5-stream decoder: sample j = (byte_j - 128)/128 where byte_j is
+# byte j%16 of md5(payload|j//16); per-frame energy is an exact
+# integer sum, rms = sqrt(energy/(128^2*1024)) (correctly-rounded
+# sqrt of an exact double on both engines); zero-crossings compare
+# consecutive sample signs (b < 128) within the frame
+@query(oracle="""
+        WITH p AS (
+            SELECT doc_id AS media_id, text,
+                   greatest(1024, least(CAST(octet_length(encode(text)) AS BIGINT) * 16,
+                                        32768)) AS n
+            FROM documents
+            WHERE doc_id % 2 = 1 AND doc_id % 5 = 1
+        ), bh AS (
+            SELECT media_id, n, k, md5(text || '|' || CAST(k AS VARCHAR)) AS h
+            FROM (SELECT media_id, text, n, unnest(range(0, (n + 15) // 16)) AS k FROM p)
+        ), samples AS (
+            SELECT media_id, n, k * 16 + off AS j,
+                   CAST('0x' || substr(h, off * 2 + 1, 2) AS INT) AS b
+            FROM (SELECT media_id, n, k, h, unnest(range(0, 16)) AS off FROM bh)
+            WHERE k * 16 + off < n
+        ), sgn AS (
+            SELECT media_id, n, j, b, (b < 128) AS s,
+                   lead(b < 128) OVER (PARTITION BY media_id ORDER BY j) AS s_next
+            FROM samples
+        ), contrib AS (
+            SELECT media_id, n, j, b, s, s_next, unnest([j // 512 - 1, j // 512]) AS f
+            FROM sgn
+        )
+        SELECT media_id, f AS frame_idx,
+               sqrt(SUM((b - 128) * (b - 128)) / (16384.0 * 1024)) AS rms,
+               CAST(SUM(CASE WHEN j - f * 512 < 1023 AND j < n - 1 AND s <> s_next
+                             THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings
+        FROM contrib
+        WHERE f >= 0 AND f <= (n - 1024) // 512 AND j - f * 512 < 1024
+        GROUP BY media_id, f
+    """)
 def q_audio_frame_features(spark, sf):
     """Per-frame RMS/zero-crossing features over fake-decoded waveforms
     (mapInPandas; decode-once-window-locally). No SQL oracle: the
@@ -1019,6 +1855,13 @@ def q_audio_frame_features(spark, sf):
     )
 
 
+@query(oracle=f"""
+        SELECT date_trunc('day', ts) AS day, event_type,
+               count(*) AS n,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        FROM {_EVENTS_SQL}
+        GROUP BY 1, 2
+    """)
 def q_daily_from_hourly(spark, sf):
     """Hierarchical rollup reuse (the hypertable/continuous-aggregate
     pattern): the daily aggregate is computed FROM the hourly aggregate,
@@ -1047,6 +1890,11 @@ def q_daily_from_hourly(spark, sf):
     )
 
 
+@query(oracle=f"""
+        SELECT user_id, event_type, count(*) AS n
+        FROM {_EVENTS_SQL}
+        GROUP BY user_id, event_type
+    """)
 def q_unpivot_events(spark, sf):
     """Unpivot (melt): per-user type-count columns back to long form via
     the stack expression; oracle re-derives the long form directly."""
@@ -1064,6 +1912,16 @@ def q_unpivot_events(spark, sf):
     return wide.select("user_id", F.expr(stack_expr)).filter(F.col("n") > 0)
 
 
+@query(oracle=f"""
+        SELECT user_id,
+               COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click,
+               COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view,
+               COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
+               COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error,
+               COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup
+        FROM {_EVENTS_SQL}
+        GROUP BY user_id
+    """)
 def q_pivot_events(spark, sf):
     """Pivot: per-user event-type counts as columns (explicit value list
     so the plan needs no discovery pass — at scale an implicit pivot
@@ -1078,6 +1936,20 @@ def q_pivot_events(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT o_orderkey, o_orderpriority, pr, cd, quartile, delta_prev
+        FROM (
+            SELECT o_orderkey, o_orderpriority,
+                   ROUND(percent_rank() OVER w, 6) AS pr,
+                   ROUND(cume_dist() OVER w, 6) AS cd,
+                   ntile(4) OVER w AS quartile,
+                   ROUND(o_totalprice - lag(o_totalprice) OVER w, 2)
+                       AS delta_prev
+            FROM orders
+            WINDOW w AS (PARTITION BY o_orderpriority
+                         ORDER BY o_totalprice, o_orderkey)
+        ) WHERE o_orderkey % 20 = 0
+    """)
 def q_window_analytics(spark, sf):
     """Ranking-window surface: percent_rank / cume_dist / ntile /
     lag-delta over one (partition, order) spec — one shuffle, one
@@ -1104,6 +1976,18 @@ def q_window_analytics(spark, sf):
     )
 
 
+@query(oracle="""
+        WITH kv AS (
+            SELECT event_type, props,
+                   unnest(json_keys(CAST(props AS JSON))) AS key
+            FROM events
+        )
+        SELECT event_type, key, COUNT(*) AS n,
+               CAST(SUM(CAST(json_extract_string(CAST(props AS JSON),
+                                                 '$.' || key)
+                             AS BIGINT)) AS BIGINT) AS sum_val
+        FROM kv GROUP BY event_type, key
+    """)
 def q_props_map_explode(spark, sf):
     """Typed JSON → MapType → explode (one row per key/value) →
     aggregate per key: the generic schema-on-read path for ragged
@@ -1120,6 +2004,16 @@ def q_props_map_explode(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT doc_id,
+               regexp_extract(text, '([0-9]+)', 1) AS first_num,
+               levenshtein(lang, source) AS lev,
+               reverse(lang) AS rev_lang,
+               lpad(CAST(doc_id AS VARCHAR), 8, '0') AS padded,
+               split_part(source, 'c', 2) AS src_num,
+               translate(lang, 'en', 'xy') AS translated
+        FROM documents WHERE doc_id % 10 = 0
+    """)
 def q_string_funcs(spark, sf):
     """Scalar string-function surface (regexp extraction, edit
     distance, padding, splitting, reversal) — all JVM built-ins inside
@@ -1136,6 +2030,21 @@ def q_string_funcs(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT o_orderkey,
+               dayofweek(o_orderdate) + 1 AS dow,
+               dayofyear(o_orderdate) AS doy,
+               weekofyear(o_orderdate) AS week,
+               CAST(date_trunc('quarter', o_orderdate) AS TIMESTAMP)
+                   AS quarter_start,
+               CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP)
+                   AS month_end,
+               datediff('day', DATE '1995-01-01',
+                        CAST(o_orderdate AS DATE)) AS days_since,
+               CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS TIMESTAMP)
+                   AS plus_3mo
+        FROM orders WHERE o_orderkey % 100 = 0
+    """)
 def q_datetime_funcs(spark, sf):
     """Scalar date/time-function surface (dow/doy/week extraction,
     quarter truncation, month-end, day arithmetic). DuckDB's dayofweek
@@ -1155,6 +2064,21 @@ def q_datetime_funcs(spark, sf):
     )
 
 
+@query(oracle=f"""
+        SELECT user_id,
+               CAST(SUM(CASE WHEN event_type = 'click'
+                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS click,
+               CAST(SUM(CASE WHEN event_type = 'error'
+                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS error,
+               CAST(SUM(CASE WHEN event_type = 'purchase'
+                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS purchase,
+               CAST(SUM(CASE WHEN event_type = 'signup'
+                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS signup,
+               CAST(SUM(CASE WHEN event_type = 'view'
+                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS view
+        FROM {_EVENTS_SQL}
+        GROUP BY user_id
+    """)
 def q_pivot_dynamic(spark, sf):
     """Dynamic pivot: Spark discovers the pivot values with an extra
     distinct pass (fine for interactive use; the explicit-list variant
@@ -1170,6 +2094,17 @@ def q_pivot_dynamic(spark, sf):
     )
 
 
+@query(oracle=f"""
+        SELECT l.event_id, l.user_id, l.ts, r.w_id, r.w_start, r.w_end
+        FROM (SELECT event_id, user_id, ts FROM {_EVENTS_SQL}
+              WHERE event_type = 'click') l
+        JOIN (SELECT event_id AS w_id, user_id,
+                     ts - INTERVAL 2 DAY AS w_start,
+                     ts + INTERVAL 2 DAY AS w_end
+              FROM {_EVENTS_SQL} WHERE event_id % 3 = 0) r
+          ON l.user_id = r.user_id
+         AND l.ts BETWEEN r.w_start AND r.w_end
+    """)
 def q_range_join(spark, sf):
     """Point-in-interval range join via granule bucketing (one
     equi-shuffle instead of a nested-loop BETWEEN join): each click
@@ -1199,6 +2134,7 @@ def q_range_join(spark, sf):
     return out.select("event_id", "user_id", "ts", "w_id", "w_start", "w_end")
 
 
+@query(oracle=_cc_unrolled_sql())
 def q_dedup_clusters(spark, sf):
     """Transitive near-dup clusters: LSH candidates → exact-Jaccard
     verify → connected components over ALL docs (component = min id).
@@ -1210,153 +2146,15 @@ def q_dedup_clusters(spark, sf):
     return P_dedup.connected_components(pairs, all_ids=docs)
 
 
-def q_asof_join(spark, sf):
-    """As-of join (operators/asof.py): for each click, the most recent
-    purchase by the same user at-or-before the click. One equi-shuffle
-    union+window plan; oracle is DuckDB's native ASOF LEFT JOIN."""
-    from stac_fastapi_duckdb_spark.operators.asof import asof_join
-
-    ev = _events(spark, sf)
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"),
-        "user_id",
-        F.col("ts").alias("p_ts"),
-        F.col("value").alias("p_value"),
-    )
-    return asof_join(
-        clicks, purchases, "user_id", "ts", "p_ts", ["p_event_id", "p_value"]
-    )
-
-
-def q_skew_agg(spark, sf):
-    """Salted two-phase aggregation over a skewed key (5 event types for
-    100k+ rows): groupBy(key, salt) partials → groupBy(key) finals.
-    Algebraic aggregates recombine exactly, so the plain GROUP BY is the
-    oracle for ANY salt assignment."""
-    from stac_fastapi_duckdb_spark.functions.skew import two_phase_agg
-
-    out = two_phase_agg(
-        _events(spark, sf),
-        ["event_type"],
-        {
-            "n": ("count", F.lit(1)),
-            "sum_value": ("sum", F.col("value").cast("decimal(18,6)")),
-            "max_value": ("max", "value"),
-        },
-        buckets=16,
-    )
-    return out.select(
-        "event_type",
-        "n",
-        F.col("sum_value").cast("double").alias("sum_value"),
-        "max_value",
-    )
-
-
-def q_stateful_sessions(spark, sf):
-    """Custom stateful streaming operator: per-user gap sessionization as
-    an applyInPandasWithState state machine (constant-size state per key,
-    event-time timeouts). Deterministic finite-replay output: every
-    session proven closed by a later event, plus final sessions whose
-    last_ts + gap ≤ the end-of-stream watermark (= max ts, delay 0)."""
-    from stac_fastapi_duckdb_spark.streaming.stateful import (
-        stateful_sessionize,
-    )
-
-    stream = P_stream.read_events_stream(spark, f"{sf}/events.parquet")
-    out = P_stream.run_to_memory(
-        stateful_sessionize(stream), spark, output_mode="append"
-    )
-    return out.select(
-        "user_id",
-        "session_start",
-        "session_end",
-        "n_events",
-        F.round("sum_value", 6).alias("sum_value"),
-    )
-
-
-def q_keyset_pagination(spark, sf):
-    """Keyset (search-after) pagination — the scale-correct replacement
-    for the reference's integer OFFSET token (database_logic.py:924-928):
-    a (last sort key, last id) token compiles to a pushdownable range
-    predicate, so deep pages cost the same as page one instead of a
-    global sort-and-skip. Token here: after (1996-06-01, key 3000)."""
-    from datetime import datetime
-
-    after_date = datetime(1996, 6, 1)
-    after_key = 3000
-    o = _t(spark, sf, "orders")
-    keyset = (F.col("o_orderdate") > F.lit(after_date)) | (
-        (F.col("o_orderdate") == F.lit(after_date))
-        & (F.col("o_orderkey") > after_key)
-    )
-    return (
-        o.filter(keyset)
-        .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
-        .select("o_orderkey", "o_orderdate", "o_totalprice")
-        .limit(50)
-    )
-
-
-def q_rank_dedup(spark, sf):
-    """Quality-ranked canonical selection: keep the best-quality doc per
-    language (window row_number) — the 'keep best of near-dup cluster'
-    pattern at the cluster-representative stage of a data pipeline."""
-    from pyspark.sql.window import Window
-
-    d = _t(spark, sf, "documents").select(
-        "doc_id",
-        "lang",
-        P_text.quality_score_col(F.col("text")).alias("quality"),
-    )
-    w = Window.partitionBy("lang").orderBy(
-        F.col("quality").desc(), F.col("doc_id").asc()
-    )
-    return (
-        d.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("lang", "rk", "doc_id", "quality")
-    )
-
-
-def q_user_stats(spark, sf):
-    """Per-user behavioral aggregates: event count, exact distinct event
-    types, exact value sum, activity span."""
-    return (
-        _events(spark, sf)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_type").alias("n_types"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("sum_value"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-
-
-def q_streaming_hourly_rollup(spark, sf):
-    """Structured Streaming ingest of the events table (file source,
-    AvailableNow trigger) → watermarked tumbling-window rollup → memory
-    sink. Produces EXACTLY the batch rollup, so the batch SQL is the
-    oracle — the streaming path is held to the same correctness gate."""
-    stream = P_stream.read_events_stream(spark, f"{sf}/events.parquet")
-    return P_stream.run_to_memory(P_stream.hourly_rollup(stream), spark)
-
-
-def q_sessionize(spark, sf):
-    """Gap-based session windows (30 min) per user via F.session_window —
-    the same operator serves batch and streaming; oracle is the classic
-    gaps-and-islands SQL (lag + cumulative sum)."""
-    return P_stream.session_windows(_events(spark, sf), "30 minutes")
-
-
+@query(tags=("headline",), oracle="""
+        SELECT o_orderpriority, COUNT(*) AS order_count
+        FROM orders
+        WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+          AND o_orderdate < TIMESTAMP '1996-01-01'
+          AND EXISTS (SELECT 1 FROM lineitem
+                      WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+        GROUP BY o_orderpriority
+    """)
 def q_semi_join(spark, sf):
     """EXISTS → left-semi join (TPC-H Q4 shape). A semi join never
     duplicates probe-side rows, so at 100 TB it avoids materializing the
@@ -1382,6 +2180,17 @@ def q_semi_join(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT c_mktsegment, COUNT(*) AS numcust,
+               CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+        FROM customer
+        WHERE c_acctbal > 6000
+          AND NOT EXISTS (SELECT 1 FROM orders
+                          WHERE o_custkey = c_custkey
+                            AND o_orderdate >= TIMESTAMP '1995-01-01'
+                            AND o_orderdate < TIMESTAMP '1996-01-01')
+        GROUP BY c_mktsegment
+    """)
 def q_anti_join(spark, sf):
     """NOT EXISTS → left-anti join (TPC-H Q22 shape): well-funded
     customers with no 1995 orders. One equi-shuffle, no row duplication.
@@ -1404,6 +2213,18 @@ def q_anti_join(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS total_price,
+               COUNT(*) AS n
+        FROM lineitem l JOIN (
+            SELECT l_partkey AS ap_partkey,
+                   SUM(CAST(l_quantity AS DECIMAL(18,2))) AS part_sum_qty,
+                   COUNT(*) AS part_cnt
+            FROM lineitem GROUP BY l_partkey
+        ) a ON l.l_partkey = a.ap_partkey
+        WHERE CAST(l_quantity AS DECIMAL(18,2)) * part_cnt * 2 < part_sum_qty
+    """)
 def q_scalar_subquery(spark, sf):
     """Correlated scalar subquery, decorrelated (TPC-H Q17 shape):
     lineitems below half their part's average quantity. Expressed as the
@@ -1433,6 +2254,14 @@ def q_scalar_subquery(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT l_returnflag, l_linestatus,
+               GROUPING(l_returnflag, l_linestatus) AS gid,
+               COUNT(*) AS n,
+               SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty
+        FROM lineitem
+        GROUP BY ROLLUP (l_returnflag, l_linestatus)
+    """)
 def q_rollup_agg(spark, sf):
     """GROUP BY ROLLUP with grouping_id: hierarchical subtotals in ONE
     pass (Spark expands grouping sets map-side; no per-level rescan)."""
@@ -1444,6 +2273,14 @@ def q_rollup_agg(spark, sf):
     )
 
 
+@query(oracle=f"""
+        SELECT event_type, date_trunc('day', ts) AS day,
+               GROUPING(event_type, day) AS gid,
+               COUNT(*) AS n,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        FROM {_EVENTS_SQL}
+        GROUP BY CUBE (event_type, day)
+    """)
 def q_cube_agg(spark, sf):
     """GROUP BY CUBE over (event_type, day): all 4 grouping combinations
     in one shuffle."""
@@ -1457,6 +2294,14 @@ def q_cube_agg(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle="""
+        SELECT o_orderpriority, COUNT(*) AS n,
+               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS revenue
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        WHERE o_orderstatus = 'F'
+        GROUP BY o_orderpriority
+    """)
 def q_bloom_pruned_join(spark, sf):
     """Shuffle join with Catalyst's runtime bloom-filter pruning
     (functions/bloom.py): the filtered orders side builds a bloom
@@ -1498,6 +2343,23 @@ def q_bloom_pruned_join(spark, sf):
         restore_confs(spark, prev)
 
 
+@query(tags=("headline",), oracle=f"""
+        WITH c AS (
+            SELECT user_id, ts, event_id, event_type,
+                   lag(event_type) OVER (PARTITION BY user_id
+                                         ORDER BY ts, event_id) AS prev
+            FROM {_EVENTS_SQL}
+        ), k AS (
+            SELECT user_id, ts, event_id, event_type FROM c
+            WHERE prev IS NULL OR prev <> event_type
+        )
+        SELECT user_id, event_type, ts AS valid_from,
+               lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                   AS valid_to,
+               lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                   IS NULL AS is_current
+        FROM k
+    """)
 def q_scd2_intervals(spark, sf):
     """SCD2 dimension build from the events change log: per-user
     event_type state intervals with consecutive-duplicate suppression
@@ -1514,6 +2376,26 @@ def q_scd2_intervals(spark, sf):
     )
 
 
+@query(oracle="""
+        WITH w AS (
+            SELECT o_custkey, o_orderstatus, o_totalprice,
+                   row_number() OVER (PARTITION BY o_custkey
+                                      ORDER BY o_orderdate DESC,
+                                               o_orderkey DESC) AS rn
+            FROM orders
+        ), ch AS (
+            SELECT o_custkey AS k,
+                   CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
+                   o_totalprice AS new_bal
+            FROM w WHERE rn = 1
+        )
+        SELECT COALESCE(c_custkey, k) AS c_custkey, c_name, c_nationkey,
+               c_mktsegment,
+               CASE WHEN op IS NOT NULL THEN new_bal
+                    ELSE c_acctbal END AS c_acctbal
+        FROM customer FULL OUTER JOIN ch ON c_custkey = k
+        WHERE op IS NULL OR op <> 'D'
+    """)
 def q_cdc_apply(spark, sf):
     """Batch MERGE emulation: compact an orders-derived CDC feed
     (latest order per customer wins; finalized orders delete, others
@@ -1538,6 +2420,11 @@ def q_cdc_apply(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT user_id FROM events WHERE event_type = 'click'
+        INTERSECT
+        SELECT user_id FROM events WHERE event_type = 'purchase'
+    """)
 def q_set_intersect(spark, sf):
     """INTERSECT (distinct semantics): users who both clicked and
     purchased — Spark plans a LeftSemi over pre-aggregated distincts."""
@@ -1547,6 +2434,11 @@ def q_set_intersect(spark, sf):
     return clicks.intersect(buys)
 
 
+@query(oracle="""
+        SELECT user_id FROM events WHERE event_type = 'view'
+        EXCEPT
+        SELECT user_id FROM events WHERE event_type = 'error' AND value > 95
+    """)
 def q_set_except(spark, sf):
     """EXCEPT (distinct semantics): users with views but no high-value
     errors — LeftAnti over distincts. (The error side is value-filtered
@@ -1559,6 +2451,14 @@ def q_set_except(spark, sf):
     return views.subtract(errors)
 
 
+@query(oracle="""
+        SELECT l_returnflag,
+               ROUND(stddev_samp(l_discount), 6) AS sd_disc,
+               ROUND(var_samp(l_quantity), 6) AS var_qty,
+               ROUND(corr(l_quantity, l_extendedprice), 6) + 0.0 AS corr_qp,
+               ROUND(covar_samp(l_quantity, l_extendedprice), 4) + 0.0 AS cov_qp
+        FROM lineitem GROUP BY l_returnflag
+    """)
 def q_stats_agg(spark, sf):
     """Statistical moments per group: sample stddev/variance, Pearson
     correlation and covariance — single-pass merge-formula aggregates
@@ -1589,6 +2489,11 @@ def q_stats_agg(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT CAST(FLOOR(l_extendedprice / 5000) AS BIGINT) AS bin,
+               COUNT(*) AS n
+        FROM lineitem GROUP BY 1
+    """)
 def q_histogram(spark, sf):
     """Fixed-width histogram binning (floor division on the measure) —
     the scan-side profile op behind data-quality dashboards."""
@@ -1601,6 +2506,12 @@ def q_histogram(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT doc_id, lang FROM documents
+        WHERE CAST(('0x' || substring(
+                  md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 8))
+              AS BIGINT) % 10000 < 1000
+    """)
 def q_hash_sample(spark, sf):
     """Deterministic ~10% corpus sample: membership is a pure function
     of md5(doc_id) — reproducible across reruns, partitionings, and
@@ -1613,6 +2524,14 @@ def q_hash_sample(spark, sf):
     ).select("doc_id", "lang")
 
 
+@query(oracle="""
+        SELECT doc_id, lang FROM documents
+        WHERE CAST(('0x' || substring(
+                  md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 8))
+              AS BIGINT) % 10000
+              < CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 2000
+                          WHEN 'zh' THEN 1000 ELSE 500 END
+    """)
 def q_stratified_sample(spark, sf):
     """Per-stratum deterministic downsampling: keep 50% of en, 20% of
     de, 10% of zh, 5% of everything else — the corpus-reweighting
@@ -1633,7 +2552,25 @@ def q_stratified_sample(spark, sf):
     ).select("doc_id", "lang")
 
 
-def q_contamination(spark, sf):
+@query(oracle=f"""
+        WITH sh AS ({_SHINGLES_SQL}),
+        be AS (
+            SELECT doc_id AS bench_id, len(s) AS bench_n, unnest(s) AS g
+            FROM sh WHERE doc_id % 23 = 0
+        ),
+        de AS (SELECT doc_id, unnest(s) AS g FROM sh),
+        j AS (
+            SELECT de.doc_id, be.bench_id, be.bench_n,
+                   COUNT(*) AS n_overlap
+            FROM de JOIN be USING (g)
+            GROUP BY de.doc_id, be.bench_id, be.bench_n
+        )
+        SELECT doc_id, bench_id, n_overlap,
+               ROUND(CAST(n_overlap AS DOUBLE) / bench_n, 6) AS ratio
+        FROM j
+        WHERE CAST(n_overlap AS DOUBLE) / bench_n >= 0.5
+    """)
+def q_contamination_check(spark, sf):
     """Benchmark-contamination screen: corpus docs sharing ≥50% of a
     benchmark item's distinct 3-gram shingles
     (pipeline/contamination.py). The benchmark side (every 23rd doc
@@ -1652,6 +2589,71 @@ def q_contamination(spark, sf):
     )
 
 
+# same fingerprints, bench semi join, islands, and token rebuild as
+# pipeline.contamination.decontaminate_spans (k=8, bench = doc_id%23)
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle=r"""
+    WITH t AS (
+        SELECT doc_id,
+               string_split_regex(lower(trim(text)), '\s+') AS toks
+        FROM documents
+    ), bw AS (
+        SELECT unnest(generate_series(1, len(toks) - 7)) AS i, toks
+        FROM t WHERE doc_id % 23 = 0 AND len(toks) >= 8
+    ), bfp AS (
+        SELECT DISTINCT
+               substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16) AS fp
+        FROM bw
+    ), w AS (
+        SELECT doc_id,
+               unnest(generate_series(1, len(toks) - 7)) AS i, toks
+        FROM t WHERE len(toks) >= 8
+    ), fps AS (
+        SELECT doc_id, i - 1 AS pos,
+               substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16) AS fp
+        FROM w
+    ), marked AS (
+        SELECT DISTINCT f.doc_id, f.pos FROM fps f JOIN bfp USING (fp)
+    ), mk AS (
+        SELECT doc_id, pos,
+               CASE WHEN pos - lag(pos, 1, -9) OVER
+                            (PARTITION BY doc_id ORDER BY pos) > 8
+                    THEN 1 ELSE 0 END AS nw
+        FROM marked
+    ), isl AS (
+        SELECT doc_id, pos,
+               sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
+                             ROWS UNBOUNDED PRECEDING) AS isl
+        FROM mk
+    ), iv AS (
+        SELECT doc_id, min(pos) AS lo, max(pos) + 8 - 1 AS hi
+        FROM isl GROUP BY doc_id, isl
+    ), tok AS (
+        SELECT doc_id, unnest(generate_series(1, len(toks))) - 1 AS p,
+               toks
+        FROM t
+    ), tk AS (
+        SELECT doc_id, p, toks[p + 1] AS tk FROM tok
+    ), rm AS (
+        SELECT DISTINCT k.doc_id, k.p
+        FROM tk k JOIN iv ON k.doc_id = iv.doc_id
+                        AND k.p BETWEEN iv.lo AND iv.hi
+    ), kept AS (
+        SELECT tk.doc_id,
+               coalesce(string_agg(tk.tk, ' ' ORDER BY tk.p), '')
+                   AS clean_text
+        FROM tk LEFT JOIN rm ON tk.doc_id = rm.doc_id AND tk.p = rm.p
+        WHERE rm.p IS NULL
+        GROUP BY tk.doc_id
+    ), rmn AS (
+        SELECT doc_id, count(*) AS n_removed FROM rm GROUP BY doc_id
+    )
+    SELECT t.doc_id,
+           coalesce(k.clean_text, '') AS clean_text,
+           CAST(len(t.toks) AS BIGINT) AS n_tokens,
+           CAST(coalesce(rmn.n_removed, 0) AS BIGINT) AS n_removed
+    FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id
+           LEFT JOIN rmn ON t.doc_id = rmn.doc_id
+""")
 def q_decontaminate(spark, sf):
     """GPT-3-style benchmark decontamination
     (pipeline/contamination.py decontaminate_spans): every 8-token run
@@ -1706,7 +2708,33 @@ def _bench_fps_artifact(spark, sf) -> DataFrame:
     return _artifact_df(spark, "bench_fps", sf, build)
 
 
-def q_funnel(spark, sf):
+@query(oracle=f"""
+        WITH ev AS (
+            SELECT user_id, ts, event_id, event_type FROM {_EVENTS_SQL}
+            WHERE event_type IN ('view', 'click', 'purchase')
+        ),
+        s1 AS (
+            SELECT user_id, min(row(ts, event_id)) AS k FROM ev
+            WHERE event_type = 'view' GROUP BY user_id
+        ),
+        s2 AS (
+            SELECT e.user_id, min(row(e.ts, e.event_id)) AS k
+            FROM ev e JOIN s1 ON e.user_id = s1.user_id
+            WHERE e.event_type = 'click' AND row(e.ts, e.event_id) > s1.k
+            GROUP BY e.user_id
+        ),
+        s3 AS (
+            SELECT e.user_id, min(row(e.ts, e.event_id)) AS k
+            FROM ev e JOIN s2 ON e.user_id = s2.user_id
+            WHERE e.event_type = 'purchase' AND row(e.ts, e.event_id) > s2.k
+            GROUP BY e.user_id
+        )
+        SELECT 1 AS step, 'view' AS step_name,
+               (SELECT COUNT(*) FROM s1) AS n_users
+        UNION ALL SELECT 2, 'click', (SELECT COUNT(*) FROM s2)
+        UNION ALL SELECT 3, 'purchase', (SELECT COUNT(*) FROM s3)
+    """)
+def q_funnel_steps(spark, sf):
     """Ordered view→click→purchase funnel (operators/analytics.py):
     scan-pushed step filter → one per-user shuffle → JVM fold over the
     (ts, event_id)-sorted array — replaces the naive k-way self-join."""
@@ -1715,6 +2743,28 @@ def q_funnel(spark, sf):
     return funnel_counts(_events(spark, sf), ["view", "click", "purchase"])
 
 
+@query(oracle=f"""
+        WITH uw AS (
+            SELECT DISTINCT user_id,
+                   CAST(date_trunc('week', ts) AS DATE) AS w
+            FROM {_EVENTS_SQL}
+        ),
+        f AS (SELECT user_id, min(w) AS cohort_week FROM uw GROUP BY user_id),
+        act AS (
+            SELECT f.cohort_week,
+                   CAST((uw.w - f.cohort_week) / 7 AS INTEGER) AS week_offset
+            FROM uw JOIN f ON uw.user_id = f.user_id
+        ),
+        agg AS (
+            SELECT cohort_week, week_offset, COUNT(*) AS n_users
+            FROM act GROUP BY cohort_week, week_offset
+        )
+        SELECT cohort_week, week_offset, n_users,
+               ROUND(CAST(n_users AS DOUBLE) /
+                     MAX(CASE WHEN week_offset = 0 THEN n_users END)
+                         OVER (PARTITION BY cohort_week), 6) AS retention
+        FROM agg
+    """)
 def q_cohort_retention(spark, sf):
     """Weekly cohort retention triangle (operators/analytics.py):
     cohort = first-activity week; n_users/retention per week offset."""
@@ -1725,7 +2775,20 @@ def q_cohort_retention(spark, sf):
     return cohort_retention(_events(spark, sf))
 
 
-def q_boilerplate(spark, sf):
+@query(oracle=f"""
+        WITH sh AS ({_SHINGLES_SQL}),
+        e AS (SELECT doc_id, unnest(s) AS g FROM sh),
+        dfreq AS (SELECT g, COUNT(*) AS df FROM e GROUP BY g)
+        SELECT doc_id,
+               COUNT(*) AS n_shingles,
+               CAST(SUM(CASE WHEN df >= 5 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_boilerplate,
+               ROUND(SUM(CASE WHEN df >= 5 THEN 1 ELSE 0 END) * 1.0
+                     / COUNT(*), 6) AS boilerplate_ratio
+        FROM e JOIN dfreq USING (g)
+        GROUP BY doc_id
+    """)
+def q_boilerplate_stats(spark, sf):
     """Corpus-wide boilerplate profile: per-doc fraction of distinct
     3-gram shingles with document frequency ≥ 5 (pipeline/text.py
     boilerplate_stats) — one shuffle of 8-byte shingle hashes; the DF
@@ -1735,6 +2798,28 @@ def q_boilerplate(spark, sf):
     return boilerplate_stats(_t(spark, sf, "documents"), min_df=5)
 
 
+@query(oracle=r"""
+        WITH e AS (
+            SELECT doc_id,
+                   unnest(string_split_regex(lower(trim(text)), '\s+'))
+                       AS term
+            FROM documents
+        ),
+        tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM e GROUP BY 1, 2),
+        sc AS (
+            SELECT doc_id, term, tf,
+                   ROUND(tf * (ln((1 + (SELECT COUNT(*) FROM documents))
+                                  * 1.0
+                                  / (1 + COUNT(*) OVER (PARTITION BY term)))
+                               + 1), 6) AS tfidf
+            FROM tf
+        )
+        SELECT doc_id, term, tf, tfidf FROM (
+            SELECT *, row_number() OVER (PARTITION BY doc_id
+                                         ORDER BY tfidf DESC, term ASC) AS rn
+            FROM sc
+        ) WHERE rn <= 5
+    """)
 def q_tfidf_terms(spark, sf):
     """Per-doc top-5 salient terms by smoothed TF-IDF (pipeline/text.py
     tfidf_top_terms): DF via count-window over the TF aggregate's term
@@ -1745,6 +2830,36 @@ def q_tfidf_terms(spark, sf):
     return tfidf_top_terms(_t(spark, sf, "documents"), k=5)
 
 
+@query(tags=("artifact",), oracle=r"""
+        WITH d AS (
+            SELECT doc_id,
+                   string_split_regex(lower(trim(text)), '\s+') AS toks
+            FROM documents
+        ),
+        st AS (
+            SELECT (SELECT COUNT(*) FROM documents) AS n,
+                   (SELECT AVG(len(string_split_regex(lower(trim(text)),
+                                                      '\s+')))
+                    FROM documents) AS avgdl
+        ),
+        e AS (
+            SELECT doc_id, len(toks) AS dl,
+                   unnest(list_filter(toks,
+                       t -> t IN ('join', 'scan', 'filter'))) AS term
+            FROM d
+        ),
+        tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM e GROUP BY 1, 2, 3),
+        sc AS (
+            SELECT doc_id,
+                   ln(1.0 + (st.n - (COUNT(*) OVER (PARTITION BY term)) + 0.5)
+                            / ((COUNT(*) OVER (PARTITION BY term)) + 0.5))
+                   * (tf * (1.2 + 1))
+                   / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / st.avgdl)) AS s
+            FROM tf, st
+        )
+        SELECT doc_id, ROUND(SUM(s), 6) AS score FROM sc GROUP BY doc_id
+        ORDER BY score DESC, doc_id ASC LIMIT 10
+    """)
 def q_bm25_search(spark, sf):
     """Okapi BM25 lexical retrieval for a fixed query bag, served from
     the frozen inverted-index artifact (_bm25_artifact): term-filter
@@ -1766,6 +2881,16 @@ def q_bm25_search(spark, sf):
     )
 
 
+@query(oracle=f"""
+        SELECT new_id, base_id, jaccard FROM (
+            SELECT a.doc_id AS new_id, b.doc_id AS base_id,
+                   ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+                         / len(list_distinct(list_concat(a.s, b.s))), 6)
+                       AS jaccard
+            FROM ({_SHINGLES_SQL}) a JOIN ({_SHINGLES_SQL}) b
+              ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
+        ) WHERE jaccard >= 0.8
+    """)
 def q_incremental_dedup(spark, sf):
     """New-batch-vs-standing-corpus dedup (pipeline/dedup.py
     incremental_near_dup): banded minhash joined new→base only — no
@@ -1791,6 +2916,28 @@ def q_incremental_dedup(spark, sf):
     )
 
 
+@query(oracle=r"""
+        WITH t AS (
+            SELECT doc_id,
+                   string_split_regex(lower(trim(text)), '\s+') AS toks
+            FROM documents
+        ),
+        c AS (
+            SELECT doc_id, toks, len(toks) AS n,
+                   CAST(floor((greatest(len(toks) - 32, 0) + 23) / 24)
+                        AS INTEGER) + 1 AS n_chunks
+            FROM t
+        )
+        SELECT doc_id,
+               CAST(unnest(range(0, n_chunks)) AS INTEGER) AS chunk_idx,
+               array_to_string(
+                   toks[unnest(range(0, n_chunks)) * 24 + 1
+                        : unnest(range(0, n_chunks)) * 24 + 32], ' ')
+                   AS chunk_text,
+               CAST(least(32, n - unnest(range(0, n_chunks)) * 24)
+                    AS INTEGER) AS chunk_n_tokens
+        FROM c
+    """)
 def q_chunk_documents(spark, sf):
     """Overlapping fixed-token chunking for embedding/pretraining
     windows (pipeline/text.py chunk_documents): pure per-row JVM array
@@ -1802,6 +2949,21 @@ def q_chunk_documents(spark, sf):
     )
 
 
+@query(oracle="""
+        WITH b AS (
+            SELECT n_chars,
+                   CAST(('0x' || substring(
+                       md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 8))
+                   AS BIGINT) % 10000 AS bucket
+            FROM documents
+        )
+        SELECT CASE WHEN bucket < 8000 THEN 'train'
+                    WHEN bucket < 9000 THEN 'val'
+                    ELSE 'test' END AS split,
+               COUNT(*) AS n_docs,
+               CAST(SUM(n_chars) AS BIGINT) AS sum_chars
+        FROM b GROUP BY 1
+    """)
 def q_dataset_split(spark, sf):
     """Hash-stable train/val/test split (80/10/10) + per-split stats —
     a doc never changes split when the corpus grows."""
@@ -1819,6 +2981,23 @@ def q_dataset_split(spark, sf):
     )
 
 
+@query(oracle="""
+        WITH t AS (
+            SELECT lang, doc_id,
+                   CAST(n_chars // 4 + 1 AS BIGINT) AS n_tokens
+            FROM documents
+        ), p AS (
+            SELECT lang, n_tokens,
+                   CAST(COALESCE(SUM(n_tokens) OVER (
+                       PARTITION BY lang ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                   ), 0) // 2048 AS BIGINT) AS pack_id
+            FROM t
+        )
+        SELECT lang, pack_id, COUNT(*) AS n_docs,
+               CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens
+        FROM p GROUP BY lang, pack_id
+    """)
 def q_sequence_packing(spark, sf):
     """Greedy contiguous sequence packing per language (~2048-token
     packs; token estimate n_chars/4): running-total DIV budget, then
@@ -1835,6 +3014,30 @@ def q_sequence_packing(spark, sf):
     )
 
 
+@query(oracle="""
+        WITH mix AS (
+            SELECT 'en-full' AS source_name, n_chars FROM documents
+            WHERE lang = 'en'
+              AND CAST(('0x' || substring(
+                    md5('mix-v1:en-full' || CAST(doc_id AS VARCHAR)), 1, 8))
+                  AS BIGINT) % 10000 < 10000
+            UNION ALL
+            SELECT 'de-half', n_chars FROM documents
+            WHERE lang = 'de'
+              AND CAST(('0x' || substring(
+                    md5('mix-v1:de-half' || CAST(doc_id AS VARCHAR)), 1, 8))
+                  AS BIGINT) % 10000 < 5000
+            UNION ALL
+            SELECT 'fr-tenth', n_chars FROM documents
+            WHERE lang = 'fr'
+              AND CAST(('0x' || substring(
+                    md5('mix-v1:fr-tenth' || CAST(doc_id AS VARCHAR)), 1, 8))
+                  AS BIGINT) % 10000 < 1000
+        )
+        SELECT source_name, COUNT(*) AS n_docs,
+               CAST(SUM(n_chars) AS BIGINT) AS sum_chars
+        FROM mix GROUP BY source_name
+    """)
 def q_corpus_mixture(spark, sf):
     """Weighted deterministic corpus mixing: per-language sources
     sampled at different rates, unioned with a source tag, counted
@@ -1854,6 +3057,11 @@ def q_corpus_mixture(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT lang, n, ROUND(n / SUM(n) OVER (), 6) AS fraction
+        FROM (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
+              FROM documents GROUP BY lang)
+    """)
 def q_label_balance(spark, sf):
     """Class-balance report: per-language doc counts and corpus
     fraction (windowed total over the tiny aggregate)."""
@@ -1862,6 +3070,15 @@ def q_label_balance(spark, sf):
     return label_balance(_t(spark, sf, "documents"), "lang")
 
 
+@query(tags=("headline",), oracle="""
+        SELECT event_type, CAST(SUM(k) AS BIGINT) AS sum_k,
+               COUNT(CASE WHEN k > 50 THEN 1 END) AS n_high,
+               MIN(k) AS min_k, MAX(k) AS max_k
+        FROM (SELECT event_type,
+                     CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+              FROM events)
+        GROUP BY event_type
+    """)
 def q_json_extract(spark, sf):
     """Schema-on-read JSON extraction (get_json_object, JVM-side) over
     the events.props payload column, aggregated per type — the
@@ -1883,6 +3100,15 @@ def q_json_extract(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT l_returnflag, l_linestatus,
+               GROUPING(l_returnflag, l_linestatus) AS gid,
+               COUNT(*) AS n,
+               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS sum_price
+        FROM lineitem
+        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
+    """)
 def q_grouping_sets(spark, sf):
     """Explicit GROUPING SETS ((flag),(status)) — two independent
     aggregation keyings in one Expand pass (DataFrame.groupingSets,
@@ -1901,6 +3127,14 @@ def q_grouping_sets(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT l_returnflag,
+               ROUND(quantile_cont(l_quantity, 0.5), 6) AS p50_qty,
+               ROUND(quantile_cont(l_extendedprice, 0.25), 6) AS p25_price,
+               ROUND(quantile_cont(l_extendedprice, 0.75), 6) AS p75_price
+        FROM lineitem
+        GROUP BY l_returnflag
+    """)
 def q_percentile_agg(spark, sf):
     """Exact interpolated percentiles per group (SortAggregate path —
     unlike approx_percentile there's no sketch error to reconcile with
@@ -1913,6 +3147,15 @@ def q_percentile_agg(spark, sf):
     )
 
 
+@query(tags=("headline",), oracle=f"""
+        SELECT event_id, user_id,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER (
+                   PARTITION BY user_id
+                   ORDER BY CAST(epoch(ts) AS BIGINT)
+                   RANGE BETWEEN 7200 PRECEDING AND CURRENT ROW
+               ) AS DOUBLE) AS roll_sum
+        FROM {_EVENTS_SQL}
+    """)
 def q_rolling_window(spark, sf):
     """Per-user rolling 2-hour sum (RANGE frame over event-time
     seconds): the frame is time-based, so ties and gaps are handled
@@ -1936,6 +3179,15 @@ def q_rolling_window(spark, sf):
     )
 
 
+@query(oracle=f"""
+        SELECT DISTINCT user_id,
+               first_value(event_type) OVER w AS first_type,
+               last_value(event_type) OVER w AS last_type
+        FROM {_EVENTS_SQL}
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING
+                              AND UNBOUNDED FOLLOWING)
+    """)
 def q_first_last_window(spark, sf):
     """first_value/last_value over an unbounded ordered frame with an
     event_id tiebreak (deterministic under timestamp ties), collapsed
@@ -1958,6 +3210,14 @@ def q_first_last_window(spark, sf):
     )
 
 
+@query(oracle="""
+        SELECT l_returnflag,
+               COUNT(DISTINCT l_suppkey) AS n_supp,
+               COUNT(DISTINCT l_partkey) AS n_part,
+               COUNT(*) AS n
+        FROM lineitem
+        GROUP BY l_returnflag
+    """)
 def q_distinct_count(spark, sf):
     """Exact COUNT(DISTINCT) per group — Spark plans a two-stage expand
     + partial aggregate, no driver-side collection."""
@@ -1969,6 +3229,41 @@ def q_distinct_count(spark, sf):
     )
 
 
+@query(tags=("pipeline_op", "scale_probe"), oracle=r"""
+        WITH t AS (
+            SELECT doc_id,
+                   regexp_split_to_array(lower(trim(text)), '\s+') AS w
+            FROM documents
+        ), g AS (
+            SELECT doc_id, w, len(w) AS n,
+                   CASE WHEN len(w) >= 2
+                        THEN list_transform(generate_series(1, len(w)-1),
+                             i -> concat_ws(' ', w[i], w[i+1]))
+                        ELSE [] END AS bg,
+                   CASE WHEN len(w) >= 3
+                        THEN list_transform(generate_series(1, len(w)-2),
+                             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))
+                        ELSE [] END AS tg
+            FROM t
+        )
+        SELECT doc_id,
+               CAST(n AS BIGINT) AS n_tokens,
+               ROUND(CASE WHEN n > 0
+                          THEN (n - len(list_distinct(w))) / CAST(n AS DOUBLE)
+                          ELSE 0.0 END, 6) AS dup_word_frac,
+               ROUND(CASE WHEN n >= 2
+                          THEN COALESCE(list_aggregate(
+                                   list_transform(list_distinct(bg),
+                                       g2 -> len(list_filter(bg, x -> x = g2))),
+                                   'max'), 0) / CAST(n - 1 AS DOUBLE)
+                          ELSE 0.0 END, 6) AS top_bigram_frac,
+               ROUND(CASE WHEN n >= 3
+                          THEN len(list_filter(tg,
+                                   x -> len(list_filter(tg, y -> y = x)) > 1))
+                               / CAST(n - 2 AS DOUBLE)
+                          ELSE 0.0 END, 6) AS dup_trigram_frac
+        FROM g
+    """)
 def q_repetition_stats(spark, sf):
     """Gopher-style within-document repetition metrics (dup-word frac,
     top-bigram frac, dup-trigram frac) — the 'repetition removal'
@@ -2007,6 +3302,41 @@ def _pii_documents(spark, sf):
     return d.select("doc_id", synth.alias("text"))
 
 
+# PII oracle shares the LITERAL pattern constants with the Spark
+# operator (pipeline/text.py PII_PATTERNS are RE2-compatible by design)
+from stac_fastapi_duckdb_spark.pipeline.text import PII_PATTERNS as _PII
+
+_PII_EMAIL = _PII["email"][0]
+_PII_IP = _PII["ip"][0]
+_PII_PHONE = _PII["phone"][0]
+
+# identical injection expression as _pii_documents (Spark side)
+_PII_SYNTH_SQL = """
+    SELECT doc_id,
+           concat(text, ' contact user', CAST(doc_id AS VARCHAR), '@example.com',
+                  CASE WHEN doc_id % 3 = 0
+                       THEN concat(' cc admin', CAST(doc_id AS VARCHAR), '@mail.test')
+                       ELSE '' END,
+                  ' or +1-555-', lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
+                  CASE WHEN doc_id % 4 = 0
+                       THEN concat(' from 10.', CAST(doc_id % 200 AS VARCHAR), '.0.7')
+                       ELSE '' END) AS text
+    FROM documents
+"""
+
+
+@query(tags=("pipeline_op",), oracle=f"""
+        WITH s AS ({_PII_SYNTH_SQL})
+        SELECT doc_id,
+               CAST(len(regexp_extract_all(text, '{_PII_EMAIL}')) AS BIGINT) AS n_emails,
+               CAST(len(regexp_extract_all(text, '{_PII_IP}')) AS BIGINT) AS n_ips,
+               CAST(len(regexp_extract_all(text, '{_PII_PHONE}')) AS BIGINT) AS n_phones,
+               md5(regexp_replace(regexp_replace(regexp_replace(text,
+                   '{_PII_EMAIL}', '<EMAIL>', 'g'),
+                   '{_PII_IP}', '<IP>', 'g'),
+                   '{_PII_PHONE}', '<PHONE>', 'g')) AS redacted_fp
+        FROM s
+    """)
 def q_pii_scrub(spark, sf):
     """PII audit + redaction over PII-injected documents: per-class
     match counts and the redacted-text fingerprint. RE2-compatible
@@ -2021,6 +3351,42 @@ def q_pii_scrub(spark, sf):
     )
 
 
+@query(tags=("pipeline_op",), oracle=r"""
+        WITH s AS (
+            SELECT doc_id,
+                   concat('HTTPS://WWW.', source, '.Example.COM',
+                          CASE WHEN doc_id % 3 = 0 THEN ':443' ELSE '' END,
+                          '/Docs/', CAST(doc_id AS VARCHAR),
+                          CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END,
+                          '?utm_source=x&ref=', lang, '&b=2&a=1#frag') AS url
+            FROM documents
+        ), u AS (
+            SELECT doc_id, regexp_replace(url, '#.*$', '') AS nf FROM s
+        ), p AS (
+            SELECT doc_id,
+                   lower(regexp_extract(nf, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
+                   regexp_replace(lower(split_part(
+                       regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1),
+                       ':', 1)), '^www\.', '') AS host,
+                   regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(/[^?#]*)', 1) AS path0,
+                   list_sort(list_filter(
+                       string_split(regexp_extract(nf, '\?([^#]*)', 1), '&'),
+                       pp -> NOT regexp_matches(pp, '^utm_')
+                             AND NOT regexp_matches(pp, '^ref=')
+                             AND pp <> '')) AS kept
+            FROM u
+        )
+        SELECT doc_id,
+               concat(scheme, '://', host,
+                      CASE WHEN regexp_replace(path0, '/+$', '') = ''
+                           THEN '/' ELSE regexp_replace(path0, '/+$', '') END,
+                      CASE WHEN len(kept) > 0
+                           THEN concat('?', array_to_string(kept, '&'))
+                           ELSE '' END) AS url_norm,
+               regexp_extract(host, '([^.]+\.[^.]+)$', 1) AS domain,
+               CAST(len(kept) AS BIGINT) AS n_params
+        FROM p
+    """)
 def q_url_normalize(spark, sf):
     """URL canonicalization (crawl-pipeline keying): scheme/host
     lowercased, default port + www. stripped, fragment dropped,
@@ -2046,6 +3412,18 @@ def q_url_normalize(spark, sf):
     return normalize_urls(d.select("doc_id", raw.alias("url")))
 
 
+@query(oracle=f"""
+        SELECT v.user_id AS user_id,
+               v.event_id AS view_id,
+               p.event_id AS purchase_id,
+               v.ts AS view_ts,
+               p.ts AS purchase_ts
+        FROM (SELECT * FROM {_EVENTS_SQL} e WHERE event_type = 'view') v
+        JOIN (SELECT * FROM {_EVENTS_SQL} e WHERE event_type = 'purchase') p
+          ON v.user_id = p.user_id
+         AND p.ts > v.ts
+         AND p.ts <= v.ts + INTERVAL 30 MINUTE
+    """)
 def q_stream_stream_join(spark, sf):
     """Watermarked stream-stream interval join (view→purchase
     attribution within 30 min per user): two file-source streams, both
@@ -2155,6 +3533,52 @@ def _bm25_artifact(spark, sf) -> dict:
     return _session_artifact(spark, ("bm25_index", sf), build)
 
 
+@query(tags=("pipeline_op", "artifact"), oracle=r"""
+        WITH d AS (
+            SELECT doc_id,
+                   string_split_regex(lower(trim(text)), '\s+') AS toks
+            FROM documents
+        ),
+        st AS (
+            SELECT (SELECT COUNT(*) FROM documents) AS n,
+                   (SELECT AVG(len(string_split_regex(lower(trim(text)),
+                                                      '\s+')))
+                    FROM documents) AS avgdl
+        ),
+        e AS (
+            SELECT doc_id, len(toks) AS dl,
+                   unnest(list_filter(toks,
+                       t -> t IN ('join', 'scan', 'filter'))) AS term
+            FROM d
+        ),
+        tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM e GROUP BY 1, 2, 3),
+        sc AS (
+            SELECT doc_id,
+                   ln(1.0 + (st.n - (COUNT(*) OVER (PARTITION BY term)) + 0.5)
+                            / ((COUNT(*) OVER (PARTITION BY term)) + 0.5))
+                   * (tf * (1.2 + 1))
+                   / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / st.avgdl)) AS s
+            FROM tf, st
+        ),
+        bm AS (
+            SELECT doc_id, ROUND(SUM(s), 6) AS bm25 FROM sc GROUP BY doc_id
+            ORDER BY bm25 DESC, doc_id ASC LIMIT 50
+        ),
+        probe AS (
+            SELECT CAST(embedding AS DOUBLE[]) AS pv
+            FROM embeddings WHERE vec_id = 0
+        ),
+        rr AS (
+            SELECT bm.doc_id, bm.bm25,
+                   ROUND(list_cosine_similarity(
+                       CAST(emb.embedding AS DOUBLE[]), probe.pv), 6) + 0.0 AS cos_sim
+            FROM bm JOIN embeddings emb ON emb.vec_id = bm.doc_id, probe
+        )
+        SELECT doc_id, bm25, cos_sim,
+               ROUND(0.1 * bm25 + cos_sim, 6) + 0.0 AS hybrid
+        FROM rr
+        ORDER BY hybrid DESC, doc_id ASC LIMIT 10
+    """)
 def q_hybrid_search(spark, sf):
     """Hybrid lexical+dense retrieval served at the SERVING TIER: the
     BM25 probe reads the query terms' posting lists from the WRITTEN
@@ -2186,6 +3610,14 @@ def q_hybrid_search(spark, sf):
     )
 
 
+@query(oracle=f"""
+        SELECT date_trunc('hour', e.ts) AS bucket,
+               c.c_mktsegment,
+               COUNT(*) AS n_events,
+               CAST(SUM(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
+        FROM {_EVENTS_SQL} e JOIN customer c ON e.user_id = c.c_custkey
+        GROUP BY 1, 2
+    """)
 def q_stream_enrich(spark, sf):
     """Stream-static broadcast enrichment + watermarked rollup: the
     events stream joined to the static customer dim (broadcast,
@@ -2201,6 +3633,35 @@ def q_stream_enrich(spark, sf):
     return P_stream.run_to_memory(out, spark)
 
 
+@query(tags=("pipeline_op",), oracle=r"""
+        WITH cent AS (
+            SELECT label, t.i AS i,
+                   ROUND(AVG(CAST(embedding[t.i] AS DOUBLE)), 6) AS c
+            FROM embeddings,
+                 unnest(generate_series(1, len(embedding))) AS t(i)
+            GROUP BY label, t.i
+        ), cl AS (
+            SELECT label, list(c ORDER BY i) AS centroid FROM cent GROUP BY label
+        ), d AS (
+            SELECT e.vec_id, e.label,
+                   ROUND(sqrt(list_aggregate(list_transform(
+                       generate_series(1, len(e.embedding)),
+                       j -> (CAST(e.embedding[j] AS DOUBLE) - cl.centroid[j]) ^ 2),
+                       'sum')), 6) AS dist
+            FROM embeddings e JOIN cl ON e.label = cl.label
+        )
+        SELECT vec_id, label, dist,
+               -- + 0.0 normalizes IEEE -0.0 (tiny negative z rounded)
+               ROUND(CASE WHEN STDDEV_SAMP(dist) OVER (PARTITION BY label) > 0
+                     THEN (dist - AVG(dist) OVER (PARTITION BY label))
+                          / STDDEV_SAMP(dist) OVER (PARTITION BY label)
+                     ELSE 0.0 END, 4) + 0.0 AS z,
+               ROUND(CASE WHEN STDDEV_SAMP(dist) OVER (PARTITION BY label) > 0
+                     THEN (dist - AVG(dist) OVER (PARTITION BY label))
+                          / STDDEV_SAMP(dist) OVER (PARTITION BY label)
+                     ELSE 0.0 END, 4) + 0.0 > 2.0 AS is_outlier
+        FROM d
+    """)
 def q_embedding_outliers(spark, sf):
     """Embedding QC: distance-to-label-centroid z-score outliers.
     Centroids via posexplode + (label, dim) partial agg (map-side
@@ -2209,6 +3670,13 @@ def q_embedding_outliers(spark, sf):
     return P_sim.embedding_outliers(_t(spark, sf, "embeddings"))
 
 
+@query(oracle=f"""
+        SELECT COALESCE(c.c_mktsegment, 'unmatched') AS segment,
+               COUNT(*) AS n_events,
+               COUNT(DISTINCT e.user_id) AS n_users
+        FROM {_EVENTS_SQL} e LEFT JOIN customer c ON e.user_id = c.c_custkey
+        GROUP BY 1
+    """)
 def q_left_outer_join(spark, sf):
     """LEFT OUTER join with null-side accounting: every event row kept,
     decorated with its customer segment where one exists (events.user_id
@@ -2229,6 +3697,23 @@ def q_left_outer_join(spark, sf):
     )
 
 
+@query(tags=("pipeline_op", "scale_probe"), oracle=f"""
+        WITH hourly AS (
+            SELECT user_id, date_trunc('hour', ts) AS bucket,
+                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+            FROM {_EVENTS_SQL} GROUP BY 1, 2
+        ), spine AS (
+            SELECT user_id,
+                   unnest(generate_series(min(bucket), max(bucket),
+                                          INTERVAL 1 HOUR)) AS bucket
+            FROM hourly GROUP BY user_id
+        )
+        SELECT s.user_id, s.bucket, h.v IS NULL AS is_gap,
+               last_value(h.v IGNORE NULLS)
+                   OVER (PARTITION BY s.user_id ORDER BY s.bucket) AS v_filled
+        FROM spine s LEFT JOIN hourly h
+          ON s.user_id = h.user_id AND s.bucket = h.bucket
+    """)
 def q_gap_fill(spark, sf):
     """Hourly gap filling with LOCF per user (hypertable
     time_bucket_gapfill + locf shape): keyed rollup, per-key hourly
@@ -2239,6 +3724,56 @@ def q_gap_fill(spark, sf):
     return gap_fill_hourly(_events(spark, sf))
 
 
+@query(tags=("pipeline_op", "scale_probe"), oracle=f"""
+        WITH t AS (
+            SELECT doc_id, text,
+                   regexp_split_to_array(lower(trim(text)), '\\s+') AS w
+            FROM documents
+        ), g AS (
+            SELECT doc_id, text, w, len(w) AS n,
+                   CASE WHEN len(w) >= 2
+                        THEN list_transform(generate_series(1, len(w)-1),
+                             i -> concat_ws(' ', w[i], w[i+1]))
+                        ELSE [] END AS bg
+            FROM t
+        ), rep AS (
+            SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
+                   ROUND(CASE WHEN n > 0
+                              THEN (n - len(list_distinct(w))) / CAST(n AS DOUBLE)
+                              ELSE 0.0 END, 6) AS dup_word_frac,
+                   ROUND(CASE WHEN n >= 2
+                              THEN COALESCE(list_aggregate(
+                                       list_transform(list_distinct(bg),
+                                           g2 -> len(list_filter(bg, x -> x = g2))),
+                                       'max'), 0) / CAST(n - 1 AS DOUBLE)
+                              ELSE 0.0 END, 6) AS top_bigram_frac
+            FROM g
+        ), lang AS (
+            SELECT doc_id, {_LANG_PRED_SQL} AS lang_pred FROM ({_LANG_SCORES_SQL})
+        ), pii AS (
+            SELECT doc_id,
+                   len(regexp_extract_all(text, '{_PII_EMAIL}'))
+                   + len(regexp_extract_all(text, '{_PII_IP}'))
+                   + len(regexp_extract_all(text, '{_PII_PHONE}')) AS n_pii
+            FROM documents
+        ), fp AS (
+            SELECT doc_id,
+                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
+            FROM documents
+        ), kept AS (
+            SELECT r.doc_id, r.n_tokens, l.lang_pred, f.fp
+            FROM rep r
+            JOIN lang l USING (doc_id)
+            JOIN pii p USING (doc_id)
+            JOIN fp f USING (doc_id)
+            WHERE l.lang_pred = 'en' AND r.n_tokens >= 30
+              AND r.dup_word_frac <= 0.6 AND r.top_bigram_frac <= 0.05
+              AND p.n_pii = 0
+        )
+        SELECT MIN(doc_id) AS doc_id, fp, MIN(n_tokens) AS n_tokens,
+               MIN(lang_pred) AS lang_pred
+        FROM kept GROUP BY fp
+    """)
 def q_curation_pipeline(spark, sf):
     """The fused corpus-curation chain (lang gate → length gate →
     repetition gates → PII gate → exact dedup) composed as ONE scan:
@@ -2256,6 +3791,39 @@ def q_curation_pipeline(spark, sf):
     )
 
 
+# frozen-centroid replay (same literals, exact L2 + row_number argmin
+# — the ann_ivf_topk technique), then the same in-cluster pair rule
+# and lowest-keep-id witness reduction as pipeline.similarity.semdedup
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle=f"""
+        WITH base AS (
+            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+            UNION ALL
+            SELECT vec_id + 1000000, CAST(embedding AS DOUBLE[]) FROM embeddings
+        ), dists AS (
+            SELECT b.vec_id, b.v, c.c AS cell,
+                   list_sum(list_transform(range(1, 65),
+                                           i -> (b.v[i] - c.cv[i]) ** 2)) AS dsq
+            FROM base b CROSS JOIN {_ivf_centroids_values_sql()} AS c(c, cv)
+        ), assigned AS (
+            SELECT vec_id, v, cell FROM (
+                SELECT vec_id, v, cell,
+                       row_number() OVER (PARTITION BY vec_id
+                                          ORDER BY dsq ASC, cell ASC) AS rn
+                FROM dists) WHERE rn = 1
+        ), pairs AS (
+            SELECT b.vec_id AS drop_id, a.vec_id AS keep_id,
+                   CAST(a.cell AS BIGINT) AS cluster,
+                   ROUND(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
+            FROM assigned a JOIN assigned b
+              ON a.cell = b.cell AND a.vec_id < b.vec_id
+        )
+        SELECT drop_id, keep_id, cluster, cos_sim FROM (
+            SELECT drop_id, keep_id, cluster, cos_sim,
+                   row_number() OVER (PARTITION BY drop_id
+                                      ORDER BY keep_id ASC) AS rn
+            FROM pairs WHERE cos_sim >= 0.95)
+        WHERE rn = 1
+    """)
 def q_semdedup(spark, sf):
     """SemDeDup (Abbas et al. 2023): cluster embeddings with the FROZEN
     IVF centroid artifact, drop any vector cosine-≥0.95 similar to a
@@ -2329,6 +3897,45 @@ def _doubled_fp_annotated_artifact(spark, sf) -> DataFrame:
     return _artifact_df(spark, "doubled_fp_annotated", sf, build)
 
 
+# same md5 8-token window fingerprints, same >=2-distinct-docs rule,
+# same gaps-and-islands merge as pipeline.dedup.duplicate_spans
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle=r"""
+        WITH corpus AS (
+            SELECT doc_id, text FROM documents
+            UNION ALL SELECT doc_id + 10000, text FROM documents
+        ), t AS (
+            SELECT doc_id,
+                   string_split_regex(lower(trim(text)), '\s+') AS toks
+            FROM corpus
+        ), w AS (
+            SELECT doc_id,
+                   unnest(generate_series(1, len(toks) - 7)) AS i, toks
+            FROM t WHERE len(toks) >= 8
+        ), fps AS (
+            SELECT doc_id, i - 1 AS pos,
+                   substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16) AS fp
+            FROM w
+        ), dup AS (
+            SELECT doc_id, pos FROM fps
+            WHERE fp IN (SELECT fp FROM fps GROUP BY fp
+                         HAVING count(DISTINCT doc_id) >= 2)
+        ), marked AS (
+            SELECT doc_id, pos,
+                   CASE WHEN pos - lag(pos, 1, -9) OVER
+                                (PARTITION BY doc_id ORDER BY pos) > 8
+                        THEN 1 ELSE 0 END AS nw
+            FROM dup
+        ), isl AS (
+            SELECT doc_id, pos,
+                   sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
+                                 ROWS UNBOUNDED PRECEDING) AS isl
+            FROM marked
+        )
+        SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
+               CAST(max(pos) + 8 - min(pos) AS BIGINT) AS span_len,
+               count(*) AS n_windows
+        FROM isl GROUP BY doc_id, isl
+    """)
 def q_duplicate_spans(spark, sf):
     """Cross-document duplicated-substring spans (Lee et al. 2022 exact
     substring dedup, restated at 8-token window granularity): md5
@@ -2348,6 +3955,53 @@ def q_duplicate_spans(spark, sf):
     )
 
 
+# same half-doc planting, same anchor-window blocking (shared md5
+# 8-token window, bucket cap 1000), same exact 3-gram containment as
+# pipeline.dedup.anchor_window_candidates + shingle_containment_pairs
+@query(tags=("pipeline_op", "scale_probe"), oracle=r"""
+        WITH corpus AS (
+            SELECT doc_id, text FROM documents
+            UNION ALL
+            SELECT doc_id + 10000,
+                   array_to_string(
+                       (string_split_regex(lower(trim(text)), '\s+'))
+                           [1:greatest(len(string_split_regex(lower(trim(text)), '\s+')) // 2, 1)],
+                       ' ') AS text
+            FROM documents
+        ), t AS (
+            SELECT doc_id,
+                   string_split_regex(lower(trim(text)), '\s+') AS toks
+            FROM corpus
+        ), wf AS (
+            SELECT doc_id,
+                   unnest(list_distinct(list_transform(
+                       generate_series(1, len(toks) - 7),
+                       i -> substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)))) AS fp
+            FROM t WHERE len(toks) >= 8
+        ), ok_fp AS (
+            SELECT fp FROM wf GROUP BY fp
+            HAVING count(DISTINCT doc_id) BETWEEN 2 AND 1000
+        ), cand AS (
+            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+            FROM wf a JOIN wf b ON a.fp = b.fp AND a.doc_id < b.doc_id
+            WHERE a.fp IN (SELECT fp FROM ok_fp)
+        ), sh AS (
+            SELECT doc_id,
+                   CASE WHEN len(toks) >= 3
+                        THEN list_distinct(list_transform(
+                                 generate_series(1, len(toks) - 2),
+                                 i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
+                        ELSE [array_to_string(toks, ' ')] END AS s
+            FROM t
+        )
+        SELECT id_a, id_b, containment FROM (
+            SELECT c.id_a, c.id_b,
+                   ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+                         / least(len(a.s), len(b.s)), 6) AS containment
+            FROM cand c JOIN sh a ON c.id_a = a.doc_id
+                        JOIN sh b ON c.id_b = b.doc_id
+        ) WHERE containment >= 0.9
+    """)
 def q_containment_dedup(spark, sf):
     """Asymmetric (doc-inside-doc) near-dup: anchor-window blocking +
     exact shingle CONTAINMENT ≥ 0.9 — the pair class Jaccard-tuned
@@ -2383,6 +4037,39 @@ def q_containment_dedup(spark, sf):
     )
 
 
+def _qc_weights_sql() -> str:
+    """DOUBLE[] literal of the frozen quality-classifier weight table
+    (plans/qc_index.py) — both engines score from the same literals."""
+    from stac_fastapi_duckdb_spark.plans.qc_index import QC_WEIGHTS
+
+    return "[" + ", ".join(repr(float(x)) for x in QC_WEIGHTS) + "]::DOUBLE[]"
+
+
+def _qc_scores_sql() -> str:
+    """(doc_id, n_tokens, qc_score) — replicates
+    pipeline.text.quality_classifier: same frozen weight literals, same
+    md5 low-60-bit bucket, same bias + mean-of-weights fold. Shared by
+    the quality_classifier and cluster_representatives oracles."""
+    return f"""
+        SELECT doc_id,
+               CAST(len(toks) AS BIGINT) AS n_tokens,
+               ROUND(0.05 + list_sum(list_transform(toks,
+                   tok -> ({_qc_weights_sql()})[
+                       CAST(CAST('0x' || substr(md5(tok), 18, 15) AS UBIGINT)
+                            % 64 AS INTEGER) + 1]))
+                   / len(toks), 6) AS qc_score
+        FROM (SELECT doc_id,
+                     string_split_regex(lower(trim(text)), '\\s+') AS toks
+              FROM documents)
+    """
+
+
+# same frozen weight literals, same md5 low-60-bit bucket, same
+# bias + mean-of-weights fold as pipeline.text.quality_classifier
+@query(tags=("pipeline_op", "scale_probe"), oracle=f"""
+        SELECT doc_id, n_tokens, qc_score, qc_score >= 0 AS qc_keep
+        FROM ({_qc_scores_sql()})
+    """)
 def q_quality_classifier(spark, sf):
     """Model-based quality filter in pure Column algebra: frozen
     hashed-feature linear scorer (plans/qc_index.py — the serving form
@@ -2392,6 +4079,25 @@ def q_quality_classifier(spark, sf):
     return P_text.quality_classifier(_t(spark, sf, "documents"))
 
 
+# same md5-low-60-bit row hashes, same commutative aggregates as
+# pipeline.validate.dataset_fingerprint
+@query(
+    tags=("pipeline_op", "scale_probe"),
+    oracle="\nUNION ALL\n".join(
+        f"""
+        SELECT '{c}' AS col_name,
+               count(*) AS n_rows,
+               CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_nulls,
+               bit_xor(CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 18, 15)
+                            AS BIGINT)) AS xor_hash,
+               CAST(sum(CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 18, 15)
+                             AS BIGINT) % 1000000007) AS BIGINT) AS sum_hash
+        FROM documents
+        """
+        for c in ["doc_id", "text", "lang", "source", "n_chars"]
+    ),
+)
 def q_dataset_fingerprint(spark, sf):
     """Order-invariant per-column corpus checksum (pipeline/validate):
     count / null-count / xor-hash / modular-sum-hash of md5-derived row
@@ -2406,6 +4112,34 @@ def q_dataset_fingerprint(spark, sf):
     )
 
 
+# same fixed-width bins, totals, and eps-smoothed log terms as
+# pipeline.validate.distribution_drift (+0.0 pins the zero sign)
+@query(tags=("pipeline_op",), oracle="""
+        WITH a AS (
+            SELECT CAST(FLOOR(n_chars / 100.0) AS BIGINT) AS bin,
+                   COUNT(*) AS n_a
+            FROM documents WHERE doc_id % 2 = 0 GROUP BY 1
+        ), b AS (
+            SELECT CAST(FLOOR(n_chars / 100.0) AS BIGINT) AS bin,
+                   COUNT(*) AS n_b
+            FROM documents WHERE doc_id % 2 = 1 GROUP BY 1
+        ), j AS (
+            SELECT COALESCE(a.bin, b.bin) AS bin,
+                   CAST(COALESCE(n_a, 0) AS BIGINT) AS n_a,
+                   CAST(COALESCE(n_b, 0) AS BIGINT) AS n_b
+            FROM a FULL OUTER JOIN b ON a.bin = b.bin
+        ), p AS (
+            SELECT bin, n_a, n_b,
+                   n_a / (SUM(n_a) OVER ()) AS p_a,
+                   n_b / (SUM(n_b) OVER ()) AS p_b
+            FROM j
+        )
+        SELECT bin, n_a, n_b,
+               ROUND(p_a, 6) AS p_a, ROUND(p_b, 6) AS p_b,
+               ROUND((p_a - p_b) * ln((p_a + 1e-6) / (p_b + 1e-6)), 6) + 0.0
+                   AS psi_term
+        FROM p
+    """)
 def q_distribution_drift(spark, sf):
     """PSI drift between two corpus snapshots (odd/even doc ids) over
     the n_chars distribution: fixed-width bins, one partial-agg scan
@@ -2422,6 +4156,72 @@ def q_distribution_drift(spark, sf):
     )
 
 
+# same ownership rule (lowest doc_id per fingerprint), same interval
+# merge, same token rebuild as pipeline.dedup.remove_duplicate_spans
+@query(tags=("pipeline_op", "artifact"), oracle=r"""
+        WITH corpus AS (
+            SELECT doc_id, text FROM documents
+            UNION ALL SELECT doc_id + 10000, text FROM documents
+        ), t AS (
+            SELECT doc_id,
+                   string_split_regex(lower(trim(text)), '\s+') AS toks
+            FROM corpus
+        ), w AS (
+            SELECT doc_id,
+                   unnest(generate_series(1, len(toks) - 7)) AS i, toks
+            FROM t WHERE len(toks) >= 8
+        ), fps AS (
+            SELECT doc_id, i - 1 AS pos,
+                   substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16) AS fp
+            FROM w
+        ), stats AS (
+            SELECT fp, count(DISTINCT doc_id) AS nd, min(doc_id) AS owner
+            FROM fps GROUP BY fp
+        ), marked AS (
+            SELECT DISTINCT f.doc_id, f.pos
+            FROM fps f JOIN stats s ON f.fp = s.fp
+            WHERE s.nd >= 2 AND f.doc_id <> s.owner
+        ), mk AS (
+            SELECT doc_id, pos,
+                   CASE WHEN pos - lag(pos, 1, -9) OVER
+                                (PARTITION BY doc_id ORDER BY pos) > 8
+                        THEN 1 ELSE 0 END AS nw
+            FROM marked
+        ), isl AS (
+            SELECT doc_id, pos,
+                   sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
+                                 ROWS UNBOUNDED PRECEDING) AS isl
+            FROM mk
+        ), iv AS (
+            SELECT doc_id, min(pos) AS lo, max(pos) + 8 - 1 AS hi
+            FROM isl GROUP BY doc_id, isl
+        ), tok AS (
+            SELECT doc_id, unnest(generate_series(1, len(toks))) - 1 AS p,
+                   toks
+            FROM t
+        ), tk AS (
+            SELECT doc_id, p, toks[p + 1] AS tk FROM tok
+        ), rm AS (
+            SELECT DISTINCT k.doc_id, k.p
+            FROM tk k JOIN iv ON k.doc_id = iv.doc_id
+                            AND k.p BETWEEN iv.lo AND iv.hi
+        ), kept AS (
+            SELECT tk.doc_id,
+                   coalesce(string_agg(tk.tk, ' ' ORDER BY tk.p), '')
+                       AS clean_text
+            FROM tk LEFT JOIN rm ON tk.doc_id = rm.doc_id AND tk.p = rm.p
+            WHERE rm.p IS NULL
+            GROUP BY tk.doc_id
+        ), rmn AS (
+            SELECT doc_id, count(*) AS n_removed FROM rm GROUP BY doc_id
+        )
+        SELECT t.doc_id,
+               coalesce(k.clean_text, '') AS clean_text,
+               CAST(len(t.toks) AS BIGINT) AS n_tokens,
+               CAST(coalesce(rmn.n_removed, 0) AS BIGINT) AS n_removed
+        FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id
+               LEFT JOIN rmn ON t.doc_id = rmn.doc_id
+    """)
 def q_remove_duplicate_spans(spark, sf):
     """Keep-one substring dedup: rebuild every document with its
     cross-document duplicated 8-token runs removed, except in the
@@ -2439,6 +4239,62 @@ def q_remove_duplicate_spans(spark, sf):
     )
 
 
+# same canonical-string casts, counts, and lexicographic min/max as
+# pipeline.validate.profile_table
+@query(tags=("pipeline_op",), oracle="""
+        SELECT 'doc_id' AS col_name,
+               count(*) AS n_rows,
+               CAST(sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_nulls,
+               count(DISTINCT CAST(doc_id AS VARCHAR)) AS n_distinct,
+               min(CAST(doc_id AS VARCHAR)) AS min_str,
+               max(CAST(doc_id AS VARCHAR)) AS max_str
+        FROM documents
+    
+UNION ALL
+
+        SELECT 'text' AS col_name,
+               count(*) AS n_rows,
+               CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_nulls,
+               count(DISTINCT CAST(text AS VARCHAR)) AS n_distinct,
+               min(CAST(text AS VARCHAR)) AS min_str,
+               max(CAST(text AS VARCHAR)) AS max_str
+        FROM documents
+    
+UNION ALL
+
+        SELECT 'lang' AS col_name,
+               count(*) AS n_rows,
+               CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_nulls,
+               count(DISTINCT CAST(lang AS VARCHAR)) AS n_distinct,
+               min(CAST(lang AS VARCHAR)) AS min_str,
+               max(CAST(lang AS VARCHAR)) AS max_str
+        FROM documents
+    
+UNION ALL
+
+        SELECT 'source' AS col_name,
+               count(*) AS n_rows,
+               CAST(sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_nulls,
+               count(DISTINCT CAST(source AS VARCHAR)) AS n_distinct,
+               min(CAST(source AS VARCHAR)) AS min_str,
+               max(CAST(source AS VARCHAR)) AS max_str
+        FROM documents
+    
+UNION ALL
+
+        SELECT 'n_chars' AS col_name,
+               count(*) AS n_rows,
+               CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_nulls,
+               count(DISTINCT CAST(n_chars AS VARCHAR)) AS n_distinct,
+               min(CAST(n_chars AS VARCHAR)) AS min_str,
+               max(CAST(n_chars AS VARCHAR)) AS max_str
+        FROM documents
+    """)
 def q_profile_table(spark, sf):
     """Per-column data profile (count / nulls / exact distinct /
     lexicographic min-max of the canonical string) in ONE Expand-based
@@ -2450,6 +4306,26 @@ def q_profile_table(spark, sf):
     )
 
 
+# transitive dedup map (min-label propagation unrolled) ⋈ frozen
+# quality scores → same (score DESC, id ASC) representative rule as
+# pipeline.dedup.cluster_representatives
+# quadratic_oracle: embeds the all-pairs Jaccard and an unrolled
+# label-propagation replay
+@query(tags=("pipeline_op", "quadratic_oracle"), oracle=f"""
+        WITH j AS (
+            SELECT cc.doc_id, cc.component AS canonical_id, qs.qc_score
+            FROM ({_cc_unrolled_sql()}) cc
+            JOIN ({_qc_scores_sql()}) qs ON cc.doc_id = qs.doc_id
+        ), r AS (
+            SELECT canonical_id, doc_id AS rep_id, qc_score AS rep_score,
+                   CAST(count(*) OVER (PARTITION BY canonical_id) AS BIGINT)
+                       AS n_members,
+                   row_number() OVER (PARTITION BY canonical_id
+                                      ORDER BY qc_score DESC, doc_id ASC) AS rn
+            FROM j
+        )
+        SELECT canonical_id, rep_id, rep_score, n_members FROM r WHERE rn = 1
+    """)
 def q_cluster_representatives(spark, sf):
     """Keep-best dedup: transitive minhash cluster map ⋈ frozen quality
     scores → highest-scoring member represents each cluster (id-asc
@@ -2460,6 +4336,51 @@ def q_cluster_representatives(spark, sf):
     )
 
 
+# same md5-bucket split rule as dataset_split, same anchor-window
+# blocking as containment_dedup, same exact shingle Jaccard — the
+# whole chain replayed, as pipeline.contamination.split_leakage runs it
+@query(tags=("pipeline_op",), oracle=rf"""
+        WITH t AS (
+            SELECT doc_id,
+                   string_split_regex(lower(trim(text)), '\s+') AS toks
+            FROM documents
+        ), wf AS (
+            SELECT doc_id,
+                   unnest(list_distinct(list_transform(
+                       generate_series(1, len(toks) - 7),
+                       i -> substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)))) AS fp
+            FROM t WHERE len(toks) >= 8
+        ), ok_fp AS (
+            SELECT fp FROM wf GROUP BY fp
+            HAVING count(DISTINCT doc_id) BETWEEN 2 AND 1000
+        ), cand AS (
+            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+            FROM wf a JOIN wf b ON a.fp = b.fp AND a.doc_id < b.doc_id
+            WHERE a.fp IN (SELECT fp FROM ok_fp)
+        ), pairs AS (
+            SELECT c.id_a, c.id_b,
+                   ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+                         / len(list_distinct(list_concat(a.s, b.s))), 6)
+                       AS jaccard
+            FROM cand c JOIN ({_SHINGLES_SQL}) a ON c.id_a = a.doc_id
+                        JOIN ({_SHINGLES_SQL}) b ON c.id_b = b.doc_id
+        ), sp AS (
+            SELECT doc_id,
+                   CASE WHEN bucket < 8000 THEN 'train'
+                        WHEN bucket < 9000 THEN 'val'
+                        ELSE 'test' END AS split
+            FROM (SELECT doc_id,
+                         CAST(('0x' || substring(
+                             md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 8))
+                         AS BIGINT) % 10000 AS bucket
+                  FROM documents)
+        )
+        SELECT p.id_a, sa.split AS split_a, p.id_b, sb.split AS split_b,
+               p.jaccard
+        FROM pairs p JOIN sp sa ON p.id_a = sa.doc_id
+                     JOIN sp sb ON p.id_b = sb.doc_id
+        WHERE p.jaccard >= 0.8 AND sa.split <> sb.split
+    """)
 def q_split_leakage(spark, sf):
     """Cross-split near-dup leakage audit: hash split (same rule as
     dataset_split) + deterministic anchor-window blocking + exact
@@ -2470,6 +4391,22 @@ def q_split_leakage(spark, sf):
     return split_leakage(_t(spark, sf, "documents"))
 
 
+# same seeded md5 hash, same (hash, id) within-shard order as
+# pipeline.sampling.shuffle_shards
+@query(tags=("pipeline_op", "scale_probe"), oracle="""
+        WITH h AS (
+            SELECT doc_id,
+                   CAST('0x' || substr(md5('shuf-v1:' || CAST(doc_id AS VARCHAR)),
+                                       18, 15) AS BIGINT) AS _h
+            FROM documents
+        )
+        SELECT doc_id,
+               CAST(_h % 8 AS INTEGER) AS shard,
+               CAST(row_number() OVER (PARTITION BY _h % 8
+                                       ORDER BY _h ASC, doc_id ASC) AS BIGINT)
+                   AS shard_pos
+        FROM h
+    """)
 def q_shuffle_shards(spark, sf):
     """Deterministic global training shuffle: seeded md5 hash → shard +
     within-shard position; one uniform shuffle, no global sort. The
@@ -2518,6 +4455,35 @@ def _lm_artifact(spark, sf) -> dict:
     return _session_artifact(spark, ("unigram_lm", sf), build)
 
 
+# identical add-one smoothing closed form as pipeline.text
+# train_unigram_lm + perplexity_score: top-300 vocab by
+# (count DESC, token ASC) — a total order, so the cut is
+# deterministic in both engines
+@query(tags=("pipeline_op", "artifact"), oracle=r"""
+        WITH tok AS (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
+            FROM documents
+        ), counts AS (
+            SELECT token, count(*) AS n FROM tok GROUP BY token
+        ), total AS (
+            SELECT sum(n) AS t FROM counts
+        ), top AS (
+            SELECT token, n FROM counts ORDER BY n DESC, token LIMIT 300
+        ), kept AS (
+            SELECT count(*) AS v FROM top
+        ), lm AS (
+            SELECT token, ln((n + 1.0) / (t + v + 1)) AS logprob
+            FROM top, total, kept
+        ), oov AS (
+            SELECT -ln(CAST(t + v + 1 AS DOUBLE)) AS o FROM total, kept
+        )
+        SELECT tok.doc_id,
+               CAST(count(*) AS BIGINT) AS n_tokens,
+               ROUND(avg(-coalesce(lm.logprob, oov.o)), 6) AS avg_nll
+        FROM tok LEFT JOIN lm USING (token), oov
+        GROUP BY tok.doc_id
+    """)
 def q_lm_perplexity(spark, sf):
     """CCNet-style unigram-LM perplexity filter: score every doc
     against the frozen top-300 add-one-smoothed LM artifact
@@ -2552,6 +4518,22 @@ def _ngram_counts_artifact(spark, sf, n=2) -> DataFrame:
     return _artifact_df(spark, f"ngram_counts_{n}", sf, build)
 
 
+# positional (non-distinct) word bigrams; (cnt DESC, gram ASC) is a
+# total order so the top-100 boundary matches exactly
+@query(tags=("pipeline_op", "artifact"), oracle=r"""
+        WITH t AS (
+            SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS w
+            FROM documents
+        ), g AS (
+            SELECT array_to_string(w[i:i+1], ' ') AS gram
+            FROM t, unnest(range(1, len(w))) AS u(i)
+            WHERE len(w) >= 2
+        )
+        SELECT gram, CAST(count(*) AS BIGINT) AS cnt
+        FROM g GROUP BY gram
+        ORDER BY cnt DESC, gram ASC
+        LIMIT 100
+    """)
 def q_top_bigrams(spark, sf):
     """Corpus bigram heavy hitters (boilerplate / stop-phrase mining):
     served from the frozen corpus frequency table
@@ -2566,6 +4548,34 @@ def q_top_bigrams(spark, sf):
     )
 
 
+# one Lloyd round from the deterministic vec_id<8 init: nearest
+# centroid by squared L2 (ties → lowest cell, same as numpy argmin)
+# then per-(cell, dim) count + mean — replicates
+# pipeline.similarity.kmeans_assign + the lloyd_round update
+@query(tags=("pipeline_op",), oracle="""
+        WITH base AS (
+            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+        ), cent AS (
+            SELECT vec_id AS cell, v AS cv FROM base WHERE vec_id < 8
+        ), dists AS (
+            SELECT b.vec_id, b.v, c.cell,
+                   list_sum(list_transform(range(1, 65),
+                                           i -> (b.v[i] - c.cv[i]) ** 2)) AS dsq
+            FROM base b CROSS JOIN cent c
+        ), assigned AS (
+            SELECT vec_id, v, cell FROM (
+                SELECT vec_id, v, cell,
+                       row_number() OVER (PARTITION BY vec_id
+                                          ORDER BY dsq ASC, cell ASC) AS rn
+                FROM dists) WHERE rn = 1
+        )
+        SELECT CAST(cell AS BIGINT) AS cell,
+               CAST(i AS BIGINT) AS pos,
+               CAST(count(*) AS BIGINT) AS n,
+               ROUND(avg(v[i + 1]), 6) AS m
+        FROM assigned, unnest(range(0, 64)) AS u(i)
+        GROUP BY cell, i
+    """)
 def q_kmeans_round(spark, sf):
     """One distributed Lloyd round, declaratively: deterministic init
     (the k=8 vectors with vec_id < 8 — SQL-replayable), broadcast
@@ -2600,6 +4610,15 @@ def q_kmeans_round(spark, sf):
     )
 
 
+# the bucketed two-level construction reproduces the plain total
+# order exactly, so the oracle IS the naive form the Spark plan
+# deliberately avoids
+@query(tags=("pipeline_op", "scale_probe"), oracle="""
+        SELECT doc_id, n_chars,
+               CAST(row_number() OVER (ORDER BY n_chars, doc_id) - 1
+                    AS BIGINT) AS row_id
+        FROM documents
+    """)
 def q_global_row_ids(spark, sf):
     """Contiguous 0-based global row IDs in (n_chars, doc_id) order
     WITHOUT the single-reducer global sort (pipeline/ids.py): quantile
@@ -2615,6 +4634,30 @@ def q_global_row_ids(spark, sf):
     )
 
 
+# replay the KMV sketch: same 60-bit md5 hash, k=64 smallest
+# distinct values per group, same (k-1)/U_(k) estimator arithmetic
+# (exact-int → double conversions are IEEE-identical in both
+# engines)
+@query(tags=("pipeline_op",), oracle="""
+        WITH hv AS (
+            SELECT DISTINCT lang,
+                   CAST(CAST('0x' || substr(md5(text), 18, 15) AS UBIGINT)
+                        AS BIGINT) AS h
+            FROM documents
+        ), r AS (
+            SELECT lang, h,
+                   row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
+            FROM hv
+        ), s AS (
+            SELECT lang, count(*) AS n_sk, max(h) AS kth
+            FROM r WHERE rn <= 64 GROUP BY lang
+        )
+        SELECT lang, CAST(n_sk AS INT) AS sketch_size,
+               ROUND(CASE WHEN n_sk < 64 THEN CAST(n_sk AS DOUBLE)
+                          ELSE 63.0 * 1152921504606846976.0
+                               / CAST(kth AS DOUBLE) END, 4) AS est_distinct
+        FROM s
+    """)
 def q_kmv_distinct(spark, sf):
     """Per-language approximate distinct-text count via a KMV
     k-minimum-values sketch (pipeline/sketch.py): md5-low-60-bit
@@ -2629,6 +4672,51 @@ def q_kmv_distinct(spark, sf):
     return kmv_distinct(_t(spark, sf, "documents"), "lang", "text")
 
 
+# HLL estimator constant alpha_512·512²·2^52 (pipeline/sketch.py
+# hll_estimate with p=9): computed ONCE here and embedded verbatim in
+# both engines' expressions so no cross-engine float arithmetic can
+# diverge before the single estimate division
+_HLL_C = (0.7213 / (1.0 + 1.079 / 512)) * 512 * 512 * float(1 << 52)
+
+# replay the HLL registers (same md5 hash, reg = h mod 512, rank
+# via exact integer bit-length) and the estimator: the harmonic
+# mean is the exact int64 sum Σ 2^(52-M_j) — zero registers
+# contribute 2^52 each — so raw AND linear-counting branches are
+# bit-identical; _HLL_C is alpha_512·512²·2^52 computed once in
+# Python and embedded verbatim on both engines
+_HLL_DISTINCT_SQL = f"""
+        WITH hv AS (
+            SELECT DISTINCT event_type,
+                   CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 18, 15)
+                        AS UBIGINT) AS BIGINT) AS h
+            FROM events
+        ), cells AS (
+            SELECT event_type, h % 512 AS reg,
+                   MAX(CASE WHEN h // 512 = 0 THEN 52
+                            ELSE 52 - length(bin(h // 512)) END) AS mx
+            FROM hv GROUP BY 1, 2
+        ), agg AS (
+            SELECT event_type,
+                   CAST(SUM(CAST(pow(2.0, 52 - mx) AS BIGINT)) AS BIGINT) AS zi_p,
+                   COUNT(*) AS np
+            FROM cells GROUP BY 1
+        )
+        SELECT event_type,
+               CAST(512 - np AS INT) AS zero_regs,
+               ROUND(CASE WHEN ({_HLL_C!r})
+                               / CAST(zi_p + (512 - np) * 4503599627370496
+                                      AS DOUBLE) <= 1280.0
+                           AND np < 512
+                          THEN 512.0 * ln(512.0 / CAST(512 - np AS DOUBLE))
+                          ELSE ({_HLL_C!r})
+                               / CAST(zi_p + (512 - np) * 4503599627370496
+                                      AS DOUBLE) END,
+                     4) AS est_distinct
+        FROM agg
+    """
+
+
+@query(tags=("pipeline_op", "scale_probe"), oracle=_HLL_DISTINCT_SQL)
 def q_hll_distinct(spark, sf):
     """Per-event-type approximate distinct users via an open
     HyperLogLog (pipeline/sketch.py hll_sketch/hll_estimate, Flajolet
@@ -2647,6 +4735,52 @@ def q_hll_distinct(spark, sf):
     return hll_distinct(_t(spark, sf, "events"), "event_type", "user_id", p=9)
 
 
+# replay the theta-sketch overlap: identical k=64 KMV sketches per
+# side, θ = least k-th minimum (int64 comparisons — hashes
+# overflow a double mantissa), counts below θ, then the same
+# scale division / Jaccard ratio
+@query(tags=("pipeline_op", "scale_probe"), oracle="""
+        WITH ha AS (
+            SELECT DISTINCT CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 18, 15)
+                   AS UBIGINT) AS BIGINT) AS h
+            FROM events WHERE event_type = 'click'
+        ), hb AS (
+            SELECT DISTINCT CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 18, 15)
+                   AS UBIGINT) AS BIGINT) AS h
+            FROM events WHERE event_type = 'purchase'
+        ), ska AS (
+            SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) rn FROM ha)
+            WHERE rn <= 64
+        ), skb AS (
+            SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) rn FROM hb)
+            WHERE rn <= 64
+        ), th AS (
+            SELECT LEAST(
+                CASE WHEN (SELECT count(*) FROM ska) < 64
+                     THEN 1152921504606846976 ELSE (SELECT max(h) FROM ska) END,
+                CASE WHEN (SELECT count(*) FROM skb) < 64
+                     THEN 1152921504606846976 ELSE (SELECT max(h) FROM skb) END
+            ) AS t
+        ), cnt AS (
+            SELECT
+                (SELECT count(*) FROM ska, th WHERE h < t) AS n_a,
+                (SELECT count(*) FROM skb, th WHERE h < t) AS n_b,
+                (SELECT count(*) FROM ska JOIN skb USING (h), th
+                 WHERE h < t) AS n_inter,
+                (SELECT t FROM th) AS t
+        )
+        SELECT CAST(n_a AS INT) AS n_a, CAST(n_b AS INT) AS n_b,
+               CAST(n_inter AS INT) AS n_inter,
+               ROUND(n_a * (1152921504606846976.0 / CAST(t AS DOUBLE)), 4) AS est_a,
+               ROUND(n_b * (1152921504606846976.0 / CAST(t AS DOUBLE)), 4) AS est_b,
+               ROUND(n_inter * (1152921504606846976.0 / CAST(t AS DOUBLE)), 4)
+                   AS est_intersection,
+               ROUND(CASE WHEN n_a + n_b - n_inter = 0 THEN 0.0
+                          ELSE CAST(n_inter AS DOUBLE)
+                               / CAST(n_a + n_b - n_inter AS DOUBLE) END, 6)
+                   AS est_jaccard
+        FROM cnt
+    """)
 def q_kmv_overlap(spark, sf):
     """Audience overlap (theta-sketch intersection over KMV sketches,
     pipeline/sketch.py kmv_overlap): distinct click-users vs distinct
@@ -2669,6 +4803,26 @@ def q_kmv_overlap(spark, sf):
     )
 
 
+# replay the exponential race: identical md5-derived u, -ln(u)/w
+# race key, (race ASC, doc_id ASC) rank per language
+@query(tags=("pipeline_op",), oracle="""
+        WITH r AS (
+            SELECT lang, doc_id, n_chars,
+                   -ln((CAST(CAST('0x' || substr(
+                            md5('ws-v1:' || CAST(doc_id AS VARCHAR)), 18, 15)
+                            AS UBIGINT) AS DOUBLE) + 1.0)
+                        / 1152921504606846976.0)
+                       / CAST(n_chars AS DOUBLE) AS race_key
+            FROM documents WHERE n_chars > 0
+        ), k AS (
+            SELECT lang, doc_id, n_chars, race_key,
+                   row_number() OVER (PARTITION BY lang
+                                      ORDER BY race_key ASC, doc_id ASC) AS rn
+            FROM r
+        )
+        SELECT lang, doc_id, n_chars, ROUND(race_key, 6) AS race_key
+        FROM k WHERE rn <= 20
+    """)
 def q_weighted_sample(spark, sf):
     """Weighted k-per-group sample without replacement via the
     Efraimidis–Spirakis exponential race (pipeline/sampling.py):
@@ -2684,6 +4838,20 @@ def q_weighted_sample(spark, sf):
     ).select("lang", "doc_id", "n_chars", F.round("race_key", 6).alias("race_key"))
 
 
+# same deterministic 10% hash sample (first-8-hex md5 bucket rule
+# of pipeline.sampling.hash_bucket), then exact linear-interpolation
+# quantiles on the kept rows
+@query(tags=("pipeline_op",), oracle="""
+        SELECT event_type,
+               CAST(count(*) AS BIGINT) AS n_sample,
+               ROUND(quantile_cont(value, 0.5), 6) AS q50,
+               ROUND(quantile_cont(value, 0.9), 6) AS q90,
+               ROUND(quantile_cont(value, 0.99), 6) AS q99
+        FROM events
+        WHERE CAST('0x' || substr(md5('sq-v1' || CAST(event_id AS VARCHAR)),
+                                  1, 8) AS UBIGINT) % 10000 < 1000
+        GROUP BY event_type
+    """)
 def q_sampled_quantiles(spark, sf):
     """Exact interpolated quantiles over a deterministic 10% hash
     sample (pipeline/sampling.py sampled_quantiles): the sample filter
@@ -2703,6 +4871,66 @@ def q_sampled_quantiles(spark, sf):
     )
 
 
+# replay the deletion-neighborhood blocking (full-sequence signature
+# + every single-token-deletion signature) and the exact Levenshtein
+# verification on the shared-signature candidates
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle=r"""
+        WITH t AS (
+            SELECT doc_id,
+                   string_split_regex(lower(trim(text)), '\s+') AS toks,
+                   text
+            FROM documents
+        ), e AS (
+            -- one 60-bit md5 per TOKEN; deleted sequences are then
+            -- summarized by exact rolling sums (O(n) per doc), mod
+            -- 2^60 only at the end — replays the Spark construction
+            SELECT doc_id, g.i AS p1,
+                   CAST(CAST('0x' || substr(md5(toks[g.i]), 18, 15)
+                        AS UBIGINT) AS HUGEINT) AS h
+            FROM t, unnest(generate_series(1, len(toks))) AS g(i)
+        ), s AS (
+            SELECT doc_id, p1, h,
+                   SUM(h) OVER (PARTITION BY doc_id) AS sm,
+                   SUM(h * p1) OVER (PARTITION BY doc_id) AS wm,
+                   COALESCE(SUM(h) OVER (PARTITION BY doc_id
+                       ORDER BY p1 DESC
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                       0) AS tl
+            FROM e
+        ), sigs AS (
+            SELECT DISTINCT doc_id,
+                   substr(md5(
+                       CAST(CAST((sm - h) % 1152921504606846976
+                            AS BIGINT) AS VARCHAR)
+                       || ':' ||
+                       CAST(CAST((wm - h * p1 - tl) % 1152921504606846976
+                            AS BIGINT) AS VARCHAR)), 1, 16) AS sig
+            FROM s
+            UNION
+            SELECT DISTINCT doc_id,
+                   substr(md5(
+                       CAST(CAST(sm % 1152921504606846976
+                            AS BIGINT) AS VARCHAR)
+                       || ':' ||
+                       CAST(CAST(wm % 1152921504606846976
+                            AS BIGINT) AS VARCHAR)), 1, 16)
+            FROM s
+        ), canon AS (
+            -- star construction: every bucket member pairs only with
+            -- the bucket's minimum-id member (linear pair output)
+            SELECT sig, MIN(doc_id) AS ca FROM sigs GROUP BY sig
+        ), cand AS (
+            SELECT DISTINCT c.ca AS id_a, s.doc_id AS id_b
+            FROM sigs s JOIN canon c USING (sig)
+            WHERE s.doc_id > c.ca
+        )
+        SELECT id_a, id_b,
+               CAST(levenshtein(ta.text, tb.text) AS BIGINT) AS dist
+        FROM cand
+        JOIN t ta ON ta.doc_id = id_a
+        JOIN t tb ON tb.doc_id = id_b
+        WHERE levenshtein(ta.text, tb.text) <= 50
+    """)
 def q_edit_distance_pairs(spark, sf):
     """Typo-level near-identical pairs (pipeline/dedup.py
     edit_distance_pairs): token-level deletion-neighborhood blocking
@@ -2827,6 +5055,41 @@ def _deletion_sig_artifact(spark, sf) -> DataFrame:
     return _artifact_df(spark, "deletion_sigs", sf, build)
 
 
+# replay the exact-sum construction: integer x, DECIMAL(18,6) y,
+# exact moment sums, then the identical double closed form — no
+# float accumulation anywhere, so no merge-order divergence
+@query(tags=("pipeline_op", "scale_probe"), oracle=f"""
+        WITH b AS (
+            -- floor, not CAST: epoch() carries fractional seconds and a
+            -- bigint cast would round them, while Spark's
+            -- unix_timestamp truncates
+            SELECT event_type,
+                   CAST(floor(epoch(ts)) AS BIGINT) - 1704067200 AS x,
+                   CAST(value AS DECIMAL(18,6)) AS y
+            FROM {_EVENTS_SQL}
+        ), s AS (
+            SELECT event_type,
+                   CAST(count(*) AS BIGINT) AS n,
+                   CAST(sum(CAST(x AS DECIMAL(38,0))) AS DOUBLE) AS sx,
+                   CAST(sum(CAST(x * x AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
+                   CAST(sum(y) AS DOUBLE) AS sy,
+                   CAST(sum(y * y) AS DOUBLE) AS syy,
+                   CAST(sum(CAST(x AS DECIMAL(19,0)) * y) AS DOUBLE) AS sxy
+            FROM b GROUP BY event_type
+        )
+        SELECT event_type, n,
+               ROUND(CASE WHEN n * sxx - sx * sx > 0
+                          THEN (n * sxy - sx * sy) / (n * sxx - sx * sx)
+                     END, 6) + 0.0 AS slope,
+               ROUND((sy - CASE WHEN n * sxx - sx * sx > 0
+                                THEN (n * sxy - sx * sy) / (n * sxx - sx * sx)
+                           END * sx) / n, 6) + 0.0 AS intercept,
+               ROUND(CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
+                          THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
+                               / ((n * sxx - sx * sx) * (n * syy - sy * sy))
+                     END, 6) + 0.0 AS r2
+        FROM s
+    """)
 def q_trend_fit(spark, sf):
     """Per-event-type OLS value-over-time trend in closed form
     (pipeline/validate.py trend_fit): five EXACT decimal/integer moment
@@ -2841,6 +5104,29 @@ def q_trend_fit(spark, sf):
     return trend_fit(ev, x, F.col("value"), group_col="event_type")
 
 
+# rebuild the derived snapshot and classify with IS DISTINCT FROM —
+# the same NULL semantics as the engine's NULL-tagged row hashes
+@query(tags=("pipeline_op", "scale_probe"), oracle="""
+        WITH a AS (SELECT doc_id, text, lang FROM documents),
+        b AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END
+                       AS text,
+                   lang
+            FROM documents WHERE doc_id % 7 <> 0
+            UNION ALL
+            SELECT doc_id + 1000000, text, lang FROM documents
+            WHERE doc_id % 11 = 0
+        ), j AS (
+            SELECT CASE WHEN a.doc_id IS NULL THEN 'added'
+                        WHEN b.doc_id IS NULL THEN 'removed'
+                        WHEN a.text IS DISTINCT FROM b.text
+                             OR a.lang IS DISTINCT FROM b.lang THEN 'changed'
+                        ELSE 'unchanged' END AS status
+            FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
+        )
+        SELECT status, CAST(count(*) AS BIGINT) AS n FROM j GROUP BY status
+    """)
 def q_snapshot_diff(spark, sf):
     """Row-level snapshot delta (pipeline/validate.py snapshot_diff):
     snapshot B is derived deterministically from documents (drop
@@ -2867,6 +5153,18 @@ def q_snapshot_diff(spark, sf):
     return snapshot_diff(d, b, "doc_id", ["text", "lang"])
 
 
+@query(oracle=f"""
+        WITH c AS (
+            SELECT date_trunc('hour', ts) AS window_start, event_type,
+                   CAST(count(*) AS BIGINT) AS n
+            FROM {_EVENTS_SQL} GROUP BY 1, 2
+        )
+        SELECT window_start, event_type, n,
+               CAST(row_number() OVER (PARTITION BY window_start
+                                       ORDER BY n DESC, event_type)
+                    AS BIGINT) AS rnk
+        FROM c QUALIFY rnk <= 3
+    """)
 def q_streaming_topk(spark, sf):
     """Streaming trending top-k (streaming/events.py trending_topk):
     watermarked hourly counts maintained by the stream (the incremental
@@ -2877,6 +5175,45 @@ def q_streaming_topk(spark, sf):
     return P_stream.trending_topk(ev, spark, k=3)
 
 
+# the lm_perplexity replay + per-language ntile over the same
+# (rounded avg_nll, doc_id) total order
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle=r"""
+        WITH tok AS (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
+            FROM documents
+        ), counts AS (
+            SELECT token, count(*) AS n FROM tok GROUP BY token
+        ), total AS (
+            SELECT sum(n) AS t FROM counts
+        ), top AS (
+            SELECT token, n FROM counts ORDER BY n DESC, token LIMIT 300
+        ), kept AS (
+            SELECT count(*) AS v FROM top
+        ), lm AS (
+            SELECT token, ln((n + 1.0) / (t + v + 1)) AS logprob
+            FROM top, total, kept
+        ), oov AS (
+            SELECT -ln(CAST(t + v + 1 AS DOUBLE)) AS o FROM total, kept
+        ), scored AS (
+            SELECT tok.doc_id,
+                   CAST(count(*) AS BIGINT) AS n_tokens,
+                   ROUND(avg(-coalesce(lm.logprob, oov.o)), 6) AS avg_nll
+            FROM tok LEFT JOIN lm USING (token), oov
+            GROUP BY tok.doc_id
+        ), tiered AS (
+            SELECT s.doc_id, d.lang, s.n_tokens, s.avg_nll,
+                   CAST(ntile(3) OVER (PARTITION BY d.lang
+                                       ORDER BY s.avg_nll ASC, s.doc_id ASC)
+                        AS BIGINT) AS tier
+            FROM scored s JOIN documents d ON s.doc_id = d.doc_id
+        )
+        SELECT doc_id, lang, n_tokens, avg_nll, tier,
+               CASE WHEN tier = 1 THEN 'head'
+                    WHEN tier = 3 THEN 'tail'
+                    ELSE 'middle' END AS tier_label
+        FROM tiered
+    """)
 def q_quality_tiers(spark, sf):
     """CCNet head/middle/tail (pipeline/text.py quality_tiers):
     per-language equal-depth perplexity tertiles over the unigram-LM
@@ -2921,6 +5258,9 @@ def _lm_scores_artifact(spark, sf) -> DataFrame:
     return _artifact_df(spark, "lm_scores", sf, build)
 
 
+@query(oracle=f"""
+        SELECT event_id, ts FROM {_EVENTS_SQL} GROUP BY event_id, ts
+    """)
 def q_streaming_dedup(spark, sf):
     """Exactly-once streaming ingest dedup (streaming/events.py
     streaming_dedup): watermark-bounded dropDuplicates state on
@@ -3041,6 +5381,52 @@ def _flagged_lines_artifact(spark, sf) -> DataFrame:
     return _artifact_df(spark, "flagged_lines", sf, build, partitions=16)
 
 
+# same keys/window/rebuild as line_dedup, plus the standing-set anti
+# filter (base = docs ≡0 mod 7's eligible line keys)
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle="""
+    WITH ls AS (
+        SELECT doc_id,
+               unnest(string_split(text, chr(10))) AS line,
+               unnest(range(0, len(string_split(text, chr(10))))) AS pos
+        FROM documents WHERE doc_id % 7 <> 0
+    ), keyed AS (
+        SELECT doc_id, pos, line,
+               length(lower(trim(line))) >= 10 AS elig,
+               CAST(CAST('0x' || substr(md5(
+                   CASE WHEN length(lower(trim(line))) >= 10
+                        THEN lower(trim(line))
+                        ELSE CAST(doc_id AS VARCHAR) || ':' ||
+                             CAST(pos AS VARCHAR) || ':' ||
+                             lower(trim(line)) END
+               ), 18, 15) AS UBIGINT) AS BIGINT) AS k
+        FROM ls
+    ), base AS (
+        SELECT DISTINCT CAST(CAST('0x' || substr(md5(lower(trim(line))), 18, 15)
+               AS UBIGINT) AS BIGINT) AS k
+        FROM (
+            SELECT unnest(string_split(text, chr(10))) AS line
+            FROM documents WHERE doc_id % 7 = 0
+        )
+        WHERE length(lower(trim(line))) >= 10
+    ), flagged AS (
+        SELECT doc_id, pos, line,
+               (NOT elig) OR (rn = 1 AND k NOT IN (SELECT k FROM base))
+                   AS keep
+        FROM (
+            SELECT *, row_number() OVER (PARTITION BY k
+                                         ORDER BY doc_id, pos) AS rn
+            FROM keyed
+        )
+    )
+    SELECT doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_lines,
+           CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+           COALESCE(
+               string_agg(CASE WHEN keep THEN line END, chr(10)
+                          ORDER BY pos),
+               '') AS text_deduped
+    FROM flagged GROUP BY doc_id
+""")
 def q_incremental_line_dedup(spark, sf):
     """Continuous-ingest line dedup (pipeline/text.py
     incremental_line_dedup): docs ≢0 mod 7 arrive as the new batch;
@@ -3109,6 +5495,10 @@ def _standing_lines_artifact(spark, sf) -> DataFrame:
     return _artifact_df(spark, "standing_lines", sf, build)
 
 
+# the streamed register store is bit-identical to the batch sketch
+# (max-merge is associative/commutative/idempotent), so the streaming
+# query shares the batch replay verbatim
+@query(oracle=_HLL_DISTINCT_SQL)
 def q_streaming_hll(spark, sf):
     """Continuously-maintained HLL register store
     (streaming/sketches.py): file-source stream → per-micro-batch
@@ -3129,6 +5519,32 @@ def q_streaming_hll(spark, sf):
     )
 
 
+# the exactly-once sum-merge makes the streamed CMS cell table equal
+# the batch sketch — replay cells + probe estimates over events
+@query(oracle=f"""
+    WITH ev AS ({_EVENTS_SQL}), probes AS (
+        SELECT DISTINCT event_type FROM ev
+    ), cells AS (
+        SELECT CAST(CAST('0x' || substr(md5('cms-v1:' || CAST(r AS VARCHAR)
+                                        || ':' || event_type), 1, 8) AS UBIGINT)
+                    % 512 AS BIGINT) AS cell,
+               r
+        FROM ev, unnest(range(0, 4)) AS u(r)
+    ), sk AS (
+        SELECT r, cell, CAST(count(*) AS BIGINT) AS cnt
+        FROM cells GROUP BY r, cell
+    ), pc AS (
+        SELECT p.event_type, u.r,
+               CAST(CAST('0x' || substr(md5('cms-v1:' || CAST(u.r AS VARCHAR)
+                                        || ':' || p.event_type), 1, 8) AS UBIGINT)
+                    % 512 AS BIGINT) AS cell
+        FROM probes p, unnest(range(0, 4)) AS u(r)
+    )
+    SELECT event_type,
+           CAST(min(coalesce(sk.cnt, 0)) AS BIGINT) AS est_n
+    FROM pc LEFT JOIN sk ON pc.r = sk.r AND pc.cell = sk.cell
+    GROUP BY event_type
+""")
 def q_streaming_cms(spark, sf):
     """Continuously-maintained count-min sketch
     (streaming/sketches.py streaming_cms_counts): per-micro-batch CMS
@@ -3149,6 +5565,53 @@ def q_streaming_cms(spark, sf):
     )
 
 
+def _kcenter_sql(k: int = 5) -> str:
+    """Greedy k-center unrolled as chained CTEs — the SQL oracle for
+    pipeline.select.k_center_select.  Replays the identical rounded
+    arithmetic: DOUBLE distances ROUNDed to 6 decimals before both the
+    LEAST update and the (mind DESC, vec_id ASC) argmax."""
+
+    def dist(a: str, b: str) -> str:
+        return (
+            "ROUND(list_sum(list_transform(range(1, 65), "
+            f"i -> ({a}[i] - {b}[i]) ** 2)), 6)"
+        )
+
+    ctes = [
+        "base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
+        (
+            "c0 AS (SELECT vec_id, v FROM base ORDER BY "
+            "ROUND(list_sum(list_transform(range(1, 65), i -> v[i] ** 2)), 6) "
+            "DESC, vec_id ASC LIMIT 1)"
+        ),
+    ]
+    for r in range(1, k):
+        src = "base b" if r == 1 else f"d{r - 1} b"
+        upd = (
+            dist("b.v", "c.v")
+            if r == 1
+            else f"LEAST(b.mind, {dist('b.v', 'c.v')})"
+        )
+        ctes.append(
+            f"d{r} AS (SELECT b.vec_id, b.v, {upd} AS mind "
+            f"FROM {src} CROSS JOIN c{r - 1} c)"
+        )
+        ctes.append(
+            f"c{r} AS (SELECT vec_id, v, mind FROM d{r} "
+            "ORDER BY mind DESC, vec_id ASC LIMIT 1)"
+        )
+    selects = [
+        "SELECT CAST(0 AS BIGINT) AS sel_rank, vec_id, "
+        "CAST(NULL AS DOUBLE) AS mind FROM c0"
+    ]
+    for r in range(1, k):
+        selects.append(
+            f"SELECT CAST({r} AS BIGINT) AS sel_rank, vec_id, mind FROM c{r}"
+        )
+    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
+
+
+@query(tags=("pipeline_op", "scale_probe"), oracle=_kcenter_sql(5))
 def q_kcenter_select(spark, sf):
     """Greedy k-center coreset selection over embeddings
     (pipeline/select.py): k=5 farthest-point rounds, each ONE map-only
@@ -3159,6 +5622,60 @@ def q_kcenter_select(spark, sf):
     return k_center_select(_t(spark, sf, "embeddings"), k=5)
 
 
+def _pagerank_sql(iters: int = 5, damping: float = 0.85) -> str:
+    """Weighted PageRank unrolled as chained CTEs — the SQL oracle for
+    pipeline.graph.pagerank over transition_edges(events).  Same edge
+    extraction (lead over (ts, event_id)) and the identical per-round
+    update with uniform dangling-mass redistribution."""
+    ctes = [
+        f"ev AS (SELECT event_id, ts, user_id, event_type FROM {_EVENTS_SQL})",
+        (
+            "lead_t AS (SELECT event_type AS src, "
+            "lead(event_type) OVER (PARTITION BY user_id "
+            "ORDER BY ts ASC, event_id ASC) AS dst FROM ev)"
+        ),
+        (
+            "edges AS (SELECT src, dst, CAST(count(*) AS DOUBLE) AS w "
+            "FROM lead_t WHERE dst IS NOT NULL GROUP BY src, dst)"
+        ),
+        (
+            "nodes AS (SELECT DISTINCT node FROM "
+            "(SELECT src AS node FROM edges UNION SELECT dst FROM edges))"
+        ),
+        "outw AS (SELECT src, sum(w) AS out_w FROM edges GROUP BY src)",
+        "ncnt AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)",
+        "r0 AS (SELECT node, 1.0 / (SELECT n FROM ncnt) AS pr FROM nodes)",
+    ]
+    for i in range(1, iters + 1):
+        p = i - 1
+        ctes.append(
+            f"dang{i} AS (SELECT coalesce(sum(pr), 0.0) AS dang FROM r{p} "
+            "WHERE node NOT IN (SELECT src FROM outw))"
+        )
+        ctes.append(
+            f"c{i} AS (SELECT e.dst AS node, "
+            "sum(r.pr * e.w / o.out_w) AS contrib "
+            f"FROM edges e JOIN r{p} r ON e.src = r.node "
+            "JOIN outw o ON e.src = o.src GROUP BY e.dst)"
+        )
+        ctes.append(
+            f"r{i} AS (SELECT n.node, "
+            f"(1.0 - {damping}) / (SELECT n FROM ncnt) "
+            f"+ {damping} * (coalesce(c.contrib, 0.0) "
+            f"+ (SELECT dang FROM dang{i}) / (SELECT n FROM ncnt)) AS pr "
+            f"FROM nodes n LEFT JOIN c{i} c ON n.node = c.node)"
+        )
+    return (
+        "WITH "
+        + ",\n".join(ctes)
+        + f"\nSELECT node, ROUND(pr, 6) AS pr FROM r{iters}"
+    )
+
+
+@query(
+    tags=("pipeline_op", "iterative_oracle", "scale_probe"),
+    oracle=_pagerank_sql(5, 0.85),
+)
 def q_pagerank_transitions(spark, sf):
     """Weighted PageRank over the per-user event-type transition graph
     (pipeline/graph.py): lead() window → bounded edge list, then 5
@@ -3172,6 +5689,44 @@ def q_pagerank_transitions(spark, sf):
     return pagerank(transition_edges(_events(spark, sf)), iters=5)
 
 
+# count-min sketch replay: identical md5-derived cells for the build
+# AND the probe side, min over the 4 rows (absent cell → 0)
+_CMS_SQL = r"""
+    WITH tok AS (
+        SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
+        FROM documents
+    ), tok2 AS (
+        SELECT token FROM tok WHERE token <> ''
+    ), exact AS (
+        SELECT token, CAST(count(*) AS BIGINT) AS exact_n
+        FROM tok2 GROUP BY token
+    ), probes AS (
+        SELECT token, exact_n FROM exact
+        ORDER BY exact_n DESC, token LIMIT 20
+    ), cells AS (
+        SELECT CAST(CAST('0x' || substr(md5('cms-v1:' || CAST(r AS VARCHAR)
+                                        || ':' || token), 1, 8) AS UBIGINT)
+                    % 512 AS BIGINT) AS cell,
+               r
+        FROM tok2, unnest(range(0, 4)) AS u(r)
+    ), sk AS (
+        SELECT r, cell, CAST(count(*) AS BIGINT) AS cnt
+        FROM cells GROUP BY r, cell
+    ), pc AS (
+        SELECT p.token, p.exact_n, u.r,
+               CAST(CAST('0x' || substr(md5('cms-v1:' || CAST(u.r AS VARCHAR)
+                                        || ':' || p.token), 1, 8) AS UBIGINT)
+                    % 512 AS BIGINT) AS cell
+        FROM probes p, unnest(range(0, 4)) AS u(r)
+    )
+    SELECT token, exact_n,
+           CAST(min(coalesce(sk.cnt, 0)) AS BIGINT) AS est_n
+    FROM pc LEFT JOIN sk ON pc.r = sk.r AND pc.cell = sk.cell
+    GROUP BY token, exact_n
+"""
+
+
+@query(tags=("pipeline_op", "scale_probe"), oracle=_CMS_SQL)
 def q_cms_counts(spark, sf):
     """Count-min sketch frequency estimation (pipeline/sketch.py):
     build the 4×512 count table over document tokens (one
@@ -3211,6 +5766,28 @@ def q_cms_counts(spark, sf):
     return probes.join(est, "token").select("token", "exact_n", "est_n")
 
 
+def _jl_sql(out_dim: int = 16, dim: int = 64, seed: int = 7) -> str:
+    """JL projection oracle: inline the SAME frozen matrix literals
+    (similarity.jl_matrix) and replay the per-dim dot product."""
+    from stac_fastapi_duckdb_spark.pipeline.similarity import jl_matrix
+
+    m = jl_matrix(out_dim, dim, seed)
+    mat = "[" + ", ".join(
+        "[" + ", ".join(repr(x) for x in row) + "]" for row in m
+    ) + "]"
+    return f"""
+        WITH base AS (
+            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+        ), mt(mat) AS (SELECT {mat})
+        SELECT vec_id, CAST(j - 1 AS INT) AS pos,
+               ROUND(list_sum(list_transform(range(1, {dim + 1}),
+                                             i -> v[i] * mat[j][i])), 6)
+                   + 0.0 AS val
+        FROM base, mt, unnest(range(1, {out_dim + 1})) AS u(j)
+    """
+
+
+@query(tags=("pipeline_op", "scale_probe"), oracle=_jl_sql(16, 64, 7))
 def q_jl_projection(spark, sf):
     """Johnson-Lindenstrauss 64→16 projection (pipeline/similarity.py
     jl_project): frozen seeded Gaussian matrix, one vectorized Arrow
@@ -3222,6 +5799,21 @@ def q_jl_projection(spark, sf):
     return jl_project(_t(spark, sf, "embeddings"), dim=64, out_dim=16)
 
 
+# same window (leads evaluated over (ts, event_id) order), same
+# completeness filter (trailing windows dropped), same tie-break
+@query(tags=("pipeline_op",), oracle=f"""
+        WITH p AS (
+            SELECT concat_ws('>', event_type,
+                             lead(event_type, 1) OVER w,
+                             lead(event_type, 2) OVER w) AS path,
+                   lead(event_type, 2) OVER w AS last_step
+            FROM {_EVENTS_SQL}
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+        )
+        SELECT path, CAST(count(*) AS BIGINT) AS n
+        FROM p WHERE last_step IS NOT NULL
+        GROUP BY path ORDER BY n DESC, path ASC LIMIT 20
+    """)
 def q_top_paths(spark, sf):
     """Top-20 event-type trigram paths (operators/analytics.py
     top_paths): one user-window shuffle, both leads in a single Window
@@ -3231,6 +5823,15 @@ def q_top_paths(spark, sf):
     return top_paths(_events(spark, sf), n=3, k=20)
 
 
+@query(tags=("pipeline_op",), oracle=f"""
+        WITH ut AS (
+            SELECT DISTINCT user_id AS u, event_type AS t FROM {_EVENTS_SQL}
+        )
+        SELECT a.t AS item_a, b.t AS item_b,
+               CAST(count(*) AS BIGINT) AS n_users
+        FROM ut a JOIN ut b ON a.u = b.u AND a.t < b.t
+        GROUP BY item_a, item_b HAVING count(*) >= 2
+    """)
 def q_event_pairs(spark, sf):
     """Frequent co-occurring event-type pairs (operators/analytics.py
     cooccurring_pairs): distinct (user, type) reduction FIRST, then the
@@ -3242,6 +5843,35 @@ def q_event_pairs(spark, sf):
     return cooccurring_pairs(_events(spark, sf), min_support=2)
 
 
+# identical trailing frame, identical exact integer moments, and the
+# identical double expression order (subtract mean, divide by
+# sqrt(floored var)) — bit-stable cross-engine
+@query(tags=("pipeline_op",), oracle=f"""
+        WITH hourly AS (
+            SELECT event_type AS grp, date_trunc('hour', ts) AS hour,
+                   CAST(count(*) AS BIGINT) AS n
+            FROM {_EVENTS_SQL} GROUP BY 1, 2
+        ), stats AS (
+            SELECT grp, hour, n,
+                   CAST(count(*) OVER w AS BIGINT) AS m,
+                   CAST(sum(n) OVER w AS BIGINT) AS s1,
+                   CAST(sum(n * n) OVER w AS BIGINT) AS s2
+            FROM hourly
+            WINDOW w AS (PARTITION BY grp ORDER BY hour ASC
+                         ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
+        )
+        SELECT grp AS event_type, hour, n,
+               ROUND(ABS((CAST(n AS DOUBLE)
+                          - CAST(s1 AS DOUBLE) / CAST(m AS DOUBLE))
+                         / sqrt(GREATEST(
+                               (CAST(s2 AS DOUBLE)
+                                - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                                  / CAST(m AS DOUBLE))
+                               / (CAST(m AS DOUBLE) - 1.0), 1.0))), 6)
+                   + 0.0 AS abs_z
+        FROM stats WHERE m >= 2
+        ORDER BY abs_z DESC, event_type ASC, hour ASC LIMIT 20
+    """)
 def q_anomaly_hours(spark, sf):
     """Rolling-window volume anomalies (pipeline/validate.py
     rolling_count_anomalies): per-(type, hour) counts, exact integer
@@ -3255,6 +5885,51 @@ def q_anomaly_hours(spark, sf):
     return rolling_count_anomalies(_events(spark, sf), trailing=24, k=20)
 
 
+# DSIR: two add-one-smoothed top-300 unigram LMs (target = lang='en'
+# slice, raw = full corpus), per-doc log importance ratio summed over
+# tokens with each model's OOV fallback; rounded weight + doc_id is a
+# total order so the top-200 boundary replays exactly — replicates
+# pipeline.text.train_unigram_lm + dsir_select
+@query(oracle=r"""
+        WITH tok AS (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
+            FROM documents
+        ), ttok AS (
+            SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
+            FROM documents WHERE lang = 'en'
+        ), rcounts AS (
+            SELECT token, count(*) AS n FROM tok GROUP BY token
+        ), rtotal AS (SELECT sum(n) AS t FROM rcounts),
+        rtop AS (SELECT token, n FROM rcounts ORDER BY n DESC, token LIMIT 300),
+        rkept AS (SELECT count(*) AS v FROM rtop),
+        rlm AS (
+            SELECT token, ln((n + 1.0) / (t + v + 1)) AS lp FROM rtop, rtotal, rkept
+        ),
+        roov AS (SELECT -ln(CAST(t + v + 1 AS DOUBLE)) AS o FROM rtotal, rkept),
+        tcounts AS (
+            SELECT token, count(*) AS n FROM ttok GROUP BY token
+        ), ttotal AS (SELECT sum(n) AS t FROM tcounts),
+        ttop AS (SELECT token, n FROM tcounts ORDER BY n DESC, token LIMIT 300),
+        tkept AS (SELECT count(*) AS v FROM ttop),
+        tlm AS (
+            SELECT token, ln((n + 1.0) / (t + v + 1)) AS lp FROM ttop, ttotal, tkept
+        ),
+        toov AS (SELECT -ln(CAST(t + v + 1 AS DOUBLE)) AS o FROM ttotal, tkept),
+        vocab AS (
+            SELECT coalesce(tlm.token, rlm.token) AS token,
+                   tlm.lp AS lp_t, rlm.lp AS lp_r
+            FROM tlm FULL OUTER JOIN rlm ON tlm.token = rlm.token
+        )
+        SELECT tok.doc_id,
+               CAST(count(*) AS BIGINT) AS n_tokens,
+               ROUND(sum(coalesce(vocab.lp_t, toov.o)
+                         - coalesce(vocab.lp_r, roov.o)), 6) AS log_weight
+        FROM tok LEFT JOIN vocab USING (token), toov, roov
+        GROUP BY tok.doc_id
+        ORDER BY log_weight DESC, doc_id ASC
+        LIMIT 200
+    """)
 def q_dsir_select(spark, sf):
     """DSIR importance resampling (Xie et al. 2023): train TWO add-one
     smoothed top-300 unigram LMs — target = the lang='en' slice, raw =
@@ -3275,6 +5950,54 @@ def q_dsir_select(spark, sf):
     return dsir_select(docs, target_lm, raw_lm, k=200)
 
 
+@query(oracle="""
+        SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders
+        WHERE (o_totalprice BETWEEN 1000.0 AND 50000.0
+               OR o_orderpriority IN ('1-URGENT', '2-HIGH'))
+          AND o_orderpriority NOT LIKE '%LOW%'
+          AND o_orderstatus <> 'P'
+          AND o_orderdate >= DATE '1995-01-01'
+    """)
+def q_cql2_text(spark, sf):
+    """CQL2-TEXT encoding (upstream Filter-extension GET default): the
+    text grammar parses to the SAME dict AST the JSON path compiles
+    (operators/cql2_text.py), so one Column compiler serves both. The
+    reference only ever sees pre-parsed JSON (database_logic.py:488-521);
+    text support is what its conformance advertisement implies."""
+    from stac_fastapi_duckdb_spark.operators.cql2_text import parse_cql2_text
+
+    df = _t(spark, sf, "orders")
+    text = (
+        "(o_totalprice BETWEEN 1000.0 AND 50000.0"
+        " OR o_orderpriority IN ('1-URGENT', '2-HIGH'))"
+        " AND o_orderpriority NOT LIKE '%LOW%'"
+        " AND o_orderstatus <> 'P'"
+        " AND o_orderdate >= DATE('1995-01-01')"
+    )
+    return df.filter(cql2_to_column(parse_cql2_text(text), df.columns)).select(
+        "o_orderkey", "o_totalprice", "o_orderpriority"
+    )
+
+
+# first-occurrence novelty replayed on the string grams (the Spark
+# side joins on xxhash64(gram); min-per-gram is hash-invariant)
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle=f"""
+        WITH sh AS ({_SHINGLES_SQL}),
+        firsts AS (
+            SELECT g, MIN(doc_id) AS first_doc
+            FROM (SELECT doc_id, unnest(s) AS g FROM sh) GROUP BY g
+        ),
+        novel AS (
+            SELECT first_doc AS doc_id, COUNT(*) AS n_novel
+            FROM firsts GROUP BY first_doc
+        )
+        SELECT sh.doc_id,
+               CAST(len(sh.s) AS BIGINT) AS n_grams,
+               CAST(COALESCE(novel.n_novel, 0) AS BIGINT) AS n_novel,
+               ROUND(CAST(COALESCE(novel.n_novel, 0) AS DOUBLE)
+                     / len(sh.s), 6) AS novelty_frac
+        FROM sh LEFT JOIN novel USING (doc_id)
+    """)
 def q_ngram_novelty(spark, sf):
     """Corpus-order n-gram novelty (pipeline/text.py ngram_novelty):
     per document, the fraction of its distinct word 3-grams whose first
@@ -3373,2836 +6096,9 @@ def _novelty_counts_artifact(spark, sf) -> DataFrame:
     return _artifact_df(spark, "novelty_counts", sf, build)
 
 
-def q_hash_embed(spark, sf):
-    """Feature-hashing text vectorizer (pipeline/text.py hash_embed,
-    the Weinberger et al. 2009 hashing trick): token → ±1 into
-    md5-bucket mod 32, L2-normalized — the zero-vocabulary text vector
-    feeding the ANN/clustering stack when no model embedding exists.
-    ONE partial-agged shuffle of (doc, bucket, ±1); the norm is an
-    exact int64 sum of squares so every value replays bit-for-bit.
-    Long-form (doc_id, pos, val) output for the value gate (same
-    convention as jl_projection). Serves from the frozen hashed-corpus
-    artifact (_hashed_vecs): the vectorization's one shuffle runs once
-    per session, queries are map-only over the persisted vectors."""
-    return _hashed_vecs(spark, sf).select(
-        "doc_id", F.posexplode("vec").alias("pos", "val")
-    )
-
-
-def _hashed_vecs(spark, sf) -> DataFrame:
-    """The hashing-trick corpus vectors as a frozen artifact: one
-    partial-agged shuffle at build, persisted per session/SF — the
-    model-free analogue of a stored embedding column. Serving queries
-    (posexplode, probe top-k) are then map-only/TakeOrdered jobs over
-    the in-memory vectors; at cluster scale this materialization is a
-    written column, not a per-query recompute."""
-    from stac_fastapi_duckdb_spark.pipeline.text import hash_embed
-
-    def build():
-        return hash_embed(_t(spark, sf, "documents"), dim=32)
-
-    return _artifact_df(spark, "hashed_vecs", sf, build)
-
-
-def q_hashed_text_topk(spark, sf):
-    """End-to-end model-free text retrieval: hash_embed the corpus
-    (32-dim hashing-trick vectors), take doc 0's vector as the probe,
-    return the 10 nearest other docs by dot product (vectors are
-    unit-normalized, so dot IS cosine). The probe side is a 1-row
-    broadcast; scoring is a map-only JVM zip_with fold feeding
-    TakeOrderedAndProject — the corpus is never shuffled. The oracle
-    re-derives the identical vectors and replays the scoring.
-    Both sides serve from the frozen hashed-corpus artifact
-    (_hashed_vecs, built once per session): the probe row is a bounded
-    1-row fetch from the persisted vectors and embeds as a literal, so
-    the timed query is ONE TakeOrdered job — previously the whole
-    vectorization pipeline ran twice (probe branch + corpus branch)
-    per invocation."""
-    from stac_fastapi_duckdb_spark.functions import vectors as V
-
-    vecs = _hashed_vecs(spark, sf)
-    probe_row = vecs.filter(F.col("doc_id") == 0).select("vec").collect()
-    probe_lit = F.array(
-        *[F.lit(float(x)) for x in probe_row[0]["vec"]]
-    )
-    return (
-        vecs.filter(F.col("doc_id") != 0)
-        .select(
-            "doc_id",
-            F.round(V.dot(F.col("vec"), probe_lit), 6).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-def q_line_dedup(spark, sf):
-    """Corpus-level exact line dedup, keep-first (pipeline/text.py
-    line_dedup — the CCNet / RefinedWeb boilerplate-line pass): a line
-    survives iff it is shorter than 10 trimmed chars or is the
-    corpus-first occurrence of its normalized form. Serves from the
-    frozen keep-verdict artifact (_flagged_lines_artifact — the
-    corpus-constant window decision, the production dedup-decision
-    sidecar), so the query is ONE groupBy(doc) whose single
-    collect_list yields totals, kept count, and the rejoined text —
-    no join back to the source, no per-query window shuffle. The
-    oracle replays key, window, and rebuild verbatim."""
-    from stac_fastapi_duckdb_spark.pipeline.text import line_dedup
-
-    return line_dedup(None, flagged=_flagged_lines_artifact(spark, sf))
-
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "point_lookup": q_point_lookup,
-    "ids_in_list": q_ids_in_list,
-    "collection_union": q_collection_union,
-    "datetime_exact": q_datetime_exact,
-    "datetime_range": q_datetime_range,
-    "datetime_gte": q_datetime_gte,
-    "datetime_lte": q_datetime_lte,
-    "cql2_comparisons": q_cql2_comparisons,
-    "cql2_like_in": q_cql2_like_in,
-    "cql2_between_or_not": q_cql2_between_or_not,
-    "cql2_isnull": q_cql2_isnull,
-    "cql2_ilike": q_cql2_ilike,
-    "stacql_query": q_stacql_query,
-    "sort_multikey": q_sort_multikey,
-    "pagination_offset": q_pagination_offset,
-    "topk": q_topk,
-    "count_matched": q_count_matched,
-    "union_counts": q_union_counts,
-    "spatial_envelope": q_spatial_envelope,
-    "pricing_summary": q_pricing_summary,
-    "top_revenue_orders": q_top_revenue_orders,
-    "region_revenue": q_region_revenue,
-    "events_hourly_rollup": q_events_hourly_rollup,
-    "dedup_exact": q_dedup_exact,
-    "token_count": q_token_count,
-    "text_fingerprint": q_text_fingerprint,
-    "text_quality": q_text_quality,
-    "embedding_topk": q_embedding_topk,
-    "minhash_near_dup": q_minhash_near_dup,
-    "ngram_jaccard": q_ngram_jaccard,
-    "minhash_dedup_map": q_minhash_dedup_map,
-    "simhash_pairs": q_simhash_pairs,
-    "language_id": q_language_id,
-    "text_analysis": q_text_analysis,
-    "quality_features": q_quality_features,
-    "embedding_near_dup": q_embedding_near_dup,
-    "ann_srp_topk": q_ann_srp_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_pq_topk": q_ann_pq_topk,
-    "multimodal_metadata": q_multimodal_metadata,
-    "multimodal_features": q_multimodal_features,
-    "frame_sample": q_frame_sample,
-    "streaming_hourly_rollup": q_streaming_hourly_rollup,
-    "sessionize": q_sessionize,
-    "keyset_pagination": q_keyset_pagination,
-    "rank_dedup": q_rank_dedup,
-    "user_stats": q_user_stats,
-    "stateful_sessions": q_stateful_sessions,
-    "skew_agg": q_skew_agg,
-    "asof_join": q_asof_join,
-    "dedup_clusters": q_dedup_clusters,
-    "range_join": q_range_join,
-    "pivot_events": q_pivot_events,
-    "daily_from_hourly": q_daily_from_hourly,
-    "unpivot_events": q_unpivot_events,
-    "semi_join": q_semi_join,
-    "anti_join": q_anti_join,
-    "scalar_subquery": q_scalar_subquery,
-    "rollup_agg": q_rollup_agg,
-    "cube_agg": q_cube_agg,
-    "distinct_count": q_distinct_count,
-    "scd2_intervals": q_scd2_intervals,
-    "cdc_apply": q_cdc_apply,
-    "bloom_pruned_join": q_bloom_pruned_join,
-    "audio_frames": q_audio_frames,
-    "audio_frame_features": q_audio_frame_features,
-    "grouping_sets": q_grouping_sets,
-    "percentile_agg": q_percentile_agg,
-    "rolling_window": q_rolling_window,
-    "first_last_window": q_first_last_window,
-    "json_extract": q_json_extract,
-    "hash_sample": q_hash_sample,
-    "stratified_sample": q_stratified_sample,
-    "contamination_check": q_contamination,
-    "boilerplate_stats": q_boilerplate,
-    "funnel_steps": q_funnel,
-    "cohort_retention": q_cohort_retention,
-    "chunk_documents": q_chunk_documents,
-    "incremental_dedup": q_incremental_dedup,
-    "tfidf_terms": q_tfidf_terms,
-    "bm25_search": q_bm25_search,
-    "dataset_split": q_dataset_split,
-    "sequence_packing": q_sequence_packing,
-    "label_balance": q_label_balance,
-    "stats_agg": q_stats_agg,
-    "histogram": q_histogram,
-    "set_intersect": q_set_intersect,
-    "set_except": q_set_except,
-    "corpus_mixture": q_corpus_mixture,
-    "pivot_dynamic": q_pivot_dynamic,
-    "string_funcs": q_string_funcs,
-    "datetime_funcs": q_datetime_funcs,
-    "props_map_explode": q_props_map_explode,
-    "window_analytics": q_window_analytics,
-    "repetition_stats": q_repetition_stats,
-    "pii_scrub": q_pii_scrub,
-    "url_normalize": q_url_normalize,
-    "stream_stream_join": q_stream_stream_join,
-    "hybrid_search": q_hybrid_search,
-    "stream_enrich": q_stream_enrich,
-    "embedding_outliers": q_embedding_outliers,
-    "curation_pipeline": q_curation_pipeline,
-    "gap_fill": q_gap_fill,
-    "left_outer_join": q_left_outer_join,
-    "semdedup": q_semdedup,
-    "duplicate_spans": q_duplicate_spans,
-    "containment_dedup": q_containment_dedup,
-    "quality_classifier": q_quality_classifier,
-    "dataset_fingerprint": q_dataset_fingerprint,
-    "cluster_representatives": q_cluster_representatives,
-    "split_leakage": q_split_leakage,
-    "shuffle_shards": q_shuffle_shards,
-    "distribution_drift": q_distribution_drift,
-    "profile_table": q_profile_table,
-    "remove_duplicate_spans": q_remove_duplicate_spans,
-    "lm_perplexity": q_lm_perplexity,
-    "top_bigrams": q_top_bigrams,
-    "kmeans_round": q_kmeans_round,
-    "global_row_ids": q_global_row_ids,
-    "kmv_distinct": q_kmv_distinct,
-    "weighted_sample": q_weighted_sample,
-    "sampled_quantiles": q_sampled_quantiles,
-    "edit_distance_pairs": q_edit_distance_pairs,
-    "trend_fit": q_trend_fit,
-    "snapshot_diff": q_snapshot_diff,
-    "quality_tiers": q_quality_tiers,
-    "streaming_topk": q_streaming_topk,
-    "streaming_dedup": q_streaming_dedup,
-    "kcenter_select": q_kcenter_select,
-    "pagerank_transitions": q_pagerank_transitions,
-    "cms_counts": q_cms_counts,
-    "jl_projection": q_jl_projection,
-    "top_paths": q_top_paths,
-    "event_pairs": q_event_pairs,
-    "anomaly_hours": q_anomaly_hours,
-    "dsir_select": q_dsir_select,
-    "cql2_text": q_cql2_text,
-    "ngram_novelty": q_ngram_novelty,
-    "hll_distinct": q_hll_distinct,
-    "kmv_overlap": q_kmv_overlap,
-    "line_dedup": q_line_dedup,
-    "streaming_hll": q_streaming_hll,
-    "decontaminate": q_decontaminate,
-    "hash_embed": q_hash_embed,
-    "hashed_text_topk": q_hashed_text_topk,
-    "incremental_line_dedup": q_incremental_line_dedup,
-    "ann_ivfpq_topk": q_ann_ivfpq_topk,
-    "streaming_cms": q_streaming_cms,
-}
-
-
-# HLL estimator constant alpha_512·512²·2^52 (pipeline/sketch.py
-# hll_estimate with p=9): computed ONCE here and embedded verbatim in
-# both engines' expressions so no cross-engine float arithmetic can
-# diverge before the single estimate division
-_HLL_C = (0.7213 / (1.0 + 1.079 / 512)) * 512 * 512 * float(1 << 52)
-
-# word-3-gram shingle sets per doc, replicating pipeline.dedup.shingles_col:
-# lower+trim, split \s+, 3-grams joined by ' ', distinct; <3 tokens → whole text
-_SHINGLES_SQL = r"""
-    SELECT doc_id,
-           CASE WHEN len(t) >= 3
-                THEN list_distinct(list_transform(
-                         generate_series(1, len(t) - 2),
-                         i -> concat_ws(' ', t[i], t[i+1], t[i+2])))
-                ELSE [array_to_string(t, ' ')] END AS s
-    FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-          FROM documents)
-"""
-
-_JACCARD_PAIRS_SQL = f"""
-    SELECT id_a, id_b, jaccard FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                     / len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
-        FROM ({_SHINGLES_SQL}) a JOIN ({_SHINGLES_SQL}) b ON a.doc_id < b.doc_id
-    ) WHERE jaccard >= 0.8
-"""
-
-# replicates pipeline.text.lang_id_col: CJK ratio → zh; else argmax
-# stopword-profile overlap (ties → first profile in en,de,fr,es order)
-_LANG_SCORES_SQL = r"""
-    SELECT doc_id, length(text) AS txt_len,
-           length(regexp_replace(text, '[^一-鿿]', '', 'g')) AS cjk,
-           len(list_intersect(toks, ['the','a','and','of','to','in','is','it','that','for'])) AS s_en,
-           len(list_intersect(toks, ['der','die','das','und','ist','nicht','ein','zu','mit','den'])) AS s_de,
-           len(list_intersect(toks, ['le','la','les','et','est','un','une','des','que','pour'])) AS s_fr,
-           len(list_intersect(toks, ['el','la','los','las','es','un','una','que','de','por'])) AS s_es
-    FROM (SELECT doc_id, text,
-                 list_distinct(regexp_split_to_array(lower(trim(text)), '\s+')) AS toks
-          FROM documents)
-"""
-
-_LANG_PRED_SQL = """
-    CASE WHEN cjk * 2 > txt_len THEN 'zh'
-         WHEN greatest(s_en, s_de, s_fr, s_es) <= 0 THEN 'und'
-         WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-         WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-         WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-         ELSE 'es' END
-"""
-
-# replicates pipeline.text.quality_score_col
-_QUALITY_SQL = r"""
-    ROUND(LEAST(1.0,
-        (CASE WHEN n_tok > 0 THEN CAST(n_uniq AS DOUBLE) / n_tok ELSE 0.0 END) * 0.5
-        + (CASE WHEN n_tok BETWEEN 10 AND 100000 THEN 1.0 ELSE 0.3 END) * 0.3
-        + (CASE WHEN (CASE WHEN n_chars > 0
-                           THEN CAST(n_punct AS DOUBLE) / n_chars
-                           ELSE 1.0 END) < 0.2 THEN 1.0 ELSE 0.5 END) * 0.2), 6)
-"""
-
-_TEXT_STATS_SQL = r"""
-    SELECT doc_id, text, len(t) AS n_tok, len(list_distinct(t)) AS n_uniq,
-           length(text) AS n_chars,
-           length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS n_punct,
-           list_distinct(t) AS toks_d
-    FROM (SELECT doc_id, text, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-          FROM documents)
-"""
-
-
-def _kcenter_sql(k: int = 5) -> str:
-    """Greedy k-center unrolled as chained CTEs — the SQL oracle for
-    pipeline.select.k_center_select.  Replays the identical rounded
-    arithmetic: DOUBLE distances ROUNDed to 6 decimals before both the
-    LEAST update and the (mind DESC, vec_id ASC) argmax."""
-
-    def dist(a: str, b: str) -> str:
-        return (
-            "ROUND(list_sum(list_transform(range(1, 65), "
-            f"i -> ({a}[i] - {b}[i]) ** 2)), 6)"
-        )
-
-    ctes = [
-        "base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
-        (
-            "c0 AS (SELECT vec_id, v FROM base ORDER BY "
-            "ROUND(list_sum(list_transform(range(1, 65), i -> v[i] ** 2)), 6) "
-            "DESC, vec_id ASC LIMIT 1)"
-        ),
-    ]
-    for r in range(1, k):
-        src = "base b" if r == 1 else f"d{r - 1} b"
-        upd = (
-            dist("b.v", "c.v")
-            if r == 1
-            else f"LEAST(b.mind, {dist('b.v', 'c.v')})"
-        )
-        ctes.append(
-            f"d{r} AS (SELECT b.vec_id, b.v, {upd} AS mind "
-            f"FROM {src} CROSS JOIN c{r - 1} c)"
-        )
-        ctes.append(
-            f"c{r} AS (SELECT vec_id, v, mind FROM d{r} "
-            "ORDER BY mind DESC, vec_id ASC LIMIT 1)"
-        )
-    selects = [
-        "SELECT CAST(0 AS BIGINT) AS sel_rank, vec_id, "
-        "CAST(NULL AS DOUBLE) AS mind FROM c0"
-    ]
-    for r in range(1, k):
-        selects.append(
-            f"SELECT CAST({r} AS BIGINT) AS sel_rank, vec_id, mind FROM c{r}"
-        )
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
-
-
-def _pagerank_sql(iters: int = 5, damping: float = 0.85) -> str:
-    """Weighted PageRank unrolled as chained CTEs — the SQL oracle for
-    pipeline.graph.pagerank over transition_edges(events).  Same edge
-    extraction (lead over (ts, event_id)) and the identical per-round
-    update with uniform dangling-mass redistribution."""
-    ctes = [
-        f"ev AS (SELECT event_id, ts, user_id, event_type FROM {_EVENTS_SQL})",
-        (
-            "lead_t AS (SELECT event_type AS src, "
-            "lead(event_type) OVER (PARTITION BY user_id "
-            "ORDER BY ts ASC, event_id ASC) AS dst FROM ev)"
-        ),
-        (
-            "edges AS (SELECT src, dst, CAST(count(*) AS DOUBLE) AS w "
-            "FROM lead_t WHERE dst IS NOT NULL GROUP BY src, dst)"
-        ),
-        (
-            "nodes AS (SELECT DISTINCT node FROM "
-            "(SELECT src AS node FROM edges UNION SELECT dst FROM edges))"
-        ),
-        "outw AS (SELECT src, sum(w) AS out_w FROM edges GROUP BY src)",
-        "ncnt AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)",
-        "r0 AS (SELECT node, 1.0 / (SELECT n FROM ncnt) AS pr FROM nodes)",
-    ]
-    for i in range(1, iters + 1):
-        p = i - 1
-        ctes.append(
-            f"dang{i} AS (SELECT coalesce(sum(pr), 0.0) AS dang FROM r{p} "
-            "WHERE node NOT IN (SELECT src FROM outw))"
-        )
-        ctes.append(
-            f"c{i} AS (SELECT e.dst AS node, "
-            "sum(r.pr * e.w / o.out_w) AS contrib "
-            f"FROM edges e JOIN r{p} r ON e.src = r.node "
-            "JOIN outw o ON e.src = o.src GROUP BY e.dst)"
-        )
-        ctes.append(
-            f"r{i} AS (SELECT n.node, "
-            f"(1.0 - {damping}) / (SELECT n FROM ncnt) "
-            f"+ {damping} * (coalesce(c.contrib, 0.0) "
-            f"+ (SELECT dang FROM dang{i}) / (SELECT n FROM ncnt)) AS pr "
-            f"FROM nodes n LEFT JOIN c{i} c ON n.node = c.node)"
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT node, ROUND(pr, 6) AS pr FROM r{iters}"
-    )
-
-
-def _jl_sql(out_dim: int = 16, dim: int = 64, seed: int = 7) -> str:
-    """JL projection oracle: inline the SAME frozen matrix literals
-    (similarity.jl_matrix) and replay the per-dim dot product."""
-    from stac_fastapi_duckdb_spark.pipeline.similarity import jl_matrix
-
-    m = jl_matrix(out_dim, dim, seed)
-    mat = "[" + ", ".join(
-        "[" + ", ".join(repr(x) for x in row) + "]" for row in m
-    ) + "]"
-    return f"""
-        WITH base AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ), mt(mat) AS (SELECT {mat})
-        SELECT vec_id, CAST(j - 1 AS INT) AS pos,
-               ROUND(list_sum(list_transform(range(1, {dim + 1}),
-                                             i -> v[i] * mat[j][i])), 6)
-                   + 0.0 AS val
-        FROM base, mt, unnest(range(1, {out_dim + 1})) AS u(j)
-    """
-
-
-# count-min sketch replay: identical md5-derived cells for the build
-# AND the probe side, min over the 4 rows (absent cell → 0)
-_CMS_SQL = r"""
-    WITH tok AS (
-        SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
-        FROM documents
-    ), tok2 AS (
-        SELECT token FROM tok WHERE token <> ''
-    ), exact AS (
-        SELECT token, CAST(count(*) AS BIGINT) AS exact_n
-        FROM tok2 GROUP BY token
-    ), probes AS (
-        SELECT token, exact_n FROM exact
-        ORDER BY exact_n DESC, token LIMIT 20
-    ), cells AS (
-        SELECT CAST(CAST('0x' || substr(md5('cms-v1:' || CAST(r AS VARCHAR)
-                                        || ':' || token), 1, 8) AS UBIGINT)
-                    % 512 AS BIGINT) AS cell,
-               r
-        FROM tok2, unnest(range(0, 4)) AS u(r)
-    ), sk AS (
-        SELECT r, cell, CAST(count(*) AS BIGINT) AS cnt
-        FROM cells GROUP BY r, cell
-    ), pc AS (
-        SELECT p.token, p.exact_n, u.r,
-               CAST(CAST('0x' || substr(md5('cms-v1:' || CAST(u.r AS VARCHAR)
-                                        || ':' || p.token), 1, 8) AS UBIGINT)
-                    % 512 AS BIGINT) AS cell
-        FROM probes p, unnest(range(0, 4)) AS u(r)
-    )
-    SELECT token, exact_n,
-           CAST(min(coalesce(sk.cnt, 0)) AS BIGINT) AS est_n
-    FROM pc LEFT JOIN sk ON pc.r = sk.r AND pc.cell = sk.cell
-    GROUP BY token, exact_n
-"""
-
-
-def _cc_unrolled_sql(rounds: int = 6) -> str:
-    """Min-label propagation unrolled as chained CTEs — the SQL oracle
-    for the iterative connected-components operator (converged result is
-    identical once rounds ≥ cluster diameter)."""
-    ctes = [
-        f"e AS (SELECT id_a AS n, id_b AS m FROM ({_JACCARD_PAIRS_SQL})"
-        f"      UNION ALL SELECT id_b, id_a FROM ({_JACCARD_PAIRS_SQL}))",
-        "l0 AS (SELECT doc_id AS n, doc_id AS comp FROM documents)",
-    ]
-    for i in range(rounds):
-        ctes.append(
-            f"l{i + 1} AS (SELECT l.n, LEAST(l.comp, COALESCE(MIN(r.comp), l.comp)) AS comp"
-            f"  FROM l{i} l LEFT JOIN e ON l.n = e.n LEFT JOIN l{i} r ON e.m = r.n"
-            f"  GROUP BY l.n, l.comp)"
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT n AS doc_id, comp AS component FROM l{rounds}"
-    )
-
-
-def _srp_planes_values_sql(dim: int = 64, num_planes: int = 8, seed: int = 42) -> str:
-    """VALUES rows ``(p, pv DOUBLE[])`` regenerated from the same seeded
-    hyperplanes as pipeline.similarity._srp_planes — the planes are
-    query parameters (like a literal probe vector), so the oracle
-    replays the identical projections."""
-    planes = P_sim._srp_planes(dim, num_planes, seed)
-    rows = ", ".join(
-        "(" + str(p) + ", ["
-        + ", ".join(repr(float(x)) for x in row)
-        + "]::DOUBLE[])"
-        for p, row in enumerate(planes)
-    )
-    return f"(VALUES {rows})"
-
-
-def _qc_weights_sql() -> str:
-    """DOUBLE[] literal of the frozen quality-classifier weight table
-    (plans/qc_index.py) — both engines score from the same literals."""
-    from stac_fastapi_duckdb_spark.plans.qc_index import QC_WEIGHTS
-
-    return "[" + ", ".join(repr(float(x)) for x in QC_WEIGHTS) + "]::DOUBLE[]"
-
-
-def _qc_scores_sql() -> str:
-    """(doc_id, n_tokens, qc_score) — replicates
-    pipeline.text.quality_classifier: same frozen weight literals, same
-    md5 low-60-bit bucket, same bias + mean-of-weights fold. Shared by
-    the quality_classifier and cluster_representatives oracles."""
-    return f"""
-        SELECT doc_id,
-               CAST(len(toks) AS BIGINT) AS n_tokens,
-               ROUND(0.05 + list_sum(list_transform(toks,
-                   tok -> ({_qc_weights_sql()})[
-                       CAST(CAST('0x' || substr(md5(tok), 18, 15) AS UBIGINT)
-                            % 64 AS INTEGER) + 1]))
-                   / len(toks), 6) AS qc_score
-        FROM (SELECT doc_id,
-                     string_split_regex(lower(trim(text)), '\\s+') AS toks
-              FROM documents)
-    """
-
-
-def _ivf_centroids_values_sql() -> str:
-    """VALUES rows ``(c, cv DOUBLE[])`` from the frozen IVF index
-    artifact (plans/ivf_index.py) — both engines score against the
-    same centroid literals."""
-    from stac_fastapi_duckdb_spark.plans.ivf_index import IVF_CENTROIDS
-
-    rows = ", ".join(
-        "(" + str(c) + ", ["
-        + ", ".join(repr(float(x)) for x in row)
-        + "]::DOUBLE[])"
-        for c, row in enumerate(IVF_CENTROIDS)
-    )
-    return f"(VALUES {rows})"
-
-
-# simhash signature per doc, replicating pipeline.dedup.with_simhash:
-# tokens = lower().split(); token hash = low 64 bits of md5; bit i of the
-# signature = majority vote (ones*2 >= n_tok); signed-int64 reassembly.
-_SIMHASH_SIGS_SQL = r"""
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN i < 63 AND ones * 2 >= n_tok
-                         THEN CAST(1 AS BIGINT) << i ELSE 0 END) AS BIGINT)
-           + CASE WHEN MAX(CASE WHEN i = 63 AND ones * 2 >= n_tok
-                                THEN 1 ELSE 0 END) = 1
-                  THEN -9223372036854775807 - 1 ELSE 0 END AS sig
-    FROM (
-        SELECT doc_id, n_tok, i,
-               SUM(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE 0 END) AS ones
-        FROM (
-            SELECT doc_id, n_tok, h, unnest(range(0, 64)) AS i
-            FROM (
-                SELECT doc_id, len(ts) AS n_tok,
-                       CAST('0x' || substr(md5(unnest(ts)), 17, 16) AS UBIGINT) AS h
-                FROM (
-                    SELECT doc_id,
-                           list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                       x -> x <> '') AS ts
-                    FROM documents
-                ) WHERE len(ts) > 0
-            )
-        )
-        GROUP BY doc_id, n_tok, i
-    )
-    GROUP BY doc_id
-    UNION ALL
-    SELECT doc_id, 0 AS sig
-    FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(lower(text), '\s+'),
-                             x -> x <> '') AS ts
-          FROM documents)
-    WHERE len(ts) = 0
-"""
-
-
-# PII oracle shares the LITERAL pattern constants with the Spark
-# operator (pipeline/text.py PII_PATTERNS are RE2-compatible by design)
-from stac_fastapi_duckdb_spark.pipeline.text import PII_PATTERNS as _PII
-
-_PII_EMAIL = _PII["email"][0]
-_PII_IP = _PII["ip"][0]
-_PII_PHONE = _PII["phone"][0]
-
-# identical injection expression as _pii_documents (Spark side)
-_PII_SYNTH_SQL = """
-    SELECT doc_id,
-           concat(text, ' contact user', CAST(doc_id AS VARCHAR), '@example.com',
-                  CASE WHEN doc_id % 3 = 0
-                       THEN concat(' cc admin', CAST(doc_id AS VARCHAR), '@mail.test')
-                       ELSE '' END,
-                  ' or +1-555-', lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                  CASE WHEN doc_id % 4 = 0
-                       THEN concat(' from 10.', CAST(doc_id % 200 AS VARCHAR), '.0.7')
-                       ELSE '' END) AS text
-    FROM documents
-"""
-
-
-ORACLE_SQL: dict[str, str] = {
-    "dedup_clusters": _cc_unrolled_sql(),
-    "point_lookup": """
-        SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
-        WHERE o_orderkey = 100 LIMIT 1
-    """,
-    "ids_in_list": """
-        SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        WHERE o_orderkey IN (1,2,3,5,8,13,21,34,55,89,144)
-    """,
-    "collection_union": """
-        SELECT event_id, 'col-click' AS collection FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) WHERE event_type = 'click'
-        UNION ALL
-        SELECT event_id, 'col-purchase' AS collection FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) WHERE event_type = 'purchase'
-    """,
-    "datetime_exact": f"""
-        SELECT event_id FROM ({_STAC_EVENTS_SQL})
-        WHERE (datetime IS NOT NULL AND datetime = TIMESTAMP '2024-01-15 00:00:00')
-           OR (datetime IS NULL AND start_datetime IS NOT NULL AND end_datetime IS NOT NULL
-               AND start_datetime <= TIMESTAMP '2024-01-15 00:00:00'
-               AND end_datetime >= TIMESTAMP '2024-01-15 00:00:00')
-    """,
-    "datetime_range": f"""
-        SELECT event_id FROM ({_STAC_EVENTS_SQL})
-        WHERE (datetime IS NOT NULL
-               AND datetime >= TIMESTAMP '2024-01-10 00:00:00'
-               AND datetime <= TIMESTAMP '2024-01-20 00:00:00')
-           OR (datetime IS NULL AND start_datetime IS NOT NULL AND end_datetime IS NOT NULL
-               AND start_datetime <= TIMESTAMP '2024-01-20 00:00:00'
-               AND end_datetime >= TIMESTAMP '2024-01-10 00:00:00')
-    """,
-    "datetime_gte": f"""
-        SELECT event_id FROM ({_STAC_EVENTS_SQL})
-        WHERE (datetime IS NOT NULL AND datetime >= TIMESTAMP '2024-01-25 00:00:00')
-           OR (datetime IS NULL AND end_datetime IS NOT NULL
-               AND end_datetime >= TIMESTAMP '2024-01-25 00:00:00')
-    """,
-    "datetime_lte": f"""
-        SELECT event_id FROM ({_STAC_EVENTS_SQL})
-        WHERE (datetime IS NOT NULL AND datetime <= TIMESTAMP '2024-01-05 00:00:00')
-           OR (datetime IS NULL AND start_datetime IS NOT NULL
-               AND start_datetime <= TIMESTAMP '2024-01-05 00:00:00')
-    """,
-    "cql2_comparisons": """
-        SELECT c_custkey, c_acctbal, c_mktsegment FROM customer
-        WHERE c_acctbal >= 1000 AND c_acctbal < 5000 AND c_mktsegment <> 'BUILDING'
-    """,
-    "cql2_like_in": """
-        SELECT p_partkey, p_type, p_brand FROM part
-        WHERE p_type LIKE 'PROMO%' AND p_brand IN ('Brand#1','Brand#2','Brand#3')
-    """,
-    "cql2_between_or_not": """
-        SELECT p_partkey, p_size, p_name FROM part
-        WHERE p_size BETWEEN 1 AND 5 OR NOT (p_name LIKE '%a%')
-    """,
-    "cql2_isnull": """
-        SELECT c_custkey FROM (
-            SELECT c_custkey, NULLIF(c_mktsegment, 'MACHINERY') AS segment_opt
-            FROM customer
-        ) WHERE segment_opt IS NULL
-    """,
-    "cql2_ilike": """
-        SELECT p_partkey, p_type FROM part WHERE lower(p_type) LIKE 'promo%'
-    """,
-    "stacql_query": """
-        SELECT s_suppkey, s_name, s_acctbal FROM supplier
-        WHERE s_acctbal >= 1000 AND s_acctbal < 6000
-          AND s_name LIKE 'Supplier#00000000%'
-    """,
-    "sort_multikey": """
-        SELECT l_orderkey, l_linenumber, l_returnflag, l_shipdate FROM lineitem
-        ORDER BY l_returnflag DESC, l_shipdate ASC, l_orderkey ASC, l_linenumber ASC
-        LIMIT 100
-    """,
-    "pagination_offset": """
-        SELECT o_orderkey, o_orderdate FROM orders
-        ORDER BY o_orderkey ASC LIMIT 50 OFFSET 5000
-    """,
-    "topk": """
-        SELECT o_orderkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 25
-    """,
-    "count_matched": """
-        SELECT count(*) AS matched FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00' AND l_discount > 0.05
-    """,
-    "union_counts": """
-        SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM (
-            SELECT count(*) AS cnt FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) WHERE event_type = 'click'
-            UNION ALL
-            SELECT count(*) AS cnt FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) WHERE event_type = 'error'
-        )
-    """,
-    "spatial_envelope": """
-        SELECT c_custkey FROM (
-            SELECT c_custkey,
-                   CAST(c_custkey % 60 AS DOUBLE) AS x0,
-                   CAST(c_custkey % 30 AS DOUBLE) AS y0,
-                   CAST(c_custkey % 60 + 1 AS DOUBLE) AS x1,
-                   CAST(c_custkey % 30 + 1 AS DOUBLE) AS y1
-            FROM customer
-        ) WHERE x0 <= 20.0 AND x1 >= 10.0 AND y0 <= 12.0 AND y1 >= 5.0
-    """,
-    # money sums mirror functions/money.py: exact BIGINT unit counts
-    # (cents; 1e-4 units for price*(1-disc)), one closing /10^k division
-    "pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty,
-               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_base_price,
-               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) / 10000.0
-                   AS sum_disc_price,
-               count(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus
-    """,
-    "top_revenue_orders": """
-        SELECT l_orderkey, o_orderdate,
-               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) / 10000.0
-                   AS revenue
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-          AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY l_orderkey, o_orderdate
-        ORDER BY revenue DESC, l_orderkey ASC
-        LIMIT 10
-    """,
-    "region_revenue": """
-        SELECT n_name,
-               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) / 10000.0
-                   AS revenue
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY n_name
-        ORDER BY revenue DESC, n_name ASC
-    """,
-    "events_hourly_rollup": """
-        SELECT date_trunc('hour', ts) AS bucket, event_type,
-               count(*) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events)
-        GROUP BY 1, 2
-        ORDER BY bucket, event_type
-    """,
-    "dedup_exact": """
-        SELECT MIN(doc_id) AS keep_id, count(*) AS dups
-        FROM documents GROUP BY text
-    """,
-    "token_count": """
-        SELECT doc_id,
-               CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens
-        FROM documents
-    """,
-    "text_fingerprint": """
-        SELECT doc_id, md5(lower(trim(text))) AS fp FROM documents
-    """,
-    "text_quality": """
-        SELECT doc_id,
-               CAST(length(text) AS BIGINT) AS n_chars_actual,
-               CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
-               CAST(len(list_distinct(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT)
-                    AS n_unique_tokens
-        FROM documents
-    """,
-    "embedding_topk": """
-        SELECT vec_id,
-               ROUND(list_cosine_similarity(
-                   CAST(embedding AS DOUBLE[]),
-                   (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)
-               ), 6) AS cos_sim
-        FROM embeddings
-        WHERE vec_id <> 0
-        ORDER BY cos_sim DESC, vec_id ASC
-        LIMIT 10
-    """,
-    "minhash_near_dup": _JACCARD_PAIRS_SQL,
-    "ngram_jaccard": _JACCARD_PAIRS_SQL,
-    # transitive default: canonical_id IS the connected component's min
-    # id — same unrolled-propagation oracle as dedup_clusters, re-aliased
-    "minhash_dedup_map": f"""
-        SELECT doc_id, component AS canonical_id FROM ({_cc_unrolled_sql()})
-    """,
-    "language_id": f"""
-        SELECT doc_id, {_LANG_PRED_SQL} AS lang_pred FROM ({_LANG_SCORES_SQL})
-    """,
-    "text_analysis": f"""
-        SELECT st.doc_id AS doc_id,
-               {_LANG_PRED_SQL} AS lang_pred,
-               CAST(n_tok AS BIGINT) AS n_tokens,
-               CAST(len(regexp_extract_all(st.text,
-                    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]', 0)) AS BIGINT) AS n_tokens_bpe,
-               {_QUALITY_SQL} AS quality,
-               md5(regexp_replace(lower(trim(st.text)), '\\s+', ' ', 'g')) AS fp
-        FROM ({_TEXT_STATS_SQL}) st JOIN ({_LANG_SCORES_SQL}) ls
-          ON st.doc_id = ls.doc_id
-    """,
-    "quality_features": f"""
-        SELECT doc_id,
-               CAST(n_chars AS BIGINT) AS n_chars,
-               CAST(n_tok AS BIGINT) AS n_tokens,
-               ROUND(CASE WHEN n_tok > 0 THEN CAST(n_uniq AS DOUBLE) / n_tok ELSE 0.0 END, 6) AS unique_ratio,
-               ROUND(CASE WHEN n_tok > 0 THEN CAST(n_chars AS DOUBLE) / n_tok ELSE 0.0 END, 6) AS mean_token_len,
-               ROUND(CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE) / n_chars ELSE 0.0 END, 6) AS punct_ratio,
-               ROUND(CASE WHEN n_chars > 0 THEN CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / n_chars ELSE 0.0 END, 6) AS digit_ratio,
-               ROUND(CASE WHEN n_chars > 0 THEN CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE) / n_chars ELSE 0.0 END, 6) AS upper_ratio,
-               ROUND(CASE WHEN LEAST(n_uniq, 10) > 0
-                          THEN CAST(len(list_intersect(toks_d,
-                               ['the','a','and','of','to','in','is','it','that','for'])) AS DOUBLE)
-                               / LEAST(n_uniq, 10)
-                          ELSE 0.0 END, 6) AS stopword_hit_ratio
-        FROM ({_TEXT_STATS_SQL})
-    """,
-    "embedding_near_dup": """
-        SELECT id_a, id_b, cos_sim FROM (
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                                CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim
-            FROM (SELECT vec_id, embedding FROM embeddings
-                  UNION ALL SELECT vec_id + 1000, embedding FROM embeddings) a
-            JOIN (SELECT vec_id, embedding FROM embeddings
-                  UNION ALL SELECT vec_id + 1000, embedding FROM embeddings) b
-              ON a.vec_id < b.vec_id
-        ) WHERE cos_sim >= 0.95
-    """,
-    "multimodal_metadata": """
-        SELECT doc_id AS media_id,
-               CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-               CAST(strlen(text) AS BIGINT) AS n_bytes,
-               md5(text) AS content_hash
-        FROM documents
-    """,
-    "frame_sample": """
-        SELECT media_id,
-               unnest(generate_series(0, greatest(n_frames - 1, 0), 30)) AS frame_idx
-        FROM (SELECT doc_id AS media_id, n_chars % 300 + 1 AS n_frames FROM documents)
-    """,
-    # replicates pipeline.multimodal._fake_decode: feature i = byte i of
-    # the md5 counter stream md5(payload|0)++md5(payload|1), divided by
-    # 256 (exact in fp), formatted at fixed 8-decimal scale
-    "multimodal_features": """
-        SELECT doc_id AS media_id,
-               CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-               array_to_string(list_transform(range(0, 32), i ->
-                   printf('%.8f',
-                          CAST('0x' || substr(md5(text || '|' || CAST(i // 16 AS VARCHAR)),
-                                              (i % 16) * 2 + 1, 2) AS INT)
-                          / 256.0)), ',') AS features_csv
-        FROM documents
-    """,
-    "simhash_pairs": f"""
-        WITH sigs AS ({_SIMHASH_SIGS_SQL})
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
-        FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.sig, b.sig)) <= 8
-    """,
-    # replicates pipeline.multimodal.audio_frame_features with the fake
-    # md5-stream decoder: sample j = (byte_j - 128)/128 where byte_j is
-    # byte j%16 of md5(payload|j//16); per-frame energy is an exact
-    # integer sum, rms = sqrt(energy/(128^2*1024)) (correctly-rounded
-    # sqrt of an exact double on both engines); zero-crossings compare
-    # consecutive sample signs (b < 128) within the frame
-    "audio_frame_features": """
-        WITH p AS (
-            SELECT doc_id AS media_id, text,
-                   greatest(1024, least(CAST(octet_length(encode(text)) AS BIGINT) * 16,
-                                        32768)) AS n
-            FROM documents
-            WHERE doc_id % 2 = 1 AND doc_id % 5 = 1
-        ), bh AS (
-            SELECT media_id, n, k, md5(text || '|' || CAST(k AS VARCHAR)) AS h
-            FROM (SELECT media_id, text, n, unnest(range(0, (n + 15) // 16)) AS k FROM p)
-        ), samples AS (
-            SELECT media_id, n, k * 16 + off AS j,
-                   CAST('0x' || substr(h, off * 2 + 1, 2) AS INT) AS b
-            FROM (SELECT media_id, n, k, h, unnest(range(0, 16)) AS off FROM bh)
-            WHERE k * 16 + off < n
-        ), sgn AS (
-            SELECT media_id, n, j, b, (b < 128) AS s,
-                   lead(b < 128) OVER (PARTITION BY media_id ORDER BY j) AS s_next
-            FROM samples
-        ), contrib AS (
-            SELECT media_id, n, j, b, s, s_next, unnest([j // 512 - 1, j // 512]) AS f
-            FROM sgn
-        )
-        SELECT media_id, f AS frame_idx,
-               sqrt(SUM((b - 128) * (b - 128)) / (16384.0 * 1024)) AS rms,
-               CAST(SUM(CASE WHEN j - f * 512 < 1023 AND j < n - 1 AND s <> s_next
-                             THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings
-        FROM contrib
-        WHERE f >= 0 AND f <= (n - 1024) // 512 AND j - f * 512 < 1024
-        GROUP BY media_id, f
-    """,
-    "ann_srp_topk": f"""
-        WITH base AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ), sigs AS (
-            SELECT b.vec_id,
-                   CAST(SUM(CASE WHEN list_inner_product(b.v, pl.pv) > 0
-                                 THEN CAST(1 AS BIGINT) << pl.p ELSE 0 END)
-                        AS BIGINT) AS sig
-            FROM base b CROSS JOIN {_srp_planes_values_sql()} AS pl(p, pv)
-            GROUP BY b.vec_id
-        ), probe AS (
-            SELECT s.sig AS psig, b.v AS pv
-            FROM sigs s JOIN base b USING (vec_id) WHERE b.vec_id = 0
-        )
-        SELECT s.vec_id, ROUND(list_cosine_similarity(b.v, p.pv), 6) AS cos_sim
-        FROM sigs s JOIN base b USING (vec_id), probe p
-        WHERE s.vec_id <> 0 AND bit_count(xor(s.sig, p.psig)) <= 2
-        ORDER BY cos_sim DESC, s.vec_id ASC
-        LIMIT 10
-    """,
-    "ann_pq_topk": _pq_oracle_sql(),
-    "ann_ivf_topk": f"""
-        WITH base AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ), dists AS (
-            SELECT b.vec_id, b.v, c.c AS cell,
-                   list_sum(list_transform(range(1, 65),
-                                           i -> (b.v[i] - c.cv[i]) ** 2)) AS dsq
-            FROM base b CROSS JOIN {_ivf_centroids_values_sql()} AS c(c, cv)
-        ), assigned AS (
-            SELECT vec_id, v, cell FROM (
-                SELECT vec_id, v, cell,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY dsq ASC, cell ASC) AS rn
-                FROM dists WHERE vec_id <> 0) WHERE rn = 1
-        ), probe_cells AS (
-            SELECT cell FROM (
-                SELECT cell, row_number() OVER (ORDER BY dsq ASC, cell ASC) AS rn
-                FROM dists WHERE vec_id = 0) WHERE rn <= 4
-        ), probe AS (SELECT v AS pv FROM base WHERE vec_id = 0)
-        SELECT a.vec_id, ROUND(list_cosine_similarity(a.v, p.pv), 6) AS cos_sim
-        FROM assigned a, probe p
-        WHERE a.cell IN (SELECT cell FROM probe_cells)
-        ORDER BY cos_sim DESC, a.vec_id ASC
-        LIMIT 10
-    """,
-    "daily_from_hourly": f"""
-        SELECT date_trunc('day', ts) AS day, event_type,
-               count(*) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM {_EVENTS_SQL}
-        GROUP BY 1, 2
-    """,
-    "unpivot_events": f"""
-        SELECT user_id, event_type, count(*) AS n
-        FROM {_EVENTS_SQL}
-        GROUP BY user_id, event_type
-    """,
-    "pivot_events": f"""
-        SELECT user_id,
-               COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-               COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view,
-               COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-               COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-               COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup
-        FROM {_EVENTS_SQL}
-        GROUP BY user_id
-    """,
-    "range_join": f"""
-        SELECT l.event_id, l.user_id, l.ts, r.w_id, r.w_start, r.w_end
-        FROM (SELECT event_id, user_id, ts FROM {_EVENTS_SQL}
-              WHERE event_type = 'click') l
-        JOIN (SELECT event_id AS w_id, user_id,
-                     ts - INTERVAL 2 DAY AS w_start,
-                     ts + INTERVAL 2 DAY AS w_end
-              FROM {_EVENTS_SQL} WHERE event_id % 3 = 0) r
-          ON l.user_id = r.user_id
-         AND l.ts BETWEEN r.w_start AND r.w_end
-    """,
-    "asof_join": f"""
-        SELECT l.event_id, l.user_id, l.ts,
-               r.event_id AS p_event_id, r.value AS p_value
-        FROM (SELECT event_id, user_id, ts FROM {_EVENTS_SQL}
-              WHERE event_type = 'click') l
-        ASOF LEFT JOIN
-             (SELECT event_id, user_id, ts, value FROM {_EVENTS_SQL}
-              WHERE event_type = 'purchase') r
-          ON l.user_id = r.user_id AND l.ts >= r.ts
-    """,
-    "skew_agg": f"""
-        SELECT event_type, count(*) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-               MAX(value) AS max_value
-        FROM {_EVENTS_SQL}
-        GROUP BY event_type
-    """,
-    "stateful_sessions": f"""
-        WITH m AS (
-            SELECT user_id, ts, value,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                             OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                        THEN 1 ELSE 0 END AS new_s
-            FROM {_EVENTS_SQL}
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), s AS (
-            SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                       ROWS UNBOUNDED PRECEDING) AS sid
-            FROM m
-        ), g AS (
-            SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS last_ts,
-                   MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-                   count(*) AS n_events, SUM(value) AS sum_value
-            FROM s GROUP BY user_id, sid
-        )
-        SELECT user_id, session_start, session_end, n_events,
-               ROUND(sum_value, 6) AS sum_value
-        FROM g
-        WHERE last_ts + INTERVAL 30 MINUTE <=
-              (SELECT max(ts) FROM {_EVENTS_SQL})
-    """,
-    "keyset_pagination": """
-        SELECT o_orderkey, o_orderdate, o_totalprice FROM orders
-        WHERE o_orderdate > TIMESTAMP '1996-06-01 00:00:00'
-           OR (o_orderdate = TIMESTAMP '1996-06-01 00:00:00' AND o_orderkey > 3000)
-        ORDER BY o_orderdate ASC, o_orderkey ASC
-        LIMIT 50
-    """,
-    "rank_dedup": f"""
-        SELECT lang, rk, doc_id, quality FROM (
-            SELECT lang, doc_id, quality,
-                   ROW_NUMBER() OVER (PARTITION BY lang
-                                      ORDER BY quality DESC, doc_id ASC) AS rk
-            FROM (SELECT doc_id, lang, {_QUALITY_SQL} AS quality
-                  FROM ({_TEXT_STATS_SQL}) st
-                  JOIN (SELECT doc_id AS did, lang FROM documents) d
-                    ON st.doc_id = d.did)
-        ) WHERE rk <= 3
-    """,
-    "user_stats": f"""
-        SELECT user_id, count(*) AS n_events,
-               CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-               MIN(ts) AS first_ts, MAX(ts) AS last_ts
-        FROM {_EVENTS_SQL}
-        GROUP BY user_id
-    """,
-    "streaming_hourly_rollup": f"""
-        SELECT date_trunc('hour', ts) AS bucket, event_type,
-               count(*) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM {_EVENTS_SQL}
-        GROUP BY 1, 2
-    """,
-    "sessionize": f"""
-        WITH m AS (
-            SELECT user_id, ts, value,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                             OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                        THEN 1 ELSE 0 END AS new_s
-            FROM {_EVENTS_SQL}
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), s AS (
-            SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                       ROWS UNBOUNDED PRECEDING) AS sid
-            FROM m
-        )
-        SELECT user_id, MIN(ts) AS session_start,
-               MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-               count(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM s GROUP BY user_id, sid
-    """,
-    "semi_join": """
-        SELECT o_orderpriority, COUNT(*) AS order_count
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-          AND o_orderdate < TIMESTAMP '1996-01-01'
-          AND EXISTS (SELECT 1 FROM lineitem
-                      WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        GROUP BY o_orderpriority
-    """,
-    "anti_join": """
-        SELECT c_mktsegment, COUNT(*) AS numcust,
-               CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        FROM customer
-        WHERE c_acctbal > 6000
-          AND NOT EXISTS (SELECT 1 FROM orders
-                          WHERE o_custkey = c_custkey
-                            AND o_orderdate >= TIMESTAMP '1995-01-01'
-                            AND o_orderdate < TIMESTAMP '1996-01-01')
-        GROUP BY c_mktsegment
-    """,
-    "scalar_subquery": """
-        SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS total_price,
-               COUNT(*) AS n
-        FROM lineitem l JOIN (
-            SELECT l_partkey AS ap_partkey,
-                   SUM(CAST(l_quantity AS DECIMAL(18,2))) AS part_sum_qty,
-                   COUNT(*) AS part_cnt
-            FROM lineitem GROUP BY l_partkey
-        ) a ON l.l_partkey = a.ap_partkey
-        WHERE CAST(l_quantity AS DECIMAL(18,2)) * part_cnt * 2 < part_sum_qty
-    """,
-    "rollup_agg": """
-        SELECT l_returnflag, l_linestatus,
-               GROUPING(l_returnflag, l_linestatus) AS gid,
-               COUNT(*) AS n,
-               SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty
-        FROM lineitem
-        GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    "cube_agg": f"""
-        SELECT event_type, date_trunc('day', ts) AS day,
-               GROUPING(event_type, day) AS gid,
-               COUNT(*) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM {_EVENTS_SQL}
-        GROUP BY CUBE (event_type, day)
-    """,
-    "window_analytics": """
-        SELECT o_orderkey, o_orderpriority, pr, cd, quartile, delta_prev
-        FROM (
-            SELECT o_orderkey, o_orderpriority,
-                   ROUND(percent_rank() OVER w, 6) AS pr,
-                   ROUND(cume_dist() OVER w, 6) AS cd,
-                   ntile(4) OVER w AS quartile,
-                   ROUND(o_totalprice - lag(o_totalprice) OVER w, 2)
-                       AS delta_prev
-            FROM orders
-            WINDOW w AS (PARTITION BY o_orderpriority
-                         ORDER BY o_totalprice, o_orderkey)
-        ) WHERE o_orderkey % 20 = 0
-    """,
-    "props_map_explode": """
-        WITH kv AS (
-            SELECT event_type, props,
-                   unnest(json_keys(CAST(props AS JSON))) AS key
-            FROM events
-        )
-        SELECT event_type, key, COUNT(*) AS n,
-               CAST(SUM(CAST(json_extract_string(CAST(props AS JSON),
-                                                 '$.' || key)
-                             AS BIGINT)) AS BIGINT) AS sum_val
-        FROM kv GROUP BY event_type, key
-    """,
-    "string_funcs": """
-        SELECT doc_id,
-               regexp_extract(text, '([0-9]+)', 1) AS first_num,
-               levenshtein(lang, source) AS lev,
-               reverse(lang) AS rev_lang,
-               lpad(CAST(doc_id AS VARCHAR), 8, '0') AS padded,
-               split_part(source, 'c', 2) AS src_num,
-               translate(lang, 'en', 'xy') AS translated
-        FROM documents WHERE doc_id % 10 = 0
-    """,
-    "datetime_funcs": """
-        SELECT o_orderkey,
-               dayofweek(o_orderdate) + 1 AS dow,
-               dayofyear(o_orderdate) AS doy,
-               weekofyear(o_orderdate) AS week,
-               CAST(date_trunc('quarter', o_orderdate) AS TIMESTAMP)
-                   AS quarter_start,
-               CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP)
-                   AS month_end,
-               datediff('day', DATE '1995-01-01',
-                        CAST(o_orderdate AS DATE)) AS days_since,
-               CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS TIMESTAMP)
-                   AS plus_3mo
-        FROM orders WHERE o_orderkey % 100 = 0
-    """,
-    "pivot_dynamic": f"""
-        SELECT user_id,
-               CAST(SUM(CASE WHEN event_type = 'click'
-                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS click,
-               CAST(SUM(CASE WHEN event_type = 'error'
-                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS error,
-               CAST(SUM(CASE WHEN event_type = 'purchase'
-                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS purchase,
-               CAST(SUM(CASE WHEN event_type = 'signup'
-                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS signup,
-               CAST(SUM(CASE WHEN event_type = 'view'
-                    THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS view
-        FROM {_EVENTS_SQL}
-        GROUP BY user_id
-    """,
-    "corpus_mixture": """
-        WITH mix AS (
-            SELECT 'en-full' AS source_name, n_chars FROM documents
-            WHERE lang = 'en'
-              AND CAST(('0x' || substring(
-                    md5('mix-v1:en-full' || CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 10000 < 10000
-            UNION ALL
-            SELECT 'de-half', n_chars FROM documents
-            WHERE lang = 'de'
-              AND CAST(('0x' || substring(
-                    md5('mix-v1:de-half' || CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 10000 < 5000
-            UNION ALL
-            SELECT 'fr-tenth', n_chars FROM documents
-            WHERE lang = 'fr'
-              AND CAST(('0x' || substring(
-                    md5('mix-v1:fr-tenth' || CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 10000 < 1000
-        )
-        SELECT source_name, COUNT(*) AS n_docs,
-               CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        FROM mix GROUP BY source_name
-    """,
-    "set_intersect": """
-        SELECT user_id FROM events WHERE event_type = 'click'
-        INTERSECT
-        SELECT user_id FROM events WHERE event_type = 'purchase'
-    """,
-    "set_except": """
-        SELECT user_id FROM events WHERE event_type = 'view'
-        EXCEPT
-        SELECT user_id FROM events WHERE event_type = 'error' AND value > 95
-    """,
-    "stats_agg": """
-        SELECT l_returnflag,
-               ROUND(stddev_samp(l_discount), 6) AS sd_disc,
-               ROUND(var_samp(l_quantity), 6) AS var_qty,
-               ROUND(corr(l_quantity, l_extendedprice), 6) + 0.0 AS corr_qp,
-               ROUND(covar_samp(l_quantity, l_extendedprice), 4) + 0.0 AS cov_qp
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    "histogram": """
-        SELECT CAST(FLOOR(l_extendedprice / 5000) AS BIGINT) AS bin,
-               COUNT(*) AS n
-        FROM lineitem GROUP BY 1
-    """,
-    "hash_sample": """
-        SELECT doc_id, lang FROM documents
-        WHERE CAST(('0x' || substring(
-                  md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 8))
-              AS BIGINT) % 10000 < 1000
-    """,
-    "stratified_sample": """
-        SELECT doc_id, lang FROM documents
-        WHERE CAST(('0x' || substring(
-                  md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 8))
-              AS BIGINT) % 10000
-              < CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 2000
-                          WHEN 'zh' THEN 1000 ELSE 500 END
-    """,
-    "bm25_search": r"""
-        WITH d AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS toks
-            FROM documents
-        ),
-        st AS (
-            SELECT (SELECT COUNT(*) FROM documents) AS n,
-                   (SELECT AVG(len(string_split_regex(lower(trim(text)),
-                                                      '\s+')))
-                    FROM documents) AS avgdl
-        ),
-        e AS (
-            SELECT doc_id, len(toks) AS dl,
-                   unnest(list_filter(toks,
-                       t -> t IN ('join', 'scan', 'filter'))) AS term
-            FROM d
-        ),
-        tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM e GROUP BY 1, 2, 3),
-        sc AS (
-            SELECT doc_id,
-                   ln(1.0 + (st.n - (COUNT(*) OVER (PARTITION BY term)) + 0.5)
-                            / ((COUNT(*) OVER (PARTITION BY term)) + 0.5))
-                   * (tf * (1.2 + 1))
-                   / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / st.avgdl)) AS s
-            FROM tf, st
-        )
-        SELECT doc_id, ROUND(SUM(s), 6) AS score FROM sc GROUP BY doc_id
-        ORDER BY score DESC, doc_id ASC LIMIT 10
-    """,
-    "tfidf_terms": r"""
-        WITH e AS (
-            SELECT doc_id,
-                   unnest(string_split_regex(lower(trim(text)), '\s+'))
-                       AS term
-            FROM documents
-        ),
-        tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM e GROUP BY 1, 2),
-        sc AS (
-            SELECT doc_id, term, tf,
-                   ROUND(tf * (ln((1 + (SELECT COUNT(*) FROM documents))
-                                  * 1.0
-                                  / (1 + COUNT(*) OVER (PARTITION BY term)))
-                               + 1), 6) AS tfidf
-            FROM tf
-        )
-        SELECT doc_id, term, tf, tfidf FROM (
-            SELECT *, row_number() OVER (PARTITION BY doc_id
-                                         ORDER BY tfidf DESC, term ASC) AS rn
-            FROM sc
-        ) WHERE rn <= 5
-    """,
-    "incremental_dedup": f"""
-        SELECT new_id, base_id, jaccard FROM (
-            SELECT a.doc_id AS new_id, b.doc_id AS base_id,
-                   ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                         / len(list_distinct(list_concat(a.s, b.s))), 6)
-                       AS jaccard
-            FROM ({_SHINGLES_SQL}) a JOIN ({_SHINGLES_SQL}) b
-              ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        ) WHERE jaccard >= 0.8
-    """,
-    "chunk_documents": r"""
-        WITH t AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS toks
-            FROM documents
-        ),
-        c AS (
-            SELECT doc_id, toks, len(toks) AS n,
-                   CAST(floor((greatest(len(toks) - 32, 0) + 23) / 24)
-                        AS INTEGER) + 1 AS n_chunks
-            FROM t
-        )
-        SELECT doc_id,
-               CAST(unnest(range(0, n_chunks)) AS INTEGER) AS chunk_idx,
-               array_to_string(
-                   toks[unnest(range(0, n_chunks)) * 24 + 1
-                        : unnest(range(0, n_chunks)) * 24 + 32], ' ')
-                   AS chunk_text,
-               CAST(least(32, n - unnest(range(0, n_chunks)) * 24)
-                    AS INTEGER) AS chunk_n_tokens
-        FROM c
-    """,
-    "funnel_steps": f"""
-        WITH ev AS (
-            SELECT user_id, ts, event_id, event_type FROM {_EVENTS_SQL}
-            WHERE event_type IN ('view', 'click', 'purchase')
-        ),
-        s1 AS (
-            SELECT user_id, min(row(ts, event_id)) AS k FROM ev
-            WHERE event_type = 'view' GROUP BY user_id
-        ),
-        s2 AS (
-            SELECT e.user_id, min(row(e.ts, e.event_id)) AS k
-            FROM ev e JOIN s1 ON e.user_id = s1.user_id
-            WHERE e.event_type = 'click' AND row(e.ts, e.event_id) > s1.k
-            GROUP BY e.user_id
-        ),
-        s3 AS (
-            SELECT e.user_id, min(row(e.ts, e.event_id)) AS k
-            FROM ev e JOIN s2 ON e.user_id = s2.user_id
-            WHERE e.event_type = 'purchase' AND row(e.ts, e.event_id) > s2.k
-            GROUP BY e.user_id
-        )
-        SELECT 1 AS step, 'view' AS step_name,
-               (SELECT COUNT(*) FROM s1) AS n_users
-        UNION ALL SELECT 2, 'click', (SELECT COUNT(*) FROM s2)
-        UNION ALL SELECT 3, 'purchase', (SELECT COUNT(*) FROM s3)
-    """,
-    "cohort_retention": f"""
-        WITH uw AS (
-            SELECT DISTINCT user_id,
-                   CAST(date_trunc('week', ts) AS DATE) AS w
-            FROM {_EVENTS_SQL}
-        ),
-        f AS (SELECT user_id, min(w) AS cohort_week FROM uw GROUP BY user_id),
-        act AS (
-            SELECT f.cohort_week,
-                   CAST((uw.w - f.cohort_week) / 7 AS INTEGER) AS week_offset
-            FROM uw JOIN f ON uw.user_id = f.user_id
-        ),
-        agg AS (
-            SELECT cohort_week, week_offset, COUNT(*) AS n_users
-            FROM act GROUP BY cohort_week, week_offset
-        )
-        SELECT cohort_week, week_offset, n_users,
-               ROUND(CAST(n_users AS DOUBLE) /
-                     MAX(CASE WHEN week_offset = 0 THEN n_users END)
-                         OVER (PARTITION BY cohort_week), 6) AS retention
-        FROM agg
-    """,
-    "boilerplate_stats": f"""
-        WITH sh AS ({_SHINGLES_SQL}),
-        e AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        dfreq AS (SELECT g, COUNT(*) AS df FROM e GROUP BY g)
-        SELECT doc_id,
-               COUNT(*) AS n_shingles,
-               CAST(SUM(CASE WHEN df >= 5 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_boilerplate,
-               ROUND(SUM(CASE WHEN df >= 5 THEN 1 ELSE 0 END) * 1.0
-                     / COUNT(*), 6) AS boilerplate_ratio
-        FROM e JOIN dfreq USING (g)
-        GROUP BY doc_id
-    """,
-    "contamination_check": f"""
-        WITH sh AS ({_SHINGLES_SQL}),
-        be AS (
-            SELECT doc_id AS bench_id, len(s) AS bench_n, unnest(s) AS g
-            FROM sh WHERE doc_id % 23 = 0
-        ),
-        de AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        j AS (
-            SELECT de.doc_id, be.bench_id, be.bench_n,
-                   COUNT(*) AS n_overlap
-            FROM de JOIN be USING (g)
-            GROUP BY de.doc_id, be.bench_id, be.bench_n
-        )
-        SELECT doc_id, bench_id, n_overlap,
-               ROUND(CAST(n_overlap AS DOUBLE) / bench_n, 6) AS ratio
-        FROM j
-        WHERE CAST(n_overlap AS DOUBLE) / bench_n >= 0.5
-    """,
-    "dataset_split": """
-        WITH b AS (
-            SELECT n_chars,
-                   CAST(('0x' || substring(
-                       md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 8))
-                   AS BIGINT) % 10000 AS bucket
-            FROM documents
-        )
-        SELECT CASE WHEN bucket < 8000 THEN 'train'
-                    WHEN bucket < 9000 THEN 'val'
-                    ELSE 'test' END AS split,
-               COUNT(*) AS n_docs,
-               CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        FROM b GROUP BY 1
-    """,
-    "sequence_packing": """
-        WITH t AS (
-            SELECT lang, doc_id,
-                   CAST(n_chars // 4 + 1 AS BIGINT) AS n_tokens
-            FROM documents
-        ), p AS (
-            SELECT lang, n_tokens,
-                   CAST(COALESCE(SUM(n_tokens) OVER (
-                       PARTITION BY lang ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) // 2048 AS BIGINT) AS pack_id
-            FROM t
-        )
-        SELECT lang, pack_id, COUNT(*) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens
-        FROM p GROUP BY lang, pack_id
-    """,
-    "label_balance": """
-        SELECT lang, n, ROUND(n / SUM(n) OVER (), 6) AS fraction
-        FROM (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
-              FROM documents GROUP BY lang)
-    """,
-    "json_extract": """
-        SELECT event_type, CAST(SUM(k) AS BIGINT) AS sum_k,
-               COUNT(CASE WHEN k > 50 THEN 1 END) AS n_high,
-               MIN(k) AS min_k, MAX(k) AS max_k
-        FROM (SELECT event_type,
-                     CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-              FROM events)
-        GROUP BY event_type
-    """,
-    "grouping_sets": """
-        SELECT l_returnflag, l_linestatus,
-               GROUPING(l_returnflag, l_linestatus) AS gid,
-               COUNT(*) AS n,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS sum_price
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-    """,
-    "percentile_agg": """
-        SELECT l_returnflag,
-               ROUND(quantile_cont(l_quantity, 0.5), 6) AS p50_qty,
-               ROUND(quantile_cont(l_extendedprice, 0.25), 6) AS p25_price,
-               ROUND(quantile_cont(l_extendedprice, 0.75), 6) AS p75_price
-        FROM lineitem
-        GROUP BY l_returnflag
-    """,
-    "rolling_window": f"""
-        SELECT event_id, user_id,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER (
-                   PARTITION BY user_id
-                   ORDER BY CAST(epoch(ts) AS BIGINT)
-                   RANGE BETWEEN 7200 PRECEDING AND CURRENT ROW
-               ) AS DOUBLE) AS roll_sum
-        FROM {_EVENTS_SQL}
-    """,
-    "first_last_window": f"""
-        SELECT DISTINCT user_id,
-               first_value(event_type) OVER w AS first_type,
-               last_value(event_type) OVER w AS last_type
-        FROM {_EVENTS_SQL}
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND UNBOUNDED FOLLOWING)
-    """,
-    "audio_frames": """
-        WITH a AS (
-            SELECT doc_id AS media_id,
-                   8000 * (1 + doc_id % 2) AS sample_rate,
-                   (n_chars * 37) % 20000 AS n_samples
-            FROM documents
-        ), f AS (
-            SELECT media_id, sample_rate,
-                   CASE WHEN n_samples >= 1024
-                        THEN (n_samples - 1024) // 512 + 1
-                        ELSE 0 END AS n_frames
-            FROM a
-        )
-        SELECT media_id,
-               unnest(generate_series(0, n_frames - 1)) AS frame_idx,
-               unnest(generate_series(0, n_frames - 1)) * 512 AS start_sample,
-               unnest(generate_series(0, n_frames - 1)) * 512 + 1024 AS end_sample,
-               ROUND(unnest(generate_series(0, n_frames - 1)) * 512 * 1000.0
-                     / sample_rate, 6) AS start_ms
-        FROM f WHERE n_frames > 0
-    """,
-    "bloom_pruned_join": """
-        SELECT o_orderpriority, COUNT(*) AS n,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS revenue
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE o_orderstatus = 'F'
-        GROUP BY o_orderpriority
-    """,
-    "scd2_intervals": f"""
-        WITH c AS (
-            SELECT user_id, ts, event_id, event_type,
-                   lag(event_type) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS prev
-            FROM {_EVENTS_SQL}
-        ), k AS (
-            SELECT user_id, ts, event_id, event_type FROM c
-            WHERE prev IS NULL OR prev <> event_type
-        )
-        SELECT user_id, event_type, ts AS valid_from,
-               lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   AS valid_to,
-               lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   IS NULL AS is_current
-        FROM k
-    """,
-    "cdc_apply": """
-        WITH w AS (
-            SELECT o_custkey, o_orderstatus, o_totalprice,
-                   row_number() OVER (PARTITION BY o_custkey
-                                      ORDER BY o_orderdate DESC,
-                                               o_orderkey DESC) AS rn
-            FROM orders
-        ), ch AS (
-            SELECT o_custkey AS k,
-                   CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
-                   o_totalprice AS new_bal
-            FROM w WHERE rn = 1
-        )
-        SELECT COALESCE(c_custkey, k) AS c_custkey, c_name, c_nationkey,
-               c_mktsegment,
-               CASE WHEN op IS NOT NULL THEN new_bal
-                    ELSE c_acctbal END AS c_acctbal
-        FROM customer FULL OUTER JOIN ch ON c_custkey = k
-        WHERE op IS NULL OR op <> 'D'
-    """,
-    "distinct_count": """
-        SELECT l_returnflag,
-               COUNT(DISTINCT l_suppkey) AS n_supp,
-               COUNT(DISTINCT l_partkey) AS n_part,
-               COUNT(*) AS n
-        FROM lineitem
-        GROUP BY l_returnflag
-    """,
-    "repetition_stats": r"""
-        WITH t AS (
-            SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\s+') AS w
-            FROM documents
-        ), g AS (
-            SELECT doc_id, w, len(w) AS n,
-                   CASE WHEN len(w) >= 2
-                        THEN list_transform(generate_series(1, len(w)-1),
-                             i -> concat_ws(' ', w[i], w[i+1]))
-                        ELSE [] END AS bg,
-                   CASE WHEN len(w) >= 3
-                        THEN list_transform(generate_series(1, len(w)-2),
-                             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))
-                        ELSE [] END AS tg
-            FROM t
-        )
-        SELECT doc_id,
-               CAST(n AS BIGINT) AS n_tokens,
-               ROUND(CASE WHEN n > 0
-                          THEN (n - len(list_distinct(w))) / CAST(n AS DOUBLE)
-                          ELSE 0.0 END, 6) AS dup_word_frac,
-               ROUND(CASE WHEN n >= 2
-                          THEN COALESCE(list_aggregate(
-                                   list_transform(list_distinct(bg),
-                                       g2 -> len(list_filter(bg, x -> x = g2))),
-                                   'max'), 0) / CAST(n - 1 AS DOUBLE)
-                          ELSE 0.0 END, 6) AS top_bigram_frac,
-               ROUND(CASE WHEN n >= 3
-                          THEN len(list_filter(tg,
-                                   x -> len(list_filter(tg, y -> y = x)) > 1))
-                               / CAST(n - 2 AS DOUBLE)
-                          ELSE 0.0 END, 6) AS dup_trigram_frac
-        FROM g
-    """,
-    "pii_scrub": f"""
-        WITH s AS ({_PII_SYNTH_SQL})
-        SELECT doc_id,
-               CAST(len(regexp_extract_all(text, '{_PII_EMAIL}')) AS BIGINT) AS n_emails,
-               CAST(len(regexp_extract_all(text, '{_PII_IP}')) AS BIGINT) AS n_ips,
-               CAST(len(regexp_extract_all(text, '{_PII_PHONE}')) AS BIGINT) AS n_phones,
-               md5(regexp_replace(regexp_replace(regexp_replace(text,
-                   '{_PII_EMAIL}', '<EMAIL>', 'g'),
-                   '{_PII_IP}', '<IP>', 'g'),
-                   '{_PII_PHONE}', '<PHONE>', 'g')) AS redacted_fp
-        FROM s
-    """,
-    "url_normalize": r"""
-        WITH s AS (
-            SELECT doc_id,
-                   concat('HTTPS://WWW.', source, '.Example.COM',
-                          CASE WHEN doc_id % 3 = 0 THEN ':443' ELSE '' END,
-                          '/Docs/', CAST(doc_id AS VARCHAR),
-                          CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END,
-                          '?utm_source=x&ref=', lang, '&b=2&a=1#frag') AS url
-            FROM documents
-        ), u AS (
-            SELECT doc_id, regexp_replace(url, '#.*$', '') AS nf FROM s
-        ), p AS (
-            SELECT doc_id,
-                   lower(regexp_extract(nf, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-                   regexp_replace(lower(split_part(
-                       regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1),
-                       ':', 1)), '^www\.', '') AS host,
-                   regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(/[^?#]*)', 1) AS path0,
-                   list_sort(list_filter(
-                       string_split(regexp_extract(nf, '\?([^#]*)', 1), '&'),
-                       pp -> NOT regexp_matches(pp, '^utm_')
-                             AND NOT regexp_matches(pp, '^ref=')
-                             AND pp <> '')) AS kept
-            FROM u
-        )
-        SELECT doc_id,
-               concat(scheme, '://', host,
-                      CASE WHEN regexp_replace(path0, '/+$', '') = ''
-                           THEN '/' ELSE regexp_replace(path0, '/+$', '') END,
-                      CASE WHEN len(kept) > 0
-                           THEN concat('?', array_to_string(kept, '&'))
-                           ELSE '' END) AS url_norm,
-               regexp_extract(host, '([^.]+\.[^.]+)$', 1) AS domain,
-               CAST(len(kept) AS BIGINT) AS n_params
-        FROM p
-    """,
-    "stream_stream_join": f"""
-        SELECT v.user_id AS user_id,
-               v.event_id AS view_id,
-               p.event_id AS purchase_id,
-               v.ts AS view_ts,
-               p.ts AS purchase_ts
-        FROM (SELECT * FROM {_EVENTS_SQL} e WHERE event_type = 'view') v
-        JOIN (SELECT * FROM {_EVENTS_SQL} e WHERE event_type = 'purchase') p
-          ON v.user_id = p.user_id
-         AND p.ts > v.ts
-         AND p.ts <= v.ts + INTERVAL 30 MINUTE
-    """,
-    "hybrid_search": r"""
-        WITH d AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS toks
-            FROM documents
-        ),
-        st AS (
-            SELECT (SELECT COUNT(*) FROM documents) AS n,
-                   (SELECT AVG(len(string_split_regex(lower(trim(text)),
-                                                      '\s+')))
-                    FROM documents) AS avgdl
-        ),
-        e AS (
-            SELECT doc_id, len(toks) AS dl,
-                   unnest(list_filter(toks,
-                       t -> t IN ('join', 'scan', 'filter'))) AS term
-            FROM d
-        ),
-        tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM e GROUP BY 1, 2, 3),
-        sc AS (
-            SELECT doc_id,
-                   ln(1.0 + (st.n - (COUNT(*) OVER (PARTITION BY term)) + 0.5)
-                            / ((COUNT(*) OVER (PARTITION BY term)) + 0.5))
-                   * (tf * (1.2 + 1))
-                   / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / st.avgdl)) AS s
-            FROM tf, st
-        ),
-        bm AS (
-            SELECT doc_id, ROUND(SUM(s), 6) AS bm25 FROM sc GROUP BY doc_id
-            ORDER BY bm25 DESC, doc_id ASC LIMIT 50
-        ),
-        probe AS (
-            SELECT CAST(embedding AS DOUBLE[]) AS pv
-            FROM embeddings WHERE vec_id = 0
-        ),
-        rr AS (
-            SELECT bm.doc_id, bm.bm25,
-                   ROUND(list_cosine_similarity(
-                       CAST(emb.embedding AS DOUBLE[]), probe.pv), 6) + 0.0 AS cos_sim
-            FROM bm JOIN embeddings emb ON emb.vec_id = bm.doc_id, probe
-        )
-        SELECT doc_id, bm25, cos_sim,
-               ROUND(0.1 * bm25 + cos_sim, 6) + 0.0 AS hybrid
-        FROM rr
-        ORDER BY hybrid DESC, doc_id ASC LIMIT 10
-    """,
-    "stream_enrich": f"""
-        SELECT date_trunc('hour', e.ts) AS bucket,
-               c.c_mktsegment,
-               COUNT(*) AS n_events,
-               CAST(SUM(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        FROM {_EVENTS_SQL} e JOIN customer c ON e.user_id = c.c_custkey
-        GROUP BY 1, 2
-    """,
-    "embedding_outliers": r"""
-        WITH cent AS (
-            SELECT label, t.i AS i,
-                   ROUND(AVG(CAST(embedding[t.i] AS DOUBLE)), 6) AS c
-            FROM embeddings,
-                 unnest(generate_series(1, len(embedding))) AS t(i)
-            GROUP BY label, t.i
-        ), cl AS (
-            SELECT label, list(c ORDER BY i) AS centroid FROM cent GROUP BY label
-        ), d AS (
-            SELECT e.vec_id, e.label,
-                   ROUND(sqrt(list_aggregate(list_transform(
-                       generate_series(1, len(e.embedding)),
-                       j -> (CAST(e.embedding[j] AS DOUBLE) - cl.centroid[j]) ^ 2),
-                       'sum')), 6) AS dist
-            FROM embeddings e JOIN cl ON e.label = cl.label
-        )
-        SELECT vec_id, label, dist,
-               -- + 0.0 normalizes IEEE -0.0 (tiny negative z rounded)
-               ROUND(CASE WHEN STDDEV_SAMP(dist) OVER (PARTITION BY label) > 0
-                     THEN (dist - AVG(dist) OVER (PARTITION BY label))
-                          / STDDEV_SAMP(dist) OVER (PARTITION BY label)
-                     ELSE 0.0 END, 4) + 0.0 AS z,
-               ROUND(CASE WHEN STDDEV_SAMP(dist) OVER (PARTITION BY label) > 0
-                     THEN (dist - AVG(dist) OVER (PARTITION BY label))
-                          / STDDEV_SAMP(dist) OVER (PARTITION BY label)
-                     ELSE 0.0 END, 4) + 0.0 > 2.0 AS is_outlier
-        FROM d
-    """,
-    "curation_pipeline": f"""
-        WITH t AS (
-            SELECT doc_id, text,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-            FROM documents
-        ), g AS (
-            SELECT doc_id, text, w, len(w) AS n,
-                   CASE WHEN len(w) >= 2
-                        THEN list_transform(generate_series(1, len(w)-1),
-                             i -> concat_ws(' ', w[i], w[i+1]))
-                        ELSE [] END AS bg
-            FROM t
-        ), rep AS (
-            SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-                   ROUND(CASE WHEN n > 0
-                              THEN (n - len(list_distinct(w))) / CAST(n AS DOUBLE)
-                              ELSE 0.0 END, 6) AS dup_word_frac,
-                   ROUND(CASE WHEN n >= 2
-                              THEN COALESCE(list_aggregate(
-                                       list_transform(list_distinct(bg),
-                                           g2 -> len(list_filter(bg, x -> x = g2))),
-                                       'max'), 0) / CAST(n - 1 AS DOUBLE)
-                              ELSE 0.0 END, 6) AS top_bigram_frac
-            FROM g
-        ), lang AS (
-            SELECT doc_id, {_LANG_PRED_SQL} AS lang_pred FROM ({_LANG_SCORES_SQL})
-        ), pii AS (
-            SELECT doc_id,
-                   len(regexp_extract_all(text, '{_PII_EMAIL}'))
-                   + len(regexp_extract_all(text, '{_PII_IP}'))
-                   + len(regexp_extract_all(text, '{_PII_PHONE}')) AS n_pii
-            FROM documents
-        ), fp AS (
-            SELECT doc_id,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-            FROM documents
-        ), kept AS (
-            SELECT r.doc_id, r.n_tokens, l.lang_pred, f.fp
-            FROM rep r
-            JOIN lang l USING (doc_id)
-            JOIN pii p USING (doc_id)
-            JOIN fp f USING (doc_id)
-            WHERE l.lang_pred = 'en' AND r.n_tokens >= 30
-              AND r.dup_word_frac <= 0.6 AND r.top_bigram_frac <= 0.05
-              AND p.n_pii = 0
-        )
-        SELECT MIN(doc_id) AS doc_id, fp, MIN(n_tokens) AS n_tokens,
-               MIN(lang_pred) AS lang_pred
-        FROM kept GROUP BY fp
-    """,
-    "gap_fill": f"""
-        WITH hourly AS (
-            SELECT user_id, date_trunc('hour', ts) AS bucket,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-            FROM {_EVENTS_SQL} GROUP BY 1, 2
-        ), spine AS (
-            SELECT user_id,
-                   unnest(generate_series(min(bucket), max(bucket),
-                                          INTERVAL 1 HOUR)) AS bucket
-            FROM hourly GROUP BY user_id
-        )
-        SELECT s.user_id, s.bucket, h.v IS NULL AS is_gap,
-               last_value(h.v IGNORE NULLS)
-                   OVER (PARTITION BY s.user_id ORDER BY s.bucket) AS v_filled
-        FROM spine s LEFT JOIN hourly h
-          ON s.user_id = h.user_id AND s.bucket = h.bucket
-    """,
-    "left_outer_join": f"""
-        SELECT COALESCE(c.c_mktsegment, 'unmatched') AS segment,
-               COUNT(*) AS n_events,
-               COUNT(DISTINCT e.user_id) AS n_users
-        FROM {_EVENTS_SQL} e LEFT JOIN customer c ON e.user_id = c.c_custkey
-        GROUP BY 1
-    """,
-    # frozen-centroid replay (same literals, exact L2 + row_number argmin
-    # — the ann_ivf_topk technique), then the same in-cluster pair rule
-    # and lowest-keep-id witness reduction as pipeline.similarity.semdedup
-    "semdedup": f"""
-        WITH base AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            UNION ALL
-            SELECT vec_id + 1000000, CAST(embedding AS DOUBLE[]) FROM embeddings
-        ), dists AS (
-            SELECT b.vec_id, b.v, c.c AS cell,
-                   list_sum(list_transform(range(1, 65),
-                                           i -> (b.v[i] - c.cv[i]) ** 2)) AS dsq
-            FROM base b CROSS JOIN {_ivf_centroids_values_sql()} AS c(c, cv)
-        ), assigned AS (
-            SELECT vec_id, v, cell FROM (
-                SELECT vec_id, v, cell,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY dsq ASC, cell ASC) AS rn
-                FROM dists) WHERE rn = 1
-        ), pairs AS (
-            SELECT b.vec_id AS drop_id, a.vec_id AS keep_id,
-                   CAST(a.cell AS BIGINT) AS cluster,
-                   ROUND(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
-            FROM assigned a JOIN assigned b
-              ON a.cell = b.cell AND a.vec_id < b.vec_id
-        )
-        SELECT drop_id, keep_id, cluster, cos_sim FROM (
-            SELECT drop_id, keep_id, cluster, cos_sim,
-                   row_number() OVER (PARTITION BY drop_id
-                                      ORDER BY keep_id ASC) AS rn
-            FROM pairs WHERE cos_sim >= 0.95)
-        WHERE rn = 1
-    """,
-    # same md5 8-token window fingerprints, same >=2-distinct-docs rule,
-    # same gaps-and-islands merge as pipeline.dedup.duplicate_spans
-    "duplicate_spans": r"""
-        WITH corpus AS (
-            SELECT doc_id, text FROM documents
-            UNION ALL SELECT doc_id + 10000, text FROM documents
-        ), t AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS toks
-            FROM corpus
-        ), w AS (
-            SELECT doc_id,
-                   unnest(generate_series(1, len(toks) - 7)) AS i, toks
-            FROM t WHERE len(toks) >= 8
-        ), fps AS (
-            SELECT doc_id, i - 1 AS pos,
-                   substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16) AS fp
-            FROM w
-        ), dup AS (
-            SELECT doc_id, pos FROM fps
-            WHERE fp IN (SELECT fp FROM fps GROUP BY fp
-                         HAVING count(DISTINCT doc_id) >= 2)
-        ), marked AS (
-            SELECT doc_id, pos,
-                   CASE WHEN pos - lag(pos, 1, -9) OVER
-                                (PARTITION BY doc_id ORDER BY pos) > 8
-                        THEN 1 ELSE 0 END AS nw
-            FROM dup
-        ), isl AS (
-            SELECT doc_id, pos,
-                   sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-                                 ROWS UNBOUNDED PRECEDING) AS isl
-            FROM marked
-        )
-        SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-               CAST(max(pos) + 8 - min(pos) AS BIGINT) AS span_len,
-               count(*) AS n_windows
-        FROM isl GROUP BY doc_id, isl
-    """,
-    # same half-doc planting, same anchor-window blocking (shared md5
-    # 8-token window, bucket cap 1000), same exact 3-gram containment as
-    # pipeline.dedup.anchor_window_candidates + shingle_containment_pairs
-    "containment_dedup": r"""
-        WITH corpus AS (
-            SELECT doc_id, text FROM documents
-            UNION ALL
-            SELECT doc_id + 10000,
-                   array_to_string(
-                       (string_split_regex(lower(trim(text)), '\s+'))
-                           [1:greatest(len(string_split_regex(lower(trim(text)), '\s+')) // 2, 1)],
-                       ' ') AS text
-            FROM documents
-        ), t AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS toks
-            FROM corpus
-        ), wf AS (
-            SELECT doc_id,
-                   unnest(list_distinct(list_transform(
-                       generate_series(1, len(toks) - 7),
-                       i -> substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)))) AS fp
-            FROM t WHERE len(toks) >= 8
-        ), ok_fp AS (
-            SELECT fp FROM wf GROUP BY fp
-            HAVING count(DISTINCT doc_id) BETWEEN 2 AND 1000
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM wf a JOIN wf b ON a.fp = b.fp AND a.doc_id < b.doc_id
-            WHERE a.fp IN (SELECT fp FROM ok_fp)
-        ), sh AS (
-            SELECT doc_id,
-                   CASE WHEN len(toks) >= 3
-                        THEN list_distinct(list_transform(
-                                 generate_series(1, len(toks) - 2),
-                                 i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                        ELSE [array_to_string(toks, ' ')] END AS s
-            FROM t
-        )
-        SELECT id_a, id_b, containment FROM (
-            SELECT c.id_a, c.id_b,
-                   ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                         / least(len(a.s), len(b.s)), 6) AS containment
-            FROM cand c JOIN sh a ON c.id_a = a.doc_id
-                        JOIN sh b ON c.id_b = b.doc_id
-        ) WHERE containment >= 0.9
-    """,
-    # same frozen weight literals, same md5 low-60-bit bucket, same
-    # bias + mean-of-weights fold as pipeline.text.quality_classifier
-    "quality_classifier": f"""
-        SELECT doc_id, n_tokens, qc_score, qc_score >= 0 AS qc_keep
-        FROM ({_qc_scores_sql()})
-    """,
-    # transitive dedup map (min-label propagation unrolled) ⋈ frozen
-    # quality scores → same (score DESC, id ASC) representative rule as
-    # pipeline.dedup.cluster_representatives
-    "cluster_representatives": f"""
-        WITH j AS (
-            SELECT cc.doc_id, cc.component AS canonical_id, qs.qc_score
-            FROM ({_cc_unrolled_sql()}) cc
-            JOIN ({_qc_scores_sql()}) qs ON cc.doc_id = qs.doc_id
-        ), r AS (
-            SELECT canonical_id, doc_id AS rep_id, qc_score AS rep_score,
-                   CAST(count(*) OVER (PARTITION BY canonical_id) AS BIGINT)
-                       AS n_members,
-                   row_number() OVER (PARTITION BY canonical_id
-                                      ORDER BY qc_score DESC, doc_id ASC) AS rn
-            FROM j
-        )
-        SELECT canonical_id, rep_id, rep_score, n_members FROM r WHERE rn = 1
-    """,
-    # same md5-bucket split rule as dataset_split, same anchor-window
-    # blocking as containment_dedup, same exact shingle Jaccard — the
-    # whole chain replayed, as pipeline.contamination.split_leakage runs it
-    "split_leakage": rf"""
-        WITH t AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS toks
-            FROM documents
-        ), wf AS (
-            SELECT doc_id,
-                   unnest(list_distinct(list_transform(
-                       generate_series(1, len(toks) - 7),
-                       i -> substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)))) AS fp
-            FROM t WHERE len(toks) >= 8
-        ), ok_fp AS (
-            SELECT fp FROM wf GROUP BY fp
-            HAVING count(DISTINCT doc_id) BETWEEN 2 AND 1000
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM wf a JOIN wf b ON a.fp = b.fp AND a.doc_id < b.doc_id
-            WHERE a.fp IN (SELECT fp FROM ok_fp)
-        ), pairs AS (
-            SELECT c.id_a, c.id_b,
-                   ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                         / len(list_distinct(list_concat(a.s, b.s))), 6)
-                       AS jaccard
-            FROM cand c JOIN ({_SHINGLES_SQL}) a ON c.id_a = a.doc_id
-                        JOIN ({_SHINGLES_SQL}) b ON c.id_b = b.doc_id
-        ), sp AS (
-            SELECT doc_id,
-                   CASE WHEN bucket < 8000 THEN 'train'
-                        WHEN bucket < 9000 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (SELECT doc_id,
-                         CAST(('0x' || substring(
-                             md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 8))
-                         AS BIGINT) % 10000 AS bucket
-                  FROM documents)
-        )
-        SELECT p.id_a, sa.split AS split_a, p.id_b, sb.split AS split_b,
-               p.jaccard
-        FROM pairs p JOIN sp sa ON p.id_a = sa.doc_id
-                     JOIN sp sb ON p.id_b = sb.doc_id
-        WHERE p.jaccard >= 0.8 AND sa.split <> sb.split
-    """,
-    # same fixed-width bins, totals, and eps-smoothed log terms as
-    # pipeline.validate.distribution_drift (+0.0 pins the zero sign)
-    "distribution_drift": """
-        WITH a AS (
-            SELECT CAST(FLOOR(n_chars / 100.0) AS BIGINT) AS bin,
-                   COUNT(*) AS n_a
-            FROM documents WHERE doc_id % 2 = 0 GROUP BY 1
-        ), b AS (
-            SELECT CAST(FLOOR(n_chars / 100.0) AS BIGINT) AS bin,
-                   COUNT(*) AS n_b
-            FROM documents WHERE doc_id % 2 = 1 GROUP BY 1
-        ), j AS (
-            SELECT COALESCE(a.bin, b.bin) AS bin,
-                   CAST(COALESCE(n_a, 0) AS BIGINT) AS n_a,
-                   CAST(COALESCE(n_b, 0) AS BIGINT) AS n_b
-            FROM a FULL OUTER JOIN b ON a.bin = b.bin
-        ), p AS (
-            SELECT bin, n_a, n_b,
-                   n_a / (SUM(n_a) OVER ()) AS p_a,
-                   n_b / (SUM(n_b) OVER ()) AS p_b
-            FROM j
-        )
-        SELECT bin, n_a, n_b,
-               ROUND(p_a, 6) AS p_a, ROUND(p_b, 6) AS p_b,
-               ROUND((p_a - p_b) * ln((p_a + 1e-6) / (p_b + 1e-6)), 6) + 0.0
-                   AS psi_term
-        FROM p
-    """,
-    # same seeded md5 hash, same (hash, id) within-shard order as
-    # pipeline.sampling.shuffle_shards
-    "shuffle_shards": """
-        WITH h AS (
-            SELECT doc_id,
-                   CAST('0x' || substr(md5('shuf-v1:' || CAST(doc_id AS VARCHAR)),
-                                       18, 15) AS BIGINT) AS _h
-            FROM documents
-        )
-        SELECT doc_id,
-               CAST(_h % 8 AS INTEGER) AS shard,
-               CAST(row_number() OVER (PARTITION BY _h % 8
-                                       ORDER BY _h ASC, doc_id ASC) AS BIGINT)
-                   AS shard_pos
-        FROM h
-    """,
-
-    # same ownership rule (lowest doc_id per fingerprint), same interval
-    # merge, same token rebuild as pipeline.dedup.remove_duplicate_spans
-    "remove_duplicate_spans": r"""
-        WITH corpus AS (
-            SELECT doc_id, text FROM documents
-            UNION ALL SELECT doc_id + 10000, text FROM documents
-        ), t AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS toks
-            FROM corpus
-        ), w AS (
-            SELECT doc_id,
-                   unnest(generate_series(1, len(toks) - 7)) AS i, toks
-            FROM t WHERE len(toks) >= 8
-        ), fps AS (
-            SELECT doc_id, i - 1 AS pos,
-                   substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16) AS fp
-            FROM w
-        ), stats AS (
-            SELECT fp, count(DISTINCT doc_id) AS nd, min(doc_id) AS owner
-            FROM fps GROUP BY fp
-        ), marked AS (
-            SELECT DISTINCT f.doc_id, f.pos
-            FROM fps f JOIN stats s ON f.fp = s.fp
-            WHERE s.nd >= 2 AND f.doc_id <> s.owner
-        ), mk AS (
-            SELECT doc_id, pos,
-                   CASE WHEN pos - lag(pos, 1, -9) OVER
-                                (PARTITION BY doc_id ORDER BY pos) > 8
-                        THEN 1 ELSE 0 END AS nw
-            FROM marked
-        ), isl AS (
-            SELECT doc_id, pos,
-                   sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-                                 ROWS UNBOUNDED PRECEDING) AS isl
-            FROM mk
-        ), iv AS (
-            SELECT doc_id, min(pos) AS lo, max(pos) + 8 - 1 AS hi
-            FROM isl GROUP BY doc_id, isl
-        ), tok AS (
-            SELECT doc_id, unnest(generate_series(1, len(toks))) - 1 AS p,
-                   toks
-            FROM t
-        ), tk AS (
-            SELECT doc_id, p, toks[p + 1] AS tk FROM tok
-        ), rm AS (
-            SELECT DISTINCT k.doc_id, k.p
-            FROM tk k JOIN iv ON k.doc_id = iv.doc_id
-                            AND k.p BETWEEN iv.lo AND iv.hi
-        ), kept AS (
-            SELECT tk.doc_id,
-                   coalesce(string_agg(tk.tk, ' ' ORDER BY tk.p), '')
-                       AS clean_text
-            FROM tk LEFT JOIN rm ON tk.doc_id = rm.doc_id AND tk.p = rm.p
-            WHERE rm.p IS NULL
-            GROUP BY tk.doc_id
-        ), rmn AS (
-            SELECT doc_id, count(*) AS n_removed FROM rm GROUP BY doc_id
-        )
-        SELECT t.doc_id,
-               coalesce(k.clean_text, '') AS clean_text,
-               CAST(len(t.toks) AS BIGINT) AS n_tokens,
-               CAST(coalesce(rmn.n_removed, 0) AS BIGINT) AS n_removed
-        FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id
-               LEFT JOIN rmn ON t.doc_id = rmn.doc_id
-    """,
-    # same canonical-string casts, counts, and lexicographic min/max as
-    # pipeline.validate.profile_table
-    "profile_table": """
-        SELECT 'doc_id' AS col_name,
-               count(*) AS n_rows,
-               CAST(sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_nulls,
-               count(DISTINCT CAST(doc_id AS VARCHAR)) AS n_distinct,
-               min(CAST(doc_id AS VARCHAR)) AS min_str,
-               max(CAST(doc_id AS VARCHAR)) AS max_str
-        FROM documents
-    
-UNION ALL
-
-        SELECT 'text' AS col_name,
-               count(*) AS n_rows,
-               CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_nulls,
-               count(DISTINCT CAST(text AS VARCHAR)) AS n_distinct,
-               min(CAST(text AS VARCHAR)) AS min_str,
-               max(CAST(text AS VARCHAR)) AS max_str
-        FROM documents
-    
-UNION ALL
-
-        SELECT 'lang' AS col_name,
-               count(*) AS n_rows,
-               CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_nulls,
-               count(DISTINCT CAST(lang AS VARCHAR)) AS n_distinct,
-               min(CAST(lang AS VARCHAR)) AS min_str,
-               max(CAST(lang AS VARCHAR)) AS max_str
-        FROM documents
-    
-UNION ALL
-
-        SELECT 'source' AS col_name,
-               count(*) AS n_rows,
-               CAST(sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_nulls,
-               count(DISTINCT CAST(source AS VARCHAR)) AS n_distinct,
-               min(CAST(source AS VARCHAR)) AS min_str,
-               max(CAST(source AS VARCHAR)) AS max_str
-        FROM documents
-    
-UNION ALL
-
-        SELECT 'n_chars' AS col_name,
-               count(*) AS n_rows,
-               CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_nulls,
-               count(DISTINCT CAST(n_chars AS VARCHAR)) AS n_distinct,
-               min(CAST(n_chars AS VARCHAR)) AS min_str,
-               max(CAST(n_chars AS VARCHAR)) AS max_str
-        FROM documents
-    """,
-    # same md5-low-60-bit row hashes, same commutative aggregates as
-    # pipeline.validate.dataset_fingerprint
-    "dataset_fingerprint": "\nUNION ALL\n".join(
-        f"""
-        SELECT '{c}' AS col_name,
-               count(*) AS n_rows,
-               CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_nulls,
-               bit_xor(CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 18, 15)
-                            AS BIGINT)) AS xor_hash,
-               CAST(sum(CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 18, 15)
-                             AS BIGINT) % 1000000007) AS BIGINT) AS sum_hash
-        FROM documents
-        """
-        for c in ["doc_id", "text", "lang", "source", "n_chars"]
-    ),
-    # identical add-one smoothing closed form as pipeline.text
-    # train_unigram_lm + perplexity_score: top-300 vocab by
-    # (count DESC, token ASC) — a total order, so the cut is
-    # deterministic in both engines
-    "lm_perplexity": r"""
-        WITH tok AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
-            FROM documents
-        ), counts AS (
-            SELECT token, count(*) AS n FROM tok GROUP BY token
-        ), total AS (
-            SELECT sum(n) AS t FROM counts
-        ), top AS (
-            SELECT token, n FROM counts ORDER BY n DESC, token LIMIT 300
-        ), kept AS (
-            SELECT count(*) AS v FROM top
-        ), lm AS (
-            SELECT token, ln((n + 1.0) / (t + v + 1)) AS logprob
-            FROM top, total, kept
-        ), oov AS (
-            SELECT -ln(CAST(t + v + 1 AS DOUBLE)) AS o FROM total, kept
-        )
-        SELECT tok.doc_id,
-               CAST(count(*) AS BIGINT) AS n_tokens,
-               ROUND(avg(-coalesce(lm.logprob, oov.o)), 6) AS avg_nll
-        FROM tok LEFT JOIN lm USING (token), oov
-        GROUP BY tok.doc_id
-    """,
-    # positional (non-distinct) word bigrams; (cnt DESC, gram ASC) is a
-    # total order so the top-100 boundary matches exactly
-    "top_bigrams": r"""
-        WITH t AS (
-            SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS w
-            FROM documents
-        ), g AS (
-            SELECT array_to_string(w[i:i+1], ' ') AS gram
-            FROM t, unnest(range(1, len(w))) AS u(i)
-            WHERE len(w) >= 2
-        )
-        SELECT gram, CAST(count(*) AS BIGINT) AS cnt
-        FROM g GROUP BY gram
-        ORDER BY cnt DESC, gram ASC
-        LIMIT 100
-    """,
-    # one Lloyd round from the deterministic vec_id<8 init: nearest
-    # centroid by squared L2 (ties → lowest cell, same as numpy argmin)
-    # then per-(cell, dim) count + mean — replicates
-    # pipeline.similarity.kmeans_assign + the lloyd_round update
-    "kmeans_round": """
-        WITH base AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ), cent AS (
-            SELECT vec_id AS cell, v AS cv FROM base WHERE vec_id < 8
-        ), dists AS (
-            SELECT b.vec_id, b.v, c.cell,
-                   list_sum(list_transform(range(1, 65),
-                                           i -> (b.v[i] - c.cv[i]) ** 2)) AS dsq
-            FROM base b CROSS JOIN cent c
-        ), assigned AS (
-            SELECT vec_id, v, cell FROM (
-                SELECT vec_id, v, cell,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY dsq ASC, cell ASC) AS rn
-                FROM dists) WHERE rn = 1
-        )
-        SELECT CAST(cell AS BIGINT) AS cell,
-               CAST(i AS BIGINT) AS pos,
-               CAST(count(*) AS BIGINT) AS n,
-               ROUND(avg(v[i + 1]), 6) AS m
-        FROM assigned, unnest(range(0, 64)) AS u(i)
-        GROUP BY cell, i
-    """,
-    # the bucketed two-level construction reproduces the plain total
-    # order exactly, so the oracle IS the naive form the Spark plan
-    # deliberately avoids
-    "global_row_ids": """
-        SELECT doc_id, n_chars,
-               CAST(row_number() OVER (ORDER BY n_chars, doc_id) - 1
-                    AS BIGINT) AS row_id
-        FROM documents
-    """,
-    # replay the KMV sketch: same 60-bit md5 hash, k=64 smallest
-    # distinct values per group, same (k-1)/U_(k) estimator arithmetic
-    # (exact-int → double conversions are IEEE-identical in both
-    # engines)
-    "kmv_distinct": """
-        WITH hv AS (
-            SELECT DISTINCT lang,
-                   CAST(CAST('0x' || substr(md5(text), 18, 15) AS UBIGINT)
-                        AS BIGINT) AS h
-            FROM documents
-        ), r AS (
-            SELECT lang, h,
-                   row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
-            FROM hv
-        ), s AS (
-            SELECT lang, count(*) AS n_sk, max(h) AS kth
-            FROM r WHERE rn <= 64 GROUP BY lang
-        )
-        SELECT lang, CAST(n_sk AS INT) AS sketch_size,
-               ROUND(CASE WHEN n_sk < 64 THEN CAST(n_sk AS DOUBLE)
-                          ELSE 63.0 * 1152921504606846976.0
-                               / CAST(kth AS DOUBLE) END, 4) AS est_distinct
-        FROM s
-    """,
-    "streaming_dedup": f"""
-        SELECT event_id, ts FROM {_EVENTS_SQL} GROUP BY event_id, ts
-    """,
-    # replay the exponential race: identical md5-derived u, -ln(u)/w
-    # race key, (race ASC, doc_id ASC) rank per language
-    "weighted_sample": """
-        WITH r AS (
-            SELECT lang, doc_id, n_chars,
-                   -ln((CAST(CAST('0x' || substr(
-                            md5('ws-v1:' || CAST(doc_id AS VARCHAR)), 18, 15)
-                            AS UBIGINT) AS DOUBLE) + 1.0)
-                        / 1152921504606846976.0)
-                       / CAST(n_chars AS DOUBLE) AS race_key
-            FROM documents WHERE n_chars > 0
-        ), k AS (
-            SELECT lang, doc_id, n_chars, race_key,
-                   row_number() OVER (PARTITION BY lang
-                                      ORDER BY race_key ASC, doc_id ASC) AS rn
-            FROM r
-        )
-        SELECT lang, doc_id, n_chars, ROUND(race_key, 6) AS race_key
-        FROM k WHERE rn <= 20
-    """,
-    # same deterministic 10% hash sample (first-8-hex md5 bucket rule
-    # of pipeline.sampling.hash_bucket), then exact linear-interpolation
-    # quantiles on the kept rows
-    "sampled_quantiles": """
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n_sample,
-               ROUND(quantile_cont(value, 0.5), 6) AS q50,
-               ROUND(quantile_cont(value, 0.9), 6) AS q90,
-               ROUND(quantile_cont(value, 0.99), 6) AS q99
-        FROM events
-        WHERE CAST('0x' || substr(md5('sq-v1' || CAST(event_id AS VARCHAR)),
-                                  1, 8) AS UBIGINT) % 10000 < 1000
-        GROUP BY event_type
-    """,
-    # replay the deletion-neighborhood blocking (full-sequence signature
-    # + every single-token-deletion signature) and the exact Levenshtein
-    # verification on the shared-signature candidates
-    "edit_distance_pairs": r"""
-        WITH t AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS toks,
-                   text
-            FROM documents
-        ), e AS (
-            -- one 60-bit md5 per TOKEN; deleted sequences are then
-            -- summarized by exact rolling sums (O(n) per doc), mod
-            -- 2^60 only at the end — replays the Spark construction
-            SELECT doc_id, g.i AS p1,
-                   CAST(CAST('0x' || substr(md5(toks[g.i]), 18, 15)
-                        AS UBIGINT) AS HUGEINT) AS h
-            FROM t, unnest(generate_series(1, len(toks))) AS g(i)
-        ), s AS (
-            SELECT doc_id, p1, h,
-                   SUM(h) OVER (PARTITION BY doc_id) AS sm,
-                   SUM(h * p1) OVER (PARTITION BY doc_id) AS wm,
-                   COALESCE(SUM(h) OVER (PARTITION BY doc_id
-                       ORDER BY p1 DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                       0) AS tl
-            FROM e
-        ), sigs AS (
-            SELECT DISTINCT doc_id,
-                   substr(md5(
-                       CAST(CAST((sm - h) % 1152921504606846976
-                            AS BIGINT) AS VARCHAR)
-                       || ':' ||
-                       CAST(CAST((wm - h * p1 - tl) % 1152921504606846976
-                            AS BIGINT) AS VARCHAR)), 1, 16) AS sig
-            FROM s
-            UNION
-            SELECT DISTINCT doc_id,
-                   substr(md5(
-                       CAST(CAST(sm % 1152921504606846976
-                            AS BIGINT) AS VARCHAR)
-                       || ':' ||
-                       CAST(CAST(wm % 1152921504606846976
-                            AS BIGINT) AS VARCHAR)), 1, 16)
-            FROM s
-        ), canon AS (
-            -- star construction: every bucket member pairs only with
-            -- the bucket's minimum-id member (linear pair output)
-            SELECT sig, MIN(doc_id) AS ca FROM sigs GROUP BY sig
-        ), cand AS (
-            SELECT DISTINCT c.ca AS id_a, s.doc_id AS id_b
-            FROM sigs s JOIN canon c USING (sig)
-            WHERE s.doc_id > c.ca
-        )
-        SELECT id_a, id_b,
-               CAST(levenshtein(ta.text, tb.text) AS BIGINT) AS dist
-        FROM cand
-        JOIN t ta ON ta.doc_id = id_a
-        JOIN t tb ON tb.doc_id = id_b
-        WHERE levenshtein(ta.text, tb.text) <= 50
-    """,
-    # replay the exact-sum construction: integer x, DECIMAL(18,6) y,
-    # exact moment sums, then the identical double closed form — no
-    # float accumulation anywhere, so no merge-order divergence
-    "trend_fit": f"""
-        WITH b AS (
-            -- floor, not CAST: epoch() carries fractional seconds and a
-            -- bigint cast would round them, while Spark's
-            -- unix_timestamp truncates
-            SELECT event_type,
-                   CAST(floor(epoch(ts)) AS BIGINT) - 1704067200 AS x,
-                   CAST(value AS DECIMAL(18,6)) AS y
-            FROM {_EVENTS_SQL}
-        ), s AS (
-            SELECT event_type,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(CAST(x AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-                   CAST(sum(CAST(x * x AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
-                   CAST(sum(y) AS DOUBLE) AS sy,
-                   CAST(sum(y * y) AS DOUBLE) AS syy,
-                   CAST(sum(CAST(x AS DECIMAL(19,0)) * y) AS DOUBLE) AS sxy
-            FROM b GROUP BY event_type
-        )
-        SELECT event_type, n,
-               ROUND(CASE WHEN n * sxx - sx * sx > 0
-                          THEN (n * sxy - sx * sy) / (n * sxx - sx * sx)
-                     END, 6) + 0.0 AS slope,
-               ROUND((sy - CASE WHEN n * sxx - sx * sx > 0
-                                THEN (n * sxy - sx * sy) / (n * sxx - sx * sx)
-                           END * sx) / n, 6) + 0.0 AS intercept,
-               ROUND(CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-                          THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
-                               / ((n * sxx - sx * sx) * (n * syy - sy * sy))
-                     END, 6) + 0.0 AS r2
-        FROM s
-    """,
-    # rebuild the derived snapshot and classify with IS DISTINCT FROM —
-    # the same NULL semantics as the engine's NULL-tagged row hashes
-    "snapshot_diff": """
-        WITH a AS (SELECT doc_id, text, lang FROM documents),
-        b AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END
-                       AS text,
-                   lang
-            FROM documents WHERE doc_id % 7 <> 0
-            UNION ALL
-            SELECT doc_id + 1000000, text, lang FROM documents
-            WHERE doc_id % 11 = 0
-        ), j AS (
-            SELECT CASE WHEN a.doc_id IS NULL THEN 'added'
-                        WHEN b.doc_id IS NULL THEN 'removed'
-                        WHEN a.text IS DISTINCT FROM b.text
-                             OR a.lang IS DISTINCT FROM b.lang THEN 'changed'
-                        ELSE 'unchanged' END AS status
-            FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-        )
-        SELECT status, CAST(count(*) AS BIGINT) AS n FROM j GROUP BY status
-    """,
-    # the lm_perplexity replay + per-language ntile over the same
-    # (rounded avg_nll, doc_id) total order
-    "quality_tiers": r"""
-        WITH tok AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
-            FROM documents
-        ), counts AS (
-            SELECT token, count(*) AS n FROM tok GROUP BY token
-        ), total AS (
-            SELECT sum(n) AS t FROM counts
-        ), top AS (
-            SELECT token, n FROM counts ORDER BY n DESC, token LIMIT 300
-        ), kept AS (
-            SELECT count(*) AS v FROM top
-        ), lm AS (
-            SELECT token, ln((n + 1.0) / (t + v + 1)) AS logprob
-            FROM top, total, kept
-        ), oov AS (
-            SELECT -ln(CAST(t + v + 1 AS DOUBLE)) AS o FROM total, kept
-        ), scored AS (
-            SELECT tok.doc_id,
-                   CAST(count(*) AS BIGINT) AS n_tokens,
-                   ROUND(avg(-coalesce(lm.logprob, oov.o)), 6) AS avg_nll
-            FROM tok LEFT JOIN lm USING (token), oov
-            GROUP BY tok.doc_id
-        ), tiered AS (
-            SELECT s.doc_id, d.lang, s.n_tokens, s.avg_nll,
-                   CAST(ntile(3) OVER (PARTITION BY d.lang
-                                       ORDER BY s.avg_nll ASC, s.doc_id ASC)
-                        AS BIGINT) AS tier
-            FROM scored s JOIN documents d ON s.doc_id = d.doc_id
-        )
-        SELECT doc_id, lang, n_tokens, avg_nll, tier,
-               CASE WHEN tier = 1 THEN 'head'
-                    WHEN tier = 3 THEN 'tail'
-                    ELSE 'middle' END AS tier_label
-        FROM tiered
-    """,
-    "streaming_topk": f"""
-        WITH c AS (
-            SELECT date_trunc('hour', ts) AS window_start, event_type,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM {_EVENTS_SQL} GROUP BY 1, 2
-        )
-        SELECT window_start, event_type, n,
-               CAST(row_number() OVER (PARTITION BY window_start
-                                       ORDER BY n DESC, event_type)
-                    AS BIGINT) AS rnk
-        FROM c QUALIFY rnk <= 3
-    """,
-    "kcenter_select": _kcenter_sql(5),
-    "pagerank_transitions": _pagerank_sql(5, 0.85),
-    "cms_counts": _CMS_SQL,
-    "jl_projection": _jl_sql(16, 64, 7),
-    # same window (leads evaluated over (ts, event_id) order), same
-    # completeness filter (trailing windows dropped), same tie-break
-    "top_paths": f"""
-        WITH p AS (
-            SELECT concat_ws('>', event_type,
-                             lead(event_type, 1) OVER w,
-                             lead(event_type, 2) OVER w) AS path,
-                   lead(event_type, 2) OVER w AS last_step
-            FROM {_EVENTS_SQL}
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        )
-        SELECT path, CAST(count(*) AS BIGINT) AS n
-        FROM p WHERE last_step IS NOT NULL
-        GROUP BY path ORDER BY n DESC, path ASC LIMIT 20
-    """,
-    "event_pairs": f"""
-        WITH ut AS (
-            SELECT DISTINCT user_id AS u, event_type AS t FROM {_EVENTS_SQL}
-        )
-        SELECT a.t AS item_a, b.t AS item_b,
-               CAST(count(*) AS BIGINT) AS n_users
-        FROM ut a JOIN ut b ON a.u = b.u AND a.t < b.t
-        GROUP BY item_a, item_b HAVING count(*) >= 2
-    """,
-    # identical trailing frame, identical exact integer moments, and the
-    # identical double expression order (subtract mean, divide by
-    # sqrt(floored var)) — bit-stable cross-engine
-    "anomaly_hours": f"""
-        WITH hourly AS (
-            SELECT event_type AS grp, date_trunc('hour', ts) AS hour,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM {_EVENTS_SQL} GROUP BY 1, 2
-        ), stats AS (
-            SELECT grp, hour, n,
-                   CAST(count(*) OVER w AS BIGINT) AS m,
-                   CAST(sum(n) OVER w AS BIGINT) AS s1,
-                   CAST(sum(n * n) OVER w AS BIGINT) AS s2
-            FROM hourly
-            WINDOW w AS (PARTITION BY grp ORDER BY hour ASC
-                         ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
-        )
-        SELECT grp AS event_type, hour, n,
-               ROUND(ABS((CAST(n AS DOUBLE)
-                          - CAST(s1 AS DOUBLE) / CAST(m AS DOUBLE))
-                         / sqrt(GREATEST(
-                               (CAST(s2 AS DOUBLE)
-                                - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                                  / CAST(m AS DOUBLE))
-                               / (CAST(m AS DOUBLE) - 1.0), 1.0))), 6)
-                   + 0.0 AS abs_z
-        FROM stats WHERE m >= 2
-        ORDER BY abs_z DESC, event_type ASC, hour ASC LIMIT 20
-    """,
-    # DSIR: two add-one-smoothed top-300 unigram LMs (target = lang='en'
-    # slice, raw = full corpus), per-doc log importance ratio summed over
-    # tokens with each model's OOV fallback; rounded weight + doc_id is a
-    # total order so the top-200 boundary replays exactly — replicates
-    # pipeline.text.train_unigram_lm + dsir_select
-    "dsir_select": r"""
-        WITH tok AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
-            FROM documents
-        ), ttok AS (
-            SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
-            FROM documents WHERE lang = 'en'
-        ), rcounts AS (
-            SELECT token, count(*) AS n FROM tok GROUP BY token
-        ), rtotal AS (SELECT sum(n) AS t FROM rcounts),
-        rtop AS (SELECT token, n FROM rcounts ORDER BY n DESC, token LIMIT 300),
-        rkept AS (SELECT count(*) AS v FROM rtop),
-        rlm AS (
-            SELECT token, ln((n + 1.0) / (t + v + 1)) AS lp FROM rtop, rtotal, rkept
-        ),
-        roov AS (SELECT -ln(CAST(t + v + 1 AS DOUBLE)) AS o FROM rtotal, rkept),
-        tcounts AS (
-            SELECT token, count(*) AS n FROM ttok GROUP BY token
-        ), ttotal AS (SELECT sum(n) AS t FROM tcounts),
-        ttop AS (SELECT token, n FROM tcounts ORDER BY n DESC, token LIMIT 300),
-        tkept AS (SELECT count(*) AS v FROM ttop),
-        tlm AS (
-            SELECT token, ln((n + 1.0) / (t + v + 1)) AS lp FROM ttop, ttotal, tkept
-        ),
-        toov AS (SELECT -ln(CAST(t + v + 1 AS DOUBLE)) AS o FROM ttotal, tkept),
-        vocab AS (
-            SELECT coalesce(tlm.token, rlm.token) AS token,
-                   tlm.lp AS lp_t, rlm.lp AS lp_r
-            FROM tlm FULL OUTER JOIN rlm ON tlm.token = rlm.token
-        )
-        SELECT tok.doc_id,
-               CAST(count(*) AS BIGINT) AS n_tokens,
-               ROUND(sum(coalesce(vocab.lp_t, toov.o)
-                         - coalesce(vocab.lp_r, roov.o)), 6) AS log_weight
-        FROM tok LEFT JOIN vocab USING (token), toov, roov
-        GROUP BY tok.doc_id
-        ORDER BY log_weight DESC, doc_id ASC
-        LIMIT 200
-    """,
-    "cql2_text": """
-        SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders
-        WHERE (o_totalprice BETWEEN 1000.0 AND 50000.0
-               OR o_orderpriority IN ('1-URGENT', '2-HIGH'))
-          AND o_orderpriority NOT LIKE '%LOW%'
-          AND o_orderstatus <> 'P'
-          AND o_orderdate >= DATE '1995-01-01'
-    """,
-    # first-occurrence novelty replayed on the string grams (the Spark
-    # side joins on xxhash64(gram); min-per-gram is hash-invariant)
-    "ngram_novelty": f"""
-        WITH sh AS ({_SHINGLES_SQL}),
-        firsts AS (
-            SELECT g, MIN(doc_id) AS first_doc
-            FROM (SELECT doc_id, unnest(s) AS g FROM sh) GROUP BY g
-        ),
-        novel AS (
-            SELECT first_doc AS doc_id, COUNT(*) AS n_novel
-            FROM firsts GROUP BY first_doc
-        )
-        SELECT sh.doc_id,
-               CAST(len(sh.s) AS BIGINT) AS n_grams,
-               CAST(COALESCE(novel.n_novel, 0) AS BIGINT) AS n_novel,
-               ROUND(CAST(COALESCE(novel.n_novel, 0) AS DOUBLE)
-                     / len(sh.s), 6) AS novelty_frac
-        FROM sh LEFT JOIN novel USING (doc_id)
-    """,
-    # replay the HLL registers (same md5 hash, reg = h mod 512, rank
-    # via exact integer bit-length) and the estimator: the harmonic
-    # mean is the exact int64 sum Σ 2^(52-M_j) — zero registers
-    # contribute 2^52 each — so raw AND linear-counting branches are
-    # bit-identical; _HLL_C is alpha_512·512²·2^52 computed once in
-    # Python and embedded verbatim on both engines
-    "hll_distinct": f"""
-        WITH hv AS (
-            SELECT DISTINCT event_type,
-                   CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 18, 15)
-                        AS UBIGINT) AS BIGINT) AS h
-            FROM events
-        ), cells AS (
-            SELECT event_type, h % 512 AS reg,
-                   MAX(CASE WHEN h // 512 = 0 THEN 52
-                            ELSE 52 - length(bin(h // 512)) END) AS mx
-            FROM hv GROUP BY 1, 2
-        ), agg AS (
-            SELECT event_type,
-                   CAST(SUM(CAST(pow(2.0, 52 - mx) AS BIGINT)) AS BIGINT) AS zi_p,
-                   COUNT(*) AS np
-            FROM cells GROUP BY 1
-        )
-        SELECT event_type,
-               CAST(512 - np AS INT) AS zero_regs,
-               ROUND(CASE WHEN ({_HLL_C!r})
-                               / CAST(zi_p + (512 - np) * 4503599627370496
-                                      AS DOUBLE) <= 1280.0
-                           AND np < 512
-                          THEN 512.0 * ln(512.0 / CAST(512 - np AS DOUBLE))
-                          ELSE ({_HLL_C!r})
-                               / CAST(zi_p + (512 - np) * 4503599627370496
-                                      AS DOUBLE) END,
-                     4) AS est_distinct
-        FROM agg
-    """,
-    # replay the theta-sketch overlap: identical k=64 KMV sketches per
-    # side, θ = least k-th minimum (int64 comparisons — hashes
-    # overflow a double mantissa), counts below θ, then the same
-    # scale division / Jaccard ratio
-    "kmv_overlap": """
-        WITH ha AS (
-            SELECT DISTINCT CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 18, 15)
-                   AS UBIGINT) AS BIGINT) AS h
-            FROM events WHERE event_type = 'click'
-        ), hb AS (
-            SELECT DISTINCT CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 18, 15)
-                   AS UBIGINT) AS BIGINT) AS h
-            FROM events WHERE event_type = 'purchase'
-        ), ska AS (
-            SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) rn FROM ha)
-            WHERE rn <= 64
-        ), skb AS (
-            SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) rn FROM hb)
-            WHERE rn <= 64
-        ), th AS (
-            SELECT LEAST(
-                CASE WHEN (SELECT count(*) FROM ska) < 64
-                     THEN 1152921504606846976 ELSE (SELECT max(h) FROM ska) END,
-                CASE WHEN (SELECT count(*) FROM skb) < 64
-                     THEN 1152921504606846976 ELSE (SELECT max(h) FROM skb) END
-            ) AS t
-        ), cnt AS (
-            SELECT
-                (SELECT count(*) FROM ska, th WHERE h < t) AS n_a,
-                (SELECT count(*) FROM skb, th WHERE h < t) AS n_b,
-                (SELECT count(*) FROM ska JOIN skb USING (h), th
-                 WHERE h < t) AS n_inter,
-                (SELECT t FROM th) AS t
-        )
-        SELECT CAST(n_a AS INT) AS n_a, CAST(n_b AS INT) AS n_b,
-               CAST(n_inter AS INT) AS n_inter,
-               ROUND(n_a * (1152921504606846976.0 / CAST(t AS DOUBLE)), 4) AS est_a,
-               ROUND(n_b * (1152921504606846976.0 / CAST(t AS DOUBLE)), 4) AS est_b,
-               ROUND(n_inter * (1152921504606846976.0 / CAST(t AS DOUBLE)), 4)
-                   AS est_intersection,
-               ROUND(CASE WHEN n_a + n_b - n_inter = 0 THEN 0.0
-                          ELSE CAST(n_inter AS DOUBLE)
-                               / CAST(n_a + n_b - n_inter AS DOUBLE) END, 6)
-                   AS est_jaccard
-        FROM cnt
-    """,
-    # replay the line-dedup decision exactly: same 60-bit md5 line key
-    # (composite per-occurrence key for sub-10-char lines), same
-    # first-occurrence window ordered (doc_id, pos), same rejoin —
-    # string_agg skips the dropped (NULL) lines; COALESCE matches
-    # Spark's array_join('') on a doc whose every line was dropped
-    "line_dedup": """
-        WITH ls AS (
-            SELECT doc_id,
-                   unnest(string_split(text, chr(10))) AS line,
-                   unnest(range(0, len(string_split(text, chr(10))))) AS pos
-            FROM documents
-        ), keyed AS (
-            SELECT doc_id, pos, line,
-                   length(lower(trim(line))) >= 10 AS elig,
-                   CAST(CAST('0x' || substr(md5(
-                       CASE WHEN length(lower(trim(line))) >= 10
-                            THEN lower(trim(line))
-                            ELSE CAST(doc_id AS VARCHAR) || ':' ||
-                                 CAST(pos AS VARCHAR) || ':' ||
-                                 lower(trim(line)) END
-                   ), 18, 15) AS UBIGINT) AS BIGINT) AS k
-            FROM ls
-        ), flagged AS (
-            SELECT doc_id, pos, line,
-                   (NOT elig) OR
-                   row_number() OVER (PARTITION BY k ORDER BY doc_id, pos) = 1
-                       AS keep
-            FROM keyed
-        )
-        SELECT doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_lines,
-               CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-               COALESCE(
-                   string_agg(CASE WHEN keep THEN line END, chr(10)
-                              ORDER BY pos),
-                   '') AS text_deduped
-        FROM flagged GROUP BY doc_id
-    """,
-}
-
-# the streamed register store is bit-identical to the batch sketch
-# (max-merge is associative/commutative/idempotent), so the streaming
-# query shares the batch replay verbatim
-ORACLE_SQL["streaming_hll"] = ORACLE_SQL["hll_distinct"]
-
-# same fingerprints, bench semi join, islands, and token rebuild as
-# pipeline.contamination.decontaminate_spans (k=8, bench = doc_id%23)
-ORACLE_SQL["decontaminate"] = r"""
-    WITH t AS (
-        SELECT doc_id,
-               string_split_regex(lower(trim(text)), '\s+') AS toks
-        FROM documents
-    ), bw AS (
-        SELECT unnest(generate_series(1, len(toks) - 7)) AS i, toks
-        FROM t WHERE doc_id % 23 = 0 AND len(toks) >= 8
-    ), bfp AS (
-        SELECT DISTINCT
-               substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16) AS fp
-        FROM bw
-    ), w AS (
-        SELECT doc_id,
-               unnest(generate_series(1, len(toks) - 7)) AS i, toks
-        FROM t WHERE len(toks) >= 8
-    ), fps AS (
-        SELECT doc_id, i - 1 AS pos,
-               substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16) AS fp
-        FROM w
-    ), marked AS (
-        SELECT DISTINCT f.doc_id, f.pos FROM fps f JOIN bfp USING (fp)
-    ), mk AS (
-        SELECT doc_id, pos,
-               CASE WHEN pos - lag(pos, 1, -9) OVER
-                            (PARTITION BY doc_id ORDER BY pos) > 8
-                    THEN 1 ELSE 0 END AS nw
-        FROM marked
-    ), isl AS (
-        SELECT doc_id, pos,
-               sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-                             ROWS UNBOUNDED PRECEDING) AS isl
-        FROM mk
-    ), iv AS (
-        SELECT doc_id, min(pos) AS lo, max(pos) + 8 - 1 AS hi
-        FROM isl GROUP BY doc_id, isl
-    ), tok AS (
-        SELECT doc_id, unnest(generate_series(1, len(toks))) - 1 AS p,
-               toks
-        FROM t
-    ), tk AS (
-        SELECT doc_id, p, toks[p + 1] AS tk FROM tok
-    ), rm AS (
-        SELECT DISTINCT k.doc_id, k.p
-        FROM tk k JOIN iv ON k.doc_id = iv.doc_id
-                        AND k.p BETWEEN iv.lo AND iv.hi
-    ), kept AS (
-        SELECT tk.doc_id,
-               coalesce(string_agg(tk.tk, ' ' ORDER BY tk.p), '')
-                   AS clean_text
-        FROM tk LEFT JOIN rm ON tk.doc_id = rm.doc_id AND tk.p = rm.p
-        WHERE rm.p IS NULL
-        GROUP BY tk.doc_id
-    ), rmn AS (
-        SELECT doc_id, count(*) AS n_removed FROM rm GROUP BY doc_id
-    )
-    SELECT t.doc_id,
-           coalesce(k.clean_text, '') AS clean_text,
-           CAST(len(t.toks) AS BIGINT) AS n_tokens,
-           CAST(coalesce(rmn.n_removed, 0) AS BIGINT) AS n_removed
-    FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id
-           LEFT JOIN rmn ON t.doc_id = rmn.doc_id
-"""
-
 # same md5 bucket/sign hashes, integer raw counts, exact-int norm, and
 # per-dim rounded division as pipeline.text.hash_embed (dim=32)
-ORACLE_SQL["hash_embed"] = r"""
+_HASH_EMBED_SQL = r"""
     WITH t AS (
         SELECT doc_id,
                unnest(string_split_regex(lower(trim(text)), '\s+')) AS tk
@@ -6235,12 +6131,46 @@ ORACLE_SQL["hash_embed"] = r"""
     JOIN nrm ON d.doc_id = nrm.doc_id
 """
 
+
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle=_HASH_EMBED_SQL)
+def q_hash_embed(spark, sf):
+    """Feature-hashing text vectorizer (pipeline/text.py hash_embed,
+    the Weinberger et al. 2009 hashing trick): token → ±1 into
+    md5-bucket mod 32, L2-normalized — the zero-vocabulary text vector
+    feeding the ANN/clustering stack when no model embedding exists.
+    ONE partial-agged shuffle of (doc, bucket, ±1); the norm is an
+    exact int64 sum of squares so every value replays bit-for-bit.
+    Long-form (doc_id, pos, val) output for the value gate (same
+    convention as jl_projection). Serves from the frozen hashed-corpus
+    artifact (_hashed_vecs): the vectorization's one shuffle runs once
+    per session, queries are map-only over the persisted vectors."""
+    return _hashed_vecs(spark, sf).select(
+        "doc_id", F.posexplode("vec").alias("pos", "val")
+    )
+
+
+def _hashed_vecs(spark, sf) -> DataFrame:
+    """The hashing-trick corpus vectors as a frozen artifact: one
+    partial-agged shuffle at build, persisted per session/SF — the
+    model-free analogue of a stored embedding column. Serving queries
+    (posexplode, probe top-k) are then map-only/TakeOrdered jobs over
+    the in-memory vectors; at cluster scale this materialization is a
+    written column, not a per-query recompute."""
+    from stac_fastapi_duckdb_spark.pipeline.text import hash_embed
+
+    def build():
+        return hash_embed(_t(spark, sf, "documents"), dim=32)
+
+    return _artifact_df(spark, "hashed_vecs", sf, build)
+
+
 # re-derive the hash_embed vectors (identical CTEs) and replay the
 # dot-product scoring against doc 0's vector; the per-dim values are
 # rounded to 6 before the dot on BOTH sides, and the final score is
 # rounded to 6 (same absorption of sum-order ulps as embedding_topk)
-ORACLE_SQL["hashed_text_topk"] = (
-    "WITH he AS (" + ORACLE_SQL["hash_embed"] + ")"
+@query(
+    tags=("pipeline_op", "artifact", "scale_probe"),
+    oracle="WITH he AS (" + _HASH_EMBED_SQL + ")"
     + r"""
     SELECT d.doc_id,
            ROUND(SUM(d.val * p.val), 6) AS score
@@ -6249,88 +6179,113 @@ ORACLE_SQL["hashed_text_topk"] = (
     GROUP BY d.doc_id
     ORDER BY score DESC, d.doc_id ASC
     LIMIT 10
-"""
+""",
 )
+def q_hashed_text_topk(spark, sf):
+    """End-to-end model-free text retrieval: hash_embed the corpus
+    (32-dim hashing-trick vectors), take doc 0's vector as the probe,
+    return the 10 nearest other docs by dot product (vectors are
+    unit-normalized, so dot IS cosine). The probe side is a 1-row
+    broadcast; scoring is a map-only JVM zip_with fold feeding
+    TakeOrderedAndProject — the corpus is never shuffled. The oracle
+    re-derives the identical vectors and replays the scoring.
+    Both sides serve from the frozen hashed-corpus artifact
+    (_hashed_vecs, built once per session): the probe row is a bounded
+    1-row fetch from the persisted vectors and embeds as a literal, so
+    the timed query is ONE TakeOrdered job — previously the whole
+    vectorization pipeline ran twice (probe branch + corpus branch)
+    per invocation."""
+    from stac_fastapi_duckdb_spark.functions import vectors as V
 
-# same keys/window/rebuild as line_dedup, plus the standing-set anti
-# filter (base = docs ≡0 mod 7's eligible line keys)
-ORACLE_SQL["incremental_line_dedup"] = """
-    WITH ls AS (
-        SELECT doc_id,
-               unnest(string_split(text, chr(10))) AS line,
-               unnest(range(0, len(string_split(text, chr(10))))) AS pos
-        FROM documents WHERE doc_id % 7 <> 0
-    ), keyed AS (
-        SELECT doc_id, pos, line,
-               length(lower(trim(line))) >= 10 AS elig,
-               CAST(CAST('0x' || substr(md5(
-                   CASE WHEN length(lower(trim(line))) >= 10
-                        THEN lower(trim(line))
-                        ELSE CAST(doc_id AS VARCHAR) || ':' ||
-                             CAST(pos AS VARCHAR) || ':' ||
-                             lower(trim(line)) END
-               ), 18, 15) AS UBIGINT) AS BIGINT) AS k
-        FROM ls
-    ), base AS (
-        SELECT DISTINCT CAST(CAST('0x' || substr(md5(lower(trim(line))), 18, 15)
-               AS UBIGINT) AS BIGINT) AS k
-        FROM (
-            SELECT unnest(string_split(text, chr(10))) AS line
-            FROM documents WHERE doc_id % 7 = 0
+    vecs = _hashed_vecs(spark, sf)
+    probe_row = vecs.filter(F.col("doc_id") == 0).select("vec").collect()
+    probe_lit = F.array(
+        *[F.lit(float(x)) for x in probe_row[0]["vec"]]
+    )
+    return (
+        vecs.filter(F.col("doc_id") != 0)
+        .select(
+            "doc_id",
+            F.round(V.dot(F.col("vec"), probe_lit), 6).alias("score"),
         )
-        WHERE length(lower(trim(line))) >= 10
-    ), flagged AS (
-        SELECT doc_id, pos, line,
-               (NOT elig) OR (rn = 1 AND k NOT IN (SELECT k FROM base))
-                   AS keep
-        FROM (
-            SELECT *, row_number() OVER (PARTITION BY k
-                                         ORDER BY doc_id, pos) AS rn
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(10)
+    )
+
+
+# replay the line-dedup decision exactly: same 60-bit md5 line key
+# (composite per-occurrence key for sub-10-char lines), same
+# first-occurrence window ordered (doc_id, pos), same rejoin —
+# string_agg skips the dropped (NULL) lines; COALESCE matches
+# Spark's array_join('') on a doc whose every line was dropped
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle="""
+        WITH ls AS (
+            SELECT doc_id,
+                   unnest(string_split(text, chr(10))) AS line,
+                   unnest(range(0, len(string_split(text, chr(10))))) AS pos
+            FROM documents
+        ), keyed AS (
+            SELECT doc_id, pos, line,
+                   length(lower(trim(line))) >= 10 AS elig,
+                   CAST(CAST('0x' || substr(md5(
+                       CASE WHEN length(lower(trim(line))) >= 10
+                            THEN lower(trim(line))
+                            ELSE CAST(doc_id AS VARCHAR) || ':' ||
+                                 CAST(pos AS VARCHAR) || ':' ||
+                                 lower(trim(line)) END
+                   ), 18, 15) AS UBIGINT) AS BIGINT) AS k
+            FROM ls
+        ), flagged AS (
+            SELECT doc_id, pos, line,
+                   (NOT elig) OR
+                   row_number() OVER (PARTITION BY k ORDER BY doc_id, pos) = 1
+                       AS keep
             FROM keyed
         )
+        SELECT doc_id,
+               CAST(COUNT(*) AS BIGINT) AS n_lines,
+               CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+               COALESCE(
+                   string_agg(CASE WHEN keep THEN line END, chr(10)
+                              ORDER BY pos),
+                   '') AS text_deduped
+        FROM flagged GROUP BY doc_id
+    """)
+def q_line_dedup(spark, sf):
+    """Corpus-level exact line dedup, keep-first (pipeline/text.py
+    line_dedup — the CCNet / RefinedWeb boilerplate-line pass): a line
+    survives iff it is shorter than 10 trimmed chars or is the
+    corpus-first occurrence of its normalized form. Serves from the
+    frozen keep-verdict artifact (_flagged_lines_artifact — the
+    corpus-constant window decision, the production dedup-decision
+    sidecar), so the query is ONE groupBy(doc) whose single
+    collect_list yields totals, kept count, and the rejoined text —
+    no join back to the source, no per-query window shuffle. The
+    oracle replays key, window, and rebuild verbatim."""
+    from stac_fastapi_duckdb_spark.pipeline.text import line_dedup
+
+    return line_dedup(None, flagged=_flagged_lines_artifact(spark, sf))
+
+
+# the REGISTERED entity_match_pairs query runs in STAR mode (linear
+# pair output); the all-pairs _ENTITY_PAIRS_SQL below stays as the
+# edge feed for the entity_resolution CC replay
+@query(tags=("pipeline_op", "scale_probe"), oracle="""
+    WITH blk AS (
+        SELECT c_nationkey AS bk1, c_mktsegment AS bk2,
+               c_custkey AS id, c_name AS nm
+        FROM customer
+    ), grp AS (
+        SELECT bk1, bk2, MIN(id) AS cid FROM blk GROUP BY bk1, bk2
+        HAVING COUNT(*) >= 2 AND COUNT(*) <= 10000
     )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           COALESCE(
-               string_agg(CASE WHEN keep THEN line END, chr(10)
-                          ORDER BY pos),
-               '') AS text_deduped
-    FROM flagged GROUP BY doc_id
-"""
-
-ORACLE_SQL["ann_ivfpq_topk"] = _ivfpq_oracle_sql().format(
-    cents=_ivf_centroids_values_sql()
-)
-
-# the exactly-once sum-merge makes the streamed CMS cell table equal
-# the batch sketch — replay cells + probe estimates over events
-ORACLE_SQL["streaming_cms"] = f"""
-    WITH ev AS ({_EVENTS_SQL}), probes AS (
-        SELECT DISTINCT event_type FROM ev
-    ), cells AS (
-        SELECT CAST(CAST('0x' || substr(md5('cms-v1:' || CAST(r AS VARCHAR)
-                                        || ':' || event_type), 1, 8) AS UBIGINT)
-                    % 512 AS BIGINT) AS cell,
-               r
-        FROM ev, unnest(range(0, 4)) AS u(r)
-    ), sk AS (
-        SELECT r, cell, CAST(count(*) AS BIGINT) AS cnt
-        FROM cells GROUP BY r, cell
-    ), pc AS (
-        SELECT p.event_type, u.r,
-               CAST(CAST('0x' || substr(md5('cms-v1:' || CAST(u.r AS VARCHAR)
-                                        || ':' || p.event_type), 1, 8) AS UBIGINT)
-                    % 512 AS BIGINT) AS cell
-        FROM probes p, unnest(range(0, 4)) AS u(r)
-    )
-    SELECT event_type,
-           CAST(min(coalesce(sk.cnt, 0)) AS BIGINT) AS est_n
-    FROM pc LEFT JOIN sk ON pc.r = sk.r AND pc.cell = sk.cell
-    GROUP BY event_type
-"""
-
-
+    SELECT g.cid AS id_a, b.id AS id_b,
+           CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS dist
+    FROM grp g
+    JOIN blk a ON a.bk1 = g.bk1 AND a.bk2 = g.bk2 AND a.id = g.cid
+    JOIN blk b ON b.bk1 = g.bk1 AND b.bk2 = g.bk2 AND b.id > g.cid
+    WHERE levenshtein(a.nm, b.nm) <= 1
+""")
 def q_entity_match_pairs(spark, sf):
     """Record-linkage candidate+verify pairs (pipeline/entities.py):
     customers blocked on (nation, market segment), in-block STAR
@@ -6354,26 +6309,6 @@ def q_entity_match_pairs(spark, sf):
     )
 
 
-def q_entity_resolution(spark, sf):
-    """Entity clusters: verified match pairs → connected components
-    seeded with EVERY customer (singletons map to themselves);
-    entity_id = min custkey in the cluster. Oracle: min-label
-    propagation unrolled as chained CTEs (8 rounds ≫ observed cluster
-    diameter)."""
-    from stac_fastapi_duckdb_spark.pipeline.entities import resolve_entities
-
-    return resolve_entities(
-        _t(spark, sf, "customer"),
-        "c_custkey",
-        "c_name",
-        ["c_nationkey", "c_mktsegment"],
-        max_dist=1,
-    )
-
-
-QUERIES["entity_match_pairs"] = q_entity_match_pairs
-QUERIES["entity_resolution"] = q_entity_resolution
-
 _ENTITY_PAIRS_SQL = """
     WITH blk AS (
         SELECT c_nationkey AS bk1, c_mktsegment AS bk2,
@@ -6388,26 +6323,6 @@ _ENTITY_PAIRS_SQL = """
     FROM blk a
     JOIN blk b ON a.bk1 = b.bk1 AND a.bk2 = b.bk2 AND a.id < b.id
     JOIN ok ON a.bk1 = ok.bk1 AND a.bk2 = ok.bk2
-    WHERE levenshtein(a.nm, b.nm) <= 1
-"""
-
-# the REGISTERED entity_match_pairs query runs in STAR mode (linear
-# pair output); the all-pairs _ENTITY_PAIRS_SQL above stays as the
-# edge feed for the entity_resolution CC replay below
-ORACLE_SQL["entity_match_pairs"] = """
-    WITH blk AS (
-        SELECT c_nationkey AS bk1, c_mktsegment AS bk2,
-               c_custkey AS id, c_name AS nm
-        FROM customer
-    ), grp AS (
-        SELECT bk1, bk2, MIN(id) AS cid FROM blk GROUP BY bk1, bk2
-        HAVING COUNT(*) >= 2 AND COUNT(*) <= 10000
-    )
-    SELECT g.cid AS id_a, b.id AS id_b,
-           CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS dist
-    FROM grp g
-    JOIN blk a ON a.bk1 = g.bk1 AND a.bk2 = g.bk2 AND a.id = g.cid
-    JOIN blk b ON b.bk1 = g.bk1 AND b.bk2 = g.bk2 AND b.id > g.cid
     WHERE levenshtein(a.nm, b.nm) <= 1
 """
 
@@ -6434,9 +6349,43 @@ def _entity_cc_sql(rounds: int = 8) -> str:
     )
 
 
-ORACLE_SQL["entity_resolution"] = _entity_cc_sql()
+@query(tags=("pipeline_op", "quadratic_oracle", "scale_probe"), oracle=_entity_cc_sql())
+def q_entity_resolution(spark, sf):
+    """Entity clusters: verified match pairs → connected components
+    seeded with EVERY customer (singletons map to themselves);
+    entity_id = min custkey in the cluster. Oracle: min-label
+    propagation unrolled as chained CTEs (8 rounds ≫ observed cluster
+    diameter)."""
+    from stac_fastapi_duckdb_spark.pipeline.entities import resolve_entities
+
+    return resolve_entities(
+        _t(spark, sf, "customer"),
+        "c_custkey",
+        "c_name",
+        ["c_nationkey", "c_mktsegment"],
+        max_dist=1,
+    )
 
 
+@query(tags=("pipeline_op", "scale_probe"), oracle=f"""
+    WITH c AS (
+        SELECT user_id, ts, event_id, event_type,
+               lag(event_type) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id) AS prev
+        FROM {_EVENTS_SQL}
+    ), k AS (
+        SELECT user_id, ts, event_id, event_type FROM c
+        WHERE prev IS NULL OR prev <> event_type
+    ), iv AS (
+        SELECT user_id, event_type, ts AS valid_from,
+               lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                   AS valid_to
+        FROM k
+    )
+    SELECT user_id, event_type, valid_from, valid_to FROM iv
+    WHERE valid_from <= TIMESTAMP '2024-01-15 00:00:00'
+      AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-15 00:00:00')
+""")
 def q_scd2_as_of(spark, sf):
     """Time-travel snapshot: rebuild the SCD2 dimension from the events
     changelog, then read every user's state as of 2024-01-15T00:00Z —
@@ -6459,57 +6408,7 @@ def q_scd2_as_of(spark, sf):
     return snapshot_as_of(dim, "2024-01-15 00:00:00")
 
 
-QUERIES["scd2_as_of"] = q_scd2_as_of
-
-ORACLE_SQL["scd2_as_of"] = f"""
-    WITH c AS (
-        SELECT user_id, ts, event_id, event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-        FROM {_EVENTS_SQL}
-    ), k AS (
-        SELECT user_id, ts, event_id, event_type FROM c
-        WHERE prev IS NULL OR prev <> event_type
-    ), iv AS (
-        SELECT user_id, event_type, ts AS valid_from,
-               lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   AS valid_to
-        FROM k
-    )
-    SELECT user_id, event_type, valid_from, valid_to FROM iv
-    WHERE valid_from <= TIMESTAMP '2024-01-15 00:00:00'
-      AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-15 00:00:00')
-"""
-
-
-def q_phash_near_dup(spark, sf):
-    """Perceptual-hash media near-dup (pipeline/multimodal.py
-    perceptual_hash + phash_near_dup_pairs): block-average aHash over
-    the decoded sample stream, pigeonhole band buckets, exact Hamming
-    verify. The media table plants a same-length "re-encoded" twin for
-    every document (value noise on a fixed grid — the scenario aHash
-    is built for: hamming 0-4 vs ≥13 for unrelated pairs here, like a
-    re-compressed image; geometry changes are NOT matched, by design).
-    With the stub codec samples are code points; a real deployment
-    decodes pixel luma into the same plan. Oracle: the full bit-vote +
-    banding + Hamming replay in SQL."""
-    from stac_fastapi_duckdb_spark.pipeline.multimodal import phash_near_dup_pairs
-
-    docs = _t(spark, sf, "documents")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
-    twins = docs.select(
-        (F.col("doc_id") + 1000000).alias("media_id"),
-        F.encode(F.translate(F.col("text"), "e", "f"), "UTF-8").alias("payload"),
-    )
-    return phash_near_dup_pairs(base.unionByName(twins), max_hamming=6)
-
-
-QUERIES["phash_near_dup"] = q_phash_near_dup
-
-ORACLE_SQL["phash_near_dup"] = """
+_PHASH_PAIRS_SQL = """
     WITH media AS (
         SELECT doc_id AS id, text AS s FROM documents
         UNION ALL
@@ -6563,42 +6462,36 @@ ORACLE_SQL["phash_near_dup"] = """
 """
 
 
-def q_span_dedup(spark, sf):
-    """ExactSubstr-style repeated-span dedup (pipeline/text.py
-    span_dedup — Lee et al. 2022 semantics, suffix array replaced by
-    the distributed k-token window-hash construction): every 4-token
-    window is hashed; windows whose hash occurred earlier in corpus
-    order are duplicates; covered tokens are removed keeping the
-    corpus-first occurrence. The dup-position map serves from the
-    frozen sidecar (_span_dup_map_artifact), so the query is the
-    map-only tokenize + one rebuild join. Oracle: verbatim hash +
-    keep-first window + coverage + rebuild replay in SQL."""
-    from stac_fastapi_duckdb_spark.pipeline.text import span_dedup
+# quadratic_oracle, like phash_dedup_map and entity_resolution: the
+# banded-pair-join and unrolled-CC replays took 55/96/34 s in DuckDB at
+# sf0.1 (vs 8.4/6.0/4.9 s Spark) and run for hours at sf1
+@query(tags=("pipeline_op", "quadratic_oracle", "scale_probe"), oracle=_PHASH_PAIRS_SQL)
+def q_phash_near_dup(spark, sf):
+    """Perceptual-hash media near-dup (pipeline/multimodal.py
+    perceptual_hash + phash_near_dup_pairs): block-average aHash over
+    the decoded sample stream, pigeonhole band buckets, exact Hamming
+    verify. The media table plants a same-length "re-encoded" twin for
+    every document (value noise on a fixed grid — the scenario aHash
+    is built for: hamming 0-4 vs ≥13 for unrelated pairs here, like a
+    re-compressed image; geometry changes are NOT matched, by design).
+    With the stub codec samples are code points; a real deployment
+    decodes pixel luma into the same plan. Oracle: the full bit-vote +
+    banding + Hamming replay in SQL."""
+    from stac_fastapi_duckdb_spark.pipeline.multimodal import phash_near_dup_pairs
 
-    return span_dedup(
-        _t(spark, sf, "documents"),
-        k=4,
-        dup_map=_span_dup_map_artifact(spark, sf),
+    docs = _t(spark, sf, "documents")
+    base = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.encode("text", "UTF-8").alias("payload"),
     )
+    twins = docs.select(
+        (F.col("doc_id") + 1000000).alias("media_id"),
+        F.encode(F.translate(F.col("text"), "e", "f"), "UTF-8").alias("payload"),
+    )
+    return phash_near_dup_pairs(base.unionByName(twins), max_hamming=6)
 
 
-def _span_dup_map_artifact(spark, sf) -> DataFrame:
-    """The corpus-constant dup-position map of span_dedup
-    (``span_dup_map`` at k=4: doc_id, _dup_pos) as a FROZEN artifact —
-    affected-docs cardinality, one explode + one hash-window shuffle
-    at build, persisted once per session/SF (the written ExactSubstr
-    sidecar)."""
-    from stac_fastapi_duckdb_spark.pipeline.text import span_dup_map
-
-    def build():
-        return span_dup_map(_t(spark, sf, "documents"), k=4)
-
-    return _artifact_df(spark, "span_dup_map", sf, build)
-
-
-QUERIES["span_dedup"] = q_span_dedup
-
-ORACLE_SQL["span_dedup"] = """
+@query(tags=("pipeline_op", "artifact", "scale_probe"), oracle="""
     WITH toks AS (
         SELECT doc_id,
                list_filter(string_split_regex(text, '\\s+'),
@@ -6643,32 +6536,38 @@ ORACLE_SQL["span_dedup"] = """
            COALESCE(a.n_removed, 0) AS n_removed,
            COALESCE(a.text_deduped, '') AS text_deduped
     FROM toks t LEFT JOIN agg a USING (doc_id)
-"""
+""")
+def q_span_dedup(spark, sf):
+    """ExactSubstr-style repeated-span dedup (pipeline/text.py
+    span_dedup — Lee et al. 2022 semantics, suffix array replaced by
+    the distributed k-token window-hash construction): every 4-token
+    window is hashed; windows whose hash occurred earlier in corpus
+    order are duplicates; covered tokens are removed keeping the
+    corpus-first occurrence. The dup-position map serves from the
+    frozen sidecar (_span_dup_map_artifact), so the query is the
+    map-only tokenize + one rebuild join. Oracle: verbatim hash +
+    keep-first window + coverage + rebuild replay in SQL."""
+    from stac_fastapi_duckdb_spark.pipeline.text import span_dedup
 
-
-def q_mmr_rerank(spark, sf):
-    """MMR diversified top-k (pipeline/similarity.py mmr_rerank,
-    Carbonell & Goldstein 1998): cosine top-64 candidate pool against
-    vec_id 0, then 8 greedy rounds of lam*rel - (1-lam)*max-sim-to-
-    selected, each round one distributed argmax. Oracle: the pool +
-    every greedy round unrolled as chained CTEs with the identical
-    floor-half-up 6dp rounding and id tie-break."""
-    from stac_fastapi_duckdb_spark.pipeline.similarity import mmr_rerank
-
-    emb = _t(spark, sf, "embeddings")
-    # probe via the pyarrow row-group point read (_probe_embedding) —
-    # the same zero-Spark-job fetch the ANN queries use; a filter +
-    # collect would schedule a job per query call for one row
-    return mmr_rerank(
-        emb.filter(F.col("vec_id") != 0),
-        _probe_embedding(sf, 0),
-        k=8,
-        pool=64,
-        lam=0.7,
+    return span_dedup(
+        _t(spark, sf, "documents"),
+        k=4,
+        dup_map=_span_dup_map_artifact(spark, sf),
     )
 
 
-QUERIES["mmr_rerank"] = q_mmr_rerank
+def _span_dup_map_artifact(spark, sf) -> DataFrame:
+    """The corpus-constant dup-position map of span_dedup
+    (``span_dup_map`` at k=4: doc_id, _dup_pos) as a FROZEN artifact —
+    affected-docs cardinality, one explode + one hash-window shuffle
+    at build, persisted once per session/SF (the written ExactSubstr
+    sidecar)."""
+    from stac_fastapi_duckdb_spark.pipeline.text import span_dup_map
+
+    def build():
+        return span_dup_map(_t(spark, sf, "documents"), k=4)
+
+    return _artifact_df(spark, "span_dup_map", sf, build)
 
 
 def _mmr_oracle_sql(k: int = 8, pool: int = 64, lam: float = 0.7) -> str:
@@ -6724,26 +6623,30 @@ def _mmr_oracle_sql(k: int = 8, pool: int = 64, lam: float = 0.7) -> str:
     return ",\n".join(parts) + f"\nSELECT * FROM ({finals}) ORDER BY rank"
 
 
-ORACLE_SQL["mmr_rerank"] = _mmr_oracle_sql()
+@query(tags=("pipeline_op", "scale_probe"), oracle=_mmr_oracle_sql())
+def q_mmr_rerank(spark, sf):
+    """MMR diversified top-k (pipeline/similarity.py mmr_rerank,
+    Carbonell & Goldstein 1998): cosine top-64 candidate pool against
+    vec_id 0, then 8 greedy rounds of lam*rel - (1-lam)*max-sim-to-
+    selected, each round one distributed argmax. Oracle: the pool +
+    every greedy round unrolled as chained CTEs with the identical
+    floor-half-up 6dp rounding and id tie-break."""
+    from stac_fastapi_duckdb_spark.pipeline.similarity import mmr_rerank
 
-
-def q_seasonal_decompose(spark, sf):
-    """Additive seasonal decomposition of the per-type hourly event
-    series (operators/analytics.py seasonal_decompose_hourly): centered
-    25-row moving-average trend, hour-of-day seasonal means of the
-    detrended series, residual — interior (full-window) rows only so
-    every mean is an exact integer sum with ONE division. Oracle: the
-    identical rollup + window + seasonal-mean replay."""
-    from stac_fastapi_duckdb_spark.operators.analytics import (
-        seasonal_decompose_hourly,
+    emb = _t(spark, sf, "embeddings")
+    # probe via the pyarrow row-group point read (_probe_embedding) —
+    # the same zero-Spark-job fetch the ANN queries use; a filter +
+    # collect would schedule a job per query call for one row
+    return mmr_rerank(
+        emb.filter(F.col("vec_id") != 0),
+        _probe_embedding(sf, 0),
+        k=8,
+        pool=64,
+        lam=0.7,
     )
 
-    return seasonal_decompose_hourly(_events(spark, sf))
 
-
-QUERIES["seasonal_decompose"] = q_seasonal_decompose
-
-ORACLE_SQL["seasonal_decompose"] = f"""
+@query(tags=("pipeline_op", "scale_probe"), oracle=f"""
     WITH hourly AS (
         SELECT event_type, date_trunc('hour', ts) AS bucket,
                CAST(COUNT(*) AS BIGINT) AS y
@@ -6774,9 +6677,30 @@ ORACLE_SQL["seasonal_decompose"] = f"""
                   - s.seasonal) * 1e6 + 0.5) / 1e6 AS residual
     FROM interior i JOIN seas s USING (event_type, hod)
     ORDER BY i.event_type, i.bucket
-"""
+""")
+def q_seasonal_decompose(spark, sf):
+    """Additive seasonal decomposition of the per-type hourly event
+    series (operators/analytics.py seasonal_decompose_hourly): centered
+    25-row moving-average trend, hour-of-day seasonal means of the
+    detrended series, residual — interior (full-window) rows only so
+    every mean is an exact integer sum with ONE division. Oracle: the
+    identical rollup + window + seasonal-mean replay."""
+    from stac_fastapi_duckdb_spark.operators.analytics import (
+        seasonal_decompose_hourly,
+    )
+
+    return seasonal_decompose_hourly(_events(spark, sf))
 
 
+@query(tags=("pipeline_op",), oracle=f"""
+    SELECT user_id, event_id, ts, event_type, value FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY user_id ORDER BY ts DESC, event_id DESC
+        ) AS rn
+        FROM {_EVENTS_SQL}
+    ) WHERE rn = 1
+    ORDER BY user_id
+""")
 def q_streaming_upsert(spark, sf):
     """Continuously-maintained keyed LWW upsert store
     (streaming/upsert.py streaming_upsert): per-micro-batch winners
@@ -6792,19 +6716,19 @@ def q_streaming_upsert(spark, sf):
     ).orderBy("user_id")
 
 
-QUERIES["streaming_upsert"] = q_streaming_upsert
-
-ORACLE_SQL["streaming_upsert"] = f"""
-    SELECT user_id, event_id, ts, event_type, value FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY user_id ORDER BY ts DESC, event_id DESC
-        ) AS rn
-        FROM {_EVENTS_SQL}
-    ) WHERE rn = 1
-    ORDER BY user_id
-"""
-
-
+@query(tags=("pipeline_op",), oracle="""
+    SELECT doc_id, lang, sample_rank FROM (
+        SELECT doc_id, lang,
+               row_number() OVER (
+                   PARTITION BY lang
+                   ORDER BY CAST(CAST('0x' || substr(md5(
+                       'ses-v1' || CAST(doc_id AS VARCHAR)), 18, 15)
+                       AS UBIGINT) AS BIGINT) ASC,
+                   doc_id ASC
+               ) AS sample_rank
+        FROM documents
+    ) WHERE sample_rank <= 20
+""")
 def q_stratified_exact_sample(spark, sf):
     """Exact-quota stratified sampling (pipeline/sampling.py
     stratified_exact_sample): 20 documents per language, ranked by the
@@ -6818,39 +6742,7 @@ def q_stratified_exact_sample(spark, sf):
     return stratified_exact_sample(docs, "lang", 20, "doc_id")
 
 
-QUERIES["stratified_exact_sample"] = q_stratified_exact_sample
-
-ORACLE_SQL["stratified_exact_sample"] = """
-    SELECT doc_id, lang, sample_rank FROM (
-        SELECT doc_id, lang,
-               row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY CAST(CAST('0x' || substr(md5(
-                       'ses-v1' || CAST(doc_id AS VARCHAR)), 18, 15)
-                       AS UBIGINT) AS BIGINT) ASC,
-                   doc_id ASC
-               ) AS sample_rank
-        FROM documents
-    ) WHERE sample_rank <= 20
-"""
-
-
-def q_attribution(spark, sf):
-    """Last-touch attribution (operators/analytics.py
-    last_touch_attribution): purchases credited to the user's most
-    recent view/click within 24h — one union + running
-    last(ignorenulls) window, ties total-ordered by (ts, side,
-    event_id). Oracle: identical union + IGNORE NULLS window replay."""
-    from stac_fastapi_duckdb_spark.operators.analytics import (
-        last_touch_attribution,
-    )
-
-    return last_touch_attribution(_events(spark, sf))
-
-
-QUERIES["attribution"] = q_attribution
-
-ORACLE_SQL["attribution"] = f"""
+@query(tags=("pipeline_op", "scale_probe"), oracle=f"""
     WITH u AS (
         SELECT user_id AS u, ts AS t, 0 AS side, event_id AS id,
                {{'sid': event_id, 'stype': event_type, 'sts': ts}} AS src
@@ -6880,9 +6772,52 @@ ORACLE_SQL["attribution"] = f"""
                 THEN (epoch_us(t) - epoch_us(lastsrc.sts)) // 1000000
                 END AS lag_sec
     FROM c WHERE side = 1
-"""
+""")
+def q_attribution(spark, sf):
+    """Last-touch attribution (operators/analytics.py
+    last_touch_attribution): purchases credited to the user's most
+    recent view/click within 24h — one union + running
+    last(ignorenulls) window, ties total-ordered by (ts, side,
+    event_id). Oracle: identical union + IGNORE NULLS window replay."""
+    from stac_fastapi_duckdb_spark.operators.analytics import (
+        last_touch_attribution,
+    )
+
+    return last_touch_attribution(_events(spark, sf))
 
 
+def _phash_cc_sql(rounds: int = 6) -> str:
+    """Unrolled min-label closure over the phash pair replay. The pair
+    subquery is MATERIALIZED once (it's the expensive part — the e CTE
+    references it for both edge directions)."""
+    pairs = _PHASH_PAIRS_SQL.strip()
+    assert pairs.startswith("WITH ")
+    # splice the pair replay in as a prefix CTE chain: rename its final
+    # SELECT into a CTE by wrapping the whole statement
+    ctes = [
+        f"p AS MATERIALIZED ({pairs})",
+        "ids AS (SELECT doc_id AS media_id FROM documents"
+        " UNION ALL SELECT doc_id + 1000000 FROM documents)",
+        "e AS (SELECT id_a AS n, id_b AS m FROM p"
+        " UNION ALL SELECT id_b, id_a FROM p)",
+        "l0 AS (SELECT media_id AS n, media_id AS comp FROM ids)",
+    ]
+    for i in range(rounds):
+        ctes.append(
+            f"l{i + 1} AS (SELECT l.n,"
+            f" LEAST(l.comp, COALESCE(MIN(r.comp), l.comp)) AS comp"
+            f" FROM l{i} l LEFT JOIN e ON l.n = e.n"
+            f" LEFT JOIN l{i} r ON e.m = r.n"
+            f" GROUP BY l.n, l.comp)"
+        )
+    return (
+        "WITH "
+        + ",\n".join(ctes)
+        + f"\nSELECT n AS media_id, comp AS canonical_id FROM l{rounds}"
+    )
+
+
+@query(tags=("pipeline_op", "quadratic_oracle"), oracle=_phash_cc_sql())
 def q_phash_dedup_map(spark, sf):
     """Media dedup map: phash near-dup pairs resolved to a
     media_id → canonical_id assignment via the shared
@@ -6912,43 +6847,22 @@ def q_phash_dedup_map(spark, sf):
     return comp.select("media_id", F.col("component").alias("canonical_id"))
 
 
-QUERIES["phash_dedup_map"] = q_phash_dedup_map
-
-
-def _phash_cc_sql(rounds: int = 6) -> str:
-    """Unrolled min-label closure over the phash pair replay. The pair
-    subquery is MATERIALIZED once (it's the expensive part — the e CTE
-    references it for both edge directions)."""
-    pairs = ORACLE_SQL["phash_near_dup"].strip()
-    assert pairs.startswith("WITH ")
-    # splice the pair replay in as a prefix CTE chain: rename its final
-    # SELECT into a CTE by wrapping the whole statement
-    ctes = [
-        f"p AS MATERIALIZED ({pairs})",
-        "ids AS (SELECT doc_id AS media_id FROM documents"
-        " UNION ALL SELECT doc_id + 1000000 FROM documents)",
-        "e AS (SELECT id_a AS n, id_b AS m FROM p"
-        " UNION ALL SELECT id_b, id_a FROM p)",
-        "l0 AS (SELECT media_id AS n, media_id AS comp FROM ids)",
-    ]
-    for i in range(rounds):
-        ctes.append(
-            f"l{i + 1} AS (SELECT l.n,"
-            f" LEAST(l.comp, COALESCE(MIN(r.comp), l.comp)) AS comp"
-            f" FROM l{i} l LEFT JOIN e ON l.n = e.n"
-            f" LEFT JOIN l{i} r ON e.m = r.n"
-            f" GROUP BY l.n, l.comp)"
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT n AS media_id, comp AS canonical_id FROM l{rounds}"
+@query(tags=("pipeline_op", "scale_probe"), oracle=f"""
+    WITH v AS (
+        SELECT event_id AS view_id, user_id, ts AS v_start,
+               ts + INTERVAL 30 MINUTES AS v_end
+        FROM {_EVENTS_SQL} WHERE event_type = 'view'
+    ), b AS (
+        SELECT event_id AS buy_id, user_id, ts - INTERVAL 1 HOUR AS b_start,
+               ts AS b_end
+        FROM {_EVENTS_SQL} WHERE event_type = 'purchase'
     )
-
-
-ORACLE_SQL["phash_dedup_map"] = _phash_cc_sql()
-
-
+    SELECT v.user_id, view_id, buy_id,
+           (epoch_us(least(v_end, b_end))
+            - epoch_us(greatest(v_start, b_start))) // 1000000 AS overlap_sec
+    FROM v JOIN b ON v.user_id = b.user_id
+       AND v.v_start <= b.b_end AND b.b_start <= v.v_end
+""")
 def q_interval_overlap(spark, sf):
     """Interval-overlap join (operators/rangejoin.py
     interval_overlap_join): per-user view windows [ts, ts+30min]
@@ -6985,53 +6899,7 @@ def q_interval_overlap(spark, sf):
     )
 
 
-QUERIES["interval_overlap"] = q_interval_overlap
-
-ORACLE_SQL["interval_overlap"] = f"""
-    WITH v AS (
-        SELECT event_id AS view_id, user_id, ts AS v_start,
-               ts + INTERVAL 30 MINUTES AS v_end
-        FROM {_EVENTS_SQL} WHERE event_type = 'view'
-    ), b AS (
-        SELECT event_id AS buy_id, user_id, ts - INTERVAL 1 HOUR AS b_start,
-               ts AS b_end
-        FROM {_EVENTS_SQL} WHERE event_type = 'purchase'
-    )
-    SELECT v.user_id, view_id, buy_id,
-           (epoch_us(least(v_end, b_end))
-            - epoch_us(greatest(v_start, b_start))) // 1000000 AS overlap_sec
-    FROM v JOIN b ON v.user_id = b.user_id
-       AND v.v_start <= b.b_end AND b.b_start <= v.v_end
-"""
-
-
-def q_linear_attribution(spark, sf):
-    """Multi-touch linear attribution (operators/analytics.py
-    linear_attribution): every view/click in a purchase's 24h lookback
-    shares 1/n credit — composed from the granule range join; NULL-row
-    for unattributed purchases. Oracle: plain point-in-interval SQL
-    join + count window + anti-join replay."""
-    from stac_fastapi_duckdb_spark.operators.analytics import (
-        linear_attribution,
-    )
-
-    out = linear_attribution(_events(spark, sf))
-    credit6 = (
-        F.floor(F.col("credit") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    ).alias("credit")
-    return out.select(
-        "conversion_id",
-        "user_id",
-        "source_id",
-        "source_type",
-        "n_sources",
-        credit6,
-    )
-
-
-QUERIES["linear_attribution"] = q_linear_attribution
-
-ORACLE_SQL["linear_attribution"] = f"""
+@query(tags=("pipeline_op",), oracle=f"""
     WITH s AS (
         SELECT user_id, ts AS sts, event_id AS source_id,
                event_type AS source_type
@@ -7057,9 +6925,54 @@ ORACLE_SQL["linear_attribution"] = f"""
            CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR),
            CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)
     FROM c WHERE c.conversion_id NOT IN (SELECT conversion_id FROM credited)
-"""
+""")
+def q_linear_attribution(spark, sf):
+    """Multi-touch linear attribution (operators/analytics.py
+    linear_attribution): every view/click in a purchase's 24h lookback
+    shares 1/n credit — composed from the granule range join; NULL-row
+    for unattributed purchases. Oracle: plain point-in-interval SQL
+    join + count window + anti-join replay."""
+    from stac_fastapi_duckdb_spark.operators.analytics import (
+        linear_attribution,
+    )
+
+    out = linear_attribution(_events(spark, sf))
+    credit6 = (
+        F.floor(F.col("credit") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    ).alias("credit")
+    return out.select(
+        "conversion_id",
+        "user_id",
+        "source_id",
+        "source_type",
+        "n_sources",
+        credit6,
+    )
 
 
+@query(tags=("pipeline_op",), oracle="""
+    WITH feed AS (
+        SELECT doc_id,
+               CASE WHEN doc_id % 11 = 0 THEN '  ' ELSE text END AS text,
+               CASE WHEN doc_id % 13 = 0 THEN 'xx' ELSE lang END AS lang,
+               CASE WHEN doc_id % 17 = 0 THEN n_chars + 1 ELSE n_chars END
+                   AS n_chars
+        FROM documents
+    )
+    SELECT doc_id,
+           array_to_string(list_filter([
+               CASE WHEN COALESCE(length(trim(text)) > 0, FALSE)
+                    THEN NULL ELSE 'nonempty_text' END,
+               CASE WHEN COALESCE(lang IN ('en','de','fr','es','zh'), FALSE)
+                    THEN NULL ELSE 'known_lang' END,
+               CASE WHEN COALESCE(n_chars = length(text), FALSE)
+                    THEN NULL ELSE 'n_chars_consistent' END
+           ], x -> x IS NOT NULL), ',') AS failed_rules
+    FROM feed
+    WHERE NOT (COALESCE(length(trim(text)) > 0, FALSE)
+               AND COALESCE(lang IN ('en','de','fr','es','zh'), FALSE)
+               AND COALESCE(n_chars = length(text), FALSE))
+""")
 def q_quarantine(spark, sf):
     """Data-quality quarantine gate (pipeline/validate.py
     quarantine_split): documents checked against three loader rules —
@@ -7095,59 +7008,12 @@ def q_quarantine(spark, sf):
     )
 
 
-QUERIES["quarantine"] = q_quarantine
-
-ORACLE_SQL["quarantine"] = """
-    WITH feed AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 11 = 0 THEN '  ' ELSE text END AS text,
-               CASE WHEN doc_id % 13 = 0 THEN 'xx' ELSE lang END AS lang,
-               CASE WHEN doc_id % 17 = 0 THEN n_chars + 1 ELSE n_chars END
-                   AS n_chars
-        FROM documents
-    )
-    SELECT doc_id,
-           array_to_string(list_filter([
-               CASE WHEN COALESCE(length(trim(text)) > 0, FALSE)
-                    THEN NULL ELSE 'nonempty_text' END,
-               CASE WHEN COALESCE(lang IN ('en','de','fr','es','zh'), FALSE)
-                    THEN NULL ELSE 'known_lang' END,
-               CASE WHEN COALESCE(n_chars = length(text), FALSE)
-                    THEN NULL ELSE 'n_chars_consistent' END
-           ], x -> x IS NOT NULL), ',') AS failed_rules
-    FROM feed
-    WHERE NOT (COALESCE(length(trim(text)) > 0, FALSE)
-               AND COALESCE(lang IN ('en','de','fr','es','zh'), FALSE)
-               AND COALESCE(n_chars = length(text), FALSE))
-"""
-
-
 # ---------------------------------------------------------------------------
 # round 8: sequence packing + domain-mixture rebalancing
 # ---------------------------------------------------------------------------
 
 
-def q_pack_chunks(spark, sf):
-    """GPT-style concatenated-stream sequence packing
-    (pipeline/packing.py pack_chunks): within each of 8 md5-derived
-    shards, documents concatenate in id order into one token stream
-    sliced every 512 tokens; each document maps to its shard, token
-    offset, and chunk span (documents may span boundaries — the
-    no-padding pretraining layout). ONE window shuffle on the shard
-    key (the exclusive running token sum); shards are independent
-    packing workers, so parallelism scales with n_shards at any corpus
-    size. Oracle replays shard hash, running sum, and chunk arithmetic
-    verbatim."""
-    from stac_fastapi_duckdb_spark.pipeline.packing import pack_chunks
-
-    return pack_chunks(
-        _t(spark, sf, "documents"), ctx_len=512, n_shards=8
-    )
-
-
-QUERIES["pack_chunks"] = q_pack_chunks
-
-ORACLE_SQL["pack_chunks"] = """
+@query(tags=("pipeline_op", "scale_probe"), oracle="""
     WITH base AS (
         SELECT doc_id,
                CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
@@ -7175,31 +7041,30 @@ ORACLE_SQL["pack_chunks"] = """
                           - tok_offset // 512 + 1
                      ELSE 0 END AS BIGINT) AS n_chunks
     FROM off
-"""
+""")
+def q_pack_chunks(spark, sf):
+    """GPT-style concatenated-stream sequence packing
+    (pipeline/packing.py pack_chunks): within each of 8 md5-derived
+    shards, documents concatenate in id order into one token stream
+    sliced every 512 tokens; each document maps to its shard, token
+    offset, and chunk span (documents may span boundaries — the
+    no-padding pretraining layout). ONE window shuffle on the shard
+    key (the exclusive running token sum); shards are independent
+    packing workers, so parallelism scales with n_shards at any corpus
+    size. Oracle replays shard hash, running sum, and chunk arithmetic
+    verbatim."""
+    from stac_fastapi_duckdb_spark.pipeline.packing import pack_chunks
 
-
-def q_pack_greedy(spark, sf):
-    """No-split first-fit sequence packing (pipeline/packing.py
-    pack_greedy): within each shard, documents in id order fill
-    512-token bins; a doc that would overflow opens a new bin;
-    oversize docs get a flagged bin of their own — the
-    instruction-tuning layout where examples stay intact. The greedy
-    state is a nonlinear recurrence (no window/scan expresses it, and
-    a JVM fold accumulating assignments is O(shard²) — measured 9.7 s
-    at sf1), so it runs as an Arrow-batched LINEAR kernel per shard
-    (applyInPandas — the semdedup-GEMM precedent): one shard shuffle,
-    integer arithmetic over the batch. The oracle replays the
-    identical fold as a per-shard recursive CTE."""
-    from stac_fastapi_duckdb_spark.pipeline.packing import pack_greedy
-
-    return pack_greedy(
+    return pack_chunks(
         _t(spark, sf, "documents"), ctx_len=512, n_shards=8
     )
 
 
-QUERIES["pack_greedy"] = q_pack_greedy
-
-ORACLE_SQL["pack_greedy"] = """
+# iterative_oracle: the oracle is a per-shard recursive CTE, so DuckDB
+# re-joins the shard stream once per row (depth = rows/shard: ~60 at
+# sf0.01, ~6000 at sf1) while the Spark operator folds each shard in one
+# pass
+@query(tags=("pipeline_op", "iterative_oracle", "scale_probe"), oracle="""
     WITH RECURSIVE base AS (
         SELECT doc_id,
                CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
@@ -7236,9 +7101,39 @@ ORACLE_SQL["pack_greedy"] = """
         FROM rec r JOIN ord o ON o.shard = r.shard AND o.rn = r.rn + 1
     )
     SELECT doc_id, shard, bin, bin_offset, n_toks, oversize FROM rec
-"""
+""")
+def q_pack_greedy(spark, sf):
+    """No-split first-fit sequence packing (pipeline/packing.py
+    pack_greedy): within each shard, documents in id order fill
+    512-token bins; a doc that would overflow opens a new bin;
+    oversize docs get a flagged bin of their own — the
+    instruction-tuning layout where examples stay intact. The greedy
+    state is a nonlinear recurrence (no window/scan expresses it, and
+    a JVM fold accumulating assignments is O(shard²) — measured 9.7 s
+    at sf1), so it runs as an Arrow-batched LINEAR kernel per shard
+    (applyInPandas — the semdedup-GEMM precedent): one shard shuffle,
+    integer arithmetic over the batch. The oracle replays the
+    identical fold as a per-shard recursive CTE."""
+    from stac_fastapi_duckdb_spark.pipeline.packing import pack_greedy
+
+    return pack_greedy(
+        _t(spark, sf, "documents"), ctx_len=512, n_shards=8
+    )
 
 
+@query(tags=("pipeline_op", "scale_probe"), oracle="""
+    SELECT doc_id, source, sample_rank FROM (
+        SELECT doc_id, source,
+               row_number() OVER (
+                   PARTITION BY source
+                   ORDER BY CAST(CAST('0x' || substr(md5(
+                       'mix-v1' || CAST(doc_id AS VARCHAR)), 18, 15)
+                       AS UBIGINT) AS BIGINT) ASC,
+                   doc_id ASC
+               ) AS sample_rank
+        FROM documents
+    ) WHERE sample_rank <= CASE source WHEN 'src0' THEN 5 WHEN 'src1' THEN 10 WHEN 'src10' THEN 5 WHEN 'src11' THEN 10 WHEN 'src12' THEN 15 WHEN 'src13' THEN 20 WHEN 'src14' THEN 25 WHEN 'src15' THEN 5 WHEN 'src16' THEN 10 WHEN 'src17' THEN 15 WHEN 'src18' THEN 20 WHEN 'src19' THEN 25 WHEN 'src2' THEN 15 WHEN 'src3' THEN 20 WHEN 'src4' THEN 25 WHEN 'src5' THEN 5 WHEN 'src6' THEN 10 WHEN 'src7' THEN 15 WHEN 'src8' THEN 20 WHEN 'src9' THEN 25 ELSE 0 END
+""")
 def q_mixture_sample(spark, sf):
     """Target domain-mixture rebalancing (pipeline/sampling.py
     mixture_sample — the data-mixing step of a pretraining recipe,
@@ -7255,20 +7150,3 @@ def q_mixture_sample(spark, sf):
     weights = {f"src{i}": (i % 5) + 1 for i in range(20)}
     docs = _t(spark, sf, "documents").select("doc_id", "source")
     return mixture_sample(docs, weights, budget=300)
-
-
-QUERIES["mixture_sample"] = q_mixture_sample
-
-ORACLE_SQL["mixture_sample"] = """
-    SELECT doc_id, source, sample_rank FROM (
-        SELECT doc_id, source,
-               row_number() OVER (
-                   PARTITION BY source
-                   ORDER BY CAST(CAST('0x' || substr(md5(
-                       'mix-v1' || CAST(doc_id AS VARCHAR)), 18, 15)
-                       AS UBIGINT) AS BIGINT) ASC,
-                   doc_id ASC
-               ) AS sample_rank
-        FROM documents
-    ) WHERE sample_rank <= CASE source WHEN 'src0' THEN 5 WHEN 'src1' THEN 10 WHEN 'src10' THEN 5 WHEN 'src11' THEN 10 WHEN 'src12' THEN 15 WHEN 'src13' THEN 20 WHEN 'src14' THEN 25 WHEN 'src15' THEN 5 WHEN 'src16' THEN 10 WHEN 'src17' THEN 15 WHEN 'src18' THEN 20 WHEN 'src19' THEN 25 WHEN 'src2' THEN 15 WHEN 'src3' THEN 20 WHEN 'src4' THEN 25 WHEN 'src5' THEN 5 WHEN 'src6' THEN 10 WHEN 'src7' THEN 15 WHEN 'src8' THEN 20 WHEN 'src9' THEN 25 ELSE 0 END
-"""

@@ -29,7 +29,6 @@ def served(spark, tmp_path_factory):
     from tools.oracle_artifact_sql import SERVE_SQL, ArtifactCtx
 
     eq._ARTIFACT_CACHE.pop(spark, None)
-    eq._ANN_INDEX_CACHE.pop(spark, None)
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
         con.execute(
@@ -41,7 +40,6 @@ def served(spark, tmp_path_factory):
         ).save()
     yield eq, con, ArtifactCtx(SF)
     eq._ARTIFACT_CACHE.pop(spark, None)
-    eq._ANN_INDEX_CACHE.pop(spark, None)
     if old is None:
         os.environ.pop("SPARK_GRAFT_SIDECAR_DIR", None)
     else:
@@ -62,14 +60,13 @@ def _serve_names():
 
 
 def test_every_artifact_served_query_has_a_serve_form():
-    """Coverage guard: a query added to bench.py's ARTIFACT_SERVED set
-    (and having a full oracle) must ship a serve-from-artifact form,
-    or the --oracle-artifacts fairness table silently loses it."""
-    from bench import ARTIFACT_SERVED
-    from stac_fastapi_duckdb_spark.plans.entry_queries import ORACLE_SQL
+    """Coverage guard: a query tagged ``artifact`` must ship a
+    serve-from-artifact form, or the --oracle-artifacts fairness table
+    silently loses it."""
+    from stac_fastapi_duckdb_spark.plans.entry_queries import tagged
     from tools.oracle_artifact_sql import SERVE_SQL
 
-    missing = ARTIFACT_SERVED & set(ORACLE_SQL) - set(SERVE_SQL)
+    missing = set(tagged("artifact")) - set(SERVE_SQL)
     assert not missing, f"artifact-served queries without a serve form: {missing}"
 
 

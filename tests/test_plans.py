@@ -113,3 +113,28 @@ def test_survey2_parity_queries_inside_driver_snapshot_window():
     }
     missing = survey2 - set(first50)
     assert not missing, f"§2 parity queries outside the snapshot window: {missing}"
+
+
+def test_query_decorator_rejects_unknown_tag_and_duplicate_name():
+    """@query returns the plan function itself, and it validates before
+    it registers: a tag outside TAGS and a name already in the registry
+    both raise ValueError and leave the registry untouched."""
+    assert eq.QUERIES["pricing_summary"] is eq.q_pricing_summary
+    before = (dict(eq.QUERIES), dict(eq.ORACLE_SQL),
+              {t: eq.tagged(t) for t in eq.TAGS})
+
+    def q_registry_probe(spark, sf):
+        raise AssertionError("never built")
+
+    with pytest.raises(ValueError, match="unknown tags"):
+        eq.query(oracle="SELECT 1", tags=("headlines",))(q_registry_probe)
+
+    def q_pricing_summary(spark, sf):
+        raise AssertionError("never built")
+
+    with pytest.raises(ValueError, match="already registered"):
+        eq.query(oracle="SELECT 1")(q_pricing_summary)
+
+    after = (dict(eq.QUERIES), dict(eq.ORACLE_SQL),
+             {t: eq.tagged(t) for t in eq.TAGS})
+    assert after == before

@@ -600,7 +600,6 @@ FAMILIES = [
 
 def _fresh_session_caches(eq, spark):
     eq._ARTIFACT_CACHE.pop(spark, None)
-    eq._ANN_INDEX_CACHE.pop(spark, None)
 
 
 @pytest.mark.parametrize("accessor,family", FAMILIES)

@@ -12,7 +12,7 @@ Usage:
 
 FLAG is set to "1" for the B arm and removed for the A arm before each
 query's DataFrame is (re)built, so flags read at plan-construction time
-(e.g. SPARK_GRAFT_NO_SHUFFLE_HASH) take effect per invocation.
+(e.g. SPARK_GRAFT_CACHE_INPUTS) take effect per invocation.
 Timing = full materialization via the noop v2 sink (bench.py contract).
 """
 
@@ -29,11 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CACHE_INPUTS", "1")
 
 from stac_fastapi_duckdb_spark.plans import entry_queries as eq
+from stac_fastapi_duckdb_spark.plans.entry_queries import force
 from stac_fastapi_duckdb_spark.session import get_spark
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

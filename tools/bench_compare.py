@@ -17,7 +17,8 @@ Spark number there includes fixed micro-batch/state-store startup that
 a batch engine never pays and that amortizes over a stream's lifetime
 — value parity is what the oracle gate checks); and iterative fixed
 points whose unrolled-CTE oracle re-executes the upstream per round
-(see ITERATIVE_ORACLES).
+(the ``quadratic_oracle``, ``streaming_oracle`` and ``iterative_oracle``
+tags in plans/entry_queries.py say why each is excluded).
 """
 
 from __future__ import annotations
@@ -30,69 +31,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from bench import _EXTRA_OPS, BENCH_QUERIES
 from stac_fastapi_duckdb_spark.plans import entry_queries as eq
+from stac_fastapi_duckdb_spark.plans.entry_queries import force, tagged
 from stac_fastapi_duckdb_spark.session import get_spark
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-# oracles that are deliberately brute-force (O(n²) all-pairs checks of
-# an LSH operator): minutes-to-hours in DuckDB at sf0.1 — this is where
-# the Spark-side algorithm wins outright, not a timing comparison
-QUADRATIC_ORACLES = {
-    "minhash_near_dup",
-    "embedding_near_dup",
-    "ngram_jaccard",
-    # embeds the all-pairs Jaccard + unrolled label propagation replay
-    "cluster_representatives",
-    # banded-pair-join + unrolled connected-components replays: already
-    # 55/96/34 s in DuckDB at sf0.1 (vs 8.4/6.0/4.9 s Spark) and
-    # super-linear in SF — at sf1 they run for hours. Same asymmetry as
-    # the all-pairs Jaccard set: the oracle checks values, not strategy,
-    # so including them in the ratio total would flatter Spark with the
-    # oracle's restatement cost. Timed Spark-only.
-    "phash_near_dup",
-    "phash_dedup_map",
-    "entity_resolution",
-}
-
-# full Structured-Streaming engine runs whose oracle is a batch SQL
-# restatement: the Spark time is dominated by per-run stream startup
-# (offset log, state-store instances), a fixed cost a batch engine never
-# pays and that a real deployment pays once per stream, not per query —
-# reported Spark-only; the equivalent batch plan (events_hourly_rollup)
-# IS ratio-compared
-STREAMING_VS_BATCH = {"streaming_hourly_rollup"}
-
-# iterative fixed points have no native SQL form: the oracle unrolls
-# the loop as chained CTEs, and DuckDB re-executes the whole upstream
-# (here: the window-based edge extraction) once per unrolled round
-# while the Spark operator materializes it once.  Counting that replay
-# in the ratio would flatter Spark with the oracle's restatement cost,
-# symmetric to how QUADRATIC_ORACLES would flatter DuckDB — excluded
-# from the total, timed visibly
-ITERATIVE_ORACLES = {
-    "pagerank_transitions",
-    # the greedy bin-packing fold's oracle is a per-shard recursive
-    # CTE: DuckDB re-joins the shard stream once per row (depth =
-    # rows/shard — fine at sf0.01's ~60, quadratic-ish at sf1's
-    # ~6000), while the Spark operator folds each shard in one pass
-    "pack_greedy",
-}
-
-# Queries served from the WRITTEN artifact tier (see bench.py): their
-# timed Spark pass measures the serving slice over materialized state,
-# while the DuckDB oracle recomputes the full pipeline from base
-# parquet every run. They stay in the table with an `art` marker and
-# get their OWN subtotal so the headline live-compute ratio never
-# mixes probe-vs-recompute rows; run with --cold-artifacts to time
-# build+write+serve instead (fresh sidecar root + cleared session tier
-# before every timed run — the once-per-ingest cost).
-from bench import ARTIFACT_SERVED  # noqa: E402
-
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -137,7 +83,6 @@ def main() -> None:
         # drop the previous cold run's cached blocks — otherwise every
         # chill leaks a persisted artifact copy into the block manager
         _unpersist(eq._ARTIFACT_CACHE.pop(spark, {}) or {})
-        _unpersist(eq._ANN_INDEX_CACHE.pop(spark, {}) or {})
         while cold_roots:
             shutil.rmtree(cold_roots.pop(), ignore_errors=True)
         root = tempfile.mkdtemp(prefix="bench_cold_art_")
@@ -152,33 +97,29 @@ def main() -> None:
         print("artifact-served queries timed COLD (build+write+serve per run)")
     total_s = total_d = art_s = art_d = 0.0
     print(f"{'query':26s} {'':3s} {'spark':>8s} {'duckdb':>8s} {'ratio':>7s}")
-    for name in BENCH_QUERIES + _EXTRA_OPS:
+    artifact = set(tagged("artifact"))
+    spark_only = {
+        **dict.fromkeys(tagged("quadratic_oracle"), "O(n²)"),
+        **dict.fromkeys(tagged("streaming_oracle"), "stream"),
+        **dict.fromkeys(tagged("iterative_oracle"), "iter"),
+    }
+    for name in tagged("headline") + tagged("pipeline_op"):
         fn = eq.QUERIES[name]
-        is_art = name in ARTIFACT_SERVED
+        is_art = name in artifact
         mark = "art" if is_art else ""
 
         def run_spark() -> None:
             if cold_art and is_art:
                 _chill_artifacts()
-            _force(fn(spark, sf_dir))
+            force(fn(spark, sf_dir))
 
         run_spark()  # warm (in cold-art mode: warms scans, not artifacts)
         best_s = min(_timed(run_spark) for _ in range(2))
-        osql = eq.ORACLE_SQL.get(name)
-        if (
-            osql is None
-            or name in QUADRATIC_ORACLES
-            or name in STREAMING_VS_BATCH
-            or name in ITERATIVE_ORACLES
-        ):
-            tag = (
-                "O(n²)"
-                if name in QUADRATIC_ORACLES
-                else "stream" if name in STREAMING_VS_BATCH
-                else "iter" if name in ITERATIVE_ORACLES else "—"
-            )
+        if name in spark_only:
+            tag = spark_only[name]
             print(f"{name:26s} {mark:3s} {best_s:8.3f} {tag:>8s} {'—':>7s}")
             continue
+        osql = eq.ORACLE_SQL[name]
         con.execute(osql).fetchall()  # warm
         best_d = min(_timed(lambda: con.execute(osql).fetchall()) for _ in range(2))
         if is_art:
@@ -222,15 +163,15 @@ def _oracle_artifact_table(spark, con, sf_dir: str) -> None:
     timed."""
     from tools.oracle_artifact_sql import SERVE_SQL, ArtifactCtx, norm_rows
 
-    names = sorted(ARTIFACT_SERVED & set(SERVE_SQL) & set(eq.QUERIES))
+    names = sorted(set(tagged("artifact")) & set(SERVE_SQL))
     print("artifact-served queries: Spark warm serve vs DuckDB serve-from-artifact")
     print(f"{'query':26s} {'spark':>8s} {'serveSQL':>9s} {'fullSQL':>8s} {'ratio':>7s}  valid")
     tot_s = tot_d = tot_full = 0.0
     n_bad = 0
     for name in names:
         fn = eq.QUERIES[name]
-        _force(fn(spark, sf_dir))  # builds + warms the artifact tier
-        best_s = min(_timed(lambda: _force(fn(spark, sf_dir))) for _ in range(2))
+        force(fn(spark, sf_dir))  # builds + warms the artifact tier
+        best_s = min(_timed(lambda: force(fn(spark, sf_dir))) for _ in range(2))
         ctx = ArtifactCtx(sf_dir)
         try:
             serve_sql = SERVE_SQL[name](ctx)
@@ -272,11 +213,6 @@ def _oracle_artifact_table(spark, con, sf_dir: str) -> None:
     )
     if n_bad:
         print(f"WARNING: {n_bad} serve form(s) mismatched the full oracle — excluded")
-
-
-def _force(df) -> None:
-    """Full-plan execution via the noop v2 sink (see module docstring)."""
-    df.write.format("noop").mode("overwrite").save()
 
 
 def _timed(f) -> float:
