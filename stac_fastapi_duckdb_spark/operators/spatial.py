@@ -66,8 +66,9 @@ def _validate_bbox(bbox: Any) -> tuple[float, float, float, float]:
 def _intersects_udf(query_geojson: str):
     """Arrow-batched exact ST_Intersects against a fixed query geometry.
 
-    The query geometry is reconstructed once per executor batch from its
-    GeoJSON closure — tiny vs. Arrow transfer of the WKB column.
+    The query geometry is parsed once, here on the driver, and travels
+    to the workers pickled in the UDF's closure — tiny vs. Arrow transfer
+    of the WKB column.
     """
     qgeom = geo.from_geojson(json.loads(query_geojson))
 

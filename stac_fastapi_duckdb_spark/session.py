@@ -19,11 +19,13 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
-# Tuned for the local[32] test harness; on a real cluster these come
-# from spark-submit / cluster conf and the builder's .config calls are
-# no-ops against an existing session.
+# Defaults for a local[N] session: tests and benchmarks run at local[4]
+# (the shuffle and split sizes below were chosen at local[32]). On a real
+# cluster these come from spark-submit / cluster conf and the builder's
+# .config calls are no-ops against an existing session.
 _LOCAL_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -58,7 +60,14 @@ _LOCAL_DEFAULTS = {
     "spark.sql.warehouse.dir": os.environ.get(
         "SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"
     ),
+    # pyspark.daemon plus a guard that stops every Python task re-reading
+    # Spark's own zip archives (0.1-0.2 s per task; see worker_daemon.py)
+    "spark.python.daemon.module": "stac_fastapi_duckdb_spark.worker_daemon",
 }
+
+# The directory holding this package. Python workers need it on their path
+# to import the daemon above, whatever the driver's working directory.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "stac-spark-engine", master: str | None = None) -> SparkSession:
@@ -79,4 +88,13 @@ def get_spark(app_name: str = "stac-spark-engine", master: str | None = None) ->
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in _LOCAL_DEFAULTS.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return builder.config("spark.executorEnv.PYTHONPATH", _worker_pythonpath()).getOrCreate()
+
+
+def _worker_pythonpath() -> str:
+    """The package root ahead of the ``spark.executorEnv.PYTHONPATH`` a
+    running JVM already holds (one left by a session stopped earlier in
+    this process). Workers also inherit the driver's ``PYTHONPATH``."""
+    prior = SparkConf().get("spark.executorEnv.PYTHONPATH") or ""
+    paths = [_PACKAGE_ROOT] + [p for p in prior.split(os.pathsep) if p and p != _PACKAGE_ROOT]
+    return os.pathsep.join(paths)
