@@ -96,7 +96,7 @@ def aggregate_search(
             f"got {frequency_interval!r}"
         )
 
-    df = (
+    builder = (
         SearchBuilder(catalog)
         .apply_collections(collection_ids)
         .apply_ids(item_ids)
@@ -105,9 +105,9 @@ def aggregate_search(
         .apply_intersects(intersects)
         .apply_cql2(cql2_filter)
         .apply_stacql(query)
-        .dataframe()
     )
-    columns = set(df.columns)
+    df, columns = builder.dataframe_and_columns()
+    columns = set(columns)
 
     # validate everything BEFORE running any job (fail-closed, like the
     # CQL2 compiler): unknown scalar names / missing frequency fields

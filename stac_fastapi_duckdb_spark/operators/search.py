@@ -107,6 +107,12 @@ class SearchBuilder:
     # ------------------------------------------------------------------
     def dataframe(self) -> DataFrame:
         """Materialize the filtered union plan (no action yet)."""
+        return self.dataframe_and_columns()[0]
+
+    def dataframe_and_columns(self) -> tuple[DataFrame, list[str]]:
+        """The filtered union plan and the union's columns. Reading the
+        columns costs a py4j round trip and a schema parse, so callers
+        take them from here instead of asking the plan again."""
         sources = self.catalog.sources(self.collection_ids)
         if not sources:
             raise InvalidQueryError("No collections configured")
@@ -115,11 +121,12 @@ class SearchBuilder:
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             (d for _, d in sources),
         )
+        columns = df.columns
         preds = list(self._predicates)
-        preds.extend(fn(df.columns) for fn in self._deferred)
+        preds.extend(fn(columns) for fn in self._deferred)
         if preds:
             df = df.filter(reduce(lambda a, b: a & b, preds))  # P13 AND-fold
-        return df
+        return df, columns
 
 
 def execute_search(
@@ -165,10 +172,7 @@ def execute_search(
         .apply_cql2(cql2_filter)
         .apply_stacql(query)
     )
-    filtered = builder.dataframe()
-    columns = filtered.columns
-
-
+    filtered, columns = builder.dataframe_and_columns()
     sort_specs = [
         (resolve_sort_field(f, columns), d)
         for f, d in populate_sort(sortby)

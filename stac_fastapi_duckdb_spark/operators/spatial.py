@@ -12,9 +12,11 @@ environment): a two-phase predicate,
 
   1. FAST PATH (JVM, pushdownable): rectangle-overlap on the ``bbox``
      array column — plain min/max double comparisons that Catalyst
-     evaluates inside whole-stage codegen and (for struct-encoded
-     bboxes) pushes to parquet row-group stats. At 100 TB this prunes
-     the overwhelming majority of rows before any Python runs.
+     evaluates as a generated predicate in the JVM (sessions run
+     without whole-stage codegen, so a new bbox recompiles only that
+     one small class; session.py) and (for struct-encoded bboxes)
+     pushes to parquet row-group stats. At 100 TB this prunes the
+     overwhelming majority of rows before any Python runs.
   2. EXACT REFINE (Arrow-batched pandas UDF): pure-Python WKB
      ST_Intersects (functions/geo.py) over only the envelope-surviving
      candidates.

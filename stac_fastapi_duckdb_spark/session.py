@@ -51,8 +51,12 @@ _LOCAL_DEFAULTS = {
     # 16m (not the 128m default): the bench/test parquet is small and
     # zstd-compressed — at 128m even the 69 MB / 49-row-group sf1
     # lineitem scans as ONE task on 32 cores. At cluster scale this
-    # comes from cluster conf; 16m keeps local cold scans split
-    # wherever the files have row groups to split on.
+    # comes from cluster conf. 16m is only the ceiling: the split size is
+    # max(openCostInBytes = 4 MB, bytes per core), so at 4 cores a file
+    # of a few MB is still one split whatever its row groups (the
+    # benchmark's 4.2 MB / 6-row-group landsat file is scanned by one
+    # task). Lowering openCostInBytes made bbox searches slower (more
+    # Python tasks; PERF.md "Per-search driver cost").
     "spark.sql.files.maxPartitionBytes": "16m",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
@@ -63,6 +67,21 @@ _LOCAL_DEFAULTS = {
     # pyspark.daemon plus a guard that stops every Python task re-reading
     # Spark's own zip archives (0.1-0.2 s per task; see worker_daemon.py)
     "spark.python.daemon.module": "stac_fastapi_duckdb_spark.worker_daemon",
+    # No Python call-site capture: with it on, every F.col / F.lit / ...
+    # walks the stack, tries `import IPython` and makes ~5 extra py4j
+    # round trips, only to decorate error messages (a cql2 + datetime
+    # search builds its plan through 365 round trips instead of 95; PERF.md
+    # "Per-search driver cost"). Set it to true on a session of your own
+    # to get the Python line in DataFrame errors while debugging.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # No whole-stage codegen. With it, each scan -> filter -> project
+    # stage is one generated class whose Java source embeds the query's
+    # numeric and timestamp literals, so every new bbox, datetime or
+    # threshold compiled one class per collection, twice (on the driver,
+    # then in the task). Without it a filter is one small predicate class
+    # shared by all union branches. The sf0.1 operator batch measured no
+    # slower without it either (PERF.md "Per-search driver cost").
+    "spark.sql.codegen.wholeStage": "false",
 }
 
 # The directory holding this package. Python workers need it on their path
