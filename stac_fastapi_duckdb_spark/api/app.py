@@ -10,12 +10,14 @@ with the Fields / Query / Sort / Filter extensions;
 - ``GET /conformance``                       conformance classes
 - ``GET /collections``                       collection list
 - ``GET /collections/{cid}``                 one collection document
-- ``GET /collections/{cid}/items``           item search scoped to one
-  collection (bbox, datetime, limit, token, sortby, fields)
-- ``GET /collections/{cid}/items/{iid}``     single item
 - ``GET|POST /search``                       cross-collection search
   (collections, ids, bbox, intersects, datetime, limit, token, sortby,
-  fields, query, filter)
+  fields, query, filter, filter-lang)
+- ``GET /collections/{cid}/items``           the same search scoped to
+  one collection
+- ``GET /collections/{cid}/items/{iid}``     single item
+- ``GET /aggregations``, ``GET|POST /aggregate``  Aggregation extension
+  over the same filter inputs
 - ``GET /queryables`` and
   ``GET /collections/{cid}/queryables``      Filter-extension schema
 
@@ -40,6 +42,11 @@ from typing import Any
 from flask import Flask, Response, jsonify, request
 
 from stac_fastapi_duckdb_spark.errors import InvalidQueryError, NotFoundError
+from stac_fastapi_duckdb_spark.operators.aggregate import (
+    aggregate_search,
+    list_aggregations,
+)
+from stac_fastapi_duckdb_spark.operators.cql2_text import parse_cql2_text
 from stac_fastapi_duckdb_spark.operators.queryables import queryables
 from stac_fastapi_duckdb_spark.operators.search import execute_search, get_one_item
 from stac_fastapi_duckdb_spark.sources.catalog import CollectionCatalog
@@ -69,83 +76,131 @@ CONFORMANCE_CLASSES = [
 
 
 # ---------------------------------------------------------------------------
-# request parsing (GET query-string forms of the extension inputs)
+# request parsing: one GET-to-body conversion, one validator
 # ---------------------------------------------------------------------------
 
-def _parse_bbox(raw: str | None) -> list[float] | None:
-    if raw is None:
-        return None
-    try:
-        return [float(x) for x in raw.split(",")]
-    except ValueError:
-        raise InvalidQueryError(f"Invalid bbox {raw!r}")
+_LIST_FIELDS = ("collections", "ids", "sortby", "aggregations")
 
 
-def _parse_limit(raw: str | None, default: int = 10) -> int:
-    if raw is None:
-        return default
-    try:
-        return int(raw)
-    except ValueError:
-        raise InvalidQueryError(f"Invalid limit {raw!r}")
-
-
-def _parse_csv(raw: str | None) -> list[str] | None:
-    if raw is None:
-        return None
+def _csv(raw: str) -> list[str]:
     return [s for s in (p.strip() for p in raw.split(",")) if s]
 
 
-def _parse_json_param(raw: str | None, name: str) -> Any:
-    if raw is None:
-        return None
+def _fields_param(raw: str) -> dict | None:
+    """Fields GET syntax ``a,+b,-c``: bare/'+' names include, '-' exclude."""
+    parts = _csv(raw)
+    fields = {
+        "include": [p.lstrip("+") for p in parts if not p.startswith("-")],
+        "exclude": [p[1:] for p in parts if p.startswith("-")],
+    }
+    return {k: v for k, v in fields.items() if v} or None
+
+
+def _filter_param(raw: str) -> Any:
+    """A JSON object is cql2-json; any other filter string is cql2-text."""
     try:
-        return json.loads(raw)
+        parsed = json.loads(raw)
     except ValueError:
-        raise InvalidQueryError(f"Invalid JSON in {name!r}")
+        return raw
+    return parsed if isinstance(parsed, dict) else raw
 
 
-def _parse_filter(raw: str | None, lang: str | None) -> dict | None:
-    """Filter-extension GET param: ``filter-lang`` selects the encoding.
+# GET parameter → decoder of its string form; others pass through as
+# strings (datetime, token, filter-lang, frequency_interval)
+_GET_PARAMS = {
+    **dict.fromkeys(_LIST_FIELDS, _csv),
+    "intersects": json.loads,
+    "query": json.loads,
+    "bbox": lambda raw: [float(x) for x in raw.split(",")],
+    "limit": int,
+    "fields": _fields_param,
+    "filter": _filter_param,
+}
 
-    Per the STAC API Filter extension, the GET default encoding is
-    cql2-text; JSON is accepted when ``filter-lang=cql2-json`` (and,
-    for backward compatibility with clients that sent JSON without a
-    lang, when the value parses as a JSON object). Both encodings land
-    on the same dict AST → one Column compiler (operators/cql2.py).
-    """
-    if raw is None:
-        return None
-    from stac_fastapi_duckdb_spark.operators.cql2_text import parse_cql2_text
 
-    if lang == "cql2-json":
-        return _parse_json_param(raw, "filter")
-    if lang not in (None, "cql2-text"):
-        raise InvalidQueryError(f"Unsupported filter-lang {lang!r}")
-    if lang is None:
+def _query_to_body(args: Any) -> dict:
+    """GET query string → the POST body it encodes. The Item Search spec
+    defines each GET parameter as a string form of the POST field, so
+    only the encodings differ."""
+    body: dict[str, Any] = {}
+    for key, raw in args.items():
+        decode = _GET_PARAMS.get(key)
         try:
-            parsed = json.loads(raw)
+            value = decode(raw) if decode else raw
         except ValueError:
-            parsed = None
-        if isinstance(parsed, dict):
-            return parsed
-    return parse_cql2_text(raw)
+            raise InvalidQueryError(f"Invalid {key} {raw!r}")
+        if value is not None:
+            body[key] = value
+    return body
 
 
-def _parse_fields(raw: str | None) -> dict | None:
-    """Fields-extension GET syntax: ``a,b,-c`` — bare/'+' names include,
-    '-' names exclude; exclusions-only keeps everything else."""
-    parts = _parse_csv(raw)
-    if parts is None:
+def _resolve_filter(flt: Any, lang: Any) -> dict | None:
+    """``filter`` + ``filter-lang`` → the CQL2 dict AST. cql2-text is
+    the default for a string filter; both encodings land on one Column
+    compiler (operators/cql2.py)."""
+    if lang not in (None, "cql2-text", "cql2-json"):
+        raise InvalidQueryError(f"Unsupported filter-lang {lang!r}")
+    if flt is None:
         return None
-    include = [p.lstrip("+") for p in parts if not p.startswith("-")]
-    exclude = [p[1:] for p in parts if p.startswith("-")]
-    out: dict[str, Any] = {}
-    if include:
-        out["include"] = include
-    if exclude:
-        out["exclude"] = exclude
-    return out or None
+    if lang == "cql2-text" or (lang is None and isinstance(flt, str)):
+        if not isinstance(flt, str):
+            raise InvalidQueryError("cql2-text filter must be a string")
+        return parse_cql2_text(flt)
+    if not isinstance(flt, dict):
+        raise InvalidQueryError("cql2-json filter must be a JSON object")
+    return flt
+
+
+def _search_args(body: Any) -> tuple[dict, dict]:
+    """Validate a search body → (filter keywords of ``search_plan``,
+    page keywords of ``execute_search``). Every route's inputs, GET or
+    POST, pass through here."""
+    if not isinstance(body, dict):
+        raise InvalidQueryError("Request body must be a JSON object")
+    for key in _LIST_FIELDS:
+        if body.get(key) is not None and not isinstance(body[key], list):
+            raise InvalidQueryError(f"{key} must be a list, got {body[key]!r}")
+    for key in ("datetime", "token"):
+        if body.get(key) is not None and not isinstance(body[key], str):
+            raise InvalidQueryError(f"{key} must be a string, got {body[key]!r}")
+    fields = body.get("fields")
+    if fields is not None and not (
+        isinstance(fields, list)
+        or isinstance(fields, dict)
+        and set(fields) <= {"include", "exclude"}
+        and all(v is None or isinstance(v, list) for v in fields.values())
+    ):
+        raise InvalidQueryError(
+            f"fields must be a list or an {{include, exclude}} object, got {fields!r}"
+        )
+    limit = body.get("limit", 10)
+    if not isinstance(limit, int) or isinstance(limit, bool):
+        raise InvalidQueryError(f"Invalid limit {limit!r}")
+    bbox = body.get("bbox")
+    if bbox is not None and not isinstance(bbox, list):
+        raise InvalidQueryError(f"Invalid bbox {bbox!r}")
+    filters = {
+        "collection_ids": body.get("collections"),
+        "item_ids": body.get("ids"),
+        "bbox": bbox,
+        "intersects": body.get("intersects"),
+        "datetime_interval": body.get("datetime"),
+        "cql2_filter": _resolve_filter(body.get("filter"), body.get("filter-lang")),
+        "query": body.get("query"),
+    }
+    page = {
+        "sortby": body.get("sortby"),
+        "fields": fields,
+        "limit": limit,
+        "token": body.get("token"),
+    }
+    return filters, page
+
+
+def _request_body() -> Any:
+    if request.method == "POST":
+        return request.get_json(silent=True)
+    return _query_to_body(request.args)
 
 
 def _serialize_items(rows: list[dict]) -> list[dict]:
@@ -275,100 +330,30 @@ def create_app(
             raise
 
     # ------------------------------------------------------------------
-    # items (collection-scoped search — reference item_collection route)
+    # item search: /search (GET + POST) and the collection-scoped
+    # /collections/{cid}/items share one parse → validate → execute path
     # ------------------------------------------------------------------
-    @app.get("/collections/<cid>/items")
-    def collection_items(cid: str) -> Response:
-        catalog.items_df(cid)  # 404 for unknown collections before searching
-        items, matched, next_token = execute_search(
-            catalog,
-            collection_ids=[cid],
-            bbox=_parse_bbox(request.args.get("bbox")),
-            datetime_interval=request.args.get("datetime"),
-            sortby=_parse_csv(request.args.get("sortby")),
-            fields=_parse_fields(request.args.get("fields")),
-            limit=_parse_limit(request.args.get("limit")),
-            token=request.args.get("token"),
-        )
+    def _search(body: Any) -> Response:
+        filters, page = _search_args(body)
+        items, matched, next_token = execute_search(catalog, **filters, **page)
         return jsonify(
             _item_collection(
                 _serialize_items(items), matched, next_token, request.url
             )
         )
+
+    @app.get("/collections/<cid>/items")
+    def collection_items(cid: str) -> Response:
+        catalog.items_df(cid)  # 404 for unknown collections before searching
+        return _search({**_query_to_body(request.args), "collections": [cid]})
 
     @app.get("/collections/<cid>/items/<iid>")
     def one_item(cid: str, iid: str) -> Response:
         return jsonify(create_stac_item(get_one_item(catalog, cid, iid)))
 
-    # ------------------------------------------------------------------
-    # search (GET + POST)
-    # ------------------------------------------------------------------
-    @app.get("/search")
-    def search_get() -> Response:
-        items, matched, next_token = execute_search(
-            catalog,
-            collection_ids=_parse_csv(request.args.get("collections")),
-            item_ids=_parse_csv(request.args.get("ids")),
-            bbox=_parse_bbox(request.args.get("bbox")),
-            intersects=_parse_json_param(request.args.get("intersects"), "intersects"),
-            datetime_interval=request.args.get("datetime"),
-            cql2_filter=_parse_filter(
-                request.args.get("filter"), request.args.get("filter-lang")
-            ),
-            query=_parse_json_param(request.args.get("query"), "query"),
-            sortby=_parse_csv(request.args.get("sortby")),
-            fields=_parse_fields(request.args.get("fields")),
-            limit=_parse_limit(request.args.get("limit")),
-            token=request.args.get("token"),
-        )
-        return jsonify(
-            _item_collection(
-                _serialize_items(items), matched, next_token, request.url
-            )
-        )
-
-    @app.post("/search")
-    def search_post() -> Response:
-        body = request.get_json(silent=True)
-        if not isinstance(body, dict):
-            raise InvalidQueryError("Search body must be a JSON object")
-        limit = body.get("limit", 10)
-        if not isinstance(limit, int) or isinstance(limit, bool):
-            raise InvalidQueryError(f"Invalid limit {limit!r}")
-        bbox = body.get("bbox")
-        if bbox is not None and not isinstance(bbox, (list, tuple)):
-            raise InvalidQueryError(f"Invalid bbox {bbox!r}")
-        flt = body.get("filter")
-        flt_lang = body.get("filter-lang")
-        if flt_lang == "cql2-text" or (flt_lang is None and isinstance(flt, str)):
-            from stac_fastapi_duckdb_spark.operators.cql2_text import (
-                parse_cql2_text,
-            )
-
-            if not isinstance(flt, str):
-                raise InvalidQueryError("cql2-text filter must be a string")
-            flt = parse_cql2_text(flt)
-        elif flt_lang not in (None, "cql2-json"):
-            raise InvalidQueryError(f"Unsupported filter-lang {flt_lang!r}")
-        items, matched, next_token = execute_search(
-            catalog,
-            collection_ids=body.get("collections"),
-            item_ids=body.get("ids"),
-            bbox=bbox,
-            intersects=body.get("intersects"),
-            datetime_interval=body.get("datetime"),
-            cql2_filter=flt,
-            query=body.get("query"),
-            sortby=body.get("sortby"),
-            fields=body.get("fields"),
-            limit=limit,
-            token=body.get("token"),
-        )
-        return jsonify(
-            _item_collection(
-                _serialize_items(items), matched, next_token, request.url
-            )
-        )
+    @app.route("/search", methods=["GET", "POST"])
+    def search() -> Response:
+        return _search(_request_body())
 
     # ------------------------------------------------------------------
     # Aggregation extension (stac-api-extensions/aggregation — absent
@@ -376,78 +361,25 @@ def create_app(
     # ------------------------------------------------------------------
     @app.get("/aggregations")
     def aggregations_root() -> Response:
-        from stac_fastapi_duckdb_spark.operators.aggregate import (
-            list_aggregations,
-        )
-
         return jsonify(list_aggregations())
 
     @app.get("/collections/<cid>/aggregations")
     def aggregations_collection(cid: str) -> Response:
-        from stac_fastapi_duckdb_spark.operators.aggregate import (
-            list_aggregations,
-        )
-
         catalog.items_df(cid)  # 404 on unknown collection
         return jsonify(list_aggregations())
 
-    def _run_aggregate(params: dict) -> Response:
-        from stac_fastapi_duckdb_spark.operators.aggregate import (
-            aggregate_search,
-        )
-
-        flt = params.get("filter")
-        if isinstance(flt, str):
-            from stac_fastapi_duckdb_spark.operators.cql2_text import (
-                parse_cql2_text,
-            )
-
-            flt = parse_cql2_text(flt)
+    @app.route("/aggregate", methods=["GET", "POST"])
+    def aggregate() -> Response:
+        body = _request_body()
+        filters, _ = _search_args(body)
         return jsonify(
             aggregate_search(
                 catalog,
-                aggregations=params.get("aggregations"),
-                collection_ids=params.get("collections"),
-                item_ids=params.get("ids"),
-                bbox=params.get("bbox"),
-                intersects=params.get("intersects"),
-                datetime_interval=params.get("datetime"),
-                cql2_filter=flt,
-                query=params.get("query"),
-                frequency_interval=params.get(
-                    "frequency_interval", "month"
-                ),
+                aggregations=body.get("aggregations"),
+                frequency_interval=body.get("frequency_interval", "month"),
+                **filters,
             )
         )
-
-    @app.get("/aggregate")
-    def aggregate_get() -> Response:
-        return _run_aggregate(
-            {
-                "aggregations": _parse_csv(request.args.get("aggregations")),
-                "collections": _parse_csv(request.args.get("collections")),
-                "ids": _parse_csv(request.args.get("ids")),
-                "bbox": _parse_bbox(request.args.get("bbox")),
-                "intersects": _parse_json_param(
-                    request.args.get("intersects"), "intersects"
-                ),
-                "datetime": request.args.get("datetime"),
-                "filter": request.args.get("filter"),
-                "query": _parse_json_param(
-                    request.args.get("query"), "query"
-                ),
-                "frequency_interval": request.args.get(
-                    "frequency_interval", "month"
-                ),
-            }
-        )
-
-    @app.post("/aggregate")
-    def aggregate_post() -> Response:
-        body = request.get_json(silent=True)
-        if not isinstance(body, dict):
-            raise InvalidQueryError("Aggregate body must be a JSON object")
-        return _run_aggregate(body)
 
     # ------------------------------------------------------------------
     # queryables (Filter extension — reference filter_client.py:15-58)

@@ -13,7 +13,7 @@ Supported aggregations:
                                     "month" | "year" | "day")
 - ``<field>_frequency``           — terms buckets over any queryable
 
-Execution shape: ONE filtered union plan (the same ``SearchBuilder``
+Execution shape: ONE filtered union plan (the same ``search_plan``
 compile the search route uses — every pushdown the search gets, the
 aggregations get) shared by all requested aggregations. The scalar
 aggregations (count/min/max) fold into a SINGLE aggregate pass;
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from stac_fastapi_duckdb_spark.errors import InvalidQueryError
 from stac_fastapi_duckdb_spark.operators.cql2 import safe_col
-from stac_fastapi_duckdb_spark.operators.search import SearchBuilder
+from stac_fastapi_duckdb_spark.operators.search import search_plan
 from stac_fastapi_duckdb_spark.sources.catalog import CollectionCatalog
 
 _SCALAR = {"total_count", "datetime_min", "datetime_max"}
@@ -76,17 +76,12 @@ def aggregate_search(
     catalog: CollectionCatalog,
     *,
     aggregations: list[str] | None = None,
-    collection_ids: list[str] | None = None,
-    item_ids: list[str] | None = None,
-    bbox: Any = None,
-    intersects: dict | None = None,
-    datetime_interval: str | None = None,
-    cql2_filter: dict | None = None,
-    query: dict | None = None,
     frequency_interval: str = "month",
     max_buckets: int = 100,
+    **filters: Any,
 ) -> dict:
-    """→ the extension's response body: {"aggregations": [...]}."""
+    """→ the extension's response body: {"aggregations": [...]}.
+    ``filters``: the keyword arguments of ``search.search_plan``."""
     aggs = list(aggregations or DEFAULT_AGGREGATIONS)
     if not aggs:
         raise InvalidQueryError("aggregations must be a non-empty list")
@@ -96,17 +91,7 @@ def aggregate_search(
             f"got {frequency_interval!r}"
         )
 
-    builder = (
-        SearchBuilder(catalog)
-        .apply_collections(collection_ids)
-        .apply_ids(item_ids)
-        .apply_datetime(datetime_interval)
-        .apply_bbox(bbox)
-        .apply_intersects(intersects)
-        .apply_cql2(cql2_filter)
-        .apply_stacql(query)
-    )
-    df, columns = builder.dataframe_and_columns()
+    df, columns = search_plan(catalog, **filters)
     columns = set(columns)
 
     # validate everything BEFORE running any job (fail-closed, like the

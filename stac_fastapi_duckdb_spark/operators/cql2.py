@@ -92,7 +92,7 @@ def cql2_to_column(expr: dict, columns: list[str] | None = None) -> Column:
     """Compile a CQL2-JSON expression dict into a boolean Column.
 
     ``columns``: optional schema column list for property resolution
-    (pass ``catalog.columns(...)``); ``None`` skips resolution.
+    (the searched plan's ``df.columns``); ``None`` skips resolution.
     """
     if not isinstance(expr, dict) or "op" not in expr:
         raise InvalidQueryError(f"Malformed CQL2 node: {expr!r}")

@@ -22,8 +22,7 @@ guarantees an ordering), and top-k consumes every input row to find the
 winners — so the metric sees every matched row during the one page
 action. That kills the reference's second full count query per request
 (database_logic.py:957-958, the double scan SURVEY §4.3 calls out):
-one scan of the union serves both the page and the exact count. With
-``count_mode="none"`` even the metric is skipped (numMatched=None).
+one scan of the union serves both the page and the exact count.
 """
 
 from __future__ import annotations
@@ -48,9 +47,6 @@ from stac_fastapi_duckdb_spark.operators.spatial import (
 )
 from stac_fastapi_duckdb_spark.operators.stacql import stacql_to_column
 from stac_fastapi_duckdb_spark.sources.catalog import CollectionCatalog
-
-# Fields the API forbids filtering on (reference config.py:21)
-FORBIDDEN_FILTER_FIELDS = {"id", "type", "collection"}
 
 
 class SearchBuilder:
@@ -129,7 +125,7 @@ class SearchBuilder:
         return df, columns
 
 
-def execute_search(
+def search_plan(
     catalog: CollectionCatalog,
     *,
     collection_ids: list[str] | None = None,
@@ -139,16 +135,35 @@ def execute_search(
     datetime_interval: str | None = None,
     cql2_filter: dict | None = None,
     query: dict | None = None,
+) -> tuple[DataFrame, list[str]]:
+    """The STAC filter inputs → the filtered union plan and its columns.
+    The one compile both ``execute_search`` and ``aggregate_search`` run."""
+    return (
+        SearchBuilder(catalog)
+        .apply_collections(collection_ids)
+        .apply_ids(item_ids)
+        .apply_datetime(datetime_interval)
+        .apply_bbox(bbox)
+        .apply_intersects(intersects)
+        .apply_cql2(cql2_filter)
+        .apply_stacql(query)
+        .dataframe_and_columns()
+    )
+
+
+def execute_search(
+    catalog: CollectionCatalog,
+    *,
     sortby: Any = None,
     limit: int = 10,
     token: str | None = None,
-    count_mode: str = "exact",
     fields: list[str] | dict | None = None,
-) -> tuple[list[dict], int | None, str | None]:
+    **filters: Any,
+) -> tuple[list[dict], int, str | None]:
     """→ (item rows as dicts, numMatched, next_token).
 
-    ``count_mode``: "exact" (reference parity — database_logic.py:957-958)
-    or "none" (skip the count scan; numMatched=None).
+    ``filters``: the keyword arguments of ``search_plan`` (collection_ids,
+    item_ids, bbox, intersects, datetime_interval, cql2_filter, query).
 
     ``fields``: Fields-extension projection pushed into the PLAN (the
     reference trims JSON after fetching every column — SURVEY P1; here
@@ -162,23 +177,16 @@ def execute_search(
     if limit < 1:
         raise InvalidQueryError(f"limit must be >= 1, got {limit}")
 
-    builder = (
-        SearchBuilder(catalog)
-        .apply_collections(collection_ids)
-        .apply_ids(item_ids)
-        .apply_datetime(datetime_interval)
-        .apply_bbox(bbox)
-        .apply_intersects(intersects)
-        .apply_cql2(cql2_filter)
-        .apply_stacql(query)
-    )
-    filtered, columns = builder.dataframe_and_columns()
+    filtered, columns = search_plan(catalog, **filters)
     sort_specs = [
         (resolve_sort_field(f, columns), d)
         for f, d in populate_sort(sortby)
     ]
     sort_specs = [(f, d) for f, d in sort_specs if f is not None]
-    # NULLS LAST both directions — DuckDB's default (see sort_columns)
+    # NULLS LAST on BOTH directions: DuckDB (the reference engine)
+    # defaults to NULLS LAST for asc AND desc, while Spark's bare desc()
+    # is nulls-first — without it, sortby=-datetime would surface
+    # interval-only (NULL datetime) items on page 1
     order_cols = [
         (safe_col(f).asc_nulls_last() if d > 0 else safe_col(f).desc_nulls_last())
         for f, d in sort_specs
@@ -213,7 +221,7 @@ def execute_search(
     # separate count action then (only possible on tables with no id
     # column; STAC items always sort by the id tiebreak).
     observation = None
-    if count_mode == "exact" and order_cols:
+    if order_cols:
         from pyspark.sql import Observation
 
         observation = Observation()
@@ -240,11 +248,10 @@ def execute_search(
         else:
             next_token = pg.offset_token(offset, limit)
 
-    matched: int | None = None
     if observation is not None:
         # metric was computed BY the page collect above — no second scan
         matched = observation.get["matched"]
-    elif count_mode == "exact":
+    else:
         matched = filtered.count()  # unordered-page fallback (see guard)
 
     return [r.asDict(recursive=True) for r in rows], matched, next_token

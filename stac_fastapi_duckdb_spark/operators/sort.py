@@ -17,11 +17,8 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from stac_fastapi_duckdb_spark.errors import InvalidQueryError
-from stac_fastapi_duckdb_spark.operators.cql2 import _VARIANT_PREFIXES, safe_col
+from stac_fastapi_duckdb_spark.operators.cql2 import resolve_property
 
 
 def populate_sort(sortby: Any) -> list[tuple[str, int]]:
@@ -56,25 +53,7 @@ def resolve_sort_field(field: str, columns: list[str]) -> str | None:
     """Try ``f``, ``properties.f``, ``properties__f`` against the schema
     (database_logic.py:880-899). None if absent — reference skips
     unresolvable sort fields rather than erroring (:900-905)."""
-    for pat in _VARIANT_PREFIXES:
-        cand = pat.format(f=field)
-        if cand in columns:
-            return cand
-    return None
-
-
-def sort_columns(sortby: Any, columns: list[str]) -> list[Column]:
-    """Full O1+O2+O3 pipeline → list of Column sort expressions."""
-    cols: list[Column] = []
-    for field, direction in populate_sort(sortby):
-        resolved = resolve_sort_field(field, columns)
-        if resolved is None:
-            continue
-        c = safe_col(resolved)
-        # NULLS LAST on BOTH directions: DuckDB (the reference engine)
-        # defaults to NULLS LAST for asc AND desc, while Spark's bare
-        # desc() is nulls-first — without the explicit variant,
-        # sortby=-datetime would surface interval-only (NULL datetime)
-        # items on page 1, diverging from reference result order.
-        cols.append(c.asc_nulls_last() if direction > 0 else c.desc_nulls_last())
-    return cols
+    try:
+        return resolve_property(field, columns)
+    except InvalidQueryError:
+        return None

@@ -100,33 +100,14 @@ def envelope_predicate(
     return (b[0] <= e) & (b[2] >= w) & (b[1] <= n) & (b[3] >= s)
 
 
-def bbox_predicate(
-    bbox: Any,
-    columns: list[str],
-    geometry_col: str = GEOMETRY_COL,
-    bbox_col: str = BBOX_COL,
-    exact: bool = True,
-) -> Column:
-    """P10: bbox → (envelope fast path) AND (exact WKB intersects)."""
+def bbox_predicate(bbox: Any, columns: list[str]) -> Column:
+    """P10: bbox → ``intersects_predicate`` of its CCW rectangle."""
     w, s, e, n = _validate_bbox(bbox)
-    parts: list[Column] = []
-    env = envelope_predicate(w, s, e, n, columns, bbox_col)
-    if env is not None:
-        parts.append(env)
-    if exact and geometry_col in columns:
-        qgeom = {
-            "type": "Polygon",
-            "coordinates": [[[w, s], [e, s], [e, n], [w, n], [w, s]]],
-        }
-        parts.append(_intersects_udf(json.dumps(qgeom))(F.col(geometry_col)))
-    if not parts:
-        raise InvalidQueryError(
-            f"No spatial columns ({geometry_col!r}/{bbox_col!r}) in schema"
-        )
-    pred = parts[0]
-    for p in parts[1:]:
-        pred = pred & p
-    return pred
+    rectangle = {
+        "type": "Polygon",
+        "coordinates": [[[w, s], [e, s], [e, n], [w, n], [w, s]]],
+    }
+    return intersects_predicate(rectangle, columns)
 
 
 def intersects_predicate(

@@ -377,16 +377,6 @@ class CollectionCatalog:
         ids = list(collection_ids) if collection_ids else self.collection_ids()
         return [(cid, self.items_df(cid)) for cid in ids]
 
-    def columns(self, collection_ids: Iterable[str] | None) -> list[str]:
-        """Union of column names across the requested sources —
-        replaces the reference's LIMIT-0 schema probe
-        (``database_logic.py:867-878``) with a metadata-only lookup."""
-        seen: dict[str, None] = {}
-        for _, df in self.sources(collection_ids):
-            for c in df.columns:
-                seen.setdefault(c)
-        return list(seen)
-
     # ------------------------------------------------------------------
     # collection.json documents (reference S4: driver-side filesystem)
     # ------------------------------------------------------------------

@@ -19,10 +19,6 @@ Parity target: /root/reference/stac_fastapi/duckdb/utilities.py —
 Under Arrow collection most numpy→python conversion is already done by
 ``Row.asDict``; ``convert_value`` keeps a slim version for the
 None/empty-dropping and numpy/pandas scalars that survive.
-
-Distributed variant: ``items_json_df`` serializes rows to JSON strings
-fully JVM-side with ``to_json(struct(*))`` — the path a 100 TB export
-job would take (no driver collect).
 """
 
 from __future__ import annotations
@@ -131,10 +127,7 @@ def create_stac_item(row: dict[str, Any], collection_id: str | None = None) -> d
             if v is not None:
                 properties[key] = v
             continue
-        if isinstance(raw, datetime) or isinstance(raw, np.datetime64):
-            v = convert_value(raw)
-        else:
-            v = convert_value(raw)
+        v = convert_value(raw)
         if v is not None:  # None-dropping parity (utilities.py:35)
             properties[key] = v
 
@@ -156,21 +149,3 @@ def create_stac_item(row: dict[str, Any], collection_id: str | None = None) -> d
         item["bbox"] = bbox
     return item
 
-
-def items_json_df(df, include: list[str] | None = None):
-    """Distributed serialization: each row → one JSON string column
-    ``item_json`` computed JVM-side (to_json over struct) — the export
-    path that never funnels through the driver."""
-    from pyspark.sql import functions as F
-
-    cols = include or df.columns
-    # binary geometry is not JSON-serializable JVM-side; hex-encode it
-    struct_cols = [
-        F.hex(F.col(c)).alias(c) if dict(df.dtypes)[c] == "binary" else F.col(c)
-        for c in cols
-    ]
-    return df.select(
-        F.to_json(F.struct(*struct_cols), {"ignoreNullFields": "true"}).alias(
-            "item_json"
-        )
-    )

@@ -495,3 +495,137 @@ def test_aggregate_scalar_datetime_validated_fail_closed(
     resp = c.get("/aggregate?collections=col-x&aggregations=total_count")
     assert resp.status_code == 200
     assert resp.get_json()["aggregations"][0]["value"] == 2
+
+
+# ---------------------------------------------------------------------------
+# one request path: every route's inputs go through one GET-to-body
+# conversion and one validator
+# ---------------------------------------------------------------------------
+
+
+def test_aggregate_get_accepts_cql2_json_filter_lang(client):
+    """GET /aggregate reads filter + filter-lang like GET /search does."""
+    import json
+    from urllib.parse import urlencode
+
+    q = urlencode(
+        {
+            "collections": "col-b",
+            "filter": json.dumps({"op": ">=", "args": [{"property": "gsd"}, 14]}),
+            "filter-lang": "cql2-json",
+        }
+    )
+    agg = client.get(f"/aggregate?{q}&aggregations=total_count")
+    assert agg.status_code == 200, agg.get_json()
+    search = client.get(f"/search?{q}&limit=100")
+    assert search.status_code == 200
+    matched = search.get_json()["numMatched"]
+    assert agg.get_json()["aggregations"][0]["value"] == matched == 4
+
+
+def test_aggregate_post_rejects_unknown_filter_lang(client):
+    body = {
+        "collections": ["col-a"],
+        "aggregations": ["total_count"],
+        "filter": "id = 'item-a-003'",
+        "filter-lang": "bogus",
+    }
+    assert client.post("/search", json=body).status_code == 400
+    assert client.post("/aggregate", json=body).status_code == 400
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        {"datetime": 123},
+        {"fields": "platform"},
+        {"fields": {"include": "platform"}},
+        {"sortby": "-cloud_cover"},
+        {"collections": "col-a"},
+        {"ids": "item-a-003"},
+        {"token": 5},
+    ],
+)
+def test_post_search_rejects_wrong_typed_fields(client, body):
+    resp = client.post("/search", json=body)
+    assert resp.status_code == 400, resp.get_json()
+
+
+_CQL2_JSON = {
+    "op": "and",
+    "args": [
+        {"op": "=", "args": [{"property": "platform"}, "sentinel-2"]},
+        {"op": ">=", "args": [{"property": "gsd"}, 14]},
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "query, body",
+    [
+        (
+            {"bbox": HIT_BBOX, "datetime": DT_RANGE, "limit": 3},
+            {"bbox": [-66, -16, -60, -8], "datetime": DT_RANGE, "limit": 3},
+        ),
+        (
+            {
+                "collections": "col-b",
+                "filter": "platform = 'sentinel-2' AND gsd >= 14",
+                "filter-lang": "cql2-text",
+                "limit": 2,
+            },
+            {
+                "collections": ["col-b"],
+                "filter": "platform = 'sentinel-2' AND gsd >= 14",
+                "filter-lang": "cql2-text",
+                "limit": 2,
+            },
+        ),
+        (
+            {"collections": "col-b", "filter": _CQL2_JSON, "filter-lang": "cql2-json", "limit": 2},
+            {"collections": ["col-b"], "filter": _CQL2_JSON, "filter-lang": "cql2-json", "limit": 2},
+        ),
+        (
+            {"collections": "col-a", "sortby": "-cloud_cover", "limit": 5},
+            {
+                "collections": ["col-a"],
+                "sortby": [{"field": "cloud_cover", "direction": "desc"}],
+                "limit": 5,
+            },
+        ),
+        (
+            {"collections": "col-a", "fields": "platform,cloud_cover,-cloud_cover", "limit": 4},
+            {
+                "collections": ["col-a"],
+                "fields": {"include": ["platform", "cloud_cover"], "exclude": ["cloud_cover"]},
+                "limit": 4,
+            },
+        ),
+        (
+            {"ids": "item-a-003,item-b-001"},
+            {"ids": ["item-a-003", "item-b-001"]},
+        ),
+        (
+            {"collections": "col-a", "limit": 7, "token": "7"},
+            {"collections": ["col-a"], "limit": 7, "token": "7"},
+        ),
+    ],
+    ids=["bbox-datetime", "cql2-text", "cql2-json", "sortby-desc", "fields", "ids", "page-2"],
+)
+def test_get_post_search_parity(client, query, body):
+    """A GET query string and the POST body it encodes give one answer."""
+    import json
+    from urllib.parse import urlencode
+
+    encoded = {k: json.dumps(v) if isinstance(v, dict) else v for k, v in query.items()}
+    got = client.get("/search?" + urlencode(encoded))
+    posted = client.post("/search", json=body)
+    assert got.status_code == posted.status_code == 200
+
+    def answer(resp):
+        data = resp.get_json()
+        nxt = [link["token"] for link in data["links"] if link["rel"] == "next"]
+        return data["features"], data["numMatched"], nxt
+
+    assert answer(got) == answer(posted)
+    assert answer(got)[1] > 0

@@ -82,13 +82,13 @@ def test_ids_filter(catalog):
 def test_sortby_asc_desc(catalog):
     # reference tests/api/test_sorting_api.py
     items, _, _ = execute_search(
-        catalog, collection_ids=["col-a"], sortby=["+id"], limit=20, count_mode="none"
+        catalog, collection_ids=["col-a"], sortby=["+id"], limit=20
     )
     ids = [i["id"] for i in items]
     assert ids == sorted(ids)
 
     items, _, _ = execute_search(
-        catalog, collection_ids=["col-a"], sortby=["-id"], limit=20, count_mode="none"
+        catalog, collection_ids=["col-a"], sortby=["-id"], limit=20
     )
     ids = [i["id"] for i in items]
     assert ids == sorted(ids, reverse=True)
@@ -100,7 +100,6 @@ def test_sortby_post_style(catalog):
         collection_ids=["col-a"],
         sortby=[{"field": "cloud_cover", "direction": "desc"}],
         limit=5,
-        count_mode="none",
     )
     ccs = [i.get("cloud_cover") for i in items]
     ccs = [c for c in ccs if c is not None]
@@ -109,15 +108,15 @@ def test_sortby_post_style(catalog):
 
 def test_offset_pagination_stable(catalog):
     page1, _, tok1 = execute_search(
-        catalog, collection_ids=["col-a"], limit=7, count_mode="none"
+        catalog, collection_ids=["col-a"], limit=7
     )
     assert tok1 == "7"
     page2, _, tok2 = execute_search(
-        catalog, collection_ids=["col-a"], limit=7, token=tok1, count_mode="none"
+        catalog, collection_ids=["col-a"], limit=7, token=tok1
     )
     assert tok2 == "14"
     page3, _, tok3 = execute_search(
-        catalog, collection_ids=["col-a"], limit=7, token=tok2, count_mode="none"
+        catalog, collection_ids=["col-a"], limit=7, token=tok2
     )
     assert tok3 is None  # 20 rows: 7+7+6
     all_ids = [i["id"] for i in page1 + page2 + page3]
@@ -129,11 +128,11 @@ def test_keyset_pagination(catalog):
     from stac_fastapi_duckdb_spark.operators.pagination import keyset_token
 
     page1, _, _ = execute_search(
-        catalog, collection_ids=["col-a"], limit=7, count_mode="none"
+        catalog, collection_ids=["col-a"], limit=7
     )
     tok = keyset_token([page1[-1]["id"]])
     page2, _, _ = execute_search(
-        catalog, collection_ids=["col-a"], limit=7, token=tok, count_mode="none"
+        catalog, collection_ids=["col-a"], limit=7, token=tok
     )
     assert page2[0]["id"] > page1[-1]["id"]
     assert len({i["id"] for i in page1 + page2}) == 14
@@ -244,7 +243,6 @@ def test_desc_sort_nulls_last(catalog):
         collection_ids=["col-a"],
         sortby=[{"field": "cloud_cover", "direction": "desc"}],
         limit=100,
-        count_mode="none",
     )
     ccs = [i.get("cloud_cover") for i in items]
     non_null = [c for c in ccs if c is not None]
@@ -262,10 +260,7 @@ def test_keyset_offset_parity_across_null_region(catalog):
     from stac_fastapi_duckdb_spark.operators.pagination import keyset_token
 
     sortby = [{"field": "cloud_cover", "direction": "desc"}]
-    common = dict(
-        catalog=catalog, collection_ids=["col-a"], sortby=sortby,
-        count_mode="none",
-    )
+    common = dict(catalog=catalog, collection_ids=["col-a"], sortby=sortby)
     want = [i["id"] for i in execute_search(limit=100, **common)[0]]
     assert len(want) == 20
 
@@ -314,3 +309,24 @@ def test_exact_count_rides_page_scan(catalog, monkeypatch):
         catalog, collection_ids=["col-a"], limit=3, fields=["platform"]
     )
     assert matched3 == 20
+
+
+def test_bbox_plan_is_intersects_plan(catalog):
+    """A bbox compiles to the plan of intersects with its rectangle."""
+    import re
+
+    from stac_fastapi_duckdb_spark.operators.search import SearchBuilder
+
+    w, s, e, n = (float(v) for v in HIT_BBOX)
+    rectangle = {
+        "type": "Polygon",
+        "coordinates": [[[w, s], [e, s], [e, n], [w, n], [w, s]]],
+    }
+
+    def plan(apply):
+        df = apply(SearchBuilder(catalog).apply_collections(["col-a"])).dataframe()
+        return re.sub(r"#\d+", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+    by_bbox = plan(lambda b: b.apply_bbox(HIT_BBOX))
+    assert "ArrowEvalPython" in by_bbox and "bbox#[0]" in by_bbox
+    assert by_bbox == plan(lambda b: b.apply_intersects(rectangle))
