@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 from typing import Any
+from urllib.parse import urlencode
 
 from flask import Flask, Response, jsonify, request
 
@@ -216,20 +217,27 @@ def _serialize_items(rows: list[dict]) -> list[dict]:
     return out
 
 
-def _item_collection(
-    items: list[dict], matched: int | None, next_token: str | None, href: str
-) -> dict:
-    links = [{"rel": "self", "type": "application/geo+json", "href": href}]
+def _next_link(token: str) -> dict:
+    """A search page's ``next`` link: for GET the request URL with the new
+    ``token``, for POST the token as a body to merge (STAC API paging)."""
+    link = {"rel": "next", "type": "application/geo+json", "token": token}
+    if request.method == "POST":
+        return {
+            **link,
+            "href": request.url,
+            "method": "POST",
+            "merge": True,
+            "body": {"token": token},
+        }
+    args = [(k, v) for k, v in request.args.items(multi=True) if k != "token"]
+    query = urlencode(args + [("token", token)])
+    return {**link, "href": f"{request.base_url}?{query}"}
+
+
+def _item_collection(items: list[dict], matched: int | None, next_token: str | None) -> dict:
+    links = [{"rel": "self", "type": "application/geo+json", "href": request.url}]
     if next_token is not None:
-        links.append(
-            {
-                "rel": "next",
-                "type": "application/geo+json",
-                "href": href,
-                "body": {"token": next_token},
-                "token": next_token,
-            }
-        )
+        links.append(_next_link(next_token))
     return {
         "type": "FeatureCollection",
         "features": items,
@@ -336,11 +344,7 @@ def create_app(
     def _search(body: Any) -> Response:
         filters, page = _search_args(body)
         items, matched, next_token = execute_search(catalog, **filters, **page)
-        return jsonify(
-            _item_collection(
-                _serialize_items(items), matched, next_token, request.url
-            )
-        )
+        return jsonify(_item_collection(_serialize_items(items), matched, next_token))
 
     @app.get("/collections/<cid>/items")
     def collection_items(cid: str) -> Response:

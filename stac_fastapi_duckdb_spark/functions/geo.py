@@ -393,13 +393,6 @@ def point_wkb(x: float, y: float) -> bytes:
     return struct.pack("<BIdd", 1, 1, x, y)
 
 
-def linestring_wkb(coords: list[tuple[float, float]]) -> bytes:
-    out = struct.pack("<BII", 1, 2, len(coords))
-    for x, y in coords:
-        out += struct.pack("<dd", x, y)
-    return out
-
-
 def polygon_wkb(rings: list[list[tuple[float, float]]]) -> bytes:
     out = struct.pack("<BII", 1, 3, len(rings))
     for ring in rings:

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from stac_fastapi_duckdb_spark.errors import InvalidQueryError
 
-DEFAULT_FIELDS = ("datetime", "start_datetime", "end_datetime")
+FIELDS = ("datetime", "start_datetime", "end_datetime")
 
 
 def _parse_rfc3339(value: str) -> datetime:
@@ -73,12 +73,17 @@ def parse_datetime_interval(value: str) -> dict[str, datetime]:
 
 
 def datetime_predicate(
-    interval: str | dict[str, datetime],
-    fields: tuple[str, str, str] = DEFAULT_FIELDS,
+    interval: str | dict[str, datetime], columns: list[str] | None = None
 ) -> Column:
-    """Compile a STAC datetime search into one boolean Column (P5–P8)."""
+    """Compile a STAC datetime search into one boolean Column (P5–P8).
+    A ``FIELDS`` column absent from ``columns`` reads as NULL (all absent
+    → InvalidQueryError); ``columns=None`` takes all three as present."""
     spec = parse_datetime_interval(interval) if isinstance(interval, str) else interval
-    dt, sdt, edt = (F.col(f) for f in fields)
+    if columns is not None and not set(FIELDS) & set(columns):
+        raise InvalidQueryError(f"No datetime columns ({', '.join(FIELDS)}) in schema")
+    dt, sdt, edt = (
+        F.col(f) if columns is None or f in columns else F.lit(None) for f in FIELDS
+    )
 
     if "eq" in spec:
         x = F.lit(spec["eq"])

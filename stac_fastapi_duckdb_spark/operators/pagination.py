@@ -21,15 +21,21 @@ from typing import Any
 
 def parse_token(token: str | None) -> tuple[int, list[Any] | None]:
     """→ (offset, keyset_values). Invalid tokens → offset 0, mirroring
-    the reference's forgiving ``int(token)`` fallback (:924-928)."""
+    the reference's forgiving ``int(token)`` fallback (:924-928). A
+    keyset payload must be a JSON list of scalars (the sort-key values
+    ``keyset_token`` writes); anything else is an invalid token."""
     if not token:
         return 0, None
     if token.startswith("ks:"):
         try:
             vals = json.loads(base64.urlsafe_b64decode(token[3:].encode()).decode())
-            return 0, list(vals)
         except (ValueError, TypeError):
             return 0, None
+        if isinstance(vals, list) and all(
+            v is None or isinstance(v, (str, int, float, bool)) for v in vals
+        ):
+            return 0, vals
+        return 0, None
     try:
         return max(0, int(token)), None
     except (TypeError, ValueError):

@@ -27,16 +27,20 @@ one scan of the union serves both the page and the exact count.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from stac_fastapi_duckdb_spark.errors import InvalidQueryError
+from stac_fastapi_duckdb_spark.errors import InvalidQueryError, NotFoundError
 from stac_fastapi_duckdb_spark.operators import pagination as pg
 from stac_fastapi_duckdb_spark.operators.cql2 import cql2_to_column, safe_col
-from stac_fastapi_duckdb_spark.operators.datetime_filter import datetime_predicate
+from stac_fastapi_duckdb_spark.operators.datetime_filter import (
+    datetime_predicate,
+    parse_datetime_interval,
+)
 from stac_fastapi_duckdb_spark.operators.sort import (
     populate_sort,
     resolve_sort_field,
@@ -46,7 +50,10 @@ from stac_fastapi_duckdb_spark.operators.spatial import (
     intersects_predicate,
 )
 from stac_fastapi_duckdb_spark.operators.stacql import stacql_to_column
-from stac_fastapi_duckdb_spark.sources.catalog import CollectionCatalog
+from stac_fastapi_duckdb_spark.sources.catalog import (
+    CollectionCatalog,
+    PointReadUnavailable,
+)
 
 
 class SearchBuilder:
@@ -57,9 +64,9 @@ class SearchBuilder:
     def __init__(self, catalog: CollectionCatalog) -> None:
         self.catalog = catalog
         self.collection_ids: list[str] | None = None
-        self.item_ids: list[str] | None = None
-        self._predicates: list[Column] = []
-        self._deferred: list[Any] = []  # callables needing the schema
+        # predicate builders, each called with the union's columns; the
+        # AND-fold keeps their apply order
+        self._predicates: list[Callable[[list[str]], Column]] = []
 
     # each apply_* mirrors one reference apply_*_filter static method
     def apply_collections(self, ids: list[str] | None) -> "SearchBuilder":
@@ -69,35 +76,36 @@ class SearchBuilder:
 
     def apply_ids(self, ids: list[str] | None) -> "SearchBuilder":
         if ids:
-            self.item_ids = list(ids)
-            self._predicates.append(F.col("id").isin(self.item_ids))  # :211-215
+            ids = list(ids)
+            self._predicates.append(lambda cols: F.col("id").isin(ids))  # :211-215
         return self
 
     def apply_datetime(self, interval: str | None) -> "SearchBuilder":
         if interval:
-            self._predicates.append(datetime_predicate(interval))  # :223-315
+            spec = parse_datetime_interval(interval)  # a bad interval 400s here
+            self._predicates.append(lambda cols: datetime_predicate(spec, cols))  # :223-315
         return self
 
     def apply_bbox(self, bbox: Any) -> "SearchBuilder":
         if bbox is not None and bbox != []:
-            self._deferred.append(lambda cols: bbox_predicate(bbox, cols))  # :349-416
+            self._predicates.append(lambda cols: bbox_predicate(bbox, cols))  # :349-416
         return self
 
     def apply_intersects(self, geometry: dict | None) -> "SearchBuilder":
         if geometry:
-            self._deferred.append(
+            self._predicates.append(
                 lambda cols: intersects_predicate(geometry, cols)
             )  # :418-448
         return self
 
     def apply_cql2(self, flt: dict | None) -> "SearchBuilder":
         if flt:
-            self._deferred.append(lambda cols: cql2_to_column(flt, cols))  # :488-521
+            self._predicates.append(lambda cols: cql2_to_column(flt, cols))  # :488-521
         return self
 
     def apply_stacql(self, query: dict | None) -> "SearchBuilder":
         if query:
-            self._deferred.append(lambda cols: stacql_to_column(query, cols))  # :450-486
+            self._predicates.append(lambda cols: stacql_to_column(query, cols))  # :450-486
         return self
 
     # ------------------------------------------------------------------
@@ -118,8 +126,7 @@ class SearchBuilder:
             (d for _, d in sources),
         )
         columns = df.columns
-        preds = list(self._predicates)
-        preds.extend(fn(columns) for fn in self._deferred)
+        preds = [fn(columns) for fn in self._predicates]
         if preds:
             df = df.filter(reduce(lambda a, b: a & b, preds))  # P13 AND-fold
         return df, columns
@@ -294,40 +301,24 @@ def _keyset_predicate(sort_specs: list[tuple[str, int]], last: list[Any]) -> Col
 
 
 def get_one_item(catalog: CollectionCatalog, collection_id: str, item_id: str) -> dict:
-    """Point lookup (reference get_one_item, database_logic.py:156-189):
-    filter-pushdown + limit(1); empty → NotFoundError.
+    """Point lookup (reference get_one_item, database_logic.py:156-189);
+    missing → NotFoundError. Two readers:
 
-    SERVING FAST PATH: local single-path parquet collections are
-    answered driver-side by ``CollectionCatalog.point_read`` (lazy
-    manifest prune + pyarrow row-group predicate read, a few ms, no
-    Spark job — equivalence-tested against the distributed plan in
-    tests/test_pointread.py). Everything else falls back to the
-    distributed plan below: if the catalog holds a manifest file index
-    for the collection (``build_item_index``), the scan mounts only
-    the files whose id min/max overlaps ``item_id`` — on a key-sorted
-    multi-file layout that is ONE file regardless of collection size;
-    without an index this is the plain full-listing scan with
-    pushdown."""
-    from stac_fastapi_duckdb_spark.errors import NotFoundError
-    from stac_fastapi_duckdb_spark.sources.catalog import (
-        PointReadUnavailable,
-    )
-
+    - ``CollectionCatalog.point_read``: every local parquet collection
+      is answered driver-side (lazy manifest prune + pyarrow row-group
+      predicate read, a few ms, no Spark job — equivalence-tested
+      against the Spark plan in tests/test_pointread.py);
+    - otherwise (``PointReadUnavailable``) one Spark filter over
+      ``items_df`` with limit(1), where parquet row-group pushdown on
+      ``id`` still applies."""
     try:
         row = catalog.point_read(collection_id, item_id)
     except PointReadUnavailable:
-        pass
-    else:
-        if row is None:
-            raise NotFoundError(
-                f"Item {item_id} in collection {collection_id} not found"
-            )
-        return row
-
-    df = catalog.pruned_items_df(collection_id, "id", item_id)
-    rows = df.filter(F.col("id") == item_id).limit(1).collect()
-    if not rows:
+        df = catalog.items_df(collection_id)
+        rows = df.filter(F.col("id") == item_id).limit(1).collect()
+        row = rows[0].asDict(recursive=True) if rows else None
+    if row is None:
         raise NotFoundError(
             f"Item {item_id} in collection {collection_id} not found"
         )
-    return rows[0].asDict(recursive=True)
+    return row

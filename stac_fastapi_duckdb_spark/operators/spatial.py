@@ -10,13 +10,13 @@ Reference (/root/reference/stac_fastapi/duckdb/database_logic.py):
 Spark-first strategy (SURVEY §4.3, option 2 — no Sedona/shapely in this
 environment): a two-phase predicate,
 
-  1. FAST PATH (JVM, pushdownable): rectangle-overlap on the ``bbox``
-     array column — plain min/max double comparisons that Catalyst
+  1. FAST PATH (JVM): rectangle-overlap on the ``bbox`` array column —
+     plain min/max double comparisons on array elements that Catalyst
      evaluates as a generated predicate in the JVM (sessions run
      without whole-stage codegen, so a new bbox recompiles only that
-     one small class; session.py) and (for struct-encoded bboxes)
-     pushes to parquet row-group stats. At 100 TB this prunes the
-     overwhelming majority of rows before any Python runs.
+     one small class; session.py). Parquet cannot push a comparison on
+     array elements, so every row group is still read; the prefilter
+     keeps the Python refine below to the envelope-surviving rows.
   2. EXACT REFINE (Arrow-batched pandas UDF): pure-Python WKB
      ST_Intersects (functions/geo.py) over only the envelope-surviving
      candidates.
@@ -28,6 +28,7 @@ Catalyst rule needed.
 from __future__ import annotations
 
 import json
+from functools import reduce
 from struct import error as struct_error
 from typing import Any
 
@@ -90,13 +91,13 @@ def _intersects_udf(query_geojson: str):
 
 
 def envelope_predicate(
-    w: float, s: float, e: float, n: float, columns: list[str], bbox_col: str = BBOX_COL
+    w: float, s: float, e: float, n: float, columns: list[str]
 ) -> Column | None:
     """JVM-side rectangle-overlap prefilter on the bbox array column:
     bbox[0]<=e AND bbox[2]>=w AND bbox[1]<=n AND bbox[3]>=s."""
-    if bbox_col not in columns:
+    if BBOX_COL not in columns:
         return None
-    b = F.col(bbox_col)
+    b = F.col(BBOX_COL)
     return (b[0] <= e) & (b[2] >= w) & (b[1] <= n) & (b[3] >= s)
 
 
@@ -110,12 +111,7 @@ def bbox_predicate(bbox: Any, columns: list[str]) -> Column:
     return intersects_predicate(rectangle, columns)
 
 
-def intersects_predicate(
-    geometry: dict,
-    columns: list[str],
-    geometry_col: str = GEOMETRY_COL,
-    bbox_col: str = BBOX_COL,
-) -> Column:
+def intersects_predicate(geometry: dict, columns: list[str]) -> Column:
     """P11: arbitrary GeoJSON geometry intersects, with the query
     geometry's envelope as the JVM-side fast path."""
     if not isinstance(geometry, dict) or "type" not in geometry:
@@ -127,16 +123,13 @@ def intersects_predicate(
 
     w, s, e, n = geo.bounds(qgeom)
     parts: list[Column] = []
-    env = envelope_predicate(w, s, e, n, columns, bbox_col)
+    env = envelope_predicate(w, s, e, n, columns)
     if env is not None:
         parts.append(env)
-    if geometry_col in columns:
-        parts.append(_intersects_udf(json.dumps(geometry))(F.col(geometry_col)))
+    if GEOMETRY_COL in columns:
+        parts.append(_intersects_udf(json.dumps(geometry))(F.col(GEOMETRY_COL)))
     if not parts:
         raise InvalidQueryError(
-            f"No spatial columns ({geometry_col!r}/{bbox_col!r}) in schema"
+            f"No spatial columns ({GEOMETRY_COL!r}/{BBOX_COL!r}) in schema"
         )
-    pred = parts[0]
-    for p in parts[1:]:
-        pred = pred & p
-    return pred
+    return reduce(lambda a, b: a & b, parts)

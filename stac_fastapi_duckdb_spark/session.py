@@ -7,8 +7,9 @@ search (schema probe, main query, count; reference
 one long-lived session, created once at startup, shared by every query.
 
 Scale notes (100 TB target):
-- AQE on: runtime partition coalescing, skew-join splitting, and
-  dynamic join-strategy switching replace hand-tuned shuffle counts.
+- AQE on (Spark's default): runtime partition coalescing, skew-join
+  splitting, and dynamic join-strategy switching replace hand-tuned
+  shuffle counts.
 - Arrow on: every toPandas()/pandas_udf crossing is columnar-batched.
 - Session timezone pinned to UTC so timestamp comparisons match the
   reference's ISO-8601 semantics (``database_logic.py:264-312``) and the
@@ -29,10 +30,6 @@ from pyspark.sql import SparkSession
 _LOCAL_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.parquet.filterPushdown": "true",
     # parquet TIMESTAMP(NANOS) (e.g. the events table) is unreadable as a
     # Spark timestamp; read as long ns and convert explicitly at the source
     "spark.sql.legacy.parquet.nanosAsLong": "true",

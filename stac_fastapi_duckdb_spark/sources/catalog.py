@@ -27,40 +27,62 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterable
+from decimal import Decimal
 
+import pyarrow.types as patypes
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_fastapi_duckdb_spark.errors import NotFoundError
+from stac_fastapi_duckdb_spark.sources.index import build_file_index, prune_files
 
 COLLECTION_COL = "collection"
 
 
-def _as_spark_py(v):
-    """Normalize a pyarrow ``to_pylist`` value to what PySpark's
-    ``Row.asDict(recursive=True)`` yields for the same cell: binary →
-    bytearray, tz-aware timestamps → naive datetime in the driver's
-    local zone (PySpark's TimestampType.fromInternal goes through
-    ``datetime.fromtimestamp``), containers recursed."""
-    import datetime as _dt
-
-    if isinstance(v, (bytes, bytearray)):
-        return bytearray(v)
-    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-        return v.astimezone().replace(tzinfo=None)
-    if isinstance(v, list):
-        return [_as_spark_py(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _as_spark_py(x) for k, x in v.items()}
+def _as_spark_py(v, t):
+    """One pyarrow ``to_pylist`` value of arrow type ``t`` → what PySpark's
+    ``Row.asDict(recursive=True)`` yields for the same parquet cell: maps
+    → dicts, tz-aware timestamps → naive driver-local (PySpark goes
+    through ``datetime.fromtimestamp``), ns timestamps → int (the session
+    reads them as longs, ``nanosAsLong``), uint64 → Decimal (Spark's
+    ``decimal(20,0)``), lists and structs recursed; binary stays bytes
+    and naive timestamps stay as they are (Spark's ``timestamp_ntz``).
+    A struct-keyed map raises TypeError (unhashable dict key)."""
+    if v is None:
+        return None
+    if patypes.is_map(t):
+        return {
+            _as_spark_py(k, t.key_type): _as_spark_py(x, t.item_type) for k, x in v
+        }
+    if patypes.is_struct(t):
+        return {f.name: _as_spark_py(v[f.name], f.type) for f in t}
+    if patypes.is_list(t) or patypes.is_large_list(t) or patypes.is_fixed_size_list(t):
+        return [_as_spark_py(x, t.value_type) for x in v]
+    if patypes.is_timestamp(t):
+        if t.unit == "ns":
+            return v.value  # pandas.Timestamp
+        if t.tz is not None:
+            return v.astimezone().replace(tzinfo=None)
+    if patypes.is_uint64(t):
+        return Decimal(v)
     return v
 
 
+def _local_path(url) -> str | None:
+    """The filesystem path of a single-URL collection that lives on this
+    host (``file://`` stripped), else None: a URL list, a remote URL, or
+    a path that does not exist here."""
+    if not isinstance(url, str):
+        return None
+    path = url.removeprefix("file://")
+    return path if os.path.exists(path) else None
+
+
 class PointReadUnavailable(Exception):
-    """Raised by :meth:`CollectionCatalog.point_read` when the
-    driver-side fast path cannot serve the collection (partitioned
-    table, remote URL, non-parquet source, no usable manifest) — the
-    caller falls back to the distributed plan. Never raised for a
-    MISSING item (that returns ``None``)."""
+    """Raised by :meth:`CollectionCatalog.point_read` for a source it
+    cannot read driver-side (single-table catalog, not one local parquet
+    path, no manifest, INT96, a failed read); the caller answers with
+    the Spark plan. A MISSING item returns ``None`` instead."""
 
 # item-table source formats by extension; anything else is parquet
 _FORMAT_EXTS = (
@@ -131,7 +153,7 @@ class CollectionCatalog:
         self._urls[collection_id] = url
         self._df_cache.pop(collection_id, None)
         # the manifest holds absolute file paths into the previous dataset;
-        # keeping it would make pruned_items_df skip files of the NEW url
+        # keeping it would make point_read look in the OLD files
         self._file_index.pop(collection_id, None)
 
     # ------------------------------------------------------------------
@@ -235,31 +257,26 @@ class CollectionCatalog:
         )
 
     # ------------------------------------------------------------------
-    # manifest file-skipping (sources/index.py): point/range lookups over
-    # a multi-file, key-sorted collection open only overlapping files
+    # manifest file-skipping (sources/index.py): point lookups over a
+    # multi-file, key-sorted collection open only overlapping files
     # ------------------------------------------------------------------
     def build_item_index(
         self, collection_id: str, columns: Iterable[str] = ("id",)
     ) -> dict[str, dict]:
         """One parquet-footer sweep over the collection's files →
         driver-held ``{file → {col → (min,max)}}`` manifest. Metadata-only
-        (KBs per 1000 files); makes ``pruned_items_df`` (and therefore
-        ``get_one_item``) open only the files whose stats overlap the key
-        instead of every file in the collection. Local paths only — a
-        remote (http/s3a) collection is left unindexed and simply falls
-        back to the full scan."""
-        from stac_fastapi_duckdb_spark.sources.index import build_file_index
-
+        (KBs per 1000 files); makes ``point_read`` open only the files
+        whose stats overlap the key instead of every file in the
+        collection. Local paths only — any other collection is left
+        unindexed (``{}``); the http data source does its own footer-stat
+        row-group skipping."""
         url = self._urls.get(collection_id)
         if url is None:
             raise NotFoundError(f"Collection {collection_id} not configured")
-        if not isinstance(url, str) or url.startswith(("http://", "https://")):
-            # remote/multi-URL collections: the http data source does its
-            # own footer-stat row-group skipping; no driver-side manifest
+        path = _local_path(url)
+        if path is None:
             return {}
-        if not os.path.exists(url):
-            return {}
-        idx = build_file_index(url, list(columns))
+        idx = build_file_index(path, list(columns))
         self._file_index[collection_id] = idx
         return idx
 
@@ -272,32 +289,28 @@ class CollectionCatalog:
         predicate read of those files — row groups whose stats exclude
         the id are never decoded. On a key-sorted layout this opens ONE
         file and usually one row group, a few ms against a
-        collection of any size; no Spark job is scheduled. Returns the
-        item as a dict shaped exactly like
-        ``Row.asDict(recursive=True)`` from the distributed plan
-        (binary → bytearray, tz-aware timestamps → naive driver-local,
-        the injected constant ``collection`` column appended), ``None``
-        when the item is provably absent, and raises
-        :class:`PointReadUnavailable` when this catalog/collection
-        shape can't be served driver-side (the caller falls back to
-        the Spark plan — see ``operators/search.py get_one_item``).
+        collection of any size; no Spark job is scheduled. Serves every
+        local parquet collection whatever its column types: returns the
+        item shaped exactly like ``Row.asDict(recursive=True)`` from the
+        Spark plan (``_as_spark_py``, plus the injected ``collection``),
+        ``None`` when the item is provably absent, and raises
+        :class:`PointReadUnavailable` for a source it cannot read (the
+        caller falls back to the Spark plan — ``get_one_item``). INT96
+        is refused: pyarrow reads it as naive wall-clock ns, Spark as a
+        UTC instant, and its arrow type is that of TIMESTAMP(NANOS).
 
         The reference serves this with a full DuckDB query per lookup
         (``database_logic.py:156-189``); a long-lived Spark session
         pays ~0.3 s of scheduling for the same one-row answer, which
         is the wrong constant for an API's hottest endpoint."""
-        from stac_fastapi_duckdb_spark.sources.index import prune_files
-
         if self._partitioned is not None:
             raise PointReadUnavailable("single-table catalog")
         url = self._urls.get(collection_id)
         if url is None:
             raise NotFoundError(f"Collection {collection_id} not configured")
-        if not isinstance(url, str) or url.startswith(("http://", "https://")):
-            raise PointReadUnavailable("remote or multi-URL collection")
-        path = url[7:] if url.startswith("file://") else url
-        if not os.path.exists(path) or _detect_format([path]) != "parquet":
-            raise PointReadUnavailable("non-local or non-parquet source")
+        path = _local_path(url)
+        if path is None or _detect_format([path]) != "parquet":
+            raise PointReadUnavailable("not a single local parquet path")
         idx = self._file_index.get(collection_id)
         if idx is None:
             # one-time footer sweep; cached on the catalog afterwards
@@ -308,68 +321,25 @@ class CollectionCatalog:
         if not files:
             return None  # stats prove no file can hold the key
         import pyarrow.dataset as pds
-        import pyarrow.types as patypes
-
-        def _unservable_type(t) -> str | None:
-            # pyarrow renders maps as tuple lists, Spark as dicts;
-            # naive (isAdjustedToUTC=false) timestamps come back
-            # unchanged from pyarrow but Spark reinterprets them
-            # through the UTC session tz and renders driver-local —
-            # don't risk a value mismatch on either shape
-            if patypes.is_map(t):
-                return "map-typed column"
-            if patypes.is_timestamp(t) and t.tz is None:
-                return "naive (non-UTC-adjusted) timestamp column"
-            if patypes.is_struct(t):
-                return next(
-                    (_unservable_type(f.type) for f in t if _unservable_type(f.type)),
-                    None,
-                )
-            if patypes.is_list(t) or patypes.is_large_list(t):
-                return _unservable_type(t.value_type)
-            return None
 
         try:
             dataset = pds.dataset(files, format="parquet")
-            for f in dataset.schema:
-                reason = _unservable_type(f.type)
-                if reason:
-                    raise PointReadUnavailable(reason)
+            frags = dataset.get_fragments()
+            if any(c.physical_type == "INT96" for f in frags for c in f.metadata.schema):
+                raise PointReadUnavailable("INT96 timestamp column")
             tbl = dataset.to_table(filter=pds.field(id_col) == item_id)
+            if tbl.num_rows == 0:
+                return None
+            first = tbl.slice(0, 1).to_pylist()[0]
+            row = {f.name: _as_spark_py(first[f.name], f.type) for f in tbl.schema}
         except PointReadUnavailable:
             raise
         except Exception as exc:  # corrupt footer, schema unification, …
             # any fast-path failure degrades to the Spark plan rather
             # than surfacing a 500 the distributed scan could serve
             raise PointReadUnavailable(f"pyarrow read failed: {exc}") from exc
-        if tbl.num_rows == 0:
-            return None
-        row = {
-            k: _as_spark_py(v) for k, v in tbl.slice(0, 1).to_pylist()[0].items()
-        }
         row[COLLECTION_COL] = collection_id
         return row
-
-    def pruned_items_df(
-        self, collection_id: str, col: str, lo, hi=None
-    ) -> DataFrame:
-        """items_df restricted to the files whose [min,max] for ``col``
-        overlaps [lo, hi] (point lookup when ``hi`` is None). File
-        skipping is an optimization, never a correctness filter: the
-        caller still applies the row predicate, files without stats are
-        kept, and a collection without a built index falls back to the
-        full items_df."""
-        from stac_fastapi_duckdb_spark.sources.index import prune_files
-
-        idx = self._file_index.get(collection_id)
-        if self._partitioned is not None or not idx:
-            return self.items_df(collection_id)
-        files = prune_files(idx, col, lo, hi)
-        if not files:
-            return self.items_df(collection_id).limit(0)
-        return self.spark.read.parquet(*files).withColumn(
-            COLLECTION_COL, F.lit(collection_id)
-        )
 
     def sources(self, collection_ids: Iterable[str] | None) -> list[tuple[str, DataFrame]]:
         """Resolve requested collections to (id, DataFrame) pairs;

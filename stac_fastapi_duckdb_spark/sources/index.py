@@ -14,14 +14,12 @@ where a point lookup prunes to exactly one file — turning the
 reference's ``WHERE id = ? LIMIT 1`` (reference
 ``database_logic.py:168-189``) into a single-file, single-row-group
 scan regardless of table size. The index is metadata-only (KBs per
-1000 files), cheap to persist as JSON next to the data, and safe: a
-file with missing stats is always kept.
+1000 files) and safe: a file with missing stats is always kept.
 """
 
 from __future__ import annotations
 
 import glob as _glob
-import json
 import os
 from typing import Any
 
@@ -72,16 +70,6 @@ def build_file_index(path: str, columns: list[str]) -> dict[str, dict]:
                 stats[col] = {"min": _naive_utc(lo), "max": _naive_utc(hi)}
         index[f] = stats
     return index
-
-
-def save_index(index: dict[str, dict], index_path: str) -> None:
-    with open(index_path, "w") as fh:
-        json.dump(index, fh, default=str)
-
-
-def load_index(index_path: str) -> dict[str, dict]:
-    with open(index_path) as fh:
-        return json.load(fh)
 
 
 def prune_files(

@@ -82,25 +82,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def write_stac_collections(
-    items: DataFrame,
-    base_path: str,
-    collection_col: str = "collection",
-    mode: str = "error",
-) -> None:
-    """Persist a STAC item table partitioned by collection — the scaled
-    replacement for the reference's one-file-per-collection registry
-    (reference ``config.py:47-58``): same source-pruning semantics, but
-    via partition pruning over a single table."""
-    write_partitioned(items, base_path, [collection_col], mode=mode)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read back a Hive-partitioned dataset (partition columns are
-    reconstructed from directory names)."""
-    return spark.read.parquet(path)
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,

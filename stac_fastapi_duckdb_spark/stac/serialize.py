@@ -46,7 +46,6 @@ SPECIAL_FIELDS = frozenset(
 )
 
 _PROJ_INT_FIELDS = {"proj:epsg"}
-_PROJ_ARRAY_FIELDS = {"proj:bbox", "proj:shape", "proj:transform"}
 
 
 def _iso(dt: datetime) -> str:
@@ -102,7 +101,7 @@ def _valid_bbox(bbox: Any) -> list[float] | None:
     return None
 
 
-def create_stac_item(row: dict[str, Any], collection_id: str | None = None) -> dict:
+def create_stac_item(row: dict[str, Any]) -> dict:
     """One result row (``Row.asDict(recursive=True)``) → STAC Item dict.
 
     Raises ValueError when ``geometry`` is missing — the reference logs
@@ -117,19 +116,11 @@ def create_stac_item(row: dict[str, Any], collection_id: str | None = None) -> d
     for key, raw in row.items():
         if key in SPECIAL_FIELDS:
             continue
-        if key in _PROJ_INT_FIELDS:  # utilities.py:177-185
-            v = convert_value(raw)
-            if v is not None:
-                properties[key] = int(v)
-            continue
-        if key in _PROJ_ARRAY_FIELDS:  # utilities.py:199-207
-            v = convert_value(raw)
-            if v is not None:
-                properties[key] = v
-            continue
+        # proj:epsg → int (utilities.py:177-185); proj:bbox/shape/transform
+        # (:199-207) convert like any other list
         v = convert_value(raw)
         if v is not None:  # None-dropping parity (utilities.py:35)
-            properties[key] = v
+            properties[key] = int(v) if key in _PROJ_INT_FIELDS else v
 
     item: dict[str, Any] = {
         "type": "Feature",  # envelope, utilities.py:221-232
@@ -141,7 +132,7 @@ def create_stac_item(row: dict[str, Any], collection_id: str | None = None) -> d
         "assets": convert_value(row.get("assets")) or {},
         "links": convert_value(row.get("links")) or [],
     }
-    collection = row.get("collection") or collection_id
+    collection = row.get("collection")
     if collection:
         item["collection"] = collection
     bbox = _valid_bbox(row.get("bbox"))

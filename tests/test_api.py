@@ -629,3 +629,93 @@ def test_get_post_search_parity(client, query, body):
 
     assert answer(got) == answer(posted)
     assert answer(got)[1] > 0
+
+
+def test_get_next_href_walks_every_page_once(client):
+    """A GET client that follows only the ``next`` href sees every
+    matched item exactly once."""
+    unpaged = client.get("/search?collections=col-a,col-b&limit=100").get_json()
+    want = [f["id"] for f in unpaged["features"]]
+    assert len(want) == 28
+    url, seen = "/search?collections=col-a,col-b&limit=6&sortby=-datetime", []
+    for _ in range(10):  # 28 items / 6 per page → 5 pages
+        data = client.get(url).get_json()
+        seen += [f["id"] for f in data["features"]]
+        nxt = [link for link in data["links"] if link["rel"] == "next"]
+        if not nxt:
+            break
+        assert "method" not in nxt[0] and nxt[0]["token"]
+        url = nxt[0]["href"]
+    else:
+        pytest.fail("the next links never ended")
+    assert len(seen) == len(set(seen))
+    assert sorted(seen) == sorted(want)
+
+
+def test_post_next_link_merges_token_into_body(client):
+    data = client.post("/search", json={"collections": ["col-a"], "limit": 5}).get_json()
+    (nxt,) = [link for link in data["links"] if link["rel"] == "next"]
+    assert nxt["method"] == "POST" and nxt["merge"] is True
+    assert nxt["href"].endswith("/search")
+    assert nxt["body"] == {"token": nxt["token"]} == {"token": "5"}
+
+
+@pytest.mark.parametrize("payload", ['"z"', '[{"a": 1}]'])
+def test_keyset_token_with_non_list_payload_reads_as_no_token(client, payload):
+    import base64
+
+    token = "ks:" + base64.urlsafe_b64encode(payload.encode()).decode()
+    first = client.get("/search?collections=col-a&limit=5").get_json()
+    got = client.get(f"/search?collections=col-a&limit=5&token={token}")
+    assert got.status_code == 200
+    assert got.get_json()["features"] == first["features"]
+
+
+def test_datetime_search_over_collection_without_interval_columns(spark, tmp_path):
+    """A collection with ``datetime`` but no start/end_datetime answers a
+    datetime search; a schema with none of the three is a 400."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from stac_fastapi_duckdb_spark.api import create_app
+    from stac_fastapi_duckdb_spark.functions import geo
+    from stac_fastapi_duckdb_spark.sources.catalog import CollectionCatalog
+
+    utc = dt.timezone.utc
+    n = 12
+    pq.write_table(
+        pa.table(
+            {
+                "id": [f"d-{i:02d}" for i in range(n)],
+                "geometry": pa.array([geo.point_wkb(i, i) for i in range(n)], pa.binary()),
+                "datetime": pa.array(
+                    [dt.datetime(2020, 1 + i, 1, tzinfo=utc) for i in range(n)],
+                    pa.timestamp("us", tz="UTC"),
+                ),
+            }
+        ),
+        str(tmp_path / "dt.parquet"),
+    )
+    pq.write_table(
+        pa.table({"id": ["x"], "geometry": pa.array([geo.point_wkb(0, 0)], pa.binary())}),
+        str(tmp_path / "none.parquet"),
+    )
+    cat = CollectionCatalog(
+        spark, {"dt-only": str(tmp_path / "dt.parquet"), "no-time": str(tmp_path / "none.parquet")}
+    )
+    client = create_app(cat).test_client()
+    interval = "2020-03-01T00:00:00Z/2020-06-30T00:00:00Z"  # March..June
+    got = client.get(f"/search?collections=dt-only&datetime={interval}")
+    assert got.status_code == 200
+    assert got.get_json()["numMatched"] == 4
+    body = {"collections": ["dt-only"], "datetime": interval}
+    assert client.post("/search", json=body).get_json()["numMatched"] == 4
+    agg = client.post("/aggregate", json={**body, "aggregations": ["total_count"]})
+    assert agg.status_code == 200
+    (total,) = [a for a in agg.get_json()["aggregations"] if a["name"] == "total_count"]
+    assert total["value"] == 4
+    assert client.get(f"/aggregate?collections=dt-only&datetime={interval}").status_code == 200
+    missing = client.get(f"/search?collections=no-time&datetime={interval}")
+    assert missing.status_code == 400

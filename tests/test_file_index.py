@@ -9,9 +9,7 @@ from pyspark.sql import functions as F
 from stac_fastapi_duckdb_spark.sources.index import (
     build_file_index,
     indexed_read,
-    load_index,
     prune_files,
-    save_index,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -100,9 +98,10 @@ def test_catalog_point_lookup_scans_one_file(spark, stac_multifile_catalog):
     from stac_fastapi_duckdb_spark.operators.search import get_one_item
 
     cat = stac_multifile_catalog
-    pruned = cat.pruned_items_df("demo", "id", "item-0123")
-    # disjoint id-sorted files → the manifest prunes the scan to 1 file
-    assert len(pruned.inputFiles()) == 1
+    idx = cat.build_item_index("demo", ["id"])
+    # disjoint id-sorted files → the point read's manifest prunes to 1 file
+    assert len(idx) == N_FILES
+    assert len(prune_files(idx, "id", "item-0123")) == 1
     got = get_one_item(cat, "demo", "item-0123")
     assert got["id"] == "item-0123" and got["collection"] == "demo"
 
@@ -125,17 +124,6 @@ def test_catalog_without_index_falls_back(spark, tmp_path):
     ).write.parquet(out)
     cat = CollectionCatalog(spark, {"c": out})  # no index built
     assert get_one_item(cat, "c", "it-03")["id"] == "it-03"
-
-
-def test_index_roundtrip_json(tmp_path, sorted_layout):
-    idx = build_file_index(sorted_layout, ["o_orderkey"])
-    p = str(tmp_path / "index.json")
-    save_index(idx, p)
-    loaded = load_index(p)
-    assert set(loaded) == set(idx)
-    assert prune_files(loaded, "o_orderkey", 100) == prune_files(
-        idx, "o_orderkey", 100
-    )
 
 
 def test_reregister_invalidates_df_cache_and_manifest(spark, tmp_path_factory):

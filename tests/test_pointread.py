@@ -80,7 +80,9 @@ def test_fast_path_matches_spark_plan(catalog, iid):
     slow = _spark_path_item(catalog, "demo", iid)
     assert fast == slow
     assert fast["collection"] == "demo"
-    assert isinstance(fast["geometry"], bytearray)
+    assert {k: type(v) for k, v in fast.items()} == {
+        k: type(v) for k, v in slow.items()
+    }
     assert fast["props"] == slow["props"]
 
 
@@ -147,3 +149,81 @@ def test_point_lookup_latency_budget(catalog):
         f"point-lookup p50 {p50:.1f} ms — a Spark job is back on the "
         "serving hot path?"
     )
+
+
+def _spark_jobs(spark) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [])
+
+
+def test_map_and_naive_timestamp_columns_served_driver_side(spark, tmp_path):
+    """Map, naive (timestamp_ntz), nanosecond and uint64 columns, nested
+    too: the point read serves them with the Spark row's values and
+    types, without a Spark job."""
+    path = str(tmp_path / "zoo.parquet")
+    ids = ["z-0", "z-1"]
+    pq.write_table(
+        pa.table(
+            {
+                "id": ids,
+                "geometry": pa.array([geo.point_wkb(1, 2)] * 2, pa.binary()),
+                "tags": pa.array(
+                    [[("k", 1), ("j", 2)], []], pa.map_(pa.string(), pa.int64())
+                ),
+                "local_ts": pa.array(
+                    [dt.datetime(2021, 3, 4, 5, 6), None], pa.timestamp("us")
+                ),
+                "ns_ts": pa.array([1577836800123456789, None], pa.timestamp("ns")),
+                "count": pa.array([7, None], pa.uint64()),
+                "nested": pa.array(
+                    [{"m": [("x", 1.5)], "at": dt.datetime(2020, 1, 1)}, None],
+                    pa.struct(
+                        [
+                            ("m", pa.map_(pa.string(), pa.float64())),
+                            ("at", pa.timestamp("ms")),
+                        ]
+                    ),
+                ),
+            }
+        ),
+        path,
+    )
+    cat = CollectionCatalog(spark, {"zoo": path})
+    assert spark.read.parquet(path).schema["local_ts"].dataType.typeName() == (
+        "timestamp_ntz"
+    )
+    for iid in ids:
+        before = _spark_jobs(spark)
+        fast = cat.point_read("zoo", iid)
+        assert _spark_jobs(spark) == before, "point read scheduled a Spark job"
+        slow = _spark_path_item(cat, "zoo", iid)
+        assert fast == slow
+        assert {k: type(v) for k, v in fast.items()} == {
+            k: type(v) for k, v in slow.items()
+        }
+    assert cat.point_read("zoo", "z-0")["tags"] == {"k": 1, "j": 2}
+    assert cat.point_read("zoo", "z-1")["tags"] == {}
+
+
+def test_file_url_collection_served_driver_side(spark, collection_dir):
+    cat = CollectionCatalog(spark, {"demo": f"file://{collection_dir}"})
+    assert cat.build_item_index("demo")  # the manifest sees the stripped path
+    before = _spark_jobs(spark)
+    item = cat.point_read("demo", "it-017")
+    assert _spark_jobs(spark) == before, "point read scheduled a Spark job"
+    assert item == _spark_path_item(cat, "demo", "it-017")
+
+
+def test_int96_collection_falls_back(spark, tmp_path):
+    """pyarrow reads INT96 as naive wall-clock time, Spark as a UTC
+    instant in the driver's zone: the point read refuses the file and
+    the Spark plan answers."""
+    path = str(tmp_path / "int96.parquet")
+    pq.write_table(
+        pa.table({"id": ["a"], "ts": pa.array([dt.datetime(2020, 1, 1, 5)])}),
+        path,
+        use_deprecated_int96_timestamps=True,
+    )
+    cat = CollectionCatalog(spark, {"c": path})
+    with pytest.raises(PointReadUnavailable, match="INT96"):
+        cat.point_read("c", "a")
+    assert get_one_item(cat, "c", "a")["ts"] == spark.read.parquet(path).first()["ts"]

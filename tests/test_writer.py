@@ -22,7 +22,7 @@ def events(spark):
 def test_partitioned_write_prunes(spark, events, tmp_path):
     out = str(tmp_path / "events_part")
     W.write_partitioned(events, out, ["event_type"])
-    back = W.read_partitioned(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == events.count()
 
     pruned = back.filter(F.col("event_type") == "click")

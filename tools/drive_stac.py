@@ -1,6 +1,7 @@
 """Drive the engine end-to-end through the PUBLIC package boundary:
 build STAC parquet on disk, stand up a catalog, run the README example
-query (bbox + datetime + limit), point lookup, CQL2, pagination,
+query (bbox + datetime + limit), point lookup, CQL2, pagination
+(engine tokens, and an HTTP GET search walked by its next links),
 STAC-item serialization. Probes: bad bbox, bad datetime, unknown
 collection, unsupported CQL2 op."""
 import datetime as dt, json, sys, tempfile, os
@@ -83,6 +84,28 @@ flt = {"op": "and", "args": [
 items5, matched5, _ = execute_search(cat, cql2_filter=flt, limit=100)
 print("Q5 cql2:", matched5, "rows")
 assert matched5 == 8  # all even-i rows are landsat-8 with NULL datetime
+
+# 6. HTTP paging: follow only the GET search's next href to the end;
+# every item must come back exactly once
+from stac_fastapi_duckdb_spark.api import create_app
+client = create_app(cat).test_client()
+url, seen = "/search?collections=demo&limit=4&sortby=-datetime", []
+for page in range(20):
+    resp = client.get(url)
+    assert resp.status_code == 200, (url, resp.status_code)
+    data = resp.get_json()
+    ids = [f["id"] for f in data["features"]]
+    repeated = set(ids) & set(seen)
+    assert not repeated, f"page {page} repeats {sorted(repeated)} (url {url})"
+    seen += ids
+    nxt = [link["href"] for link in data["links"] if link["rel"] == "next"]
+    if not nxt:
+        break
+    url = nxt[0]
+else:
+    raise AssertionError("next links did not end within 20 pages")
+print(f"Q6 GET next-href walk: {page + 1} pages, {len(seen)} items")
+assert len(seen) == 15, len(seen)
 
 # probes
 for name, fn in [
