@@ -178,6 +178,7 @@ def _layout_components(spark, sf_dir: str) -> dict:
 
     from pyspark.sql import functions as F
 
+    from stac_fastapi_duckdb_spark.functions.timestamps import to_utc
     from stac_fastapi_duckdb_spark.sources.index import (
         build_file_index,
         indexed_read,
@@ -204,7 +205,8 @@ def _layout_components(spark, sf_dir: str) -> dict:
 
         # representative predicates: one hot user, one ~3-day window
         row = ev.select("user_id", "ts").orderBy("event_id").limit(1).collect()[0]
-        uid, t_lo = row["user_id"], row["ts"]
+        # the file's ts stats are aware UTC instants; so is the bound
+        uid, t_lo = row["user_id"], to_utc(row["ts"])
         import datetime
 
         t_hi = t_lo + datetime.timedelta(days=3)

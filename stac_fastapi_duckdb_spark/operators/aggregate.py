@@ -91,8 +91,8 @@ def aggregate_search(
             f"got {frequency_interval!r}"
         )
 
-    df, columns = search_plan(catalog, **filters)
-    columns = set(columns)
+    df, schema = search_plan(catalog, **filters)
+    columns = set(schema.fieldNames())
 
     # validate everything BEFORE running any job (fail-closed, like the
     # CQL2 compiler): unknown scalar names / missing frequency fields

@@ -15,56 +15,44 @@ Reference semantics (/root/reference/stac_fastapi/duckdb/database_logic.py):
   side, no "/" → exact.
 
 The reference interpolates ISO strings into SQL and relies on DuckDB's
-implicit cast; here intervals are parsed Python-side and compared as
-TimestampType literals (tz pinned to UTC in session.py), so the
-predicate is a plain Column tree that Catalyst pushes into the parquet
-scan (min/max row-group skipping applies — at 100 TB with time-ordered
-ingest this is the primary pruning axis).
+implicit cast; here intervals are parsed Python-side into aware UTC
+datetimes (``functions/timestamps.py``, the one owner of every
+Python↔Spark time crossing) and compared as TimestampType literals, so
+the bounds are the same instants whatever the process time zone, and
+the predicate is a plain Column tree that Catalyst pushes into the
+parquet scan (min/max row-group skipping applies — at 100 TB with
+time-ordered ingest this is the primary pruning axis).
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from stac_fastapi_duckdb_spark.errors import InvalidQueryError
+from stac_fastapi_duckdb_spark.functions.timestamps import parse_rfc3339
 
 FIELDS = ("datetime", "start_datetime", "end_datetime")
-
-
-def _parse_rfc3339(value: str) -> datetime:
-    """Parse one RFC-3339 instant; 'Z' suffix normalized. Invalid input
-    fails closed (reference silently ignores; SURVEY §4.4)."""
-    v = value.strip()
-    if v.endswith(("Z", "z")):
-        v = v[:-1] + "+00:00"
-    try:
-        dt = datetime.fromisoformat(v)
-    except ValueError as e:
-        raise InvalidQueryError(f"Invalid datetime {value!r}") from e
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return dt.astimezone(timezone.utc).replace(tzinfo=None)  # naive-UTC for Spark
 
 
 def parse_datetime_interval(value: str) -> dict[str, datetime]:
     """``"a/b"`` → {gte, lte}; ``".."`` → open side; no ``/`` → {eq}.
 
     Port of the interval grammar at ``database_logic.py:317-347``,
-    returning parsed datetimes instead of raw strings.
+    returning aware UTC datetimes instead of raw strings.
     """
     if not value:
         raise InvalidQueryError("Empty datetime")
     if "/" not in value:
-        return {"eq": _parse_rfc3339(value)}
+        return {"eq": parse_rfc3339(value)}
     lo, _, hi = value.partition("/")
     out: dict[str, datetime] = {}
     if lo not in ("..", ""):
-        out["gte"] = _parse_rfc3339(lo)
+        out["gte"] = parse_rfc3339(lo)
     if hi not in ("..", ""):
-        out["lte"] = _parse_rfc3339(hi)
+        out["lte"] = parse_rfc3339(hi)
     if not out:
         raise InvalidQueryError(f"Unbounded interval {value!r}")
     if "gte" in out and "lte" in out and out["gte"] > out["lte"]:

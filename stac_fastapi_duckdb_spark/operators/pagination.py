@@ -16,7 +16,10 @@ from __future__ import annotations
 
 import base64
 import json
+from datetime import datetime
 from typing import Any
+
+from stac_fastapi_duckdb_spark.functions.timestamps import rfc3339
 
 
 def parse_token(token: str | None) -> tuple[int, list[Any] | None]:
@@ -48,6 +51,11 @@ def offset_token(offset: int, limit: int) -> str:
 
 
 def keyset_token(last_row_sort_values: list[Any]) -> str:
-    """Encode the final row's sort-key values as a search-after token."""
-    payload = json.dumps(last_row_sort_values, default=str).encode()
+    """Encode the final row's sort-key values as a search-after token;
+    an instant in its RFC 3339 ``Z`` form, which the keyset predicate
+    casts back to the same UTC instant whatever the process zone."""
+    payload = json.dumps(
+        last_row_sort_values,
+        default=lambda v: rfc3339(v) if isinstance(v, datetime) else str(v),
+    ).encode()
     return "ks:" + base64.urlsafe_b64encode(payload).decode()

@@ -33,8 +33,10 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from stac_fastapi_duckdb_spark.errors import InvalidQueryError, NotFoundError
+from stac_fastapi_duckdb_spark.functions.timestamps import rows_to_dicts
 from stac_fastapi_duckdb_spark.operators import pagination as pg
 from stac_fastapi_duckdb_spark.operators.cql2 import cql2_to_column, safe_col
 from stac_fastapi_duckdb_spark.operators.datetime_filter import (
@@ -111,12 +113,12 @@ class SearchBuilder:
     # ------------------------------------------------------------------
     def dataframe(self) -> DataFrame:
         """Materialize the filtered union plan (no action yet)."""
-        return self.dataframe_and_columns()[0]
+        return self.dataframe_and_schema()[0]
 
-    def dataframe_and_columns(self) -> tuple[DataFrame, list[str]]:
-        """The filtered union plan and the union's columns. Reading the
-        columns costs a py4j round trip and a schema parse, so callers
-        take them from here instead of asking the plan again."""
+    def dataframe_and_schema(self) -> tuple[DataFrame, StructType]:
+        """The filtered union plan and the union's schema. Reading the
+        schema costs a py4j round trip and a schema parse, so callers
+        take it from here instead of asking the plan again."""
         sources = self.catalog.sources(self.collection_ids)
         if not sources:
             raise InvalidQueryError("No collections configured")
@@ -125,11 +127,12 @@ class SearchBuilder:
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             (d for _, d in sources),
         )
-        columns = df.columns
+        schema = df.schema
+        columns = schema.fieldNames()
         preds = [fn(columns) for fn in self._predicates]
         if preds:
             df = df.filter(reduce(lambda a, b: a & b, preds))  # P13 AND-fold
-        return df, columns
+        return df, schema
 
 
 def search_plan(
@@ -142,8 +145,8 @@ def search_plan(
     datetime_interval: str | None = None,
     cql2_filter: dict | None = None,
     query: dict | None = None,
-) -> tuple[DataFrame, list[str]]:
-    """The STAC filter inputs → the filtered union plan and its columns.
+) -> tuple[DataFrame, StructType]:
+    """The STAC filter inputs → the filtered union plan and its schema.
     The one compile both ``execute_search`` and ``aggregate_search`` run."""
     return (
         SearchBuilder(catalog)
@@ -154,7 +157,7 @@ def search_plan(
         .apply_intersects(intersects)
         .apply_cql2(cql2_filter)
         .apply_stacql(query)
-        .dataframe_and_columns()
+        .dataframe_and_schema()
     )
 
 
@@ -184,7 +187,8 @@ def execute_search(
     if limit < 1:
         raise InvalidQueryError(f"limit must be >= 1, got {limit}")
 
-    filtered, columns = search_plan(catalog, **filters)
+    filtered, schema = search_plan(catalog, **filters)
+    columns = schema.fieldNames()
     sort_specs = [
         (resolve_sort_field(f, columns), d)
         for f, d in populate_sort(sortby)
@@ -246,12 +250,12 @@ def execute_search(
     rows = page_df.limit(limit + 1).collect()
 
     has_more = len(rows) > limit
-    rows = rows[:limit]
+    items = rows_to_dicts(rows[:limit], schema)
 
     next_token: str | None = None
-    if has_more and rows:
+    if has_more and items:
         if keyset is not None:
-            next_token = pg.keyset_token([rows[-1][f] for f, _ in sort_specs])
+            next_token = pg.keyset_token([items[-1][f] for f, _ in sort_specs])
         else:
             next_token = pg.offset_token(offset, limit)
 
@@ -261,7 +265,7 @@ def execute_search(
     else:
         matched = filtered.count()  # unordered-page fallback (see guard)
 
-    return [r.asDict(recursive=True) for r in rows], matched, next_token
+    return items, matched, next_token
 
 
 def _keyset_predicate(sort_specs: list[tuple[str, int]], last: list[Any]) -> Column:
@@ -316,7 +320,7 @@ def get_one_item(catalog: CollectionCatalog, collection_id: str, item_id: str) -
     except PointReadUnavailable:
         df = catalog.items_df(collection_id)
         rows = df.filter(F.col("id") == item_id).limit(1).collect()
-        row = rows[0].asDict(recursive=True) if rows else None
+        row = rows_to_dicts(rows, df.schema)[0] if rows else None
     if row is None:
         raise NotFoundError(
             f"Item {item_id} in collection {collection_id} not found"

@@ -1512,23 +1512,6 @@ def corpus_ngrams(
     )
 
 
-def top_ngrams(
-    df: DataFrame,
-    n: int = 2,
-    k: int = 100,
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus n-gram heavy hitters: the ``k`` most frequent word
-    n-grams (boilerplate detection, contamination fingerprints, stop
-    phrase mining). (cnt DESC, gram ASC) is a total order, so the
-    rank-``k`` boundary is deterministic; the cut compiles to
-    TakeOrderedAndProject — per-partition top-k then a single merge,
-    never a global sort."""
-    return corpus_ngrams(df, n, text_col).orderBy(
-        F.col("cnt").desc(), F.col("gram")
-    ).limit(k)
-
-
 def quality_tiers(
     df: DataFrame,
     lm: DataFrame | None,

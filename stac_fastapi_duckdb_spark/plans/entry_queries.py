@@ -668,8 +668,8 @@ def q_region_revenue(spark, sf):
     orders side — same exchanges as the default sort-merge but no sort
     of either side (A/B'd 0.92→0.65 s at sf0.1, 1.49→1.13 s at sf1);
     per-partition hash build stays bounded by the shuffle partition
-    count, which AQE sizes at scale. Skew caveat + env off-switch:
-    see ``pipeline.dedup.shj_hint``."""
+    count, which AQE sizes at scale. Skew caveat: see
+    ``pipeline.dedup.shj_hint``."""
     r = _t(spark, sf, "region")
     n = _t(spark, sf, "nation")
     c = _t(spark, sf, "customer")
@@ -1507,9 +1507,10 @@ def q_keyset_pagination(spark, sf):
     a (last sort key, last id) token compiles to a pushdownable range
     predicate, so deep pages cost the same as page one instead of a
     global sort-and-skip. Token here: after (1996-06-01, key 3000)."""
-    from datetime import datetime
+    from datetime import datetime, timezone
 
-    after_date = datetime(1996, 6, 1)
+    # aware: PySpark reads a naive literal in the process time zone
+    after_date = datetime(1996, 6, 1, tzinfo=timezone.utc)
     after_key = 3000
     o = _t(spark, sf, "orders")
     keyset = (F.col("o_orderdate") > F.lit(after_date)) | (

@@ -13,7 +13,11 @@ Scale notes (100 TB target):
 - Arrow on: every toPandas()/pandas_udf crossing is columnar-batched.
 - Session timezone pinned to UTC so timestamp comparisons match the
   reference's ISO-8601 semantics (``database_logic.py:264-312``) and the
-  DuckDB oracle.
+  DuckDB oracle. It governs only the JVM: PySpark converts naive Python
+  datetimes with the process zone, so every instant crossing into or
+  out of Spark goes through ``functions/timestamps.py`` (aware UTC in
+  Python, µs TimestampType in Spark), and no answer depends on the
+  process zone. The process zone is left alone.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ _LOCAL_DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # parquet TIMESTAMP(NANOS) (e.g. the events table) is unreadable as a
     # Spark timestamp; read as long ns and convert explicitly at the source
+    # (functions/timestamps.py: timestamp_from_nanos, with_micros)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     # default INT96 timestamps carry NO parquet min/max statistics —

@@ -29,40 +29,43 @@ import os
 from collections.abc import Iterable
 from decimal import Decimal
 
+import pyarrow.dataset as pds
 import pyarrow.types as patypes
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_fastapi_duckdb_spark.errors import NotFoundError
+from stac_fastapi_duckdb_spark.functions import timestamps
 from stac_fastapi_duckdb_spark.sources.index import build_file_index, prune_files
 
 COLLECTION_COL = "collection"
 
 
-def _as_spark_py(v, t):
-    """One pyarrow ``to_pylist`` value of arrow type ``t`` → what PySpark's
-    ``Row.asDict(recursive=True)`` yields for the same parquet cell: maps
-    → dicts, tz-aware timestamps → naive driver-local (PySpark goes
-    through ``datetime.fromtimestamp``), ns timestamps → int (the session
-    reads them as longs, ``nanosAsLong``), uint64 → Decimal (Spark's
-    ``decimal(20,0)``), lists and structs recursed; binary stays bytes
-    and naive timestamps stay as they are (Spark's ``timestamp_ntz``).
-    A struct-keyed map raises TypeError (unhashable dict key)."""
+def _as_spark_py(v, t, nested=False):
+    """One pyarrow ``to_pylist`` value of arrow type ``t`` → what the
+    Spark plan's row (``timestamps.rows_to_dicts``) holds for the same
+    parquet cell: maps → dicts, tz-aware timestamps → aware UTC, ns
+    timestamps → aware UTC at µs as ``items_df`` reads them (a
+    ``nested`` one stays the epoch-ns int the session reads), uint64 →
+    Decimal (Spark's ``decimal(20,0)``), lists and structs recursed;
+    binary stays bytes and naive timestamps stay as they are (Spark's
+    ``timestamp_ntz``). A struct-keyed map raises TypeError."""
     if v is None:
         return None
     if patypes.is_map(t):
         return {
-            _as_spark_py(k, t.key_type): _as_spark_py(x, t.item_type) for k, x in v
+            _as_spark_py(k, t.key_type, True): _as_spark_py(x, t.item_type, True)
+            for k, x in v
         }
     if patypes.is_struct(t):
-        return {f.name: _as_spark_py(v[f.name], f.type) for f in t}
+        return {f.name: _as_spark_py(v[f.name], f.type, True) for f in t}
     if patypes.is_list(t) or patypes.is_large_list(t) or patypes.is_fixed_size_list(t):
-        return [_as_spark_py(x, t.value_type) for x in v]
+        return [_as_spark_py(x, t.value_type, True) for x in v]
     if patypes.is_timestamp(t):
-        if t.unit == "ns":
-            return v.value  # pandas.Timestamp
+        if t.unit == "ns":  # a pandas.Timestamp
+            return v.value if nested else timestamps.from_epoch_nanos(v.value)
         if t.tz is not None:
-            return v.astimezone().replace(tzinfo=None)
+            return timestamps.to_utc(v)
     if patypes.is_uint64(t):
         return Decimal(v)
     return v
@@ -170,7 +173,9 @@ class CollectionCatalog:
 
     def items_df(self, collection_id: str) -> DataFrame:
         """DataFrame of one collection's items, with the injected
-        constant ``collection`` column (reference S2).
+        constant ``collection`` column (reference S2). A local parquet
+        collection's ``timestamp[ns]`` columns become µs TimestampType
+        (``timestamps.with_micros``).
 
         URL forms: a path/s3a/hdfs/file URL (native reader), an http(s)
         URL, a LIST of http(s) URLs (multi-file collection), or a
@@ -184,9 +189,11 @@ class CollectionCatalog:
         url = self._urls.get(collection_id)
         if url is None:
             raise NotFoundError(f"Collection {collection_id} not configured")
-        df = self._read_source(url).withColumn(
-            COLLECTION_COL, F.lit(collection_id)
-        )
+        df = self._read_source(url)
+        path = _local_path(url)
+        if path is not None and _detect_format([path]) == "parquet":
+            df = timestamps.with_micros(df, pds.dataset(path, format="parquet").schema)
+        df = df.withColumn(COLLECTION_COL, F.lit(collection_id))
         self._df_cache[collection_id] = df
         return df
 
@@ -291,8 +298,8 @@ class CollectionCatalog:
         file and usually one row group, a few ms against a
         collection of any size; no Spark job is scheduled. Serves every
         local parquet collection whatever its column types: returns the
-        item shaped exactly like ``Row.asDict(recursive=True)`` from the
-        Spark plan (``_as_spark_py``, plus the injected ``collection``),
+        item shaped exactly like the Spark plan's row
+        (``_as_spark_py``, plus the injected ``collection``),
         ``None`` when the item is provably absent, and raises
         :class:`PointReadUnavailable` for a source it cannot read (the
         caller falls back to the Spark plan — ``get_one_item``). INT96
@@ -320,8 +327,6 @@ class CollectionCatalog:
         files = prune_files(idx, id_col, item_id)
         if not files:
             return None  # stats prove no file can hold the key
-        import pyarrow.dataset as pds
-
         try:
             dataset = pds.dataset(files, format="parquet")
             frags = dataset.get_fragments()

@@ -15,6 +15,12 @@ reference's ``WHERE id = ? LIMIT 1`` (reference
 ``database_logic.py:168-189``) into a single-file, single-row-group
 scan regardless of table size. The index is metadata-only (KBs per
 1000 files) and safe: a file with missing stats is always kept.
+
+Statistics keep the Python type pyarrow gives them, so a lookup value
+must compare with it: an instant column (TIMESTAMP with
+``isAdjustedToUTC``) has aware stats, and is queried with aware values
+(``functions/timestamps.py`` makes every instant the engine handles
+aware UTC); a ``timestamp_ntz`` column has naive stats and naive values.
 """
 
 from __future__ import annotations
@@ -24,18 +30,6 @@ import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def _naive_utc(v: Any) -> Any:
-    """Timestamp stats come back tz-aware from pyarrow when the file
-    was written as TIMESTAMP(isAdjustedToUTC=true); the engine runs
-    with a UTC session and queries with naive datetimes — normalize so
-    the two compare."""
-    import datetime
-
-    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-    return v
 
 
 def build_file_index(path: str, columns: list[str]) -> dict[str, dict]:
@@ -67,7 +61,7 @@ def build_file_index(path: str, columns: list[str]) -> dict[str, dict]:
                 lo = s.min if lo is None else min(lo, s.min)
                 hi = s.max if hi is None else max(hi, s.max)
             if ok and lo is not None:
-                stats[col] = {"min": _naive_utc(lo), "max": _naive_utc(hi)}
+                stats[col] = {"min": lo, "max": hi}
         index[f] = stats
     return index
 

@@ -23,7 +23,7 @@ encode the three layout decisions that make the read side cheap.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_TARGET_FILE_BYTES = 128 << 20
@@ -80,53 +80,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.format("parquet").saveAsTable(table)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 << 20,
-    partition_cols: list[str] | None = None,
-) -> dict:
-    """Small-files compaction — the standing maintenance job every
-    streaming/ingest layout needs (micro-batch sinks and per-batch
-    `batch=N` directories accrete KB-scale files whose per-file open +
-    footer cost eventually dominates scans; the reference never
-    compacts because it never writes). Reads the fragmented dataset,
-    rewrites it size-targeted (optionally re-partitioned by columns),
-    and reports before/after file counts — data content is unchanged,
-    so the caller can assert equality cheaply.
-
-    Scale shape: one distributed read + one size-targeted shuffle
-    write; the ONLY driver-side work is the file listing for the
-    report. Run it per-partition-subtree in production so compaction
-    of one day never rewrites the table.
-    """
-    import os
-
-    def _count_files(p: str) -> int:
-        n = 0
-        for _, _, fs in os.walk(p):
-            n += sum(f.endswith(".parquet") for f in fs)
-        return n
-
-    before = _count_files(path)
-    df = spark.read.parquet(path)
-    if partition_cols:
-        write_partitioned(
-            df,
-            out_path,
-            partition_cols,
-            mode="overwrite",
-            target_file_bytes=target_file_bytes,
-        )
-    else:
-        repartition_by_size(df, target_file_bytes).write.mode(
-            "overwrite"
-        ).parquet(out_path)
-    return {
-        "files_before": before,
-        "files_after": _count_files(out_path),
-        "rows": spark.read.parquet(out_path).count(),
-    }

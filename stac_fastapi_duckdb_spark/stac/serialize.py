@@ -16,9 +16,10 @@ Parity target: /root/reference/stac_fastapi/duckdb/utilities.py —
 - Envelope: type=Feature, stac_version=1.0.0 (:221-232); ``bbox``
   included only if a valid 4- or 6-list (:157-160, :234-236).
 
-Under Arrow collection most numpy→python conversion is already done by
-``Row.asDict``; ``convert_value`` keeps a slim version for the
-None/empty-dropping and numpy/pandas scalars that survive.
+Rows arrive as plain Python values (``functions.timestamps.rows_to_dicts``
+from the Spark plan, the point read's ``to_pylist``); ``convert_value``
+keeps the None/NaN/empty-dropping and writes instants in the RFC 3339
+``Z`` form of ``functions.timestamps.rfc3339``.
 """
 
 from __future__ import annotations
@@ -27,9 +28,8 @@ import math
 from datetime import date, datetime
 from typing import Any
 
-import numpy as np
-
 from stac_fastapi_duckdb_spark.functions import geo
+from stac_fastapi_duckdb_spark.functions.timestamps import rfc3339
 
 SPECIAL_FIELDS = frozenset(
     {
@@ -48,39 +48,20 @@ SPECIAL_FIELDS = frozenset(
 _PROJ_INT_FIELDS = {"proj:epsg"}
 
 
-def _iso(dt: datetime) -> str:
-    """ISO-8601 with Z suffix (utilities.py:66-74 formats isoformat)."""
-    s = dt.isoformat()
-    if dt.tzinfo is None:
-        s += "Z"
-    else:
-        s = s.replace("+00:00", "Z")
-    return s
-
-
 def convert_value(value: Any) -> Any:
-    """numpy/pandas → JSON-safe Python; returns None for droppable
-    values (None, NaN/NaT, empty arrays) — utilities.py:24-111."""
+    """Row value → JSON-safe Python; returns None for droppable values
+    (None, NaN, empty lists) — utilities.py:24-111."""
     if value is None:
         return None
-    if isinstance(value, (np.datetime64,)):
-        ts = value.astype("datetime64[us]").astype(datetime)
-        return _iso(ts) if isinstance(ts, datetime) else None
     if isinstance(value, datetime):
-        return _iso(value)
+        return rfc3339(value)
     if isinstance(value, date):
         return value.isoformat()
-    if isinstance(value, np.generic):
-        value = value.item()
     if isinstance(value, float) and math.isnan(value):
         return None
-    if isinstance(value, np.ndarray):
-        if value.size == 0:
-            return None  # empty arrays dropped (utilities.py:87,94)
-        return [convert_value(v) for v in value.tolist()]
     if isinstance(value, (list, tuple)):
         if len(value) == 0:
-            return None
+            return None  # empty arrays dropped (utilities.py:87,94)
         return [convert_value(v) for v in value]
     if isinstance(value, dict):
         return {k: convert_value(v) for k, v in value.items() if v is not None}
@@ -102,7 +83,7 @@ def _valid_bbox(bbox: Any) -> list[float] | None:
 
 
 def create_stac_item(row: dict[str, Any]) -> dict:
-    """One result row (``Row.asDict(recursive=True)``) → STAC Item dict.
+    """One result row (``execute_search`` / ``get_one_item``) → STAC Item dict.
 
     Raises ValueError when ``geometry`` is missing — the reference logs
     and skips such rows (database_logic.py:960-1021 catches per-row).

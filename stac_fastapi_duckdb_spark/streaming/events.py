@@ -32,24 +32,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType
 
-EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType(), True),
-        StructField("ts", LongType(), True),  # TIMESTAMP(NANOS) as raw ns
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("props", StringType(), True),
-    ]
-)
+from stac_fastapi_duckdb_spark.functions.timestamps import timestamp_from_nanos
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -57,14 +42,16 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     TimestampType at µs precision.
 
     - ``ts`` long: raw epoch nanos (TIMESTAMP(NANOS) parquet under
-      nanosAsLong) → ``timestamp_micros(ts DIV 1000)``.
+      nanosAsLong) → ``timestamp_micros(ts DIV 1000)``
+      (``timestamps.timestamp_from_nanos``, the rule the STAC catalog
+      applies to its ns columns too).
     - ``ts`` TIMESTAMP_NTZ (plain timestamp[us] parquet): cast to
       TimestampType — identity on the wall-clock under the UTC session
       this engine pins, and watermarks/windows want TimestampType.
     - already TimestampType: no-op cast.
     """
     if isinstance(df.schema[col].dataType, LongType):
-        return df.withColumn(col, F.expr(f"timestamp_micros({col} DIV 1000)"))
+        return df.withColumn(col, timestamp_from_nanos(col))
     return df.withColumn(col, F.col(col).cast("timestamp"))
 
 
@@ -102,49 +89,6 @@ def read_events_stream(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
-    )
-
-
-# the Kafka connector's wire schema (key/value opaque bytes + broker
-# metadata) — any queue-shaped source can be adapted to this envelope
-ENVELOPE_SCHEMA = StructType(
-    [
-        StructField("key", StringType(), True),
-        StructField("value", StringType(), False),  # JSON event payload
-        StructField("topic", StringType(), True),
-        StructField("partition", LongType(), True),
-        StructField("offset", LongType(), True),
-    ]
-)
-
-_EVENT_JSON_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType(), True),
-        StructField("ts", LongType(), True),  # ns since epoch
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("props", StringType(), True),
-    ]
-)
-
-
-def parse_event_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """Kafka-shaped ingestion: parse a queue envelope's JSON ``value``
-    payload into the typed events schema (batch OR streaming — same
-    plan). ``from_json`` is JVM-side and null-safe: malformed payloads
-    become all-NULL rows, filtered here rather than killing the stream
-    (poison-pill tolerance — at 100 TB/day a single bad producer must
-    not stall ingest). Swap the file-staged envelope for the real
-    ``spark.readStream.format("kafka")`` source on a cluster — the
-    downstream plan is identical."""
-    parsed = raw.select(
-        F.from_json(F.col(value_col).cast("string"), _EVENT_JSON_SCHEMA).alias("e")
-    )
-    return (
-        parsed.select("e.*")
-        .filter(F.col("event_id").isNotNull())
-        .withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     )
 
 

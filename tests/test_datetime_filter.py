@@ -11,16 +11,26 @@ from stac_fastapi_duckdb_spark.operators.datetime_filter import (
     parse_datetime_interval,
 )
 
+UTC = dt.timezone.utc
+
 
 def test_parse_exact():
     spec = parse_datetime_interval("2020-05-01T12:00:00Z")
-    assert spec == {"eq": dt.datetime(2020, 5, 1, 12)}
+    assert spec == {"eq": dt.datetime(2020, 5, 1, 12, tzinfo=UTC)}
 
 
 def test_parse_closed_range():
     spec = parse_datetime_interval("2019-01-01T00:00:00Z/2023-01-01T00:00:00Z")
-    assert spec["gte"] == dt.datetime(2019, 1, 1)
-    assert spec["lte"] == dt.datetime(2023, 1, 1)
+    assert spec["gte"] == dt.datetime(2019, 1, 1, tzinfo=UTC)
+    assert spec["lte"] == dt.datetime(2023, 1, 1, tzinfo=UTC)
+
+
+def test_parse_keeps_the_instant_of_any_offset():
+    # aware UTC whatever the offset written; PySpark turns an aware
+    # literal into an instant without the process time zone
+    spec = parse_datetime_interval("2020-01-01T05:30:00+05:30/2020-01-01T00:00:00")
+    assert spec["gte"] == spec["lte"] == dt.datetime(2020, 1, 1, tzinfo=UTC)
+    assert spec["gte"].utcoffset() == dt.timedelta(0)
 
 
 def test_parse_open_sides():
@@ -42,11 +52,12 @@ def _apply(spark, interval):
     import pyspark.sql.functions as F
 
     rows = [
-        # (id, datetime, start, end)
-        ("instant-2020", dt.datetime(2020, 6, 1), None, None),
-        ("instant-2025", dt.datetime(2025, 6, 1), None, None),
-        ("interval-19-22", None, dt.datetime(2019, 1, 1), dt.datetime(2022, 12, 31)),
-        ("interval-30-31", None, dt.datetime(2030, 1, 1), dt.datetime(2031, 1, 1)),
+        # (id, datetime, start, end); aware, so PySpark stores these
+        # instants whatever the process time zone
+        ("instant-2020", dt.datetime(2020, 6, 1, tzinfo=UTC), None, None),
+        ("instant-2025", dt.datetime(2025, 6, 1, tzinfo=UTC), None, None),
+        ("interval-19-22", None, dt.datetime(2019, 1, 1, tzinfo=UTC), dt.datetime(2022, 12, 31, tzinfo=UTC)),
+        ("interval-30-31", None, dt.datetime(2030, 1, 1, tzinfo=UTC), dt.datetime(2031, 1, 1, tzinfo=UTC)),
         ("all-null", None, None, None),
     ]
     df = spark.createDataFrame(

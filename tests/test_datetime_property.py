@@ -40,8 +40,12 @@ def temporal(spark):
     pdf = pd.DataFrame(
         rows, columns=["id", "datetime", "start_datetime", "end_datetime"]
     )
-    sdf = spark.createDataFrame(  # raw rows: None stays None (not NaT)
-        rows,
+    # raw rows: None stays None (not NaT); aware UTC, so PySpark stores
+    # the instants DuckDB compares whatever the process time zone
+    utc = [tuple(v.replace(tzinfo=dt.timezone.utc) if isinstance(v, dt.datetime) else v
+                 for v in r) for r in rows]
+    sdf = spark.createDataFrame(
+        utc,
         "id long, datetime timestamp, start_datetime timestamp, end_datetime timestamp",
     )
     con = duckdb.connect()

@@ -12,6 +12,7 @@ import pytest
 
 from stac_fastapi_duckdb_spark.errors import NotFoundError
 from stac_fastapi_duckdb_spark.functions import geo
+from stac_fastapi_duckdb_spark.functions.timestamps import to_utc
 from stac_fastapi_duckdb_spark.operators.search import get_one_item
 from stac_fastapi_duckdb_spark.sources import CollectionCatalog
 from stac_fastapi_duckdb_spark.sources.catalog import PointReadUnavailable
@@ -158,7 +159,8 @@ def _spark_jobs(spark) -> int:
 def test_map_and_naive_timestamp_columns_served_driver_side(spark, tmp_path):
     """Map, naive (timestamp_ntz), nanosecond and uint64 columns, nested
     too: the point read serves them with the Spark row's values and
-    types, without a Spark job."""
+    types, without a Spark job. (A nested nanosecond field is an
+    epoch-ns int on both readers; only top-level ones become instants.)"""
     path = str(tmp_path / "zoo.parquet")
     ids = ["z-0", "z-1"]
     pq.write_table(
@@ -175,11 +177,12 @@ def test_map_and_naive_timestamp_columns_served_driver_side(spark, tmp_path):
                 "ns_ts": pa.array([1577836800123456789, None], pa.timestamp("ns")),
                 "count": pa.array([7, None], pa.uint64()),
                 "nested": pa.array(
-                    [{"m": [("x", 1.5)], "at": dt.datetime(2020, 1, 1)}, None],
+                    [{"m": [("x", 1.5)], "at": dt.datetime(2020, 1, 1), "ns": 7}, None],
                     pa.struct(
                         [
                             ("m", pa.map_(pa.string(), pa.float64())),
                             ("at", pa.timestamp("ms")),
+                            ("ns", pa.timestamp("ns", tz="UTC")),
                         ]
                     ),
                 ),
@@ -226,4 +229,5 @@ def test_int96_collection_falls_back(spark, tmp_path):
     cat = CollectionCatalog(spark, {"c": path})
     with pytest.raises(PointReadUnavailable, match="INT96"):
         cat.point_read("c", "a")
-    assert get_one_item(cat, "c", "a")["ts"] == spark.read.parquet(path).first()["ts"]
+    # the Spark plan's instant, aware UTC (functions/timestamps.py)
+    assert get_one_item(cat, "c", "a")["ts"] == to_utc(spark.read.parquet(path).first()["ts"])

@@ -2,7 +2,6 @@
 
 import datetime as dt
 
-import numpy as np
 import pytest
 
 from stac_fastapi_duckdb_spark.functions import geo
@@ -74,10 +73,23 @@ def test_invalid_bbox_dropped():
     assert "bbox" not in item
 
 
-def test_convert_value_numpy():
-    assert convert_value(np.float64(1.5)) == 1.5
-    assert convert_value(np.int32(7)) == 7
+def test_convert_value_drops_nan_none_and_empty():
+    assert convert_value(1.5) == 1.5
     assert convert_value(float("nan")) is None
-    assert convert_value(np.array([])) is None
-    assert convert_value(np.array([1.0, 2.0])) == [1.0, 2.0]
+    assert convert_value([]) is None
+    assert convert_value([1.0, None]) == [1.0, None]
     assert convert_value({"a": 1, "b": None}) == {"a": 1}
+
+
+def test_instants_serialize_as_utc_z_and_wall_clock_stays():
+    kolkata = dt.timezone(dt.timedelta(hours=5, minutes=30))
+    props = create_stac_item(
+        _row(
+            datetime=dt.datetime(2020, 1, 1, 5, 30, tzinfo=kolkata),
+            end_datetime=dt.datetime(2020, 1, 1, 0, 0, 0, 7, tzinfo=dt.timezone.utc),
+            local=dt.datetime(2020, 1, 1, 5, 30),  # timestamp_ntz wall clock
+        )
+    )["properties"]
+    assert props["datetime"] == "2020-01-01T00:00:00Z"
+    assert props["end_datetime"] == "2020-01-01T00:00:00.000007Z"
+    assert props["local"] == "2020-01-01T05:30:00Z"

@@ -206,49 +206,6 @@ def test_checkpoint_restart_is_noop_without_new_files(spark, tmp_path):
     assert n1 == again.count() == 5  # replay commits nothing new
 
 
-def test_kafka_shaped_envelope_parse_batch_and_stream(spark, tmp_path):
-    """Queue-envelope ingestion: JSON payloads in a (key, value, topic,
-    partition, offset) wire schema parse to typed events identically in
-    batch and streaming; malformed payloads drop instead of failing."""
-    import json as _json
-
-    rows = [_mk(i, eid=i, value=float(i)) for i in range(6)]
-    payloads = [
-        (
-            str(eid),
-            _json.dumps(
-                {
-                    "event_id": eid,
-                    "ts": int(ts.replace(tzinfo=dt.timezone.utc).timestamp() * 1e9),
-                    "user_id": user,
-                    "event_type": etype,
-                    "value": value,
-                    "props": props,
-                }
-            ),
-            "events", 0, i,
-        )
-        for i, (eid, ts, user, etype, value, props) in enumerate(rows)
-    ]
-    payloads.append(("bad", "not json {", "events", 0, 99))  # poison pill
-    env = spark.createDataFrame(payloads, SE.ENVELOPE_SCHEMA)
-
-    # batch parse
-    got = SE.parse_event_envelope(env).orderBy("event_id").collect()
-    assert [r.event_id for r in got] == list(range(6))  # poison dropped
-    assert got[3].event_type == "click" and got[3].value == 3.0
-    assert got[2].ts == dt.datetime(2024, 1, 1, 0, 2)
-
-    # same plan over a file-staged stream of envelopes
-    land = str(tmp_path / "envelopes")
-    env.coalesce(1).write.parquet(land)
-    stream = spark.readStream.schema(SE.ENVELOPE_SCHEMA).parquet(land)
-    streamed = SE.run_to_memory(
-        SE.parse_event_envelope(stream), spark, output_mode="append"
-    )
-    assert sorted(r.event_id for r in streamed.collect()) == list(range(6))
-
-
 def test_normalize_event_ts_adapts_to_all_shipped_encodings(spark):
     """The events table has shipped with ts as raw-ns longs AND as
     timestamp[us] (TIMESTAMP_NTZ) across testdata generations; the

@@ -793,17 +793,6 @@ def test_corpus_ngrams_positional_not_distinct(spark):
     got = {r.gram: r.cnt for r in T.corpus_ngrams(df, n=2).collect()}
     # doc 1 contributes x y, y x, x y (positional — "x y" counted twice)
     assert got == {"x y": 3, "y x": 1}
-    top = T.top_ngrams(df, n=2, k=1).collect()
-    assert [(r.gram, r.cnt) for r in top] == [("x y", 3)]
-
-
-def test_top_ngrams_deterministic_tiebreak(spark):
-    df = spark.createDataFrame(
-        [(1, "b b"), (2, "a a")], "doc_id long, text string"
-    )
-    top = T.top_ngrams(df, n=2, k=1).collect()
-    # equal counts → lexicographically first gram wins
-    assert [(r.gram, r.cnt) for r in top] == [("a a", 1)]
 
 
 def test_quality_tiers_equal_depth_and_ordered(spark):

@@ -85,43 +85,3 @@ class _no_broadcast:
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", self.saved)
-
-
-def test_compact_parquet_collapses_small_files(spark, tmp_path):
-    from stac_fastapi_duckdb_spark.sources.writer import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    df = spark.range(0, 10_000).withColumn("v", F.col("id") * 2)
-    # simulate a micro-batch sink: 40 tiny files
-    df.repartition(40).write.parquet(src)
-    out = str(tmp_path / "compact")
-    report = compact_parquet(spark, src, out, target_file_bytes=128 << 20)
-    assert report["files_before"] == 40
-    assert report["files_after"] < 5
-    assert report["rows"] == 10_000
-    # content unchanged
-    a = sorted(map(tuple, spark.read.parquet(src).collect()))
-    b = sorted(map(tuple, spark.read.parquet(out).collect()))
-    assert a == b
-
-
-def test_compact_parquet_preserves_partitioning(spark, tmp_path):
-    from stac_fastapi_duckdb_spark.sources.writer import compact_parquet
-
-    src = str(tmp_path / "frag2")
-    df = spark.range(0, 2_000).select(
-        F.col("id"), (F.col("id") % 3).alias("k")
-    )
-    df.repartition(30).write.partitionBy("k").parquet(src)
-    out = str(tmp_path / "compact2")
-    report = compact_parquet(
-        spark, src, out, target_file_bytes=128 << 20, partition_cols=["k"]
-    )
-    assert report["files_before"] >= 30
-    assert report["files_after"] <= 3  # one per partition value
-    plan = (
-        spark.read.parquet(out)
-        .filter(F.col("k") == 1)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters" in plan

@@ -1,9 +1,14 @@
 """Drive the engine end-to-end through the PUBLIC package boundary:
 build STAC parquet on disk, stand up a catalog, run the README example
 query (bbox + datetime + limit), point lookup, CQL2, pagination
-(engine tokens, and an HTTP GET search walked by its next links),
-STAC-item serialization. Probes: bad bbox, bad datetime, unknown
-collection, unsupported CQL2 op."""
+(engine tokens, an HTTP GET search walked by its next links, and a
+keyset walk sorted by datetime), STAC-item serialization (every instant
+as written, whatever the process time zone). Probes: bad bbox, bad
+datetime, unknown collection, unsupported CQL2 op.
+
+    PYTHONPATH=. python tools/drive_stac.py
+    TZ=Asia/Kolkata PYTHONPATH=. python tools/drive_stac.py
+"""
 import datetime as dt, json, sys, tempfile, os
 import pyarrow as pa, pyarrow.parquet as pq
 
@@ -57,11 +62,20 @@ items2, _, token2 = execute_search(
 print("Q2 page2:", [i["id"] for i in items2], "next =", token2)
 assert len(items2) == 3 and token2 is None
 
-# 3. STAC item serialization of a result row
+# 3. STAC item serialization of a result row; every instant of every
+# result row is the one written to parquet
 item = create_stac_item(items[0])
 print("Q3 STAC item:", json.dumps({k: item[k] for k in ("type", "id", "collection", "bbox")}))
 assert item["type"] == "Feature" and item["geometry"]["type"] == "Polygon"
 assert item["properties"]["platform"] in ("landsat-8", "sentinel-2")
+written = {r["id"]: r for r in rows}
+for it in items + items2:
+    props = create_stac_item(it)["properties"]
+    for f in ("datetime", "start_datetime", "end_datetime"):
+        want = written[it["id"]][f]
+        want = want and want.strftime("%Y-%m-%dT%H:%M:%SZ")
+        assert props.get(f) == want, (it["id"], f, props.get(f), want)
+print("Q3 instants as written:", create_stac_item(items2[0])["properties"]["datetime"])
 
 # 4. point lookup — serving-latency gate: the driver-side fast path
 # (catalog.point_read) must answer in single-digit ms, not a Spark job
@@ -106,6 +120,30 @@ else:
     raise AssertionError("next links did not end within 20 pages")
 print(f"Q6 GET next-href walk: {page + 1} pages, {len(seen)} items")
 assert len(seen) == 15, len(seen)
+
+# 7. keyset paging sorted by datetime (NULLs last): seed a keyset token
+# from page 1's last row and follow the tokens to the end; every item
+# exactly once, in the order the offset walk gives
+from stac_fastapi_duckdb_spark.operators.pagination import keyset_token
+
+
+def walk(keyset):
+    ids, token = [], None
+    for _ in range(20):
+        page, _, token = execute_search(cat, sortby=["datetime"], limit=4, token=token)
+        repeated = {r["id"] for r in page} & set(ids)
+        assert not repeated, f"keyset={keyset}: page repeats {sorted(repeated)}"
+        ids += [r["id"] for r in page]
+        if token is None:
+            return ids
+        if keyset and not token.startswith("ks:"):
+            token = keyset_token([page[-1]["datetime"], page[-1]["id"]])
+    raise AssertionError("walk did not end within 20 pages")
+
+
+ks_ids, offset_ids = walk(True), walk(False)
+print(f"Q7 datetime keyset walk: {len(ks_ids)} items, same as the offset walk: {ks_ids == offset_ids}")
+assert len(ks_ids) == 15 and ks_ids == offset_ids, (ks_ids, offset_ids)
 
 # probes
 for name, fn in [
