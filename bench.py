@@ -182,6 +182,7 @@ def _layout_components(spark, sf_dir: str) -> dict:
     from stac_fastapi_duckdb_spark.sources.index import (
         build_file_index,
         indexed_read,
+        local_files,
         prune_files,
     )
     from stac_fastapi_duckdb_spark.sources.layout import write_zordered
@@ -201,7 +202,9 @@ def _layout_components(spark, sf_dir: str) -> dict:
         t0 = time.perf_counter()
         write_zordered(ev, f"{d}/events", ["user_id", "ts"], n_files)
         t_write = round(time.perf_counter() - t0, 4)
-        index = build_file_index(f"{d}/events", ["user_id", "ts"])
+        # the manifest indexes the files Spark's read of the layout lists
+        files = local_files(spark.read.parquet(f"{d}/events"))
+        index = build_file_index(files, ["user_id", "ts"])
 
         # representative predicates: one hot user, one ~3-day window
         row = ev.select("user_id", "ts").orderBy("event_id").limit(1).collect()[0]

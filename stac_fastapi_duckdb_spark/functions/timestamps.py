@@ -11,7 +11,7 @@ Strings are RFC 3339 with ``Z``, as the STAC API requires; the
 reference passes such strings into DuckDB SQL
 (``database_logic.py:264-312``). Parquet TIMESTAMP(NANOS) columns,
 which the session reads as epoch-ns longs (``nanosAsLong``), become µs
-at the scan, truncated toward zero like SQL ``DIV``.
+at the scan, at any depth, truncated toward zero like SQL ``DIV``.
 """
 
 from __future__ import annotations
@@ -74,26 +74,62 @@ def from_epoch_nanos(ns: int) -> datetime:
     return _EPOCH + timedelta(microseconds=us if ns >= 0 else -us)
 
 
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _from_nanos(c: Column) -> Column:
+    return F.timestamp_micros(F.call_function("div", c, F.lit(1000)))
+
+
 def timestamp_from_nanos(name: str) -> Column:
     """An epoch-ns long column (a TIMESTAMP(NANOS) parquet column under
     ``nanosAsLong``) → µs ``TimestampType``."""
-    col = F.col("`" + name.replace("`", "``") + "`")
-    return F.timestamp_micros(F.call_function("div", col, F.lit(1000)))
+    return _from_nanos(F.col(_quoted(name)))
+
+
+def _micros(at: pa.DataType, st: DataType) -> Callable[[Column], Column] | None:
+    """The rewrite turning each epoch-ns long in a column of arrow type
+    ``at``, read by Spark as ``st``, into µs ``TimestampType``; None
+    when there is none (INT96 is ns to pyarrow but a timestamp to Spark)."""
+    if pa.types.is_timestamp(at):
+        return _from_nanos if at.unit == "ns" and isinstance(st, LongType) else None
+    if pa.types.is_struct(at) and isinstance(st, StructType):
+        subs = [(f.name, _micros(f.type, st[f.name].dataType)) for f in at if f.name in st.names]
+        subs = [(name, m) for name, m in subs if m]
+
+        def struct(c: Column) -> Column:
+            for name, m in subs:
+                c = c.withField(_quoted(name), m(c.getField(name)))
+            return c
+
+        return struct if subs else None
+    if pa.types.is_map(at) and isinstance(st, MapType):
+        km, vm = _micros(at.key_type, st.keyType), _micros(at.item_type, st.valueType)
+
+        def map_(c: Column) -> Column:
+            c = F.transform_keys(c, lambda k, _: km(k)) if km else c
+            return F.transform_values(c, lambda _, v: vm(v)) if vm else c
+
+        return map_ if km or vm else None
+    if pa.types.is_list(at) or pa.types.is_large_list(at) or pa.types.is_fixed_size_list(at):
+        em = isinstance(st, ArrayType) and _micros(at.value_type, st.elementType)
+        return (lambda c: F.transform(c, em)) if em else None
+    return None
 
 
 def with_micros(df: DataFrame, arrow_schema: pa.Schema) -> DataFrame:
-    """Each top-level ``timestamp[ns]`` column of the file schema
-    ``arrow_schema`` (zoned or not) that ``df``, the Spark read of the
-    same files, holds as a long becomes µs ``TimestampType``; ``df``
-    unchanged when there is none. (An INT96 column is ``timestamp[ns]``
-    to pyarrow too, but Spark reads it as a timestamp.)"""
-    names = [
-        f.name
+    """Each ``timestamp[ns]`` value of the file schema ``arrow_schema``
+    (zoned or not, at any depth) that ``df``, the Spark read of the same
+    files, holds as a long becomes µs ``TimestampType``; ``df``
+    unchanged when there is none."""
+    spark_types = {f.name: f.dataType for f in df.schema.fields}
+    cols = {
+        f.name: m(F.col(_quoted(f.name)))
         for f in arrow_schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        and isinstance(df.schema[f.name].dataType, LongType)
-    ]
-    return df.withColumns({n: timestamp_from_nanos(n) for n in names}) if names else df
+        if f.name in spark_types and (m := _micros(f.type, spark_types[f.name]))
+    }
+    return df.withColumns(cols) if cols else df
 
 
 def _converter(t: DataType) -> Callable[[Any], Any] | None:

@@ -313,13 +313,13 @@ def get_one_item(catalog: CollectionCatalog, collection_id: str, item_id: str) -
       predicate read, a few ms, no Spark job — equivalence-tested
       against the Spark plan in tests/test_pointread.py);
     - otherwise (``PointReadUnavailable``) one Spark filter over
-      ``items_df`` with limit(1), where parquet row-group pushdown on
-      ``id`` still applies."""
+      ``items_df`` with limit(1) on ``id``'s string form, which keeps
+      parquet row-group pushdown on a string ``id``."""
     try:
         row = catalog.point_read(collection_id, item_id)
     except PointReadUnavailable:
         df = catalog.items_df(collection_id)
-        rows = df.filter(F.col("id") == item_id).limit(1).collect()
+        rows = df.filter(F.col("id").cast("string") == item_id).limit(1).collect()
         row = rows_to_dicts(rows, df.schema)[0] if rows else None
     if row is None:
         raise NotFoundError(

@@ -38,6 +38,7 @@ from stac_fastapi_duckdb_spark.pipeline import dedup as P_dedup
 from stac_fastapi_duckdb_spark.pipeline import multimodal as P_mm
 from stac_fastapi_duckdb_spark.pipeline import similarity as P_sim
 from stac_fastapi_duckdb_spark.pipeline import text as P_text
+from stac_fastapi_duckdb_spark.sources.index import local_files
 from stac_fastapi_duckdb_spark.streaming import events as P_stream
 
 
@@ -93,8 +94,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         key = (sf_dir, name)
         df = per_session.get(key)
         if df is None:
-            path = f"{sf_dir}/{name}.parquet"
-            df = spark.read.parquet(path)
+            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
             # A cached table inherits the SCAN's partitioning, and the
             # test parquet ships as one small (often single-row-group)
             # file — cached as ONE partition, every map-side stage over
@@ -102,7 +102,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # the cache by compressed bytes (~2 MB/partition, capped at
             # the core count): a real deployment likewise repartitions
             # a hot table once at cache build, not per query.
-            parts = _cache_partitions(spark, path)
+            parts = _cache_partitions(spark, df)
             if parts > 1:
                 df = df.repartition(parts)
             df = df.cache()
@@ -111,27 +111,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _cache_partitions(spark: SparkSession, path: str) -> int:
+def _cache_partitions(spark: SparkSession, df: DataFrame) -> int:
     """~2 MB compressed bytes or ~50k rows per cached partition,
     whichever asks for more (zstd squeezes the synthetic text/props
     tables 20×+, so bytes alone undersizes them), capped at the core
-    count. Footer-only driver reads, once per cache build."""
+    count. Footer-only reads of the files ``df`` lists, once per cache build."""
     import os as _os
 
     try:
-        files = (
-            [
-                _os.path.join(path, f)
-                for f in _os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-            if _os.path.isdir(path)
-            else [path]
-        )
+        files = local_files(df) or []
         size = sum(_os.path.getsize(f) for f in files)
         import pyarrow.parquet as _pq
 
-        rows = sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
+        rows = sum(_pq.read_metadata(f).num_rows for f in files)
     except Exception:
         # pyarrow raises ArrowInvalid (not OSError) on a corrupt or
         # truncated footer — any failure here means "size unknown",

@@ -13,13 +13,13 @@ Reference behavior being re-expressed (citations into /root/reference):
 - Schema probe ``SELECT * ... LIMIT 0`` (``database_logic.py:867-878``)
   → ``df.schema`` (metadata-only, no job).
 
-Scale design: per-collection DataFrames are lazily created and cached in
-a dict — Spark caches parquet footers per session, so repeated searches
-re-plan without re-listing files. For a 100 TB deployment the better
-layout is ONE table partitioned by ``collection`` (partition pruning
-replaces the registry's source pruning); ``CollectionCatalog.from_table``
-supports that layout: a single partitioned DataFrame where per-collection
-access compiles to a partition-pruned filter instead of a separate scan.
+Scale design: a collection is one snapshot (its Spark plan, the files
+Spark lists for it, their footer schema, the id manifest), built on
+first use and dropped by ``register``. Search and both item readers
+serve from it, as the reference's one ``read_parquet(url)`` serves both
+(``database_logic.py:156-189,831-851``). At 100 TB, ONE table
+partitioned by ``collection`` is the better layout: ``from_table``
+serves each collection from it as a partition-pruned filter.
 """
 
 from __future__ import annotations
@@ -27,43 +27,43 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterable
+from dataclasses import dataclass
 from decimal import Decimal
 
+import pyarrow as pa
 import pyarrow.dataset as pds
+import pyarrow.parquet as pq
 import pyarrow.types as patypes
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_fastapi_duckdb_spark.errors import NotFoundError
 from stac_fastapi_duckdb_spark.functions import timestamps
-from stac_fastapi_duckdb_spark.sources.index import build_file_index, prune_files
+from stac_fastapi_duckdb_spark.sources.index import build_file_index, local_files, prune_files
 
 COLLECTION_COL = "collection"
 
 
-def _as_spark_py(v, t, nested=False):
+def _as_spark_py(v, t):
     """One pyarrow ``to_pylist`` value of arrow type ``t`` → what the
     Spark plan's row (``timestamps.rows_to_dicts``) holds for the same
     parquet cell: maps → dicts, tz-aware timestamps → aware UTC, ns
-    timestamps → aware UTC at µs as ``items_df`` reads them (a
-    ``nested`` one stays the epoch-ns int the session reads), uint64 →
-    Decimal (Spark's ``decimal(20,0)``), lists and structs recursed;
-    binary stays bytes and naive timestamps stay as they are (Spark's
-    ``timestamp_ntz``). A struct-keyed map raises TypeError."""
+    timestamps (at any depth) → aware UTC at µs as ``items_df`` reads
+    them, uint64 → Decimal (Spark's ``decimal(20,0)``), lists and
+    structs recursed; binary stays bytes and naive timestamps stay as
+    they are (Spark's ``timestamp_ntz``). A struct-keyed map raises
+    TypeError."""
     if v is None:
         return None
     if patypes.is_map(t):
-        return {
-            _as_spark_py(k, t.key_type, True): _as_spark_py(x, t.item_type, True)
-            for k, x in v
-        }
+        return {_as_spark_py(k, t.key_type): _as_spark_py(x, t.item_type) for k, x in v}
     if patypes.is_struct(t):
-        return {f.name: _as_spark_py(v[f.name], f.type, True) for f in t}
+        return {f.name: _as_spark_py(v[f.name], f.type) for f in t}
     if patypes.is_list(t) or patypes.is_large_list(t) or patypes.is_fixed_size_list(t):
-        return [_as_spark_py(x, t.value_type, True) for x in v]
+        return [_as_spark_py(x, t.value_type) for x in v]
     if patypes.is_timestamp(t):
         if t.unit == "ns":  # a pandas.Timestamp
-            return v.value if nested else timestamps.from_epoch_nanos(v.value)
+            return timestamps.from_epoch_nanos(v.value)
         if t.tz is not None:
             return timestamps.to_utc(v)
     if patypes.is_uint64(t):
@@ -71,21 +71,26 @@ def _as_spark_py(v, t, nested=False):
     return v
 
 
-def _local_path(url) -> str | None:
-    """The filesystem path of a single-URL collection that lives on this
-    host (``file://`` stripped), else None: a URL list, a remote URL, or
-    a path that does not exist here."""
-    if not isinstance(url, str):
-        return None
-    path = url.removeprefix("file://")
-    return path if os.path.exists(path) else None
-
-
 class PointReadUnavailable(Exception):
-    """Raised by :meth:`CollectionCatalog.point_read` for a source it
-    cannot read driver-side (single-table catalog, not one local parquet
-    path, no manifest, INT96, a failed read); the caller answers with
-    the Spark plan. A MISSING item returns ``None`` instead."""
+    """Raised by :meth:`CollectionCatalog.point_read` for a collection
+    it cannot read driver-side (no file list, a non-string id, a failed
+    read); the caller answers with the Spark plan. A MISSING item
+    returns ``None`` instead."""
+
+
+@dataclass
+class _Snapshot:
+    """One collection as every reader sees it. ``files``: the local
+    parquet files ``df`` scans, kept only when the Spark read has exactly
+    their footer's columns (so no partition column) and no INT96 column,
+    else None (``refusal`` says why); ``schema``: that footer's."""
+
+    df: DataFrame
+    files: list[str] | None = None
+    schema: pa.Schema | None = None
+    refusal: str = "not a local parquet collection"
+    index: dict[str, dict] | None = None
+
 
 # item-table source formats by extension; anything else is parquet
 _FORMAT_EXTS = (
@@ -129,10 +134,8 @@ class CollectionCatalog:
         self.spark = spark
         self._urls: dict[str, str] = dict(parquet_urls or {})
         self._stac_file_path = stac_file_path
-        self._df_cache: dict[str, DataFrame] = {}
-        self._partitioned: DataFrame | None = None
-        # collection_id → manifest min/max file index (sources/index.py)
-        self._file_index: dict[str, dict[str, dict]] = {}
+        self._snapshots: dict[str, _Snapshot] = {}
+        self._table: DataFrame | None = None
 
     # ------------------------------------------------------------------
     # construction
@@ -149,32 +152,27 @@ class CollectionCatalog:
         """Single-table layout: ``df`` already carries a ``collection``
         column (ideally a partition column → pruning is free)."""
         cat = cls(spark)
-        cat._partitioned = df
+        cat._table = df
         return cat
 
     def register(self, collection_id: str, url: str) -> None:
         self._urls[collection_id] = url
-        self._df_cache.pop(collection_id, None)
-        # the manifest holds absolute file paths into the previous dataset;
-        # keeping it would make point_read look in the OLD files
-        self._file_index.pop(collection_id, None)
+        # the old snapshot's plan, file list and manifest are the old dataset's
+        self._snapshots.pop(collection_id, None)
 
     # ------------------------------------------------------------------
     # item tables
     # ------------------------------------------------------------------
     def collection_ids(self) -> list[str]:
-        if self._partitioned is not None:
+        if self._table is not None:
             # distinct over a partition column is a metadata-sized job
-            return [
-                r[0]
-                for r in self._partitioned.select(COLLECTION_COL).distinct().collect()
-            ]
+            return [r[0] for r in self._table.select(COLLECTION_COL).distinct().collect()]
         return sorted(self._urls)
 
     def items_df(self, collection_id: str) -> DataFrame:
         """DataFrame of one collection's items, with the injected
         constant ``collection`` column (reference S2). A local parquet
-        collection's ``timestamp[ns]`` columns become µs TimestampType
+        collection's ``timestamp[ns]`` values become µs TimestampType
         (``timestamps.with_micros``).
 
         URL forms: a path/s3a/hdfs/file URL (native reader), an http(s)
@@ -182,20 +180,38 @@ class CollectionCatalog:
         ``*manifest.json`` URL — the http forms read through the
         executor-side ranged data source (``sources/http_parquet.py``),
         never a driver download."""
-        if self._partitioned is not None:
-            return self._partitioned.filter(F.col(COLLECTION_COL) == collection_id)
-        if collection_id in self._df_cache:
-            return self._df_cache[collection_id]
+        return self._snapshot(collection_id).df
+
+    def _snapshot(self, collection_id: str) -> _Snapshot:
+        snap = self._snapshots.get(collection_id)
+        if snap is None:
+            snap = self._snapshots[collection_id] = self._build_snapshot(collection_id)
+        return snap
+
+    def _build_snapshot(self, collection_id: str) -> _Snapshot:
+        if self._table is not None:
+            return _Snapshot(self._table.filter(F.col(COLLECTION_COL) == collection_id))
         url = self._urls.get(collection_id)
         if url is None:
             raise NotFoundError(f"Collection {collection_id} not configured")
-        df = self._read_source(url)
-        path = _local_path(url)
-        if path is not None and _detect_format([path]) == "parquet":
-            df = timestamps.with_micros(df, pds.dataset(path, format="parquet").schema)
-        df = df.withColumn(COLLECTION_COL, F.lit(collection_id))
-        self._df_cache[collection_id] = df
-        return df
+        urls = list(url) if isinstance(url, (list, tuple)) else [url]
+        df = self._read_source(urls)
+        snap = _Snapshot(df)
+        listed = local_files(df) if _detect_format(urls) == "parquet" else None
+        if listed:
+            footer = pq.read_metadata(listed[0])
+            snap.schema = footer.schema.to_arrow_schema()
+            if df.columns != snap.schema.names:
+                snap.refusal = "the Spark read's columns are not the footer's"
+            elif any(c.physical_type == "INT96" for c in footer.schema):
+                # pyarrow reads INT96 as naive wall-clock ns, Spark as a
+                # UTC instant, and its arrow type is that of TIMESTAMP(NANOS)
+                snap.refusal = "INT96 timestamp column"
+            else:
+                snap.files = listed
+            df = timestamps.with_micros(df, snap.schema)
+        snap.df = df.withColumn(COLLECTION_COL, F.lit(collection_id))
+        return snap
 
     def _read_source(self, url) -> DataFrame:
         urls = list(url) if isinstance(url, (list, tuple)) else [url]
@@ -241,21 +257,17 @@ class CollectionCatalog:
         # http(s) collections are parquet-only (ranged reads need footer
         # metadata) — except *manifest.json, the object-store listing
         # analog the http source expands itself
-        from stac_fastapi_duckdb_spark.sources.http_parquet import (
-            is_manifest_url,
-        )
+        from stac_fastapi_duckdb_spark.sources import http_parquet as hp
 
         bad = [
             u
             for u in urls
-            if _detect_format([u]) != "parquet" and not is_manifest_url(u)
+            if _detect_format([u]) != "parquet" and not hp.is_manifest_url(u)
         ]
         if bad:
             raise ValueError(
                 f"http(s) collections are parquet-only (or *manifest.json): {bad}"
             )
-        from stac_fastapi_duckdb_spark.sources import http_parquet as hp
-
         hp.ensure_registered(self.spark)
         return (
             self.spark.read.format("http_parquet")
@@ -270,22 +282,14 @@ class CollectionCatalog:
     def build_item_index(
         self, collection_id: str, columns: Iterable[str] = ("id",)
     ) -> dict[str, dict]:
-        """One parquet-footer sweep over the collection's files →
-        driver-held ``{file → {col → (min,max)}}`` manifest. Metadata-only
-        (KBs per 1000 files); makes ``point_read`` open only the files
-        whose stats overlap the key instead of every file in the
-        collection. Local paths only — any other collection is left
-        unindexed (``{}``); the http data source does its own footer-stat
-        row-group skipping."""
-        url = self._urls.get(collection_id)
-        if url is None:
-            raise NotFoundError(f"Collection {collection_id} not configured")
-        path = _local_path(url)
-        if path is None:
-            return {}
-        idx = build_file_index(path, list(columns))
-        self._file_index[collection_id] = idx
-        return idx
+        """One parquet-footer sweep over the snapshot's file list →
+        driver-held ``{file → {col → (min,max)}}`` manifest, kept on the
+        snapshot (KBs per 1000 files): ``point_read`` then opens only the
+        files whose stats admit the key. No file list → ``{}`` (the http
+        source skips row groups by footer stats itself)."""
+        snap = self._snapshot(collection_id)
+        snap.index = build_file_index(snap.files, list(columns)) if snap.files else {}
+        return snap.index
 
     def point_read(
         self, collection_id: str, item_id, id_col: str = "id"
@@ -296,49 +300,36 @@ class CollectionCatalog:
         predicate read of those files — row groups whose stats exclude
         the id are never decoded. On a key-sorted layout this opens ONE
         file and usually one row group, a few ms against a
-        collection of any size; no Spark job is scheduled. Serves every
-        local parquet collection whatever its column types: returns the
-        item shaped exactly like the Spark plan's row
-        (``_as_spark_py``, plus the injected ``collection``),
-        ``None`` when the item is provably absent, and raises
-        :class:`PointReadUnavailable` for a source it cannot read (the
-        caller falls back to the Spark plan — ``get_one_item``). INT96
-        is refused: pyarrow reads it as naive wall-clock ns, Spark as a
-        UTC instant, and its arrow type is that of TIMESTAMP(NANOS).
+        collection of any size; no Spark job is scheduled. Serves a
+        snapshot with a file list and a string id, whatever its other
+        column types: the item shaped exactly like the Spark plan's row
+        (``_as_spark_py``, plus ``collection``), ``None`` when provably
+        absent, else :class:`PointReadUnavailable` (``get_one_item``
+        then asks the Spark plan).
 
         The reference serves this with a full DuckDB query per lookup
         (``database_logic.py:156-189``); a long-lived Spark session
         pays ~0.3 s of scheduling for the same one-row answer, which
         is the wrong constant for an API's hottest endpoint."""
-        if self._partitioned is not None:
-            raise PointReadUnavailable("single-table catalog")
-        url = self._urls.get(collection_id)
-        if url is None:
-            raise NotFoundError(f"Collection {collection_id} not configured")
-        path = _local_path(url)
-        if path is None or _detect_format([path]) != "parquet":
-            raise PointReadUnavailable("not a single local parquet path")
-        idx = self._file_index.get(collection_id)
-        if idx is None:
-            # one-time footer sweep; cached on the catalog afterwards
-            idx = self.build_item_index(collection_id, (id_col,))
-        if not idx:
-            raise PointReadUnavailable("no manifest index")
-        files = prune_files(idx, id_col, item_id)
+        snap = self._snapshot(collection_id)
+        if snap.files is None:
+            raise PointReadUnavailable(snap.refusal)
+        id_type = snap.schema.field(id_col).type if id_col in snap.schema.names else pa.null()
+        if not (patypes.is_string(id_type) or patypes.is_large_string(id_type)):
+            # the manifest's stats compare only with a value of their type
+            raise PointReadUnavailable(f"{id_col!r} is not a string column")
+        if snap.index is None:
+            self.build_item_index(collection_id, (id_col,))
+        files = prune_files(snap.index, id_col, item_id)
         if not files:
             return None  # stats prove no file can hold the key
         try:
-            dataset = pds.dataset(files, format="parquet")
-            frags = dataset.get_fragments()
-            if any(c.physical_type == "INT96" for f in frags for c in f.metadata.schema):
-                raise PointReadUnavailable("INT96 timestamp column")
+            dataset = pds.dataset(files, schema=snap.schema, format="parquet")
             tbl = dataset.to_table(filter=pds.field(id_col) == item_id)
             if tbl.num_rows == 0:
                 return None
             first = tbl.slice(0, 1).to_pylist()[0]
             row = {f.name: _as_spark_py(first[f.name], f.type) for f in tbl.schema}
-        except PointReadUnavailable:
-            raise
         except Exception as exc:  # corrupt footer, schema unification, …
             # any fast-path failure degrades to the Spark plan rather
             # than surfacing a 500 the distributed scan could serve
@@ -347,9 +338,9 @@ class CollectionCatalog:
         return row
 
     def sources(self, collection_ids: Iterable[str] | None) -> list[tuple[str, DataFrame]]:
-        """Resolve requested collections to (id, DataFrame) pairs;
-        ``None``/empty → all configured (``database_logic.py:810-824``)."""
-        ids = list(collection_ids) if collection_ids else self.collection_ids()
+        """Requested collections, each once in first-seen order → (id,
+        DataFrame) pairs; none → all configured (database_logic.py:810-824)."""
+        ids = dict.fromkeys(collection_ids) if collection_ids else self.collection_ids()
         return [(cid, self.items_df(cid)) for cid in ids]
 
     # ------------------------------------------------------------------

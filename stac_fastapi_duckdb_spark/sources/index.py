@@ -3,11 +3,12 @@ parquet footers.
 
 Spark prunes row groups *inside* each file it opens via parquet
 statistics, but for a point lookup over a 100k-file dataset it still
-lists, opens, and footer-reads every file. Table formats (Iceberg/
-Delta) fix this with a manifest of per-file column stats; this module
-is the same idea for plain parquet directories: one footer sweep builds
-``{file → (min, max, null_count)}`` for the lookup columns, and point/
-range reads then mount ONLY the overlapping files into the DataFrame.
+opens and footer-reads every file. Table formats (Iceberg/Delta) fix
+this with a manifest of per-file column stats; this module is the same
+idea for plain parquet directories: one footer sweep over the files a
+Spark read lists (``local_files``) builds ``{file → {col → {min,
+max}}}``; the point read and ``indexed_read`` open only the files
+``prune_files`` keeps.
 
 Designed use: key-sorted or Z-ordered layouts (sources/layout.py),
 where a point lookup prunes to exactly one file — turning the
@@ -25,43 +26,40 @@ aware UTC); a ``timestamp_ntz`` column has naive stats and naive values.
 
 from __future__ import annotations
 
-import glob as _glob
-import os
 from typing import Any
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
-def build_file_index(path: str, columns: list[str]) -> dict[str, dict]:
-    """One footer sweep over ``path/*.parquet`` (or a single parquet
-    file) → per-file min/max for ``columns``. Run it where the data
-    lives (driver-side here; as a distributed mapPartitions over file
-    lists at cluster scale)."""
-    import pyarrow.parquet as pq
+def local_files(df: DataFrame) -> list[str] | None:
+    """The files the Spark read ``df`` scans (``inputFiles``: Spark's
+    own listing, recursive, ``_``/``.``-prefixed names skipped) as
+    sorted local paths; None unless each is a ``file:`` URI."""
+    uris = [urlparse(u) for u in df.inputFiles()]
+    if not uris or any(u.scheme != "file" for u in uris):
+        return None
+    return sorted(url2pathname(u.path) for u in uris)
 
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+
+def build_file_index(files: list[str], columns: list[str]) -> dict[str, dict]:
+    """One footer sweep over the parquet ``files`` → per-file min/max
+    for ``columns``. Run it where the data lives (driver-side here; as a
+    distributed mapPartitions over file lists at cluster scale)."""
     index: dict[str, dict] = {}
     for f in files:
-        md = pq.ParquetFile(f).metadata
+        md = pq.read_metadata(f)
         name_to_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         stats: dict[str, Any] = {}
         for col in columns:
             if col not in name_to_idx:
                 continue
-            lo = hi = None
-            ok = True
-            for rg in range(md.num_row_groups):
-                s = md.row_group(rg).column(name_to_idx[col]).statistics
-                if s is None or not s.has_min_max:
-                    ok = False
-                    break
-                lo = s.min if lo is None else min(lo, s.min)
-                hi = s.max if hi is None else max(hi, s.max)
-            if ok and lo is not None:
-                stats[col] = {"min": lo, "max": hi}
+            i = name_to_idx[col]
+            rgs = [md.row_group(rg).column(i).statistics for rg in range(md.num_row_groups)]
+            if rgs and all(s is not None and s.has_min_max for s in rgs):
+                stats[col] = {"min": min(s.min for s in rgs), "max": max(s.max for s in rgs)}
         index[f] = stats
     return index
 
@@ -93,8 +91,4 @@ def indexed_read(
     prunes FILES, not rows). An empty file set returns an empty
     DataFrame with the schema of the first indexed file."""
     files = prune_files(index, col, lo, hi)
-    if not files:
-        all_files = sorted(index)
-        empty = spark.read.parquet(all_files[0]).limit(0)
-        return empty
-    return spark.read.parquet(*files)
+    return spark.read.parquet(*files) if files else spark.read.parquet(min(index)).limit(0)

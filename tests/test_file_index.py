@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from stac_fastapi_duckdb_spark.sources.index import (
     build_file_index,
     indexed_read,
+    local_files,
     prune_files,
 )
 
@@ -28,7 +29,7 @@ def sorted_layout(spark, tmp_path_factory):
 
 
 def test_point_lookup_prunes_to_one_file(spark, sorted_layout):
-    idx = build_file_index(sorted_layout, ["o_orderkey"])
+    idx = build_file_index(local_files(spark.read.parquet(sorted_layout)), ["o_orderkey"])
     assert len(idx) == N_FILES
     files = prune_files(idx, "o_orderkey", 100)
     assert len(files) == 1  # disjoint ranges → exactly one candidate
@@ -46,7 +47,7 @@ def test_point_lookup_prunes_to_one_file(spark, sorted_layout):
 
 
 def test_range_read_matches_full_scan(spark, sorted_layout):
-    idx = build_file_index(sorted_layout, ["o_orderkey"])
+    idx = build_file_index(local_files(spark.read.parquet(sorted_layout)), ["o_orderkey"])
     lo, hi = 500, 1500
     files = prune_files(idx, "o_orderkey", lo, hi)
     assert 0 < len(files) < N_FILES
@@ -64,15 +65,15 @@ def test_range_read_matches_full_scan(spark, sorted_layout):
 
 
 def test_out_of_range_lookup_returns_empty_with_schema(spark, sorted_layout):
-    idx = build_file_index(sorted_layout, ["o_orderkey"])
+    idx = build_file_index(local_files(spark.read.parquet(sorted_layout)), ["o_orderkey"])
     assert prune_files(idx, "o_orderkey", -5) == []
     df = indexed_read(spark, idx, "o_orderkey", -5)
     assert df.count() == 0
     assert "o_orderkey" in df.columns
 
 
-def test_missing_stats_column_keeps_all_files(sorted_layout):
-    idx = build_file_index(sorted_layout, ["o_orderkey"])
+def test_missing_stats_column_keeps_all_files(spark, sorted_layout):
+    idx = build_file_index(local_files(spark.read.parquet(sorted_layout)), ["o_orderkey"])
     # a column absent from the index must never prune (fail-safe)
     assert len(prune_files(idx, "no_such_col", 1)) == N_FILES
 

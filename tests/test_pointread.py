@@ -16,6 +16,7 @@ from stac_fastapi_duckdb_spark.functions.timestamps import to_utc
 from stac_fastapi_duckdb_spark.operators.search import get_one_item
 from stac_fastapi_duckdb_spark.sources import CollectionCatalog
 from stac_fastapi_duckdb_spark.sources.catalog import PointReadUnavailable
+from stac_fastapi_duckdb_spark.stac import create_stac_item
 
 UTC = dt.timezone.utc
 
@@ -159,8 +160,8 @@ def _spark_jobs(spark) -> int:
 def test_map_and_naive_timestamp_columns_served_driver_side(spark, tmp_path):
     """Map, naive (timestamp_ntz), nanosecond and uint64 columns, nested
     too: the point read serves them with the Spark row's values and
-    types, without a Spark job. (A nested nanosecond field is an
-    epoch-ns int on both readers; only top-level ones become instants.)"""
+    types, without a Spark job. A nanosecond field is an instant at
+    any depth, on both readers."""
     path = str(tmp_path / "zoo.parquet")
     ids = ["z-0", "z-1"]
     pq.write_table(
@@ -194,6 +195,7 @@ def test_map_and_naive_timestamp_columns_served_driver_side(spark, tmp_path):
     assert spark.read.parquet(path).schema["local_ts"].dataType.typeName() == (
         "timestamp_ntz"
     )
+    cat.items_df("zoo")  # builds the snapshot: Spark's read infers the schema in a job
     for iid in ids:
         before = _spark_jobs(spark)
         fast = cat.point_read("zoo", iid)
@@ -205,6 +207,8 @@ def test_map_and_naive_timestamp_columns_served_driver_side(spark, tmp_path):
         }
     assert cat.point_read("zoo", "z-0")["tags"] == {"k": 1, "j": 2}
     assert cat.point_read("zoo", "z-1")["tags"] == {}
+    for item in (cat.point_read("zoo", "z-0"), _spark_path_item(cat, "zoo", "z-0")):
+        assert create_stac_item(item)["properties"]["nested"]["ns"] == "1970-01-01T00:00:00Z"
 
 
 def test_file_url_collection_served_driver_side(spark, collection_dir):

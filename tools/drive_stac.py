@@ -2,8 +2,9 @@
 build STAC parquet on disk, stand up a catalog, run the README example
 query (bbox + datetime + limit), point lookup, CQL2, pagination
 (engine tokens, an HTTP GET search walked by its next links, and a
-keyset walk sorted by datetime), STAC-item serialization (every instant
-as written, whatever the process time zone). Probes: bad bbox, bad
+keyset walk sorted by datetime), item GETs equal to a search page's
+features, STAC-item serialization (every instant as written, whatever
+the process time zone). Probes: bad bbox, bad
 datetime, unknown collection, unsupported CQL2 op.
 
     PYTHONPATH=. python tools/drive_stac.py
@@ -120,6 +121,12 @@ else:
     raise AssertionError("next links did not end within 20 pages")
 print(f"Q6 GET next-href walk: {page + 1} pages, {len(seen)} items")
 assert len(seen) == 15, len(seen)
+# every feature of one search page GETs back unchanged through the item route
+features = client.get("/search?collections=demo&limit=15").get_json()["features"]
+for feature in features:
+    resp = client.get(f"/collections/demo/items/{feature['id']}")
+    assert resp.status_code == 200 and resp.get_json() == feature, (feature["id"], resp.status_code)
+print(f"Q6 item GETs equal the search's features: {len(features)} of {len(features)}")
 
 # 7. keyset paging sorted by datetime (NULLs last): seed a keyset token
 # from page 1's last row and follow the tokens to the end; every item
