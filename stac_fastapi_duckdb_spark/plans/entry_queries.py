@@ -94,7 +94,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         key = (sf_dir, name)
         df = per_session.get(key)
         if df is None:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            path = f"{sf_dir}/{name}.parquet"
+            df = spark.read.parquet(path)
             # A cached table inherits the SCAN's partitioning, and the
             # test parquet ships as one small (often single-row-group)
             # file — cached as ONE partition, every map-side stage over
@@ -123,7 +124,7 @@ def _cache_partitions(spark: SparkSession, df: DataFrame) -> int:
         size = sum(_os.path.getsize(f) for f in files)
         import pyarrow.parquet as _pq
 
-        rows = sum(_pq.read_metadata(f).num_rows for f in files)
+        rows = sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         # pyarrow raises ArrowInvalid (not OSError) on a corrupt or
         # truncated footer — any failure here means "size unknown",

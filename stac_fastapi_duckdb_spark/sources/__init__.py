@@ -1,3 +1,21 @@
 from stac_fastapi_duckdb_spark.sources.catalog import CollectionCatalog
+from stac_fastapi_duckdb_spark.sources.index import (
+    build_file_index,
+    indexed_read,
+    prune_files,
+)
+from stac_fastapi_duckdb_spark.sources.layout import (
+    with_zorder,
+    write_zordered,
+    zorder_value,
+)
 
-__all__ = ["CollectionCatalog"]
+__all__ = [
+    "CollectionCatalog",
+    "build_file_index",
+    "indexed_read",
+    "prune_files",
+    "with_zorder",
+    "write_zordered",
+    "zorder_value",
+]

@@ -29,6 +29,7 @@ import os
 from collections.abc import Iterable
 from dataclasses import dataclass
 from decimal import Decimal
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.dataset as pds
@@ -36,6 +37,7 @@ import pyarrow.parquet as pq
 import pyarrow.types as patypes
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from stac_fastapi_duckdb_spark.errors import NotFoundError
 from stac_fastapi_duckdb_spark.functions import timestamps
@@ -80,16 +82,18 @@ class PointReadUnavailable(Exception):
 
 @dataclass
 class _Snapshot:
-    """One collection as every reader sees it. ``files``: the local
-    parquet files ``df`` scans, kept only when the Spark read has exactly
-    their footer's columns (so no partition column) and no INT96 column,
-    else None (``refusal`` says why); ``schema``: that footer's."""
+    """One collection as every reader sees it, built once per
+    ``register``. ``files``: the local parquet files Spark's read lists,
+    kept only for one URL whose read has no partition column and no
+    INT96 column, else None (``refusal`` says why); ``schema``: their
+    first footer's; ``index``: the id manifest; ``df``: the Spark plan,
+    built by the first ``items_df``."""
 
-    df: DataFrame
     files: list[str] | None = None
     schema: pa.Schema | None = None
     refusal: str = "not a local parquet collection"
     index: dict[str, dict] | None = None
+    df: DataFrame | None = None
 
 
 # item-table source formats by extension; anything else is parquet
@@ -135,7 +139,7 @@ class CollectionCatalog:
         self._urls: dict[str, str] = dict(parquet_urls or {})
         self._stac_file_path = stac_file_path
         self._snapshots: dict[str, _Snapshot] = {}
-        self._table: DataFrame | None = None
+        self._partitioned: DataFrame | None = None
 
     # ------------------------------------------------------------------
     # construction
@@ -152,7 +156,7 @@ class CollectionCatalog:
         """Single-table layout: ``df`` already carries a ``collection``
         column (ideally a partition column → pruning is free)."""
         cat = cls(spark)
-        cat._table = df
+        cat._partitioned = df
         return cat
 
     def register(self, collection_id: str, url: str) -> None:
@@ -164,9 +168,12 @@ class CollectionCatalog:
     # item tables
     # ------------------------------------------------------------------
     def collection_ids(self) -> list[str]:
-        if self._table is not None:
+        if self._partitioned is not None:
             # distinct over a partition column is a metadata-sized job
-            return [r[0] for r in self._table.select(COLLECTION_COL).distinct().collect()]
+            return [
+                r[0]
+                for r in self._partitioned.select(COLLECTION_COL).distinct().collect()
+            ]
         return sorted(self._urls)
 
     def items_df(self, collection_id: str) -> DataFrame:
@@ -180,37 +187,65 @@ class CollectionCatalog:
         ``*manifest.json`` URL — the http forms read through the
         executor-side ranged data source (``sources/http_parquet.py``),
         never a driver download."""
-        return self._snapshot(collection_id).df
-
-    def _snapshot(self, collection_id: str) -> _Snapshot:
+        if self._partitioned is not None:
+            return self._partitioned.filter(F.col(COLLECTION_COL) == collection_id)
         snap = self._snapshots.get(collection_id)
-        if snap is None:
-            snap = self._snapshots[collection_id] = self._build_snapshot(collection_id)
-        return snap
+        if snap is None or snap.df is None:
+            urls = self._urls_of(collection_id)
+            df = self._read_source(urls)
+            if snap is None:
+                snap = self._snapshots[collection_id] = self._list(urls, df)
+            elif snap.files is not None and local_files(df) != snap.files:
+                # files changed since an item GET listed them: the plan's
+                # listing wins, for both readers, until ``register``
+                snap.files, snap.refusal = None, "the files changed since the listing"
+            if snap.schema is not None:
+                df = timestamps.with_micros(df, snap.schema)
+            snap.df = df.withColumn(COLLECTION_COL, F.lit(collection_id))
+        return snap.df
 
-    def _build_snapshot(self, collection_id: str) -> _Snapshot:
-        if self._table is not None:
-            return _Snapshot(self._table.filter(F.col(COLLECTION_COL) == collection_id))
+    def _urls_of(self, collection_id: str) -> list[str]:
         url = self._urls.get(collection_id)
         if url is None:
             raise NotFoundError(f"Collection {collection_id} not configured")
-        urls = list(url) if isinstance(url, (list, tuple)) else [url]
-        df = self._read_source(urls)
-        snap = _Snapshot(df)
-        listed = local_files(df) if _detect_format(urls) == "parquet" else None
-        if listed:
-            footer = pq.read_metadata(listed[0])
-            snap.schema = footer.schema.to_arrow_schema()
-            if df.columns != snap.schema.names:
-                snap.refusal = "the Spark read's columns are not the footer's"
-            elif any(c.physical_type == "INT96" for c in footer.schema):
-                # pyarrow reads INT96 as naive wall-clock ns, Spark as a
-                # UTC instant, and its arrow type is that of TIMESTAMP(NANOS)
-                snap.refusal = "INT96 timestamp column"
-            else:
-                snap.files = listed
-            df = timestamps.with_micros(df, snap.schema)
-        snap.df = df.withColumn(COLLECTION_COL, F.lit(collection_id))
+        return list(url) if isinstance(url, (list, tuple)) else [url]
+
+    def _snapshot(self, collection_id: str) -> _Snapshot:
+        """The item readers' snapshot; before any search, one listed
+        without the plan's read, whose schema inference is a Spark job."""
+        if self._partitioned is not None:
+            return _Snapshot(refusal="single-table catalog")  # not kept: any id is a slice
+        snap = self._snapshots.get(collection_id)
+        if snap is None:
+            snap = self._snapshots[collection_id] = self._list(self._urls_of(collection_id))
+        return snap
+
+    def _list(self, urls: list[str], read: DataFrame | None = None) -> _Snapshot:
+        """A snapshot (no plan yet) from the files Spark's ``read`` of
+        ``urls`` lists; with no ``read``, from one with a supplied empty
+        schema, which lists the same files and partition columns."""
+        snap = _Snapshot()
+        if _detect_format(urls) != "parquet" or any(
+            urlparse(u).scheme not in ("", "file") for u in urls
+        ):
+            return snap
+        if read is None:
+            read = self.spark.read.schema(StructType()).parquet(*urls)
+        files = local_files(read)
+        if not files:
+            return snap
+        footer = pq.read_metadata(files[0])
+        snap.schema = footer.schema.to_arrow_schema()
+        if any(c not in snap.schema.names for c in read.columns):
+            snap.refusal = "the read has columns beyond the footer's (partitions)"
+        elif len(urls) > 1:
+            snap.refusal = "a URL list's read merges its footers' schemas"
+        elif any(c.physical_type == "INT96" for c in footer.schema):
+            # pyarrow reads INT96 as naive wall-clock ns, Spark as a
+            # UTC instant, and its arrow type is that of TIMESTAMP(NANOS)
+            snap.refusal = "INT96 timestamp column"
+        else:
+            snap.files = files
         return snap
 
     def _read_source(self, url) -> DataFrame:
@@ -257,17 +292,21 @@ class CollectionCatalog:
         # http(s) collections are parquet-only (ranged reads need footer
         # metadata) — except *manifest.json, the object-store listing
         # analog the http source expands itself
-        from stac_fastapi_duckdb_spark.sources import http_parquet as hp
+        from stac_fastapi_duckdb_spark.sources.http_parquet import (
+            is_manifest_url,
+        )
 
         bad = [
             u
             for u in urls
-            if _detect_format([u]) != "parquet" and not hp.is_manifest_url(u)
+            if _detect_format([u]) != "parquet" and not is_manifest_url(u)
         ]
         if bad:
             raise ValueError(
                 f"http(s) collections are parquet-only (or *manifest.json): {bad}"
             )
+        from stac_fastapi_duckdb_spark.sources import http_parquet as hp
+
         hp.ensure_registered(self.spark)
         return (
             self.spark.read.format("http_parquet")

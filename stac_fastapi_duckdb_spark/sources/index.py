@@ -30,7 +30,6 @@ from typing import Any
 from urllib.parse import urlparse
 from urllib.request import url2pathname
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -48,18 +47,27 @@ def build_file_index(files: list[str], columns: list[str]) -> dict[str, dict]:
     """One footer sweep over the parquet ``files`` → per-file min/max
     for ``columns``. Run it where the data lives (driver-side here; as a
     distributed mapPartitions over file lists at cluster scale)."""
+    import pyarrow.parquet as pq
+
     index: dict[str, dict] = {}
     for f in files:
-        md = pq.read_metadata(f)
+        md = pq.ParquetFile(f).metadata
         name_to_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         stats: dict[str, Any] = {}
         for col in columns:
             if col not in name_to_idx:
                 continue
-            i = name_to_idx[col]
-            rgs = [md.row_group(rg).column(i).statistics for rg in range(md.num_row_groups)]
-            if rgs and all(s is not None and s.has_min_max for s in rgs):
-                stats[col] = {"min": min(s.min for s in rgs), "max": max(s.max for s in rgs)}
+            lo = hi = None
+            ok = True
+            for rg in range(md.num_row_groups):
+                s = md.row_group(rg).column(name_to_idx[col]).statistics
+                if s is None or not s.has_min_max:
+                    ok = False
+                    break
+                lo = s.min if lo is None else min(lo, s.min)
+                hi = s.max if hi is None else max(hi, s.max)
+            if ok and lo is not None:
+                stats[col] = {"min": lo, "max": hi}
         index[f] = stats
     return index
 
@@ -91,4 +99,8 @@ def indexed_read(
     prunes FILES, not rows). An empty file set returns an empty
     DataFrame with the schema of the first indexed file."""
     files = prune_files(index, col, lo, hi)
-    return spark.read.parquet(*files) if files else spark.read.parquet(min(index)).limit(0)
+    if not files:
+        all_files = sorted(index)
+        empty = spark.read.parquet(all_files[0]).limit(0)
+        return empty
+    return spark.read.parquet(*files)

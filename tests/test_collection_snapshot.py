@@ -176,3 +176,33 @@ def test_nested_nanosecond_timestamps_are_instants_on_every_reader(spark, tmp_pa
         props = create_stac_item({k: v for k, v in row.items() if k != "mk"})["properties"]
         assert props["s"] == {"at": "2020-01-01T00:00:00.123456Z"}
         assert props["m"] == {"k": "2020-01-01T00:00:00.123456Z"}
+
+
+def test_a_file_landed_between_a_cold_get_and_the_first_search(spark, tmp_path):
+    """A cold item GET lists the files without building the search plan;
+    when the plan's later listing differs, both readers take the plan's."""
+    d = str(tmp_path / "c")
+    _write(f"{d}/part-0.parquet", ["a0", "a1"])
+    cat = CollectionCatalog(spark, {"c": d})
+    client = create_app(cat).test_client()
+    assert client.get("/collections/c/items/a1").status_code == 200
+    _write(f"{d}/part-1.parquet", ["b0"])
+    features = {f["id"]: f for f in _search_features(client, "c")}
+    assert set(features) == {"a0", "a1", "b0"}
+    resp = client.get("/collections/c/items/b0")
+    assert resp.status_code == 200 and resp.get_json() == features["b0"]
+    with pytest.raises(PointReadUnavailable, match="changed"):
+        cat.point_read("c", "b0")
+
+
+def test_single_table_catalog_keeps_no_snapshot(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path / "c")
+    _write(f"{d}/part-0.parquet", ["a0", "a1"])
+    cat = CollectionCatalog.from_table(spark, spark.read.parquet(d).withColumn("collection", F.lit("c")))
+    assert [r["id"] for r in cat.items_df("c").orderBy("id").collect()] == ["a0", "a1"]
+    assert cat.items_df("x").count() == 0
+    with pytest.raises(PointReadUnavailable, match="single-table"):
+        cat.point_read("y", "a0")
+    assert cat._snapshots == {}  # an id per request adds nothing to keep

@@ -195,7 +195,6 @@ def test_map_and_naive_timestamp_columns_served_driver_side(spark, tmp_path):
     assert spark.read.parquet(path).schema["local_ts"].dataType.typeName() == (
         "timestamp_ntz"
     )
-    cat.items_df("zoo")  # builds the snapshot: Spark's read infers the schema in a job
     for iid in ids:
         before = _spark_jobs(spark)
         fast = cat.point_read("zoo", iid)
